@@ -305,6 +305,7 @@ def _compact_line(out: dict) -> dict:
         "value": out["value"],
         "unit": out["unit"],
         "sf": out["sf"],
+        "cpus": out.get("cpus"),
         "n_queries": len(out["queries"]),
         "detail": "BENCH_full.json",
     }

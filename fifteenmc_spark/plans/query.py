@@ -82,6 +82,35 @@ def _backtrack_chain(state: DataFrame, tip_idx: int, tip_dist: float) -> list[in
     return [int(r["node_idx"]) for r in rows]
 
 
+def _nearest_seed_chain(
+    edges: DataFrame, seeds: DataFrame, start_idx: int, limit_m: float
+) -> tuple[int, list[int]] | None:
+    """G2 + G4 for one start node: ``(poi_id, chain)`` of the seed nearest
+    to ``start_idx``, chain in start → seed order, or None when no seed
+    lies within ``limit_m``.
+
+    The size split of reach.shortest_paths_bounded, on ONE edge-count
+    probe: at or below LOCAL_EDGE_THRESHOLD edges a single cogrouped task
+    solves the heap Dijkstra and walks prev from the start node
+    (reach.nearest_seed_path_local); larger graphs run the frontier loop
+    and the pointer-doubling ``_backtrack_chain``.  Either way the driver
+    receives O(path) rows."""
+    edges = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
+    n_edges = edges.count()
+    if n_edges <= reach_mod.LOCAL_EDGE_THRESHOLD:
+        rows = sorted(
+            reach_mod.nearest_seed_path_local(edges, seeds, start_idx, limit_m).collect(),
+            key=lambda r: r["seq"],
+        )
+        return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
+    sp = reach_mod.shortest_paths_frontier(edges, seeds, n_edges, limit_m=limit_m, track_prev=True)
+    # one row for the start node, then the O(path) backtrack
+    tip = sp.where(F.col("node_idx") == start_idx).select("dist_m", "poi_id").first()
+    if tip is None:
+        return None
+    return tip["poi_id"], _backtrack_chain(sp, start_idx, float(tip["dist_m"]))
+
+
 def point_reachability(
     reach: DataFrame,
     nodes: DataFrame,
@@ -307,10 +336,9 @@ def path_to_nearest_poi(
     total (G5 + W1).  Output rows (B7 schema): seq, node_idx, lon, lat,
     step_m, cum_m, poi_id, category.
 
-    The backtrack is the pointer-doubling ``_backtrack_chain`` — the
-    driver receives one start-node row plus the O(path) chain, never the
-    settled state; both the Dijkstra and the backtrack stay
-    distributed."""
+    G2 + G4 run in one task at tile scale and distributed above it (see
+    _nearest_seed_chain); either way the driver receives only the O(path)
+    chain, never the settled state."""
     spark = nodes.sparkSession
     out_schema = (
         "seq INT, node_idx INT, lon FLOAT, lat FLOAT, step_m FLOAT, cum_m FLOAT, "
@@ -327,17 +355,10 @@ def path_to_nearest_poi(
         .where(geo.sanitize_key(F.col("category")) == key)
         .select("node_idx", F.lit(category).alias("category"), "poi_id")
     )
-    sp = reach_mod.shortest_paths_bounded(edges, seeds, limit_m=limit_m, track_prev=True)
-
-    # the settled state never reaches the driver: one row for the start
-    # node, then the O(path) pointer-doubling backtrack
-    tip = sp.where(F.col("node_idx") == start_idx).select("dist_m", "poi_id").first()
-    if tip is None:
+    found = _nearest_seed_chain(edges, seeds, start_idx, limit_m)
+    if found is None:
         return spark.createDataFrame([], out_schema)  # no POI within limit_m
-
-    # G4: follow prev start → source POI node
-    poi_id = tip["poi_id"]
-    chain = _backtrack_chain(sp, start_idx, float(tip["dist_m"]))
+    poi_id, chain = found
     path = spark.createDataFrame(
         [(i, int(n)) for i, n in enumerate(chain)], "seq INT, node_idx INT"
     )

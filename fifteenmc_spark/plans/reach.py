@@ -61,30 +61,50 @@ def _valid_sources(pois: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def shortest_paths_bounded_local(
-    edges: DataFrame,
-    seeds: DataFrame,
-    limit_m: float = LIMIT_M_DEFAULT,
-    track_prev: bool = False,
-) -> DataFrame:
-    """G2 kernel, single-task strategy: classic binary-heap Dijkstra (the
-    reference's own algorithm, precompute_poi_reach.py:86-125) inside ONE
-    cogrouped applyInPandas task.
+def _heap_dijkstra(e_pdf, s_pdf, limit_m: float) -> dict:
+    """Binary-heap Dijkstra (the reference's own algorithm,
+    precompute_poi_reach.py:86-125) over ``e_pdf(src, dst, w)`` from
+    ``s_pdf(node_idx, category, poi_id)``, bounded at ``limit_m``.  Runs
+    inside one Python task; the single solver body behind both
+    shortest_paths_bounded_local and nearest_seed_path_local.
 
-    This is the right plan whenever the (sub)graph fits in a task — which
-    at 100 TB is the COMMON case: the buffer>limit tile design
-    (grid_creation.py:235-236) makes every tile's reach independent, so
-    the cluster runs thousands of these tasks in parallel, one per tile,
-    with zero inter-tile shuffles (see tests/test_tile_parallel.py).  The
-    frontier loop (shortest_paths_bounded) exists for the uncommon case —
-    one connected region bigger than a task.
+    Returns ``state[(node, category)] = (dist, poi_id, prev)``, the
+    lexicographic-min winner per key, with prev -1 at seeds so seeds order
+    first on ties exactly like the frontier loop's struct-min (NULLs
+    first)."""
+    import heapq
+    from collections import defaultdict
 
-    Semantics are identical to the frontier loop: bounded by ``limit_m``,
-    winner per (node, category) = lexicographic min (dist, poi_id[, prev])
-    with NULL prev ordering first (seeds), matching Spark's struct-min."""
-    out_schema = "node_idx INT, category STRING, dist_m DOUBLE, poi_id BIGINT" + (
-        ", prev INT" if track_prev else ""
-    )
+    adj = defaultdict(list)
+    for src, dst, w in zip(e_pdf["src"], e_pdf["dst"], e_pdf["w"]):
+        adj[int(src)].append((int(dst), float(w)))
+    state: dict = {}
+    heap: list = []
+    for node, cat, poi in zip(s_pdf["node_idx"], s_pdf["category"], s_pdf["poi_id"]):
+        k = (int(node), cat)
+        cand = (0.0, int(poi), -1)
+        if k not in state or cand < state[k]:
+            state[k] = cand
+            heapq.heappush(heap, (0.0, int(poi), -1, int(node), cat))
+    while heap:
+        d, p, pv, node, cat = heapq.heappop(heap)
+        if state.get((node, cat)) != (d, p, pv):
+            continue  # stale entry (lazy deletion, like the reference)
+        for dst, w in adj.get(node, ()):
+            nd = d + w
+            if nd > limit_m:
+                continue
+            k = (dst, cat)
+            cand = (nd, p, node)
+            if k not in state or cand < state[k]:
+                state[k] = cand
+                heapq.heappush(heap, (nd, p, node, dst, cat))
+    return state
+
+
+def _one_task(edges: DataFrame, seeds: DataFrame):
+    """Both inputs keyed on one constant group, ready for a single
+    cogrouped applyInPandas task."""
     e = edges.select(
         F.lit(0).alias("g"),
         F.col("src").cast("int").alias("src"),
@@ -97,59 +117,91 @@ def shortest_paths_bounded_local(
         "category",
         F.col("poi_id").cast("bigint").alias("poi_id"),
     )
+    return e.groupBy("g").cogroup(s.groupBy("g"))
+
+
+def shortest_paths_bounded_local(
+    edges: DataFrame,
+    seeds: DataFrame,
+    limit_m: float = LIMIT_M_DEFAULT,
+) -> DataFrame:
+    """G2 kernel, single-task strategy: classic binary-heap Dijkstra
+    (_heap_dijkstra) inside ONE cogrouped applyInPandas task.
+
+    This is the right plan whenever the (sub)graph fits in a task — which
+    at 100 TB is the COMMON case: the buffer>limit tile design
+    (grid_creation.py:235-236) makes every tile's reach independent, so
+    the cluster runs thousands of these tasks in parallel, one per tile,
+    with zero inter-tile shuffles (see tests/test_tile_parallel.py).  The
+    frontier loop (shortest_paths_bounded) exists for the uncommon case —
+    one connected region bigger than a task.
+
+    Semantics are identical to the frontier loop: bounded by ``limit_m``,
+    winner per (node, category) = lexicographic min (dist, poi_id)."""
     lim = float(limit_m)
 
     def solve(e_pdf, s_pdf):
-        import heapq
-        from collections import defaultdict
-
         import pandas as pd
 
-        adj = defaultdict(list)
-        for src, dst, w in zip(e_pdf["src"], e_pdf["dst"], e_pdf["w"]):
-            adj[int(src)].append((int(dst), float(w)))
-        # state[(node, cat)] = (dist, poi, prev); prev -1 encodes NULL so
-        # seeds order first on ties, exactly like struct-min nulls-first
-        state: dict = {}
-        heap: list = []
-        for node, cat, poi in zip(s_pdf["node_idx"], s_pdf["category"], s_pdf["poi_id"]):
-            k = (int(node), cat)
-            cand = (0.0, int(poi), -1)
-            if k not in state or cand < state[k]:
-                state[k] = cand
-                heapq.heappush(heap, (0.0, int(poi), -1, int(node), cat))
-        while heap:
-            d, p, pv, node, cat = heapq.heappop(heap)
-            if state.get((node, cat)) != (d, p, pv):
-                continue  # stale entry (lazy deletion, like the reference)
-            for dst, w in adj.get(node, ()):
-                nd = d + w
-                if nd > lim:
-                    continue
-                k = (dst, cat)
-                cand = (nd, p, node)
-                if k not in state or cand < state[k]:
-                    state[k] = cand
-                    heapq.heappush(heap, (nd, p, node, dst, cat))
+        state = _heap_dijkstra(e_pdf, s_pdf, lim)
         rows = {
             "node_idx": [k[0] for k in state],
             "category": [k[1] for k in state],
             "dist_m": [v[0] for v in state.values()],
             "poi_id": [v[1] for v in state.values()],
         }
-        if track_prev:
-            rows["prev"] = [None if v[2] < 0 else v[2] for v in state.values()]
         out = pd.DataFrame(rows)
         out["node_idx"] = out["node_idx"].astype("int32")
         out["poi_id"] = out["poi_id"].astype("int64")
-        if track_prev:
-            out["prev"] = out["prev"].astype("Int32")
         return out
 
-    return (
-        e.groupBy("g")
-        .cogroup(s.groupBy("g"))
-        .applyInPandas(lambda el, sl: solve(el, sl), schema=out_schema)
+    return _one_task(edges, seeds).applyInPandas(
+        lambda el, sl: solve(el, sl),
+        schema="node_idx INT, category STRING, dist_m DOUBLE, poi_id BIGINT",
+    )
+
+
+def nearest_seed_path_local(
+    edges: DataFrame,
+    seeds: DataFrame,
+    start_idx: int,
+    limit_m: float = LIMIT_M_DEFAULT,
+) -> DataFrame:
+    """G2 + G4 in ONE cogrouped task: solve the bounded Dijkstra from
+    ``seeds`` (one category) and walk ``prev`` from ``start_idx`` back to
+    its winning seed in the same task.  Emits only the O(path) chain
+    ``(seq, node_idx, poi_id)`` in start → seed order (seq 0 is the start
+    node) and no rows when no seed lies within ``limit_m`` — the settled
+    state never leaves the task.
+
+    Zero-weight edges can make the (dist, poi_id, prev) tie-break cyclic
+    (hand-made inputs only: graph_build clamps weights at 0.01 m), so the
+    walk raises once it takes more steps than there are settled nodes,
+    like query._backtrack_chain."""
+    start, lim = int(start_idx), float(limit_m)
+
+    def walk(e_pdf, s_pdf):
+        import pandas as pd
+
+        # seeds carry one category, so the settled state keys on node
+        settled = {node: v for (node, _cat), v in _heap_dijkstra(e_pdf, s_pdf, lim).items()}
+        chain = [start] if start in settled else []
+        while chain and settled[chain[-1]][2] >= 0:
+            if len(chain) > len(settled):
+                raise RuntimeError(
+                    f"path backtrack did not converge within {len(settled)} settled nodes "
+                    f"from tip {start}; prev pointers likely contain a cycle"
+                )
+            chain.append(settled[chain[-1]][2])
+        poi = settled[start][1] if chain else 0
+        return pd.DataFrame({
+            "seq": pd.Series(range(len(chain)), dtype="int32"),
+            "node_idx": pd.Series(chain, dtype="int32"),
+            "poi_id": pd.Series([poi] * len(chain), dtype="int64"),
+        })
+
+    return _one_task(edges, seeds).applyInPandas(
+        lambda el, sl: walk(el, sl), schema="seq INT, node_idx INT, poi_id BIGINT"
     )
 
 
@@ -158,17 +210,14 @@ def shortest_paths_bounded(
     seeds: DataFrame,
     limit_m: float = LIMIT_M_DEFAULT,
     max_rounds: int = MAX_ROUNDS_DEFAULT,
-    track_prev: bool = False,
     hops_per_round: int = HOPS_PER_ROUND_DEFAULT,
     strategy: str = "auto",
 ) -> DataFrame:
     """G2 kernel: multi-source bounded shortest paths over
     ``edges(src, dst, w)`` from ``seeds(node_idx, category, poi_id)``.
 
-    Returns ``(node_idx, category, dist_m, poi_id[, prev])`` for every
-    node within ``limit_m`` of a seed of that category.  ``prev`` (with
-    ``track_prev=True``) is the upstream node on the winning path, NULL at
-    seeds — input to path backtracking (G4).
+    Returns ``(node_idx, category, dist_m, poi_id)`` for every node within
+    ``limit_m`` of a seed of that category.
 
     ``hops_per_round`` batches k edge relaxations into one synchronization
     round: the candidate set is the union of 1..k-hop extensions of the
@@ -194,11 +243,29 @@ def shortest_paths_bounded(
     if strategy not in ("auto", "frontier", "local"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy == "local":
-        return shortest_paths_bounded_local(edges, seeds, limit_m, track_prev)
+        return shortest_paths_bounded_local(edges, seeds, limit_m)
     edges = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
     n_edges = edges.count()
     if strategy == "auto" and n_edges <= LOCAL_EDGE_THRESHOLD:
-        return shortest_paths_bounded_local(edges, seeds, limit_m, track_prev)
+        return shortest_paths_bounded_local(edges, seeds, limit_m)
+    return shortest_paths_frontier(edges, seeds, n_edges, limit_m, max_rounds, hops_per_round=hops_per_round)
+
+
+def shortest_paths_frontier(
+    edges: DataFrame,
+    seeds: DataFrame,
+    n_edges: int,
+    limit_m: float = LIMIT_M_DEFAULT,
+    max_rounds: int = MAX_ROUNDS_DEFAULT,
+    track_prev: bool = False,
+    hops_per_round: int = HOPS_PER_ROUND_DEFAULT,
+) -> DataFrame:
+    """G2 kernel, frontier strategy (see shortest_paths_bounded) over
+    ``edges(src, dst, w DOUBLE)`` whose row count ``n_edges`` the caller's
+    dispatch probe already took.  With ``track_prev=True`` the result
+    carries ``prev``, the upstream node on the winning path (NULL at
+    seeds, ties broken by lexicographic min (dist, poi_id, prev)) — input
+    to the pointer-doubling backtrack (G4, query._backtrack_chain)."""
     spark = edges.sparkSession
     # The loop tunes session-global confs: AQE off (each tiny round
     # otherwise pays query-stage materialization + re-optimization —

@@ -171,25 +171,31 @@ def await_drained(q, timeout_s: float = 120.0) -> None:
 
     deadline = _time.monotonic() + timeout_s
     # drain signal = a committed zero-input batch (progress is reported
-    # only AFTER the batch's sink commit).  Guard against a zero-row
-    # interior FILE mimicking the drain: require either a second
-    # consecutive zero-input batch (cleanup batches arrive every few
-    # seconds while state timeouts are pending) or 5 s of source idleness
-    # after the first — a real interior empty file is followed by its
-    # remaining data batches well inside that.
-    zero_batch = None
+    # only AFTER the batch's sink commit).  Every batch in recentProgress
+    # is read, so a data batch between two fast zero batches is never
+    # missed by the poll.  Guard against a zero-row interior FILE
+    # mimicking the drain: require either a second consecutive zero-input
+    # batch (cleanup batches arrive every few seconds while state timeouts
+    # are pending) or source idleness after the first for twice the
+    # longest batch seen (at least 5 s) — a real interior empty file is
+    # followed by its remaining data batches well inside that.
+    seen = -1
+    zeros = 0  # consecutive zero-input batches at the end of the log
     zero_seen_at = 0.0
+    idle_s = 5.0
     while _time.monotonic() < deadline and q.isActive:
         if q.awaitTermination(0.25):
             return  # self-terminated (stateless plan)
-        p = q.lastProgress
-        if p is None or p["numInputRows"] != 0:
-            zero_batch = None
-            continue
-        if zero_batch is None:
-            zero_batch, zero_seen_at = p["batchId"], _time.monotonic()
-        elif p["batchId"] != zero_batch or _time.monotonic() - zero_seen_at > 5.0:
+        for p in q.recentProgress:
+            if p["batchId"] <= seen:
+                continue
+            seen = p["batchId"]
+            idle_s = max(idle_s, 2.0 * p["durationMs"].get("triggerExecution", 0) / 1000.0)
+            zeros = zeros + 1 if p["numInputRows"] == 0 else 0
+            if zeros == 1:
+                zero_seen_at = _time.monotonic()
+        if zeros >= 2 or (zeros == 1 and _time.monotonic() - zero_seen_at > idle_s):
             break
     if q.isActive:
         q.stop()
-    q.awaitTermination(timeout_s)
+    q.awaitTermination(max(0.5, deadline - _time.monotonic()))

@@ -30,6 +30,7 @@ def test_compact_line_fits_tail_buffer():
         "value": 123.4567,
         "unit": "sec",
         "sf": "0.1",
+        "cpus": 32,
         "queries": queries,
         "duckdb_total": 99.9999,
         "duckdb_queries": {k: round(v / 2, 4) for k, v in queries.items()},
@@ -41,6 +42,7 @@ def test_compact_line_fits_tail_buffer():
     assert len(line) < 1800, len(line)
     parsed = json.loads(line)
     assert parsed["value"] == 123.4567 and parsed["spark_vs_duckdb_ratio"] == 1.2345
+    assert parsed["cpus"] == 32  # the compact line names the core count that ran
     assert len(parsed["slowest"]) == 5 and len(parsed["worst_ratios"]) == 5
 
 

@@ -563,6 +563,85 @@ def test_path_to_nearest_poi(fx, reach_ctx):
         assert abs(path.iloc[i]["step_m"] - float(ge.loc[(u, v)])) < 1e-3
 
 
+def _nearest_poi_path(fx, reach_ctx, node: int, category: str, limit_m: float = LIMIT_M):
+    q = fx["gnodes_pdf"].iloc[node]
+    return query.path_to_nearest_poi(
+        fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], float(q["lon"]), float(q["lat"]),
+        category, limit_m=limit_m,
+    )
+
+
+def test_path_one_task_equals_frontier(fx, reach_ctx, monkeypatch):
+    # the one-task solve+walk (default at lattice size) and the frontier
+    # loop + pointer-doubling backtrack (forced by lowering the dispatch
+    # threshold) return the same path row for row, found or not
+    seed_nodes = set(reach_ctx["snapped"]["node_idx"].astype(int))
+    lonely = next(n for n in range(len(fx["gnodes_pdf"])) if n not in seed_nodes)
+    cases = [(n, c, LIMIT_M) for n in (30, 150, 350) for c in ("supermarket", "pharmacy")]
+    cases.append((lonely, "supermarket", 1.0))  # no POI within limit_m
+    calls = []
+    one_task = reach.nearest_seed_path_local
+    monkeypatch.setattr(
+        reach, "nearest_seed_path_local", lambda *a, **k: calls.append(a) or one_task(*a, **k)
+    )
+    local = [_nearest_poi_path(fx, reach_ctx, *c).toPandas() for c in cases]
+    assert len(calls) == len(cases)
+    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
+    frontier = [_nearest_poi_path(fx, reach_ctx, *c).toPandas() for c in cases]
+    assert len(calls) == len(cases)  # the frontier side never entered the one-task walk
+    for case, lo, fr in zip(cases, local, frontier):
+        assert (len(lo) > 0) == (case[2] == LIMIT_M), case
+        pd.testing.assert_frame_equal(lo, fr, obj=str(case))
+
+
+def test_path_one_task_collects_o_path_not_o_settled(fx, reach_ctx, monkeypatch):
+    # the one-task walk ships the CHAIN to the driver, not the settled
+    # state: every .collect() made while the request is planned is counted
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    counted = []
+    orig = DataFrame.collect
+
+    def spy(self):
+        rows = orig(self)
+        counted.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    df = _nearest_poi_path(fx, reach_ctx, 150, "supermarket")
+    collected = list(counted)
+    monkeypatch.undo()
+    path = df.toPandas()
+    settled = reach_ctx["reach"].where(
+        (F.col("category") == "supermarket") & F.col("dist_m").isNotNull()
+    ).count()
+    assert 1 < len(path) < settled
+    assert collected == [1, len(path)], collected  # the snap's one row, then the chain
+
+
+def test_path_raises_on_zero_weight_prev_cycle(spark, monkeypatch):
+    # zero-weight edges 5->3, 3->1, 1->3 from a seed on node 5 leave
+    # prev[3]=1 and prev[1]=3 under the (dist, poi_id, prev) tie-break:
+    # both strategies must raise instead of walking the cycle forever
+    from pyspark.errors import PythonException
+
+    nodes = spark.createDataFrame(
+        [(i, 18.5 + 0.001 * i, 54.4) for i in range(6)], "node_idx INT, lon DOUBLE, lat DOUBLE"
+    )
+    edges = spark.createDataFrame([(5, 3, 0.0), (3, 1, 0.0), (1, 3, 0.0)], "src INT, dst INT, w DOUBLE")
+    pois = spark.createDataFrame([(7, "supermarket", 5)], "poi_id BIGINT, category STRING, node_idx INT")
+
+    def serve():
+        return query.path_to_nearest_poi(nodes, edges, pois, 18.501, 54.4, "supermarket").toPandas()
+
+    with pytest.raises(PythonException, match="RuntimeError: path backtrack did not converge"):
+        serve()
+    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
+    monkeypatch.setattr(query, "_MAX_DOUBLINGS", 3)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        serve()
+
+
 def test_snap_batch_seam_matches_numpy_golden(spark):
     """Randomized seam corpus vs a NumPy wrapped-Mercator argmin golden:
     200 nodes scattered within ~1 km of lon=±180 on both sides (plus an

@@ -949,11 +949,11 @@ def test_await_drained_stops_stateful_availablenow_promptly(spark, sf_small, tmp
     """The r15 verify overran its window because stateful availableNow
     queries never self-terminate (processing-time-timeout cleanup batches
     keep them alive) and every stream≡batch test blocked its full 120 s
-    awaitTermination.  await_drained must bring a stateful drain well
-    under that, without losing emissions (the equality tests above pin
-    the result side)."""
-    import time
-
+    awaitTermination.  await_drained must stop such a query itself, and
+    only once every input row went through a committed batch that was
+    followed by a committed zero-input batch (the equality tests above
+    pin the result side).  The mechanism is asserted, not wall-clock
+    time."""
     from fifteenmc_spark.streaming import minhash_lsh as ML
 
     docs = read_table(spark, sf_small, "documents")
@@ -964,8 +964,25 @@ def test_await_drained_stops_stateful_availablenow_promptly(spark, sf_small, tmp
         .option("maxFilesPerTrigger", 1)
         .parquet(str(out) + "/*/")
     )
-    t0 = time.monotonic()
-    W.run_to_memory(ML.flag_lsh_near_dups(stream), "sink_await_drained", output_mode="append")
-    elapsed = time.monotonic() - t0
-    assert elapsed < 90.0, f"stateful drain took {elapsed:.1f}s — timeout regression"
+    q = (
+        ML.flag_lsh_near_dups(stream).writeStream.format("memory")
+        .queryName("sink_await_drained")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    stops = []
+    stop = q.stop
+
+    def spy_stop():
+        stops.append((q.isActive, [p["numInputRows"] for p in q.recentProgress]))
+        stop()
+
+    q.stop = spy_stop
+    W.await_drained(q)
+    assert not q.isActive
+    assert len(stops) == 1, "await_drained did not stop the live stateful query"
+    active, rows = stops[0]
+    assert active
+    assert rows[-1] == 0 and sum(rows) == docs.count(), rows  # drained, then stopped
     assert spark.table("sink_await_drained").count() > 0
