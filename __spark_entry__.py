@@ -33,17 +33,35 @@ def entry(spark: SparkSession) -> DataFrame:
 # Queries with no driver CORRECTNESS row yet come first so every declared
 # query accumulates at least one driver-checked green row across rounds.
 _CHECK_FIRST = (
-    # r16 rotation.  Lead: queries whose PLAN changes this round (x9 phase-1
-    # prefilter restored to the h60 key; v17/v23 stacked rank tail) plus the
-    # three r15-plan-changed queries the r15 window missed (v17/v18/v22
-    # recall-stack broadcasts — r15 verdict item 2).
+    # Lead: queries whose builder or oracle text changed in the shared
+    # IVF stage refactor (one coarse stage, one probe top-k, one
+    # membership recall, one stacked-recall oracle; v6/v9 embed the
+    # v1 oracle, whose rank tail is now shared).
+    "v1_cosine_topk",
+    "v5_ivf_topk",
+    "v6_lsh_recall",
+    "v9_ivf_recall",
+    "v12_pq_recall",
+    "v13_ivfpq_topk",
+    "v14_ivfpq_recall",
+    "v16_rivfpq_topk",
+    "v17_encoding_recall",
+    "v18_ivfpq_nprobe_sweep",
+    "v19_tivf_topk",
+    "v20_tivf_recall",
+    "v21_tivfpq_topk",
+    "v22_tivf_nprobe_sweep",
+    "v23_tencoding_recall",
+    "v24_ncells_sweep",
+    "v25_serving_tivf_topk",
+    "v26_serving_ivfpq_topk",
+    "v27_filtered_tivf_topk",
+    "v28_filtered_recall",
+    "v29_adaptive_filtered_topk",
+    # r16 rotation: queries whose plan changed in r16, then the backlog
     "x9_span_dedup",
     "x9_span_dedup_sampled",
     "x9_span_dedup_prefiltered",
-    "v17_encoding_recall",
-    "v23_tencoding_recall",
-    "v18_ivfpq_nprobe_sweep",
-    "v22_tivf_nprobe_sweep",
     "t9_unigram_logprob",
     # newest driver row is r13 — the backlog tail the r15 50-query window
     # could not reach (alphabetical)
@@ -56,10 +74,6 @@ _CHECK_FIRST = (
     "m1_asset_meta",
     "p7_dedup_apply",
     "v10_embedding_validity",
-    "v16_rivfpq_topk",
-    "v19_tivf_topk",
-    "v21_tivfpq_topk",
-    "v29_adaptive_filtered_topk",
     "v8_embedding_clusters",
     "x1_dedup_exact",
     "x2_minhash_signature",
@@ -103,15 +117,8 @@ _CHECK_FIRST = (
     "t12_winnowing_fingerprint",
     "t8_length_quantiles",
     "v11_pq_topk",
-    "v13_ivfpq_topk",
     "v15_dedup_apply",
-    "v1_cosine_topk",
-    "v25_serving_tivf_topk",
-    "v26_serving_ivfpq_topk",
-    "v27_filtered_tivf_topk",
     "v3_embedding_near_dup",
-    "v5_ivf_topk",
-    "v6_lsh_recall",
     "x10_link_pagerank",
     "x7_near_dup_clusters",
 )

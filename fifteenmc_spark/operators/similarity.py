@@ -21,6 +21,8 @@ NULL-tolerant aggregate() left fold (it must see ragged/NULL arrays).
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, Window
@@ -225,6 +227,29 @@ def _gate_oracle(sql: str) -> str:
 # ---------------------------------------------------------------------------
 # v1: brute-force cosine top-k (exact ANN baseline)
 # ---------------------------------------------------------------------------
+def _topk_tail(scored):
+    """Top-k per query of a (qid, vec_id, sim) stream — rank by (sim
+    desc, vec_id), keep TOP_K, round — the tail every exact-cosine
+    search shares (v1 and the cell-probe searches)."""
+    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
+    return (
+        scored.select("qid", "vec_id", "sim", F.row_number().over(w).alias("rnk"))
+        .where(F.col("rnk") <= TOP_K)
+        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
+        .orderBy("qid", "rnk")
+    )
+
+
+def _topk_tail_sql(src: str) -> str:
+    """Oracle twin of _topk_tail over the (qid, vec_id, sim) CTE ``src``."""
+    return f"""rr AS (
+      SELECT qid, vec_id, sim,
+             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
+      FROM {src})
+    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
+    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk"""
+
+
 @_register(
     "v1_cosine_topk",
     "Exact top-5 cosine neighbors for each query vector (vec_id < 3).  "
@@ -237,12 +262,7 @@ def _gate_oracle(sql: str) -> str:
       SELECT q.qid, c.vec_id,
              {_COS_SQL.format(a="q.qe", b="c.embedding")} AS sim
       FROM q, c WHERE q.qid <> c.vec_id),
-    ranked AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM scored)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM ranked WHERE rnk <= {TOP_K} ORDER BY qid, rnk
+    {_topk_tail_sql("scored")}
     """,
     ("similarity", "ann", "pipeline"),
 )
@@ -257,18 +277,11 @@ def _exact_topk_plan(spark, sf_dir, nq: int = N_QUERY_VECS):
     q = e.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    scored = (
+    return _topk_tail(
         F.broadcast(q)
         .crossJoin(e.select("vec_id", "embedding"))
         .where(F.col("qid") != F.col("vec_id"))
         .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.select("qid", "vec_id", "sim", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
     )
 
 
@@ -554,50 +567,114 @@ IVF_SEED_IDS = (7, 61, 113, 167, 229, 283, 337, 401)
 N_PROBE = 2
 
 
-def _ivf_cells_probes(spark, sf_dir, max_probe: int, nq: int = N_QUERY_VECS):
-    """Shared IVF front half for v5 (cell-probe search) and v9 (its recall
-    eval): (e, cells, probes).  ONE definition so the eval always measures
-    the index v5 actually builds — the seed set, the max-struct cell
-    tie-break (sim desc, cid asc), and the probe ranking can never drift
-    between the two queries.
+@dataclasses.dataclass(frozen=True)
+class Quantizer:
+    """A coarse quantizer: the centroids that split the corpus into cells.
+
+    ``seeds`` is the vec_id pool the centroids start from; ``trained``
+    refines them by TIVF_ITERS spherical-Lloyd steps (v19), otherwise the
+    seed vectors ARE the centroids (v5).  Everything the coarse stage
+    varies on derives from these two fields — the centroid source on
+    both engines, the session-index key prefix and the SQL CTE tag — so
+    one stage definition serves every quantizer and a quantizer change
+    is made in one place.  The seed quantizer exists for IVF_SEED_IDS
+    only: its ``ivf_`` index keys name that one layout."""
+
+    seeds: tuple = IVF_SEED_IDS
+    trained: bool = False
+
+    def __post_init__(self):
+        # raise, not assert: must survive python -O
+        if not self.trained and self.seeds != IVF_SEED_IDS:
+            raise ValueError(
+                "the seed quantizer is the IVF_SEED_IDS layout; a custom seed "
+                "pool needs trained=True"
+            )
+
+    @property
+    def ncells(self) -> int:
+        return len(self.seeds)
+
+    @property
+    def _pool_sfx(self) -> str:
+        return "" if self.seeds == IVF_SEED_IDS else f"_c{self.ncells}"
+
+    @property
+    def key_prefix(self) -> str:
+        """Session-index key prefix of this quantizer's score/cell/probe
+        tables (``ivf_``, ``tivf_``, ``tivf_c32_`` ...)."""
+        return f"tivf{self._pool_sfx}_" if self.trained else "ivf_"
+
+    @property
+    def tag(self) -> str:
+        """CTE-name prefix that keeps several quantizers apart in one
+        oracle query (v20, v24)."""
+        if not self.trained:
+            return "s_"
+        return f"c{self.ncells}_" if self._pool_sfx else "t_"
+
+    def centroids(self, spark, sf_dir):
+        """(cid, ce): the seed vectors, or the session-cached trained
+        centroid table (shared by the batch index and the streaming
+        serving tier, which collects it as its closure constant)."""
+        if not self.trained:
+            return _emb(spark, sf_dir).where(F.col("vec_id").isin(*self.seeds)).select(
+                F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+            )
+        cw = _session_cached(
+            spark,
+            sf_dir,
+            f"tivf_cents{self._pool_sfx}",
+            lambda: _tivf_centroids_plan(spark, sf_dir, TIVF_ITERS, self.seeds).localCheckpoint(
+                eager=False
+            ),
+        )
+        return cw.select("cid", F.col("cwe").alias("ce"))
+
+    def centroid_sql(self, tag: str) -> str:
+        """WITH fragment ending in ``{tag}cents`` (cid, ce) — the oracle
+        twin of :meth:`centroids`."""
+        if self.trained:
+            return _tivf_centroid_sql(TIVF_ITERS, self.seeds, tag)
+        return f"""{tag}cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
+          WHERE vec_id IN {self.seeds})"""
+
+
+SEED_Q = Quantizer()  # v5/v9/v13/v16/v18's cells — the calibration baseline
+TRAINED_Q = Quantizer(trained=True)  # v19-v23's cells
+
+
+def _cells_probes(spark, sf_dir, quant: Quantizer, max_probe: int, nq: int = N_QUERY_VECS):
+    """The coarse stage of every IVF query: (e, cells, probes) for one
+    quantizer.  ONE definition so a search and its recall eval always
+    measure the same index — the centroids, the max-struct cell
+    tie-break (sim desc, cid asc) and the probe ranking can never drift
+    between queries or between quantizers.
 
     Scores every vector against the broadcast centroids; argmax by
     (sim desc, cid asc) via a max-struct aggregate — map-side combinable,
     the shuffle carries (vec_id, one struct), never the embeddings.
 
-    Both the score table and the cell assignment live in the session
-    index (lazy localCheckpoints): they ARE the IVF index — |corpus| ×
-    n_cells doubles and |corpus| ints — and v5 (search) and v9 (recall
-    eval) read the SAME materialization instead of each re-scoring the
-    corpus (the r7 bench's v5/v9 regression was exactly this pair of
-    rebuilds).  ``probes`` keeps the probe rank ``rn`` (1 = nearest
-    cell) up to ``max_probe``."""
+    The score table, the cell assignment and the probe list live in the
+    session index (lazy localCheckpoints) under the quantizer's key
+    prefix: they ARE the IVF index — |corpus| × n_cells doubles and
+    |corpus| ints — and a search and its eval read the SAME
+    materialization instead of each re-scoring the corpus (the r7
+    bench's v5/v9 regression was exactly this pair of rebuilds).
+    ``probes`` keeps the probe rank ``rn`` (1 = nearest cell) up to
+    ``max_probe`` for the ``nq`` query vectors."""
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    cents = quant.centroids(spark, sf_dir)
+    kp = quant.key_prefix
 
     def build_scored():
-        cents = e.where(F.col("vec_id").isin(*IVF_SEED_IDS)).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-        )
         return (
             e.crossJoin(F.broadcast(cents))
-            .select(
-                "vec_id", "cid", cosine(F.col("embedding"), F.col("ce")).alias("sim")
-            )
+            .select("vec_id", "cid", cosine(F.col("embedding"), F.col("ce")).alias("sim"))
             .localCheckpoint(eager=False)
         )
 
-    scored = _session_cached(spark, sf_dir, "ivf_scored", build_scored)
-    cells, probes = _cells_probes(spark, sf_dir, scored, "ivf_", max_probe, nq)
-    return e, cells, probes
-
-
-def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: int):
-    """(cells, probes) from a (vec_id, cid, sim) centroid-score table —
-    the quantizer-agnostic back half shared by the seed coarse quantizer
-    (_ivf_cells_probes) and the trained one (_tivf_cells_probes): the
-    max-struct cell pick, the probe ranking, and the session-index
-    checkpoints are identical; only the score table (and its cache key
-    prefix) differs."""
+    scored = _session_cached(spark, sf_dir, f"{kp}scored", build_scored)
 
     def build_cells():
         pick = F.max(
@@ -610,7 +687,7 @@ def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: in
             .localCheckpoint(eager=False)
         )
 
-    cells = _session_cached(spark, sf_dir, f"{key_prefix}cells", build_cells)
+    cells = _session_cached(spark, sf_dir, f"{kp}cells", build_cells)
 
     def build_probes():
         wprobe = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid"))
@@ -623,9 +700,126 @@ def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: in
         )
 
     sfx = "" if nq == N_QUERY_VECS else f"_q{nq}"
-    probes = _session_cached(spark, sf_dir, f"{key_prefix}probes{max_probe}{sfx}", build_probes)
-    return cells, probes
+    probes = _session_cached(spark, sf_dir, f"{kp}probes{max_probe}{sfx}", build_probes)
+    return e, cells, probes
 
+
+def _coarse_sql(quant: Quantizer, nq: int, nprobe: int, tag: str = "") -> str:
+    """WITH fragment mirroring _cells_probes: the centroid CTEs, then
+    ``{tag}cells`` (vec_id, cell) and ``{tag}probes`` (qid, cell, rn) for
+    query vectors vec_id < ``nq`` up to probe rank ``nprobe``.  One
+    ROW_NUMBER ranking yields both: rank 1 is the cell, ranks <= nprobe
+    the probes.  ``tag`` keeps several quantizers apart in one query."""
+    return f"""{quant.centroid_sql(tag)},
+    {tag}ivfranked AS (
+      SELECT e.vec_id, c.cid,
+             ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
+      FROM embeddings e, {tag}cents c),
+    {tag}cells AS (SELECT vec_id, cid AS cell FROM {tag}ivfranked WHERE rn = 1),
+    {tag}probes AS (SELECT vec_id AS qid, cid AS cell, rn FROM {tag}ivfranked
+                    WHERE vec_id < {nq} AND rn <= {nprobe})"""
+
+
+def _probe_topk_plan(
+    spark,
+    sf_dir,
+    quant: Quantizer,
+    nprobe: int,
+    nq: int = N_QUERY_VECS,
+    label_filter: bool = False,
+    label_depth: bool = False,
+):
+    """Cell-probe top-k with exact in-cell cosine — v5 (seed cells), v19
+    (trained), v25 (the serving layout), v27 (``label_filter``: only
+    candidates sharing the query's label) and v29 (``label_depth``,
+    which implies the filter: each query probes npl(its label) cells,
+    never fewer than ``nprobe`` — see _label_nprobe).  Centroids and
+    probes broadcast, cells the partition key, so a query reads
+    nprobe/ncells of the corpus; the label predicate lands on the
+    candidate stream before the cosine, so its selectivity multiplies
+    with the coarse filter instead of post-filtering a shortlist.
+
+    sf0.1 floor decomposition (v5, r8, warm session index, best-of-3 per
+    stage): probe→cell candidate join alone 0.13 s, + corpus/query joins
+    + Arrow cosine 0.38 s, + rank window + ORDER BY 0.53 s — the
+    1.5k-candidate kernel is milliseconds; the remainder is ~5 stages on
+    the 0.09 s/action scheduling floor.  The plan (broadcast probes/
+    centroids, cell-pruned candidates, no corpus product — plan-gated)
+    is the shape that wins at 100×."""
+    by_label = label_filter or label_depth
+    e, cells, probes = _cells_probes(
+        spark, sf_dir, quant, quant.ncells if label_depth else nprobe, nq
+    )
+    qcols = [F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")]
+    if by_label:
+        e = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
+        qcols.append(F.col("label").alias("qlabel"))
+    qv = e.where(F.col("vec_id") < nq).select(*qcols)
+    if label_depth:
+        # probes were built to the FULL cell list once; each query keeps
+        # rn <= npl(its label)
+        npl = _label_nprobe(e, quant.ncells, nprobe)
+        qv = qv.join(F.broadcast(npl), F.col("qlabel") == F.col("label")).drop("label")
+        cand = (
+            F.broadcast(probes)
+            .join(F.broadcast(qv), "qid")
+            .where(F.col("rn") <= F.col("npl"))
+            .join(cells, "cell")
+            .where(F.col("vec_id") != F.col("qid"))
+            .join(e, "vec_id")
+        )
+    else:
+        cand = (
+            F.broadcast(probes.drop("rn"))
+            .join(cells, "cell")
+            .where(F.col("vec_id") != F.col("qid"))
+            .join(e, "vec_id")
+            .join(F.broadcast(qv), "qid")
+        )
+    if by_label:
+        cand = cand.where(F.col("label") == F.col("qlabel"))
+    return _topk_tail(
+        cand.select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
+    )
+
+
+def _probe_topk_sql(
+    quant: Quantizer,
+    nprobe: int,
+    nq: int = N_QUERY_VECS,
+    label_filter: bool = False,
+    label_depth: bool = False,
+) -> str:
+    """Oracle twin of _probe_topk_plan, CTE for CTE."""
+    by_label = label_filter or label_depth
+    ctes = [
+        _coarse_sql(quant, nq, quant.ncells if label_depth else nprobe),
+        f"""qv AS (SELECT vec_id AS qid, embedding AS qe{", label AS qlabel" if by_label else ""}
+           FROM embeddings WHERE vec_id < {nq})""",
+    ]
+    probes = "probes"
+    if label_depth:
+        ctes += [
+            _label_nprobe_sql(quant.ncells, nprobe),
+            """dprobes AS (
+      SELECT p.qid, p.cell FROM probes p
+      JOIN qv ON qv.qid = p.qid
+      JOIN np ON np.label = qv.qlabel
+      WHERE p.rn <= np.npl)""",
+        ]
+        probes = "dprobes"
+    ctes.append(
+        f"""cand AS (
+      SELECT p.qid, x.vec_id,
+             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
+      FROM {probes} p
+      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
+      JOIN embeddings e ON e.vec_id = x.vec_id
+      JOIN qv ON qv.qid = p.qid{" AND e.label = qv.qlabel" if by_label else ""})"""
+    )
+    ctes.append(_topk_tail_sql("cand"))
+    return "\n    WITH " + ",\n    ".join(ctes) + "\n    "
 
 
 @_register(
@@ -649,64 +843,11 @@ def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: in
     "the 10x corpus point.  Measured refusal: fusing v5's stages would "
     "re-derive the serving layout per query, which is exactly what the "
     "serving tier exists to amortize.",
-    f"""
-    WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-               WHERE vec_id IN {IVF_SEED_IDS}),
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {N_PROBE}),
-    qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-           WHERE vec_id < {N_QUERY_VECS}),
-    cand AS (
-      SELECT p.qid, x.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
-      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
-      JOIN embeddings e ON e.vec_id = x.vec_id
-      JOIN qv ON qv.qid = p.qid),
-    rr AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM cand)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
-    """,
+    _probe_topk_sql(SEED_Q, N_PROBE),
     ("similarity", "ann", "ivf", "pipeline"),
 )
 def v5(spark, sf_dir):
-    # sf0.1 floor decomposition (r8, warm session index, best-of-3 per
-    # stage): probe→cell candidate join alone 0.13 s, + corpus/query
-    # joins + Arrow cosine 0.38 s, + rank window + ORDER BY 0.53 s — the
-    # 1.5k-candidate kernel is milliseconds; the remainder is ~5 stages
-    # on the 0.09 s/action scheduling floor.  The 0.07 s in-process
-    # oracle has no scheduler to pay; the plan (broadcast probes/
-    # centroids, cell-pruned candidates, no corpus product — plan-gated)
-    # is the shape that wins at 100×.
-    e, cells, probes = _ivf_cells_probes(spark, sf_dir, N_PROBE)
-    probes = probes.drop("rn")
-    qv = e.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(cells, "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(e, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
-    )
+    return _probe_topk_plan(spark, sf_dir, SEED_Q, N_PROBE)
 
 
 # ---------------------------------------------------------------------------
@@ -937,16 +1078,7 @@ V9_MAX_PROBE = 2
     "the minimum probe rank that reaches the neighbor's cell aggregates "
     "to every nprobe's recall in a single groupBy.",
     f"""
-    WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-               WHERE vec_id IN {IVF_SEED_IDS}),
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell, rn FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {V9_MAX_PROBE}),
+    WITH {_coarse_sql(SEED_Q, N_QUERY_VECS, V9_MAX_PROBE)},
     hit AS (
       SELECT x.qid, x.vec_id, MIN(p.rn) AS min_rn
       FROM ({QUERIES["v1_cosine_topk"].oracle}) x
@@ -975,7 +1107,7 @@ def v9(spark, sf_dir):
     # stack+ORDER BY) over session-cached index tables on the measured
     # 0.09 s/action local-mode floor — i.e. the whole gap is scheduler,
     # not plan; the joined data is k x |queries| rows.
-    _, cells, probes = _ivf_cells_probes(spark, sf_dir, V9_MAX_PROBE)
+    _, cells, probes = _cells_probes(spark, sf_dir, SEED_Q, V9_MAX_PROBE)
     exact = _exact_topk(spark, sf_dir).select("qid", "vec_id")
     # broadcast the |eval queries| x k ground truth against the corpus-
     # sized cells table (r15): bounded by construction, but the estimate
@@ -1480,6 +1612,19 @@ def _pq_topk_plan(spark, sf_dir, iters: int, nq: int = N_QUERY_VECS):
 V12_NQ = 50  # eval query set — wide enough that recall deltas are signal,
 # not 3-query noise (250 neighbor slots at k=5)
 
+# exact-ground-truth CTE fragment shared by the wide-eval oracles
+_EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+                WHERE vec_id < {V12_NQ}),
+    corpus AS (SELECT vec_id, embedding FROM embeddings),
+    scored AS (
+      SELECT qv.qid, c.vec_id,
+             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
+      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
+    exact AS (
+      SELECT qid, vec_id FROM scored
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
+          ORDER BY sim DESC, vec_id) <= {TOP_K})"""
+
 
 def _exact_topk_v12(spark, sf_dir):
     """Exact ground truth over the v12 eval query set, session-cached
@@ -1526,6 +1671,44 @@ def _recall_agg(exact, got):
     )
 
 
+_RECALL_COLS_SQL = """CAST(COUNT(*) AS BIGINT) AS n_topk,
+           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_recovered,
+           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
+                 / COUNT(*), 4) AS recall"""
+
+
+def _recall_agg_sql(got: str) -> str:
+    """Oracle twin of _recall_agg: per-query recall over the V12_NQ eval
+    set of the (qid, vec_id, ...) result of the query ``got``."""
+    return f"""
+    WITH {_EXACT_V12_CTES},
+    got AS (SELECT qid, vec_id FROM ({got}))
+    SELECT e.qid, {_RECALL_COLS_SQL}
+    FROM exact e LEFT JOIN got g ON g.qid = e.qid AND g.vec_id = e.vec_id
+    GROUP BY e.qid ORDER BY e.qid
+    """
+
+
+def _stacked_recall_sql(key: str, arms, ctes=()) -> str:
+    """_recall_agg_sql stacked over arms (value, query) under the column
+    ``key`` — the oracle shape of every side-by-side eval (encodings in
+    v17/v23, quantizers in v20, cell counts in v24).  ``ctes`` are
+    further WITH fragments the arm queries read besides ``exact``."""
+    got = " UNION ALL ".join(f"SELECT {v!r} AS {key}, qid, vec_id FROM ({sql})" for v, sql in arms)
+    keys = " UNION ALL ".join(f"SELECT {v!r} AS {key}" for v, _ in arms)
+    extra = "".join(f"\n    {c}," for c in ctes)
+    return f"""
+    WITH {_EXACT_V12_CTES},{extra}
+    got AS ({got})
+    SELECT e.qid, k.{key}, {_RECALL_COLS_SQL}
+    FROM exact e
+    CROSS JOIN ({keys}) k
+    LEFT JOIN got g ON g.{key} = k.{key} AND g.qid = e.qid AND g.vec_id = e.vec_id
+    GROUP BY e.qid, k.{key} ORDER BY e.qid, k.{key}
+    """
+
+
 @_register(
     "v12_pq_recall",
     f"PQ calibration eval: recall@{TOP_K} of the trained-codebook ADC + "
@@ -1537,27 +1720,7 @@ def _recall_agg(exact, got):
     "truth is a session-index artifact (k rows per eval query); the PQ "
     "side re-executes its real ADC + re-rank plan against the cached "
     "codes, so the measured cost is the serving path itself.",
-    f"""
-    WITH qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K}),
-    pq AS (SELECT qid, vec_id FROM ({_pq_topk_sql(PQ_ITERS, V12_NQ)}))
-    SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e LEFT JOIN pq p ON p.qid = e.qid AND p.vec_id = e.vec_id
-    GROUP BY e.qid ORDER BY e.qid
-    """,
+    _recall_agg_sql(_pq_topk_sql(PQ_ITERS, V12_NQ)),
     ("similarity", "ann", "pq", "eval", "calibration", "pipeline"),
 )
 def v12(spark, sf_dir):
@@ -1606,7 +1769,7 @@ def _residual_subs_plan(e, cells, cents):
     ).select("vec_id", "cell", F.col("s.m").alias("m"), F.col("s.sube").alias("sube"))
 
 
-def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, trained: bool = False):
+def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, quant: Quantizer = SEED_Q):
     """(e, cw, codes, cents, cents6): the residual-encoded IVFADC index,
     session-cached.
 
@@ -1623,23 +1786,21 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, trained: bool = False):
     still M small ints + one BIGINT per vector plus a broadcast codebook
     and the 8-row cell stats.
 
-    ``trained=True`` builds the residual index against the TRAINED
+    ``quant=TRAINED_Q`` builds the residual index against the TRAINED
     coarse cells (v19's quantizer) instead of the seed cells — the
     residuals, codebook, crosstab and cell stats all follow the centroid
     table, so v23 can re-adjudicate the encoding question on the tighter
-    cells the serving default actually uses."""
+    cells the serving default actually uses.  Residual codes exist for
+    the default 8-cell pool only: the serving layout serves raw codes
+    (v13/v17/v23's measured adjudication), and the ``rpq_``/``trpq_``
+    keys name one pool each."""
+    # raise, not assert: must survive python -O
+    if quant.seeds != IVF_SEED_IDS:
+        raise ValueError("residual codes exist for the default IVF_SEED_IDS cells only")
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    if trained:
-        _, cells, _ = _tivf_cells_probes(spark, sf_dir, N_PROBE)
-        cents = _tivf_centroids(spark, sf_dir).select(
-            F.col("cid").alias("cell"), F.col("cwe").alias("ce")
-        )
-    else:
-        _, cells, _ = _ivf_cells_probes(spark, sf_dir, N_PROBE)
-        cents = e.where(F.col("vec_id").isin(*IVF_SEED_IDS)).select(
-            F.col("vec_id").alias("cell"), F.col("embedding").alias("ce")
-        )
-    kp = "trpq_" if trained else "rpq_"
+    _, cells, _ = _cells_probes(spark, sf_dir, quant, N_PROBE)
+    cents = quant.centroids(spark, sf_dir).select(F.col("cid").alias("cell"), "ce")
+    kp = "trpq_" if quant.trained else "rpq_"
     sfx = "" if iters == PQ_ITERS else f"_i{iters}"
 
     cw = _session_cached(
@@ -1721,26 +1882,22 @@ def _rpq_query_side(e, cw, cents, nq: int):
     return q, qparts, qcent
 
 
-def _ivfpq_topk_sql(iters: int, nq: int) -> str:
-    """Raw-codes IVFADC oracle SQL for query vectors vec_id < ``nq`` —
-    v13's oracle at N_QUERY_VECS; v14's recall eval embeds it at V12_NQ.
-    Raw (not residual) by MEASURED adjudication — see v13's docstring
-    and _rivfpq_topk_sql for the residual twin."""
-    return f"""
-    WITH {_pq_adc_ctes(iters, nq)},
-    c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS}),
-    ivfranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ivfranked
-               WHERE vec_id < {nq} AND rn <= {N_PROBE}),
-    cand AS (
+# (qid, vec_id) survivors of the coarse pruning (CTE twin of _ivfpq_adc's cand)
+_CAND_SQL = """cand AS (
       SELECT p.qid, x.vec_id
-      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid),
+      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid)"""
+
+
+def _ivfpq_topk_sql(quant: Quantizer, nq: int, nprobe: int = N_PROBE) -> str:
+    """Raw-codes IVFADC oracle SQL for query vectors vec_id < ``nq`` over
+    ``quant``'s cells at ``nprobe`` — v13 (seed cells), v21 (trained),
+    v26 (the serving layout); v14/v17/v23 embed it at V12_NQ.  Raw (not
+    residual) by MEASURED adjudication — see v13's docstring and
+    _rivfpq_topk_sql for the residual twin."""
+    return f"""
+    WITH {_pq_adc_ctes(PQ_ITERS, nq)},
+    {_coarse_sql(quant, nq, nprobe)},
+    {_CAND_SQL},
     adc AS (
       SELECT cd.qid, c2.vec_id,
              CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
@@ -1753,49 +1910,35 @@ def _ivfpq_topk_sql(iters: int, nq: int) -> str:
     """
 
 
-def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
+def _rivfpq_topk_sql(quant: Quantizer, nq: int) -> str:
     """Residual-IVFADC oracle SQL for query vectors vec_id < ``nq`` —
     v16's oracle at N_QUERY_VECS; v17's encoding eval embeds it at V12_NQ;
-    v23 embeds the trained=True form (the same residual machinery with
-    the ``c`` centroid CTE swapped for the trained table, so residuals,
-    codebook, crosstab and cell stats all follow the trained cells).
-    Mirrors _rpq_index/_rpq_query_side CTE for CTE: residuals, residual
-    codebook (Lloyd over rsub), crosstab rc6, cell stats, query table +
-    per-cell qcent, then the shared ADC tail."""
-    if trained:
-        cents_cte = f"""{_tivf_centroid_sql(TIVF_ITERS)},
-    c AS (SELECT cid, cwe AS ce FROM tcw)"""
-    else:
-        cents_cte = f"""c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS})"""
+    v23 embeds the TRAINED_Q form (the same residual machinery over the
+    trained centroids, so residuals, codebook, crosstab and cell stats
+    all follow the trained cells).  Mirrors _rpq_index/_rpq_query_side
+    CTE for CTE: residuals, residual codebook (Lloyd over rsub), crosstab
+    rc6, cell stats, query table + per-cell qcent, then the shared ADC
+    tail."""
     return f"""
     WITH mseq AS (SELECT UNNEST(generate_series(0, {PQ_M - 1})) AS m),
-    {cents_cte},
-    ivfranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ivfranked
-               WHERE vec_id < {nq} AND rn <= {N_PROBE}),
+    {_coarse_sql(quant, nq, N_PROBE)},
     resid AS (
       SELECT e.vec_id, cl.cell,
              list_transform(generate_series(1, {EMB_DIM}),
                  j -> CAST(e.embedding[j] AS DOUBLE) - CAST(c.ce[j] AS DOUBLE)) AS rese
       FROM embeddings e
       JOIN cells cl ON cl.vec_id = e.vec_id
-      JOIN c ON c.cid = cl.cell),
+      JOIN cents c ON c.cid = cl.cell),
     rsub AS (
       SELECT r.vec_id, r.cell, mseq.m,
              r.rese[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}] AS sube
       FROM resid r, mseq),
-    {_pq_codebook_sql(iters, src="rsub")},
+    {_pq_codebook_sql(PQ_ITERS, src="rsub")},
     centsub AS (
       SELECT c.cid AS cell, mseq.m,
              CAST(c.ce[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}]
                   AS DOUBLE[]) AS cente
-      FROM c, mseq),
+      FROM cents c, mseq),
     crosstab AS (
       SELECT cs.cell, cs.m, w.cid AS code,
              CAST(ROUND((w.cw_ss + 2 * list_dot_product(cs.cente, w.cwe)) * 1e6)
@@ -1814,7 +1957,7 @@ def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
       SELECT cid AS cell,
              CAST(ROUND(list_dot_product(CAST(ce AS DOUBLE[]), CAST(ce AS DOUBLE[]))
                   * 1e6) AS BIGINT) AS cent_ss6
-      FROM c),
+      FROM cents),
     q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
           WHERE vec_id < {nq}),
     qparts AS (
@@ -1824,7 +1967,7 @@ def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
                  / SQRT(list_dot_product(q.qe, q.qe)) * 1e6)
                   AS BIGINT) AS qdot6
       FROM q, cw2),
-    centd AS (SELECT cid AS cell, CAST(ce AS DOUBLE[]) AS ced FROM c),
+    centd AS (SELECT cid AS cell, CAST(ce AS DOUBLE[]) AS ced FROM cents),
     qcent AS (
       -- ced is pre-cast in its OWN CTE projection: an inline
       -- CAST(c.ce AS DOUBLE[]) inside this cross product gets pushed by
@@ -1836,9 +1979,7 @@ def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
                  / SQRT(list_dot_product(q.qe, q.qe)) * 1e6)
                   AS BIGINT) AS qc6
       FROM q, centd d),
-    cand AS (
-      SELECT p.qid, x.vec_id
-      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid),
+    {_CAND_SQL},
     adc AS (
       SELECT cd.qid, c2.vec_id,
              CAST(qct.qc6 + SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
@@ -1858,50 +1999,31 @@ def _ivfpq_topk_plan(
     sf_dir,
     nq: int = N_QUERY_VECS,
     residual: bool = False,
-    trained: bool = False,
+    quant: Quantizer = SEED_Q,
     nprobe: int = N_PROBE,
-    seeds: tuple = IVF_SEED_IDS,
 ):
     """The IVFADC plan for query vectors vec_id < ``nq`` — v13/v14 run it
     with raw codes (the corpus's MEASURED winner — see v13's docstring);
-    v16/v17 with residual=True (Jégou §V's residual encoding); v21 with
-    trained=True (the spherical-k-means coarse quantizer, v19's cells —
+    v16/v17 with residual=True (Jégou §V's residual encoding); v21 over
+    TRAINED_Q (the spherical-k-means coarse quantizer, v19's cells —
     the composition the v18→v20 measurements point at); v23 with BOTH
     (residual codes rebuilt against the trained cells — the
     re-adjudication of the encoding question on the cells the serving
     default actually uses, since v17's verdict was conditional on seed-
     cell tightness).  All variants share the ADC tail and the candidate
     shape; only the cell tables and/or code tables differ."""
-    e, q, adc = _ivfpq_adc(
-        spark, sf_dir, nq, residual=residual, trained=trained, nprobe=nprobe, seeds=seeds
-    )
+    e, q, adc = _ivfpq_adc(spark, sf_dir, nq, residual, quant, nprobe)
     return _pq_rank_tail(e, q, adc)
 
 
 def _ivfpq_adc(
-    spark,
-    sf_dir,
-    nq: int,
-    residual: bool,
-    trained: bool,
-    nprobe: int = N_PROBE,
-    seeds: tuple = IVF_SEED_IDS,
+    spark, sf_dir, nq: int, residual: bool, quant: Quantizer, nprobe: int = N_PROBE
 ):
     """The IVFADC front half — coarse pruning + ADC scoring — returning
     (e, q, adc) BEFORE the shortlist/re-rank tail, so a caller can either
     finish one plan (_ivfpq_topk_plan -> _pq_rank_tail) or stack several
     encodings' adc streams under ONE tail (_encoding_recall_plan, r16)."""
-    if trained:
-        _, cells, probes = _tivf_cells_probes(spark, sf_dir, nprobe, nq, seeds=seeds)
-    else:
-        assert seeds == IVF_SEED_IDS, "seed-quantizer plans take no seed pool"
-        _, cells, probes = _ivf_cells_probes(spark, sf_dir, nprobe, nq)
-    if residual:
-        # residual codes are trained against the DEFAULT 8-cell layouts
-        # only — the serving layout serves raw codes (v13/v17/v23's
-        # measured adjudication), so a non-default pool never composes
-        # with residual encoding
-        assert seeds == IVF_SEED_IDS, "residual codes exist for the default cells only"
+    _, cells, probes = _cells_probes(spark, sf_dir, quant, nprobe, nq)
     # (qid, vec_id) survivors of the coarse pruning — |queries| ×
     # (nprobe/ncells × corpus) rows, the candidate list a serving batch
     # materializes anyway; broadcast-small per batch
@@ -1923,7 +2045,7 @@ def _ivfpq_adc(
             )
         )
         return e, q, adc
-    e, cw, codes, cents, cents6 = _rpq_index(spark, sf_dir, trained=trained)
+    e, cw, codes, cents, cents6 = _rpq_index(spark, sf_dir, quant=quant)
     q, qparts, qcent = _rpq_query_side(e, cw, cents, nq)
     adc = (
         codes.join(F.broadcast(cand), "vec_id")
@@ -1970,7 +2092,7 @@ def _ivfpq_adc(
     "cost) — v13 stays on seed cells through r10 so its driver-row "
     "history remains comparable; the serving default flips to the "
     "trained layout once v19–v21 are driver-attested.",
-    _ivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _ivfpq_topk_sql(SEED_Q, N_QUERY_VECS),
     ("similarity", "ann", "ivf", "pq", "pipeline"),
 )
 def v13(spark, sf_dir):
@@ -1992,27 +2114,7 @@ def v13(spark, sf_dir):
     "how nprobe and codebook size are actually tuned before a 100 TB "
     "deployment.  v17 extends this eval across encodings (raw vs "
     "residual), v18 across nprobe.",
-    f"""
-    WITH qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K}),
-    ivfpq AS (SELECT qid, vec_id FROM ({_ivfpq_topk_sql(PQ_ITERS, V12_NQ)}))
-    SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e LEFT JOIN ivfpq p ON p.qid = e.qid AND p.vec_id = e.vec_id
-    GROUP BY e.qid ORDER BY e.qid
-    """,
+    _recall_agg_sql(_ivfpq_topk_sql(SEED_Q, V12_NQ)),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v14(spark, sf_dir):
@@ -2042,7 +2144,7 @@ def v14(spark, sf_dir):
     "On THIS corpus the raw encoding (v13) measures better — cells are "
     "not tight (mean cos ≈ 0.19) — which is exactly why both encodings "
     "are first-class and v17 is the eval that picks.",
-    _rivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _rivfpq_topk_sql(SEED_Q, N_QUERY_VECS),
     ("similarity", "ann", "ivf", "pq", "residual", "pipeline"),
 )
 def v16(spark, sf_dir):
@@ -2052,18 +2154,13 @@ def v16(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # v17: encoding eval — raw vs residual composed recall, side by side
 # ---------------------------------------------------------------------------
-# exact-ground-truth CTE fragment shared by the wide-eval oracles
-_EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K})"""
+def _encoding_recall_sql(quant: Quantizer) -> str:
+    """Oracle twin of _encoding_recall_plan: raw and residual composed
+    top-k over ``quant``'s cells, stacked under ``encoding``."""
+    return _stacked_recall_sql(
+        "encoding",
+        [("raw", _ivfpq_topk_sql(quant, V12_NQ)), ("residual", _rivfpq_topk_sql(quant, V12_NQ))],
+    )
 
 
 @_register(
@@ -2080,25 +2177,7 @@ _EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddin
     "the same two rows flip, and THAT is when an operator switches v13 "
     "serving to v16.  One ground-truth artifact, both encodings' real "
     "plans, one stacked output.",
-    f"""
-    WITH {_EXACT_V12_CTES},
-    rawq AS (SELECT qid, vec_id FROM ({_ivfpq_topk_sql(PQ_ITERS, V12_NQ)})),
-    resq AS (SELECT qid, vec_id FROM ({_rivfpq_topk_sql(PQ_ITERS, V12_NQ)})),
-    got AS (
-      SELECT 'raw' AS encoding, qid, vec_id FROM rawq
-      UNION ALL
-      SELECT 'residual' AS encoding, qid, vec_id FROM resq)
-    SELECT e.qid, enc.encoding, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN (SELECT 'raw' AS encoding UNION ALL SELECT 'residual') enc
-    LEFT JOIN got g ON g.encoding = enc.encoding AND g.qid = e.qid
-                   AND g.vec_id = e.vec_id
-    GROUP BY e.qid, enc.encoding ORDER BY e.qid, enc.encoding
-    """,
+    _encoding_recall_sql(SEED_Q),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v17(spark, sf_dir):
@@ -2109,10 +2188,10 @@ def v17(spark, sf_dir):
     # (~4.4 s: it retrains both codebooks per run, which the session
     # index amortizes here), so the suite's slowest Spark query is also
     # one of its best ratios (0.55x).
-    return _encoding_recall_plan(spark, sf_dir, trained=False)
+    return _encoding_recall_plan(spark, sf_dir, SEED_Q)
 
 
-def _encoding_recall_plan(spark, sf_dir, trained: bool):
+def _encoding_recall_plan(spark, sf_dir, quant: Quantizer):
     """raw-vs-residual composed recall over one quantizer's cells —
     v17's eval body, quantizer-parametrized so v23 re-runs the identical
     adjudication over the trained cells.
@@ -2140,7 +2219,7 @@ def _encoding_recall_plan(spark, sf_dir, trained: bool):
     appx = None
     e_ref = None
     for enc, res in (("raw", False), ("residual", True)):
-        e, _q, adc = _ivfpq_adc(spark, sf_dir, V12_NQ, residual=res, trained=trained)
+        e, _q, adc = _ivfpq_adc(spark, sf_dir, V12_NQ, res, quant)
         e_ref = e
         s = adc.where(F.col("vec_id") != F.col("qid")).select(
             F.lit(enc).alias("encoding"),
@@ -2214,34 +2293,16 @@ def _stacked_topk(e, nq: int, appx):
 PROBE_SWEEP = (1, 2, 4, N_CELLS)
 
 
-def _nprobe_sweep_sql(trained: bool) -> str:
+def _nprobe_sweep_sql(quant: Quantizer) -> str:
     """The fused nprobe-sweep oracle, quantizer-parametrized: v18 runs it
     over the seed cells, v22 over the trained ones — everything from the
     probe ranking down (window passes, shortlist reconstruction, recall
     stack) is identical, only the centroid source differs."""
-    if trained:
-        head = f"""{_tivf_centroid_sql(TIVF_ITERS)},
-    ivfranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, tcw t)"""
-    else:
-        head = f"""c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS}),
-    ivfranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c)"""
     return f"""
     WITH {_pq_adc_ctes(PQ_ITERS, V12_NQ)},
-    {head},
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    proben AS (SELECT vec_id AS qid, cid AS cell, rn FROM ivfranked
-               WHERE vec_id < {V12_NQ}),
+    {_coarse_sql(quant, V12_NQ, N_CELLS)},
     mp AS (SELECT p.qid, x.vec_id, p.rn AS mp
-           FROM proben p JOIN cells x ON x.cell = p.cell),
+           FROM probes p JOIN cells x ON x.cell = p.cell),
     adcall AS (
       SELECT qp.qid, cd.vec_id,
              CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
@@ -2322,14 +2383,14 @@ def _nprobe_sweep_sql(trained: bool) -> str:
     "filter loss — measured, not asserted.  At 100 TB the sweep is the "
     "capacity-planning query: recall-per-probe directly prices "
     "nprobe/ncells × index-bytes per query.",
-    _nprobe_sweep_sql(trained=False),
+    _nprobe_sweep_sql(SEED_Q),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v18(spark, sf_dir):
-    return _nprobe_sweep_plan(spark, sf_dir, trained=False)
+    return _nprobe_sweep_plan(spark, sf_dir, SEED_Q)
 
 
-def _nprobe_sweep_plan(spark, sf_dir, trained: bool):
+def _nprobe_sweep_plan(spark, sf_dir, quant: Quantizer):
     """The fused sweep plan, quantizer-parametrized (v18 seed / v22
     trained) — the PQ codes, windows, and recall stack are shared; only
     the cells/probes source differs."""
@@ -2337,8 +2398,7 @@ def _nprobe_sweep_plan(spark, sf_dir, trained: bool):
     from operator import or_
 
     e, cw, codes = _pq_index(spark, sf_dir)
-    cp = _tivf_cells_probes if trained else _ivf_cells_probes
-    _, cells, probes = cp(spark, sf_dir, N_CELLS, V12_NQ)
+    _, cells, probes = _cells_probes(spark, sf_dir, quant, N_CELLS, V12_NQ)
     q, qparts = _pq_query_side(e, cw, V12_NQ)
     mp = cells.join(F.broadcast(probes), "cell").select(
         "qid", "vec_id", F.col("rn").alias("mp")
@@ -2533,54 +2593,13 @@ def _tivf_centroids_plan(spark, sf_dir, iters: int, seeds: tuple = IVF_SEED_IDS)
     return cw
 
 
-def _tivf_centroids(spark, sf_dir, seeds: tuple = IVF_SEED_IDS):
-    """The trained centroid table (cid, cwe), session-cached — shared by
-    the batch index (_tivf_cells_probes) and the streaming serving tier
-    (which collects it as the broadcast-small closure constant).
-    Non-default ``seeds`` (the v24 ncells sweep) key their own cache
-    entries; the default keys are unchanged."""
-    sfx = "" if seeds == IVF_SEED_IDS else f"_c{len(seeds)}"
-    return _session_cached(
-        spark,
-        sf_dir,
-        f"tivf_cents{sfx}",
-        lambda: _tivf_centroids_plan(spark, sf_dir, TIVF_ITERS, seeds).localCheckpoint(
-            eager=False
-        ),
-    )
-
-
-def _tivf_cells_probes(
-    spark, sf_dir, max_probe: int, nq: int = N_QUERY_VECS, seeds: tuple = IVF_SEED_IDS
-):
-    """(e, cells, probes) for the TRAINED coarse quantizer — the
-    _ivf_cells_probes twin with tivf_* session keys; the cell pick and
-    probe ranking are the shared _cells_probes back half, so the two
-    quantizers can never drift in tie-break or ranking semantics."""
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    cw = _tivf_centroids(spark, sf_dir, seeds)
-    sfx = "" if seeds == IVF_SEED_IDS else f"_c{len(seeds)}"
-
-    def build_scored():
-        return (
-            e.crossJoin(F.broadcast(cw))
-            .select("vec_id", "cid", cosine(F.col("embedding"), F.col("cwe")).alias("sim"))
-            .localCheckpoint(eager=False)
-        )
-
-    scored = _session_cached(spark, sf_dir, f"tivf{sfx}_scored", build_scored)
-    cells, probes = _cells_probes(spark, sf_dir, scored, f"tivf{sfx}_", max_probe, nq)
-    return e, cells, probes
-
-
-def _tivf_centroid_sql(iters: int, seeds: tuple = IVF_SEED_IDS, tag: str = "") -> str:
+def _tivf_centroid_sql(iters: int, seeds: tuple, tag: str) -> str:
     """WITH fragment mirroring _tivf_centroids_plan: ``iters`` unrolled
-    spherical-Lloyd steps ending in ``{tag}tcw`` (cid, cwe).  Same
+    spherical-Lloyd steps ending in ``{tag}cents`` (cid, ce).  Same
     integer-exact 6-digit-mean iteration boundary as the PQ codebook
     SQL, so both engines carry bitwise-identical centroids into every
     assignment.  ``tag`` prefixes every CTE name so several trainings
-    (the v24 ncells sweep) compose in one query; the default tag=""
-    reproduces the v19–v23 fragment verbatim."""
+    (v20, the v24 ncells sweep) compose in one query."""
     parts = [
         f"{tag}xt AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS xe FROM embeddings)",
         f"""{tag}tcw_i0 AS (
@@ -2610,68 +2629,8 @@ def _tivf_centroid_sql(iters: int, seeds: tuple = IVF_SEED_IDS, tag: str = "") -
       FROM {prev} p LEFT JOIN {tag}tnc_i{i} n ON n.cid = p.cid)""",
         ]
         prev = f"{tag}tcw_i{i}"
-    parts.append(f"{tag}tcw AS (SELECT cid, cwe FROM {prev})")
+    parts.append(f"{tag}cents AS (SELECT cid, cwe AS ce FROM {prev})")
     return ",\n    ".join(parts)
-
-
-def _tivf_topk_plan(spark, sf_dir, nprobe: int = N_PROBE, seeds: tuple = IVF_SEED_IDS):
-    """Trained-IVF cell-probe top-k (v19's plan), parameterized by probe
-    count and seed pool so the SERVING layout (serving.SERVING_NCELLS
-    cells off TIVF_SEED_POOL, nprobe scaled to hold the scan fraction)
-    runs the identical plan shape as the declared 8-cell calibration
-    query — centroids broadcast, cells the partition key, a query reads
-    nprobe/ncells of the corpus."""
-    e, cells, probes = _tivf_cells_probes(spark, sf_dir, nprobe, seeds=seeds)
-    probes = probes.drop("rn")
-    qv = e.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(cells, "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(e, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
-    )
-
-
-def _tivf_topk_sql(nprobe: int = N_PROBE, seeds: tuple = IVF_SEED_IDS) -> str:
-    """Trained-IVF cell-probe top-k oracle, layout-parameterized like
-    _tivf_topk_plan (v19 = defaults; v25 = the serving layout)."""
-    return f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
-      FROM embeddings e, tcw c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {nprobe}),
-    qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-           WHERE vec_id < {N_QUERY_VECS}),
-    cand AS (
-      SELECT p.qid, x.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
-      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
-      JOIN embeddings e ON e.vec_id = x.vec_id
-      JOIN qv ON qv.qid = p.qid),
-    rr AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM cand)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
-    """
 
 
 @_register(
@@ -2690,11 +2649,67 @@ def _tivf_topk_sql(nprobe: int = N_PROBE, seeds: tuple = IVF_SEED_IDS) -> str:
     "side-by-side eval, test-gated strictly-improves).  Serving shape "
     "identical to v5: centroids broadcast, cells are the partition "
     "key, a query touches nprobe/ncells of the corpus.",
-    _tivf_topk_sql(),
+    _probe_topk_sql(TRAINED_Q, N_PROBE),
     ("similarity", "ann", "ivf", "trained", "pipeline"),
 )
 def v19(spark, sf_dir):
-    return _tivf_topk_plan(spark, sf_dir)
+    return _probe_topk_plan(spark, sf_dir, TRAINED_Q, N_PROBE)
+
+
+def _membership_recall_plan(spark, sf_dir, key: str, arms):
+    """(qid, ``key``, n_topk, n_recovered, recall): cell-MEMBERSHIP
+    recall@k (true neighbor inside the probed cells) over the V12_NQ eval
+    set, one row per query per arm (value, quantizer, nprobe), stacked
+    under ``key`` — v20 (seed vs trained) and v24 (ncells).  Membership
+    isolates the coarse filter from everything downstream."""
+    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
+    out = None
+    for value, quant, nprobe in arms:
+        _, cells, probes = _cells_probes(spark, sf_dir, quant, nprobe, V12_NQ)
+        # broadcast ground truth vs corpus-sized cells — the v9 rationale
+        hit = (
+            F.broadcast(exact).join(cells, "vec_id")
+            .join(
+                F.broadcast(probes.select("qid", "cell", F.lit(1).alias("hit"))),
+                ["qid", "cell"],
+                "left",
+            )
+            .groupBy("qid")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_topk"),
+                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
+            )
+            .select(
+                "qid",
+                F.lit(value).alias(key),
+                "n_topk",
+                "n_recovered",
+                F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
+            )
+        )
+        out = hit if out is None else out.unionByName(hit)
+    return out.orderBy("qid", key)
+
+
+def _membership_recall_sql(key: str, arms) -> str:
+    """Oracle twin of _membership_recall_plan: one tagged coarse stage
+    per arm, each arm's hits = exact neighbors whose cell is probed."""
+    return _stacked_recall_sql(
+        key,
+        [
+            (
+                value,
+                f"""SELECT x.qid, x.vec_id FROM exact x
+      JOIN {q.tag}cells cl ON cl.vec_id = x.vec_id
+      JOIN {q.tag}probes p ON p.qid = x.qid AND p.cell = cl.cell""",
+            )
+            for value, q, _ in arms
+        ],
+        [_coarse_sql(q, V12_NQ, nprobe, q.tag) for _, q, nprobe in arms],
+    )
+
+
+_V20_ARMS = (("seed", SEED_Q, N_PROBE), ("trained", TRAINED_Q, N_PROBE))
 
 
 @_register(
@@ -2711,116 +2726,16 @@ def v19(spark, sf_dir):
     "per query.  Same eval discipline as v17: one ground-truth "
     "artifact, both quantizers' real cell/probe tables, one stacked "
     "output, strictly-improves test-gated.",
-    f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS)},
-    c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS}),
-    sranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    scells AS (SELECT vec_id, cid AS cell FROM sranked WHERE rn = 1),
-    sprobes AS (SELECT vec_id AS qid, cid AS cell FROM sranked
-                WHERE vec_id < {V12_NQ} AND rn <= {N_PROBE}),
-    tranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, tcw t),
-    tcells AS (SELECT vec_id, cid AS cell FROM tranked WHERE rn = 1),
-    tprobes AS (SELECT vec_id AS qid, cid AS cell FROM tranked
-                WHERE vec_id < {V12_NQ} AND rn <= {N_PROBE}),
-    {_EXACT_V12_CTES},
-    hits AS (
-      SELECT 'seed' AS quantizer, x.qid, x.vec_id
-      FROM exact x
-      JOIN scells cl ON cl.vec_id = x.vec_id
-      JOIN sprobes p ON p.qid = x.qid AND p.cell = cl.cell
-      UNION ALL
-      SELECT 'trained', x.qid, x.vec_id
-      FROM exact x
-      JOIN tcells cl ON cl.vec_id = x.vec_id
-      JOIN tprobes p ON p.qid = x.qid AND p.cell = cl.cell)
-    SELECT e.qid, q.quantizer, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN (SELECT 'seed' AS quantizer UNION ALL SELECT 'trained') q
-    LEFT JOIN hits h ON h.quantizer = q.quantizer AND h.qid = e.qid
-                    AND h.vec_id = e.vec_id
-    GROUP BY e.qid, q.quantizer ORDER BY e.qid, q.quantizer
-    """,
+    _membership_recall_sql("quantizer", _V20_ARMS),
     ("similarity", "ann", "ivf", "eval", "calibration", "trained", "pipeline"),
 )
 def v20(spark, sf_dir):
-    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    out = None
-    for qname, cpfn in (("seed", _ivf_cells_probes), ("trained", _tivf_cells_probes)):
-        _, cells, probes = cpfn(spark, sf_dir, N_PROBE, V12_NQ)
-        # broadcast ground truth vs corpus-sized cells — the v9 rationale
-        hit = (
-            F.broadcast(exact).join(cells, "vec_id")
-            .join(
-                F.broadcast(probes.select("qid", "cell", F.lit(1).alias("hit"))),
-                ["qid", "cell"],
-                "left",
-            )
-            .groupBy("qid")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-            )
-            .select(
-                "qid",
-                F.lit(qname).alias("quantizer"),
-                "n_topk",
-                "n_recovered",
-                F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-            )
-        )
-        out = hit if out is None else out.unionByName(hit)
-    return out.orderBy("qid", "quantizer")
+    return _membership_recall_plan(spark, sf_dir, "quantizer", _V20_ARMS)
 
 
 # ---------------------------------------------------------------------------
 # v21: trained-IVF + PQ — the composition the v18→v20 measurements built
 # ---------------------------------------------------------------------------
-def _tivfpq_topk_sql(
-    iters: int, nq: int, seeds: tuple = IVF_SEED_IDS, nprobe: int = N_PROBE
-) -> str:
-    """IVFADC oracle with the TRAINED coarse quantizer: _pq_adc_ctes'
-    codebook/codes/query side + the trained-centroid fragment for
-    cells/probes + the shared cand/adc/tail.  ``seeds``/``nprobe``
-    parameterize the layout (v21 = defaults; v26 = the serving layout)."""
-    return f"""
-    WITH {_pq_adc_ctes(iters, nq)},
-    {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ivfranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, tcw t),
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ivfranked
-               WHERE vec_id < {nq} AND rn <= {nprobe}),
-    cand AS (
-      SELECT p.qid, x.vec_id
-      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid),
-    adc AS (
-      SELECT cd.qid, c2.vec_id,
-             CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
-             CAST(SUM(c2.cw_ss6) AS DOUBLE) / 1e6 AS recon_ss
-      FROM codes c2
-      JOIN cand cd ON cd.vec_id = c2.vec_id
-      JOIN qparts qp ON qp.qid = cd.qid AND qp.m = c2.m AND qp.code = c2.code
-      GROUP BY cd.qid, c2.vec_id),
-    {_PQ_TAIL_SQL}
-    """
-
-
 @_register(
     "v21_tivfpq_topk",
     f"Trained-IVF + PQ top-{TOP_K}: v13's composed serving plan with the "
@@ -2837,11 +2752,11 @@ def _tivfpq_topk_sql(
     "— doubling every query's index read — would.  Plan shape identical "
     "to v13: all-equi-join, candidate cells and ADC lookup broadcast, "
     "codes never shuffle.",
-    _tivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _ivfpq_topk_sql(TRAINED_Q, N_QUERY_VECS),
     ("similarity", "ann", "ivf", "pq", "trained", "pipeline"),
 )
 def v21(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, trained=True)
+    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, quant=TRAINED_Q)
 
 
 @_register(
@@ -2856,11 +2771,11 @@ def v21(spark, sf_dir):
     "every cell disables the coarse filter regardless of quantizer — "
     "the cross-quantizer invariant the sweep tests pin).  Same fused "
     "machinery as v18: one ADC pass, two running-count window passes.",
-    _nprobe_sweep_sql(trained=True),
+    _nprobe_sweep_sql(TRAINED_Q),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "trained", "pipeline"),
 )
 def v22(spark, sf_dir):
-    return _nprobe_sweep_plan(spark, sf_dir, trained=True)
+    return _nprobe_sweep_plan(spark, sf_dir, TRAINED_Q)
 
 
 # ---------------------------------------------------------------------------
@@ -2889,83 +2804,19 @@ def v22(spark, sf_dir):
     "DECISIVELY, and THAT is the signal to re-point serving at the "
     "residual index.  One ground-truth artifact, both encodings' real "
     "plans over the same trained cells, one stacked output.",
-    f"""
-    WITH {_EXACT_V12_CTES},
-    rawq AS (SELECT qid, vec_id FROM ({_tivfpq_topk_sql(PQ_ITERS, V12_NQ)})),
-    resq AS (SELECT qid, vec_id FROM ({_rivfpq_topk_sql(PQ_ITERS, V12_NQ, trained=True)})),
-    got AS (
-      SELECT 'raw' AS encoding, qid, vec_id FROM rawq
-      UNION ALL
-      SELECT 'residual' AS encoding, qid, vec_id FROM resq)
-    SELECT e.qid, enc.encoding, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN (SELECT 'raw' AS encoding UNION ALL SELECT 'residual') enc
-    LEFT JOIN got g ON g.encoding = enc.encoding AND g.qid = e.qid
-                   AND g.vec_id = e.vec_id
-    GROUP BY e.qid, enc.encoding ORDER BY e.qid, enc.encoding
-    """,
+    _encoding_recall_sql(TRAINED_Q),
     ("similarity", "ann", "ivf", "pq", "residual", "eval", "calibration", "trained", "pipeline"),
 )
 def v23(spark, sf_dir):
-    return _encoding_recall_plan(spark, sf_dir, trained=True)
+    return _encoding_recall_plan(spark, sf_dir, TRAINED_Q)
 
 
 # ---------------------------------------------------------------------------
 # v24: ncells sweep — membership recall at a FIXED scan fraction
 # ---------------------------------------------------------------------------
-def _ncells_sweep_sql() -> str:
-    """Three trained quantizers (4/8/16 cells off the deterministic seed
-    pool, tagged CTE name-spaces) + one membership-recall stack — v20's
-    eval shape swept along the ncells axis at constant nprobe/ncells."""
-    blocks, hits, keys = [], [], []
-    for n in NCELLS_SWEEP:
-        tag = f"c{n}_"
-        npb = max(1, n // 4)
-        blocks.append(_tivf_centroid_sql(TIVF_ITERS, TIVF_SEED_POOL[:n], tag))
-        blocks.append(
-            f"""{tag}ranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, {tag}tcw t)"""
-        )
-        blocks.append(
-            f"{tag}cells AS (SELECT vec_id, cid AS cell FROM {tag}ranked WHERE rn = 1)"
-        )
-        blocks.append(
-            f"""{tag}probes AS (SELECT vec_id AS qid, cid AS cell FROM {tag}ranked
-               WHERE vec_id < {V12_NQ} AND rn <= {npb})"""
-        )
-        hits.append(
-            f"""
-      SELECT {n} AS ncells, x.qid, x.vec_id
-      FROM exact x
-      JOIN {tag}cells cl ON cl.vec_id = x.vec_id
-      JOIN {tag}probes p ON p.qid = x.qid AND p.cell = cl.cell"""
-        )
-        keys.append(f"SELECT {n} AS ncells")
-    sep = ",\n    "
-    blocks_sql = sep.join(blocks)
-    hits_sql = " UNION ALL ".join(hits)
-    keys_sql = " UNION ALL ".join(keys)
-    return f"""
-    WITH {_EXACT_V12_CTES},
-    {blocks_sql},
-    hits AS ({hits_sql})
-    SELECT e.qid, CAST(k.ncells AS INT) AS ncells, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN ({keys_sql}) k
-    LEFT JOIN hits h ON h.ncells = k.ncells AND h.qid = e.qid AND h.vec_id = e.vec_id
-    GROUP BY e.qid, k.ncells ORDER BY e.qid, k.ncells
-    """
+_V24_ARMS = tuple(
+    (n, Quantizer(TIVF_SEED_POOL[:n], trained=True), max(1, n // 4)) for n in NCELLS_SWEEP
+)
 
 
 @_register(
@@ -3001,39 +2852,11 @@ def _ncells_sweep_sql() -> str:
     "row pins to v20's trained row (test-gated).  Same integer-exact "
     "spherical-Lloyd training and eval discipline as v19/v20; one "
     "ground-truth artifact, one stacked output.",
-    _ncells_sweep_sql(),
+    _membership_recall_sql("ncells", _V24_ARMS),
     ("similarity", "ann", "ivf", "eval", "calibration", "trained", "pipeline"),
 )
 def v24(spark, sf_dir):
-    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    out = None
-    for n in NCELLS_SWEEP:
-        _, cells, probes = _tivf_cells_probes(
-            spark, sf_dir, max(1, n // 4), V12_NQ, seeds=TIVF_SEED_POOL[:n]
-        )
-        # broadcast ground truth vs corpus-sized cells — the v9 rationale
-        hit = (
-            F.broadcast(exact).join(cells, "vec_id")
-            .join(
-                F.broadcast(probes.select("qid", "cell", F.lit(1).alias("hit"))),
-                ["qid", "cell"],
-                "left",
-            )
-            .groupBy("qid")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-            )
-            .select(
-                "qid",
-                F.lit(n).cast("int").alias("ncells"),
-                "n_topk",
-                "n_recovered",
-                F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-            )
-        )
-        out = hit if out is None else out.unionByName(hit)
-    return out.orderBy("qid", "ncells")
+    return _membership_recall_plan(spark, sf_dir, "ncells", _V24_ARMS)
 
 
 # ---------------------------------------------------------------------------
@@ -3057,6 +2880,7 @@ V25_NPROBE = 8  # = SERVING_NCELLS // 4, the constant scan fraction
 # serving.SERVING_NCELLS.
 V25_NCELLS = 32
 V25_POOL = TIVF_SEED_POOL[:V25_NCELLS]
+V25_Q = Quantizer(V25_POOL, trained=True)
 
 
 @_register(
@@ -3073,11 +2897,11 @@ V25_POOL = TIVF_SEED_POOL[:V25_NCELLS]
     "0.572 -> 0.600 (sf0.001) at constant bytes read.  Plan shape "
     "identical to v19: centroids broadcast, cells the partition key, a "
     "query reads nprobe/ncells of the corpus.",
-    _tivf_topk_sql(V25_NPROBE, V25_POOL),
+    _probe_topk_sql(V25_Q, V25_NPROBE),
     ("similarity", "ann", "ivf", "trained", "serving", "pipeline"),
 )
 def v25(spark, sf_dir):
-    return _tivf_topk_plan(spark, sf_dir, V25_NPROBE, V25_POOL)
+    return _probe_topk_plan(spark, sf_dir, V25_Q, V25_NPROBE)
 
 
 @_register(
@@ -3092,50 +2916,11 @@ def v25(spark, sf_dir):
     "(sf0.001) at equal scan, strictly-no-worse test-gated.  Plan shape "
     "identical to v13/v21: all-equi-join, candidate cells and ADC lookup "
     "broadcast, codes never shuffle.",
-    _tivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS, V25_POOL, V25_NPROBE),
+    _ivfpq_topk_sql(V25_Q, N_QUERY_VECS, V25_NPROBE),
     ("similarity", "ann", "ivf", "pq", "trained", "serving", "pipeline"),
 )
 def v26(spark, sf_dir):
-    return _ivfpq_topk_plan(
-        spark,
-        sf_dir,
-        N_QUERY_VECS,
-        trained=True,
-        nprobe=V25_NPROBE,
-        seeds=V25_POOL,
-    )
-
-
-def _filtered_tivf_topk_sql(nprobe: int, seeds: tuple) -> str:
-    """v27's oracle: _tivf_topk_sql with the metadata predicate composed
-    into the candidate join (e.label = qv.qlabel) — the filtered-search
-    twin of the serving layout."""
-    return f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
-      FROM embeddings e, tcw c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {nprobe}),
-    qv AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel FROM embeddings
-           WHERE vec_id < {N_QUERY_VECS}),
-    cand AS (
-      SELECT p.qid, x.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
-      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
-      JOIN embeddings e ON e.vec_id = x.vec_id
-      JOIN qv ON qv.qid = p.qid AND e.label = qv.qlabel),
-    rr AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM cand)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
-    """
+    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, quant=V25_Q, nprobe=V25_NPROBE)
 
 
 @_register(
@@ -3155,34 +2940,11 @@ def _filtered_tivf_topk_sql(nprobe: int, seeds: tuple) -> str:
     "partition/cluster key under the cell layout and the same plan "
     "prunes files.  Plan shape otherwise identical to v25 (centroids "
     "broadcast, cells the partition key).",
-    _filtered_tivf_topk_sql(V25_NPROBE, V25_POOL),
+    _probe_topk_sql(V25_Q, V25_NPROBE, label_filter=True),
     ("similarity", "ann", "ivf", "trained", "serving", "filtered", "pipeline"),
 )
 def v27(spark, sf_dir):
-    e, cells, probes = _tivf_cells_probes(spark, sf_dir, V25_NPROBE, seeds=V25_POOL)
-    probes = probes.drop("rn")
-    full = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
-    qv = full.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("qlabel"),
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(cells, "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(full, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .where(F.col("label") == F.col("qlabel"))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
-    )
+    return _probe_topk_plan(spark, sf_dir, V25_Q, V25_NPROBE, label_filter=True)
 
 
 def _filtered_exact_sql() -> str:
@@ -3216,7 +2978,7 @@ def _filtered_exact_sql() -> str:
     "one brute-force pass over the label slice.",
     f"""
     WITH gt AS ({_filtered_exact_sql()}),
-    ap AS ({_filtered_tivf_topk_sql(V25_NPROBE, V25_POOL)}),
+    ap AS ({_probe_topk_sql(V25_Q, V25_NPROBE, label_filter=True)}),
     hit AS (
       SELECT gt.qid, gt.vec_id,
              CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS got
@@ -3303,90 +3065,17 @@ def _label_nprobe(full, ncells: int, base_nprobe: int):
     return cnt.select("label", npl.cast("int").alias("npl"))
 
 
-def _adaptive_filtered_topk_plan(
-    spark, sf_dir, nq: int = N_QUERY_VECS, seeds: tuple = None, base_nprobe: int = None
-):
-    """v27's filtered plan with the per-label probe dispatch: probes are
-    built to the FULL cell list (rn <= ncells) once, then each query
-    keeps rn <= npl(its label).  Everything that scales with the corpus
-    is unchanged from v27 — centroids/probes/npl broadcast, cells the
-    partition key, the label predicate composed into the candidate
-    stream before the cosine."""
-    seeds = V25_POOL if seeds is None else seeds
-    base_nprobe = V25_NPROBE if base_nprobe is None else base_nprobe
-    e, cells, probes = _tivf_cells_probes(spark, sf_dir, len(seeds), nq, seeds=seeds)
-    full = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
-    npl = _label_nprobe(full, len(seeds), base_nprobe)
-    qv = (
-        full.where(F.col("vec_id") < nq)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("label").alias("qlabel"),
-        )
-        .join(F.broadcast(npl), F.col("qlabel") == F.col("label"))
-        .drop("label")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(F.broadcast(qv), "qid")
-        .where(F.col("rn") <= F.col("npl"))
-        .join(cells, "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(full, "vec_id")
-        .where(F.col("label") == F.col("qlabel"))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
-    )
-
-
-def _adaptive_filtered_sql(seeds: tuple, base_nprobe: int, nq: int = N_QUERY_VECS) -> str:
-    """v29's oracle: _filtered_tivf_topk_sql with the probe depth joined
-    per query label off the same integer budget rule."""
-    target = FILTERED_SHORTLIST_MULT * TOP_K * len(seeds)
-    return f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
-      FROM embeddings e, tcw c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    lc AS (SELECT label, COUNT(*) AS cnt FROM embeddings GROUP BY label),
+def _label_nprobe_sql(ncells: int, base_nprobe: int) -> str:
+    """Oracle twin of _label_nprobe: CTEs ``lc`` (label counts) and
+    ``np`` (label, npl)."""
+    target = FILTERED_SHORTLIST_MULT * TOP_K * ncells
+    return f"""lc AS (SELECT label, COUNT(*) AS cnt FROM embeddings GROUP BY label),
     np AS (
       SELECT label,
-             LEAST({len(seeds)}, GREATEST({base_nprobe},
+             LEAST({ncells}, GREATEST({base_nprobe},
                CAST(FLOOR(({target} + GREATEST(cnt - 1, 1) - 1) * 1.0
                           / GREATEST(cnt - 1, 1)) AS BIGINT))) AS npl
-      FROM lc),
-    qv AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel FROM embeddings
-           WHERE vec_id < {nq}),
-    probes AS (
-      SELECT r.vec_id AS qid, r.cid AS cell
-      FROM ranked r
-      JOIN qv ON qv.qid = r.vec_id
-      JOIN np ON np.label = qv.qlabel
-      WHERE r.rn <= np.npl),
-    cand AS (
-      SELECT p.qid, x.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
-      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
-      JOIN embeddings e ON e.vec_id = x.vec_id
-      JOIN qv ON qv.qid = p.qid AND e.label = qv.qlabel),
-    rr AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM cand)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
-    """
+      FROM lc)"""
 
 
 @_register(
@@ -3408,11 +3097,11 @@ def _adaptive_filtered_sql(seeds: tuple, base_nprobe: int, nq: int = N_QUERY_VEC
     "selectivity table is one |labels|-row broadcast aggregate, probes/"
     "centroids broadcast, cells the partition key; at 100 TB the same "
     "per-label counts come from table statistics instead of a scan.",
-    _adaptive_filtered_sql(V25_POOL, V25_NPROBE),
+    _probe_topk_sql(V25_Q, V25_NPROBE, label_depth=True),
     ("similarity", "ann", "ivf", "trained", "serving", "filtered", "dispatch", "pipeline"),
 )
 def v29(spark, sf_dir):
-    return _adaptive_filtered_topk_plan(spark, sf_dir)
+    return _probe_topk_plan(spark, sf_dir, V25_Q, V25_NPROBE, label_depth=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3468,8 +3157,6 @@ def v15(spark, sf_dir):
 # (the engine side gates once, in _emb; v10 is exempt by design — it is
 # the monitor that reports what the gate excludes)
 # ---------------------------------------------------------------------------
-import dataclasses as _dc  # noqa: E402
-
 for _name in (
     "v1_cosine_topk",
     "v2_lsh_bucket",
@@ -3501,5 +3188,5 @@ for _name in (
     "v28_filtered_recall",
     "v29_adaptive_filtered_topk",
 ):
-    QUERIES[_name] = _dc.replace(QUERIES[_name], oracle=_gate_oracle(QUERIES[_name].oracle))
+    QUERIES[_name] = dataclasses.replace(QUERIES[_name], oracle=_gate_oracle(QUERIES[_name].oracle))
 del _name

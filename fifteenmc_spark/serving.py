@@ -123,25 +123,29 @@ def serving_seeds() -> tuple:
     return V25_POOL
 
 
+def serving_quantizer(name: str | None = None):
+    """The ``name`` quantizer ("seed" or "trained"; default
+    DEFAULT_QUANTIZER) at the serving layout — the single dispatch point
+    batch plans, index builders and the streaming tiers share, so 'which
+    cells does serving use' is answered in exactly one place."""
+    from .operators.similarity import SEED_Q, Quantizer
+
+    if (name or DEFAULT_QUANTIZER) == "trained":
+        return Quantizer(serving_seeds(), trained=True)
+    return SEED_Q
+
+
 def serving_cells_probes(
     spark: SparkSession, sf_dir: str, max_probe: int | None = None, nq: int | None = None
 ):
-    """(e, cells, probes) for the DEFAULT serving quantizer AND layout —
-    the single dispatch point batch plans and index builders share, so
-    'which cells does serving use' is answered in exactly one place.
+    """(e, cells, probes) for the DEFAULT serving quantizer AND layout.
     ``max_probe`` defaults to SERVING_NPROBE (the constant-scan-fraction
     probe count)."""
-    from .operators.similarity import (
-        N_QUERY_VECS,
-        _ivf_cells_probes,
-        _tivf_cells_probes,
-    )
+    from .operators.similarity import N_QUERY_VECS, _cells_probes
 
     mp = SERVING_NPROBE if max_probe is None else max_probe
     q = N_QUERY_VECS if nq is None else nq
-    if DEFAULT_QUANTIZER == "trained":
-        return _tivf_cells_probes(spark, sf_dir, mp, q, seeds=serving_seeds())
-    return _ivf_cells_probes(spark, sf_dir, mp, q)
+    return _cells_probes(spark, sf_dir, serving_quantizer(), mp, q)
 
 
 def filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,10 +156,10 @@ def filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped to [SERVING_NPROBE, SERVING_NCELLS]; unselective predicates
     serve at exactly the fixed-nprobe v27 plan.  Row-equality pinned to
     the declared query v29 in test_serving_default."""
-    from .operators.similarity import _adaptive_filtered_topk_plan
+    from .operators.similarity import _probe_topk_plan
 
-    return _adaptive_filtered_topk_plan(
-        spark, sf_dir, seeds=serving_seeds(), base_nprobe=SERVING_NPROBE
+    return _probe_topk_plan(
+        spark, sf_dir, serving_quantizer("trained"), SERVING_NPROBE, label_depth=True
     )
 
 
@@ -165,20 +169,8 @@ def serving_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[
     ((cid, vector) sorted by cid — n_cells x dim, a few KB).  Streaming
     ann/pq_ann stay quantizer-agnostic operators; this is where a
     serving session gets 'the' centroids without naming a quantizer."""
-    from pyspark.sql import functions as F
-
-    from .operators.similarity import IVF_SEED_IDS, _emb, _tivf_centroids
-
-    if DEFAULT_QUANTIZER == "trained":
-        rows = _tivf_centroids(spark, sf_dir, serving_seeds()).orderBy("cid").collect()
-        return [(r["cid"], list(r["cwe"])) for r in rows]
-    rows = (
-        _emb(spark, sf_dir)
-        .where(F.col("vec_id").isin(*IVF_SEED_IDS))
-        .orderBy("vec_id")
-        .collect()
-    )
-    return [(r["vec_id"], list(r["embedding"])) for r in rows]
+    rows = serving_quantizer().centroids(spark, sf_dir).orderBy("cid").collect()
+    return [(r["cid"], list(r["ce"])) for r in rows]
 
 
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,10 +180,10 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape at the v24-measured capacity; v19/v5 are the 8-cell
     calibration baselines)."""
     from .operators.relational import QUERIES
-    from .operators.similarity import _tivf_topk_plan
+    from .operators.similarity import _probe_topk_plan
 
     if DEFAULT_QUANTIZER == "trained":
-        return _tivf_topk_plan(spark, sf_dir, SERVING_NPROBE, serving_seeds())
+        return _probe_topk_plan(spark, sf_dir, serving_quantizer(), SERVING_NPROBE)
     return QUERIES[_ANN_SEED_QUERY].build(spark, sf_dir)
 
 
@@ -205,12 +197,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if DEFAULT_QUANTIZER == "trained":
         return _ivfpq_topk_plan(
-            spark,
-            sf_dir,
-            N_QUERY_VECS,
-            trained=True,
-            nprobe=SERVING_NPROBE,
-            seeds=serving_seeds(),
+            spark, sf_dir, N_QUERY_VECS, quant=serving_quantizer(), nprobe=SERVING_NPROBE
         )
     return QUERIES[_IVFPQ_SEED_QUERY].build(spark, sf_dir)
 
@@ -225,29 +212,30 @@ def warm_session_index(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     from .operators.similarity import (
         N_CELLS,
         N_PROBE,
+        SEED_Q,
         SIG_PLANES,
+        TRAINED_Q,
         V12_NQ,
+        _cells_probes,
         _emb,
         _exact_topk,
         _exact_topk_v12,
-        _ivf_cells_probes,
         _pq_index,
         _rpq_index,
         _sig,
-        _tivf_cells_probes,
     )
 
     counts: dict[str, int] = {}
     counts["emb"] = _emb(spark, sf_dir).count()
     counts[f"sig{SIG_PLANES}"] = _sig(spark, sf_dir, SIG_PLANES).count()
-    _, cells, probes = _ivf_cells_probes(spark, sf_dir, N_PROBE)
+    _, cells, probes = _cells_probes(spark, sf_dir, SEED_Q, N_PROBE)
     counts["ivf_cells"] = cells.count()
     counts["ivf_probes"] = probes.count()
-    _, _, probes_w = _ivf_cells_probes(spark, sf_dir, N_PROBE, V12_NQ)
+    _, _, probes_w = _cells_probes(spark, sf_dir, SEED_Q, N_PROBE, V12_NQ)
     counts["ivf_probes_eval"] = probes_w.count()
-    _, _, probes_sweep = _ivf_cells_probes(spark, sf_dir, N_CELLS, V12_NQ)
+    _, _, probes_sweep = _cells_probes(spark, sf_dir, SEED_Q, N_CELLS, V12_NQ)
     counts["ivf_probes_sweep"] = probes_sweep.count()
-    _, tcells, tprobes = _tivf_cells_probes(spark, sf_dir, N_PROBE)
+    _, tcells, tprobes = _cells_probes(spark, sf_dir, TRAINED_Q, N_PROBE)
     counts["tivf_cells"] = tcells.count()
     counts["tivf_probes"] = tprobes.count()
     # the SERVING layout (SERVING_NCELLS trained cells at the constant
@@ -256,17 +244,17 @@ def warm_session_index(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     _, scells, sprobes = serving_cells_probes(spark, sf_dir)
     counts[f"tivf{SERVING_NCELLS}_cells"] = scells.count()
     counts[f"tivf{SERVING_NCELLS}_probes"] = sprobes.count()
-    _, _, tprobes_w = _tivf_cells_probes(spark, sf_dir, N_PROBE, V12_NQ)
+    _, _, tprobes_w = _cells_probes(spark, sf_dir, TRAINED_Q, N_PROBE, V12_NQ)
     counts["tivf_probes_eval"] = tprobes_w.count()
     # full-probe sweep table for v22 — warmed exactly like the seed
     # quantizer's (ivf_probes_sweep for v18), so the two fused sweeps
     # bench under the same warm-index methodology
-    _, _, tprobes_sweep = _tivf_cells_probes(spark, sf_dir, N_CELLS, V12_NQ)
+    _, _, tprobes_sweep = _cells_probes(spark, sf_dir, TRAINED_Q, N_CELLS, V12_NQ)
     counts["tivf_probes_sweep"] = tprobes_sweep.count()
     _, _, pq_codes = _pq_index(spark, sf_dir)
     counts["pq_codes"] = pq_codes.count()
     counts["rpq_codes"] = _rpq_index(spark, sf_dir)[2].count()
-    counts["trpq_codes"] = _rpq_index(spark, sf_dir, trained=True)[2].count()
+    counts["trpq_codes"] = _rpq_index(spark, sf_dir, quant=TRAINED_Q)[2].count()
     counts["exact_topk"] = _exact_topk(spark, sf_dir).count()
     counts["exact_topk_v12"] = _exact_topk_v12(spark, sf_dir).count()
     counts["shingles"] = shingle_index(spark, sf_dir).count()

@@ -91,7 +91,7 @@ STATE_SCHEMA = StructType(
 def probe_cells_col(centroids: list[tuple[int, list[float]]], nprobe: int):
     """Column: array of the ``nprobe`` nearest centroid ids for an
     embedding column, ranked by (cosine desc, cid asc) — the exact
-    ordering of the batch probe table (_ivf_cells_probes).  ``centroids``
+    ordering of the batch probe table (similarity._cells_probes).  ``centroids``
     is the collected [(cid, vector), ...] list — the SMALL side v5
     broadcasts, here a closure constant of the Arrow kernel."""
     cids = np.array([c for c, _ in centroids], dtype=np.int64)

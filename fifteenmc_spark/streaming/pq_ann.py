@@ -82,20 +82,11 @@ def build_pq_serving_index(spark, sf_dir, nprobe: int, quantizer: str | None = N
     (None) follows ``serving.DEFAULT_QUANTIZER`` — the serving tier
     follows whichever index the batch evals picked, same operator
     either way."""
-    from ..operators.similarity import (
-        _ivf_cells_probes,
-        _pq_index,
-        _tivf_cells_probes,
-    )
-    from ..serving import DEFAULT_QUANTIZER, serving_seeds
+    from ..operators.similarity import _cells_probes, _pq_index
+    from ..serving import serving_quantizer
 
-    if quantizer is None:
-        quantizer = DEFAULT_QUANTIZER
     _, cw, codes = _pq_index(spark, sf_dir)
-    if quantizer == "trained":
-        _, cells, _ = _tivf_cells_probes(spark, sf_dir, nprobe, seeds=serving_seeds())
-    else:
-        _, cells, _ = _ivf_cells_probes(spark, sf_dir, nprobe)
+    _, cells, _ = _cells_probes(spark, sf_dir, serving_quantizer(quantizer), nprobe)
 
     books: dict[int, tuple[list[int], np.ndarray]] = {}
     rows = cw.select("m", "cid", "cwe").collect()

@@ -25,21 +25,21 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 7
 
 
-def old_form(spark, trained: bool):
+def old_form(spark, quant):
     """The r15 shape: two complete rank tails, one per encoding."""
     exact = S._exact_topk_v12(spark, SF_DIR).select("qid", "vec_id")
     out = None
     for enc, res in (("raw", False), ("residual", True)):
         r = S._recall_agg(
             exact,
-            S._ivfpq_topk_plan(spark, SF_DIR, S.V12_NQ, residual=res, trained=trained),
+            S._ivfpq_topk_plan(spark, SF_DIR, S.V12_NQ, residual=res, quant=quant),
         ).select("qid", F.lit(enc).alias("encoding"), "n_topk", "n_recovered", "recall")
         out = r if out is None else out.unionByName(r)
     return out.orderBy("qid", "encoding")
 
 
-def new_form(spark, trained: bool):
-    return S._encoding_recall_plan(spark, SF_DIR, trained=trained)
+def new_form(spark, quant):
+    return S._encoding_recall_plan(spark, SF_DIR, quant)
 
 
 def timed(df) -> float:
@@ -50,20 +50,20 @@ def timed(df) -> float:
 
 def main() -> None:
     spark = get_spark(app_name="ab-v17-stacked")
-    for trained, label in ((False, "v17"), (True, "v23")):
-        old_rows = sorted(map(tuple, old_form(spark, trained).collect()))
-        new_rows = sorted(map(tuple, new_form(spark, trained).collect()))
+    for quant, label in ((S.SEED_Q, "v17"), (S.TRAINED_Q, "v23")):
+        old_rows = sorted(map(tuple, old_form(spark, quant).collect()))
+        new_rows = sorted(map(tuple, new_form(spark, quant).collect()))
         assert old_rows == new_rows, f"{label}: result mismatch ({len(old_rows)} vs {len(new_rows)})"
         print(f"{label}: equality OK ({len(old_rows)} rows)")
         # warm both plans once untimed
-        timed(old_form(spark, trained))
-        timed(new_form(spark, trained))
+        timed(old_form(spark, quant))
+        timed(new_form(spark, quant))
         olds, news = [], []
         for i in range(N):
             spark.sparkContext.setJobDescription(f"{label} old #{i}")
-            olds.append(timed(old_form(spark, trained)))
+            olds.append(timed(old_form(spark, quant)))
             spark.sparkContext.setJobDescription(f"{label} new #{i}")
-            news.append(timed(new_form(spark, trained)))
+            news.append(timed(new_form(spark, quant)))
         spark.sparkContext.setJobDescription(None)
         med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
         print(

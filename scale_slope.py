@@ -1157,16 +1157,15 @@ def main() -> None:
         )
         for n in (16, 32, 64, 128):
             npb = n // 4
-            _, cells, probes = S._tivf_cells_probes(
-                spark, sf_dir, npb, S.V12_NQ, seeds=pool_t[:n]
-            )
+            quant = S.Quantizer(pool_t[:n], trained=True)
+            _, cells, probes = S._cells_probes(spark, sf_dir, quant, npb, S.V12_NQ)
             hit = cells.join(
                 Fn.broadcast(probes.select("qid", "cell")), ["cell"]
             ).select("qid", "vec_id")
             rec = float(
                 S._recall_agg(exact, hit).agg(Fn.avg("recall")).first()[0]
             )
-            q = S._tivf_topk_plan(spark, sf_dir, npb, pool_t[:n])
+            q = S._probe_topk_plan(spark, sf_dir, quant, npb)
             q.write.format("noop").mode("overwrite").save()  # warm (trains cells)
             t0 = time.perf_counter()
             q.write.format("noop").mode("overwrite").save()
@@ -1179,8 +1178,8 @@ def main() -> None:
         # the full IVFADC pipeline is no worse than 32 at equal scan
         def _composed(nc: int) -> float:
             plan = S._ivfpq_topk_plan(
-                spark, sf_dir, S.V12_NQ, trained=True,
-                nprobe=nc // 4, seeds=pool_t[:nc],
+                spark, sf_dir, S.V12_NQ,
+                quant=S.Quantizer(pool_t[:nc], trained=True), nprobe=nc // 4,
             )
             return float(
                 S._recall_agg(exact, plan.select("qid", "vec_id"))

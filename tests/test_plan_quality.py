@@ -379,9 +379,9 @@ def test_v23_trained_residual_plan_shape(spark, sf_small):
     # plan r11 added) keeps v16's discipline: codes equi-join only, the
     # single permitted nested-loop is the broadcast-tiny |queries| x
     # |cells| qcent product, everything else broadcast hash
-    from fifteenmc_spark.operators.similarity import V12_NQ, _ivfpq_topk_plan
+    from fifteenmc_spark.operators.similarity import TRAINED_Q, V12_NQ, _ivfpq_topk_plan
 
-    df = _ivfpq_topk_plan(spark, sf_small, V12_NQ, residual=True, trained=True)
+    df = _ivfpq_topk_plan(spark, sf_small, V12_NQ, residual=True, quant=TRAINED_Q)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     tree = df._jdf.queryExecution().executedPlan().toString()
@@ -399,16 +399,16 @@ def test_v17_stacked_tail_equals_per_encoding_plans(spark, sf_small):
 
     from fifteenmc_spark.operators import similarity as S
 
-    for trained in (False, True):
+    for quant in (S.SEED_Q, S.TRAINED_Q):
         stacked = sorted(
-            map(tuple, S._encoding_recall_plan(spark, sf_small, trained=trained).collect())
+            map(tuple, S._encoding_recall_plan(spark, sf_small, quant).collect())
         )
         exact = S._exact_topk_v12(spark, sf_small).select("qid", "vec_id")
         un = None
         for enc, res in (("raw", False), ("residual", True)):
             r = S._recall_agg(
                 exact,
-                S._ivfpq_topk_plan(spark, sf_small, S.V12_NQ, residual=res, trained=trained),
+                S._ivfpq_topk_plan(spark, sf_small, S.V12_NQ, residual=res, quant=quant),
             ).select(
                 "qid", SF.lit(enc).alias("encoding"), "n_topk", "n_recovered", "recall"
             )

@@ -20,6 +20,7 @@ registered as calibration baselines with unchanged oracles.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fifteenmc_spark import serving
@@ -29,16 +30,18 @@ from fifteenmc_spark.operators.similarity import (
     N_CELLS,
     N_PROBE,
     N_QUERY_VECS,
+    SEED_Q,
     TIVF_SEED_POOL,
+    TRAINED_Q,
     V25_POOL,
     V12_NQ,
+    Quantizer,
+    _cells_probes,
     _emb,
     _exact_topk_v12,
-    _ivf_cells_probes,
     _ivfpq_topk_plan,
+    _probe_topk_plan,
     _recall_agg,
-    _tivf_cells_probes,
-    _tivf_topk_plan,
 )
 from fifteenmc_spark.streaming.pq_ann import build_pq_serving_index
 
@@ -59,13 +62,38 @@ def test_serving_default_is_trained_at_32_cells():
     assert serving.SERVING_NPROBE / serving.SERVING_NCELLS == N_PROBE / N_CELLS
 
 
+def test_quantizer_keys_name_the_existing_index_entries():
+    # the session-index keys a quantizer derives are the ones the seed,
+    # trained and serving layouts have always used, so a warmed session
+    # serves the same entries
+    assert SEED_Q.key_prefix == "ivf_"
+    assert TRAINED_Q.key_prefix == "tivf_"
+    assert Quantizer(V25_POOL, trained=True).key_prefix == "tivf_c32_"
+    assert Quantizer(TIVF_SEED_POOL[:8], trained=True) == TRAINED_Q
+
+
+def test_quantizer_rejects_layouts_without_an_index(spark, sf_small):
+    # ValueError, not assert, so the guards hold under python -O: the
+    # seed quantizer is the IVF_SEED_IDS layout only, and residual codes
+    # exist for the default 8-cell pool only
+    with pytest.raises(ValueError, match="trained=True"):
+        Quantizer(TIVF_SEED_POOL[:16])
+    with pytest.raises(ValueError, match="residual codes"):
+        _ivfpq_topk_plan(
+            spark, sf_small, residual=True, quant=Quantizer(TIVF_SEED_POOL[:16], trained=True)
+        )
+
+
 def test_ann_topk_default_pins_to_v25(spark, sf_small):
     # the serving default IS the declared (driver-attested) query v25 —
     # the dispatch point and the registry cannot drift apart silently
     got = _rows(serving.ann_topk(spark, sf_small))
     assert got and got == _rows(QUERIES["v25_serving_tivf_topk"].build(spark, sf_small))
     assert got == _rows(
-        _tivf_topk_plan(spark, sf_small, serving.SERVING_NPROBE, serving.serving_seeds())
+        _probe_topk_plan(
+            spark, sf_small, Quantizer(serving.serving_seeds(), trained=True),
+            serving.SERVING_NPROBE,
+        )
     )
     # the layout flip is real: the serving default no longer equals the
     # 8-cell calibration query (whose oracle is unchanged)
@@ -80,9 +108,8 @@ def test_ivfpq_topk_default_pins_to_v26(spark, sf_small):
             spark,
             sf_small,
             N_QUERY_VECS,
-            trained=True,
+            quant=Quantizer(serving.serving_seeds(), trained=True),
             nprobe=serving.SERVING_NPROBE,
-            seeds=serving.serving_seeds(),
         )
     )
     assert got != _rows(QUERIES["v21_tivfpq_topk"].build(spark, sf_small))
@@ -104,8 +131,8 @@ def test_serving_centroids_are_the_serving_layout_trained_table(spark, sf_small)
 
 def test_serving_cells_probes_default_equals_serving_layout_trained_index(spark, sf_small):
     _, dcells, dprobes = serving.serving_cells_probes(spark, sf_small)
-    _, tcells, tprobes = _tivf_cells_probes(
-        spark, sf_small, serving.SERVING_NPROBE, seeds=V25_POOL
+    _, tcells, tprobes = _cells_probes(
+        spark, sf_small, Quantizer(V25_POOL, trained=True), serving.SERVING_NPROBE
     )
     assert _rows(dcells) == _rows(tcells)
     assert _rows(dprobes) == _rows(tprobes)
@@ -129,7 +156,7 @@ def test_pq_serving_index_default_is_the_serving_layout(spark, sf_small):
 def test_seed_cells_remain_the_calibration_baseline(spark, sf_small):
     # flipping the default did NOT change the seed index or its queries:
     # the explicit seed layout still equals v5's cell table
-    _, scells, _ = _ivf_cells_probes(spark, sf_small, N_PROBE)
+    _, scells, _ = _cells_probes(spark, sf_small, SEED_Q, N_PROBE)
     sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
     assert _rows(sstatic.select("vec_id", "cell")) == _rows(scells)
 
@@ -148,14 +175,14 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
     prior."""
     exact = _exact_topk_v12(spark, sf_small).select("qid", "vec_id")
     base8 = _mean_recall(
-        _recall_agg(exact, _ivfpq_topk_plan(spark, sf_small, V12_NQ, trained=True))
+        _recall_agg(exact, _ivfpq_topk_plan(spark, sf_small, V12_NQ, quant=TRAINED_Q))
     )
     prior16 = _mean_recall(
         _recall_agg(
             exact,
             _ivfpq_topk_plan(
-                spark, sf_small, V12_NQ, trained=True, nprobe=4,
-                seeds=TIVF_SEED_POOL[:16],
+                spark, sf_small, V12_NQ, nprobe=4,
+                quant=Quantizer(TIVF_SEED_POOL[:16], trained=True),
             ),
         )
     )
@@ -166,9 +193,8 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
                 spark,
                 sf_small,
                 V12_NQ,
-                trained=True,
+                quant=Quantizer(serving.serving_seeds(), trained=True),
                 nprobe=serving.SERVING_NPROBE,
-                seeds=serving.serving_seeds(),
             ),
         )
     )
@@ -185,8 +211,8 @@ def test_serving_layout_membership_recall_no_worse_at_equal_scan(spark, sf_small
     exact = _exact_topk_v12(spark, sf_small).select("qid", "vec_id")
 
     def membership(ncells: int, npb: int):
-        _, cells, probes = _tivf_cells_probes(
-            spark, sf_small, npb, V12_NQ, seeds=TIVF_SEED_POOL[:ncells]
+        _, cells, probes = _cells_probes(
+            spark, sf_small, Quantizer(TIVF_SEED_POOL[:ncells], trained=True), npb, V12_NQ
         )
         hit = cells.join(
             F.broadcast(probes.select("qid", "cell")), ["cell"]
@@ -228,11 +254,7 @@ def test_filtered_dispatch_recall_no_worse_than_fixed_nprobe(spark, sf_small):
     set.  Monotone-safe by construction (a deeper probe list only grows
     the exact-re-ranked candidate set) — measured anyway so a rule
     change that loses recall fails loudly."""
-    from fifteenmc_spark.operators.similarity import (
-        _adaptive_filtered_topk_plan,
-        _emb,
-        cosine,
-    )
+    from fifteenmc_spark.operators.similarity import V25_Q, _emb, cosine
 
     full = _emb(spark, sf_small).select("vec_id", "embedding", "label")
     qv = full.where(F.col("vec_id") < V12_NQ).select(
@@ -251,8 +273,8 @@ def test_filtered_dispatch_recall_no_worse_than_fixed_nprobe(spark, sf_small):
         .where(F.col("rnk") <= 5)
         .select("qid", "vec_id")
     )
-    fixed = _adaptive_filtered_topk_plan(
-        spark, sf_small, nq=V12_NQ, seeds=V25_POOL, base_nprobe=serving.SERVING_NPROBE
+    fixed = _probe_topk_plan(
+        spark, sf_small, V25_Q, serving.SERVING_NPROBE, nq=V12_NQ, label_depth=True
     )
     # the fixed-nprobe comparator: clamp the budget away so every label
     # serves at exactly the serving nprobe (v27's plan over V12_NQ)
@@ -261,8 +283,8 @@ def test_filtered_dispatch_recall_no_worse_than_fixed_nprobe(spark, sf_small):
     old = S.FILTERED_SHORTLIST_MULT
     S.FILTERED_SHORTLIST_MULT = 0
     try:
-        base = _adaptive_filtered_topk_plan(
-            spark, sf_small, nq=V12_NQ, seeds=V25_POOL, base_nprobe=serving.SERVING_NPROBE
+        base = _probe_topk_plan(
+            spark, sf_small, V25_Q, serving.SERVING_NPROBE, nq=V12_NQ, label_depth=True
         )
         r_base = _mean_recall(_recall_agg(exact, base.select("qid", "vec_id")))
     finally:

@@ -224,16 +224,16 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
     # this fails and forces the serving re-adjudication v23's docstring
     # describes.
     from fifteenmc_spark.operators.similarity import (
+        TRAINED_Q,
         V12_NQ,
         _exact_topk_v12,
         _ivfpq_topk_plan,
-        _tivf_centroids,
         _emb,
         cosine,
     )
 
     e = _emb(spark, sf_small).select("vec_id", "embedding")
-    cw = _tivf_centroids(spark, sf_small).select(F.col("cwe").alias("ce"))
+    cw = TRAINED_Q.centroids(spark, sf_small).select("ce")
     tightness = (
         e.crossJoin(F.broadcast(cw))
         .select("vec_id", cosine(F.col("embedding"), F.col("ce")).alias("sim"))
@@ -252,7 +252,7 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
         got = {
             (r.qid, r.vec_id)
             for r in _ivfpq_topk_plan(
-                spark, sf_small, V12_NQ, residual=residual, trained=True
+                spark, sf_small, V12_NQ, residual=residual, quant=TRAINED_Q
             )
             .select("qid", "vec_id")
             .collect()
@@ -338,6 +338,8 @@ def test_trained_cells_strictly_improve_composed_recall(spark, sf_small):
     # re-rank), not just cell membership.  Measured: 67 -> 95 of 250 at
     # sf0.01 (0.27 -> 0.38), numpy-replicated before building.
     from fifteenmc_spark.operators.similarity import (
+        SEED_Q,
+        TRAINED_Q,
         V12_NQ,
         _exact_topk_v12,
         _ivfpq_topk_plan,
@@ -348,14 +350,14 @@ def test_trained_cells_strictly_improve_composed_recall(spark, sf_small):
         for r in _exact_topk_v12(spark, sf_small).select("qid", "vec_id").collect()
     }
     hits = {}
-    for trained in (False, True):
+    for name, quant in (("seed", SEED_Q), ("trained", TRAINED_Q)):
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, trained=trained)
+            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, quant=quant)
             .select("qid", "vec_id")
             .collect()
         }
-        hits["trained" if trained else "seed"] = len(exact & got)
+        hits[name] = len(exact & got)
     assert hits["trained"] > hits["seed"], hits
 
 
@@ -399,6 +401,7 @@ def test_nprobe_sweep_matches_standalone_plan_at_every_point(spark, sf_small, sw
     from fifteenmc_spark.operators.similarity import (
         PROBE_SWEEP,
         V12_NQ,
+        Quantizer,
         _exact_topk_v12,
         _ivfpq_topk_plan,
     )
@@ -414,7 +417,9 @@ def test_nprobe_sweep_matches_standalone_plan_at_every_point(spark, sf_small, sw
     for p in PROBE_SWEEP:
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, trained=trained, nprobe=p)
+            for r in _ivfpq_topk_plan(
+                spark, sf_small, V12_NQ, quant=Quantizer(trained=trained), nprobe=p
+            )
             .select("qid", "vec_id")
             .collect()
         }

@@ -421,12 +421,13 @@ def test_streaming_ann_topk_equals_batch_v5_and_v1(spark, sf_small, tmp_path_fac
         IVF_SEED_IDS,
         N_PROBE,
         N_QUERY_VECS,
+        SEED_Q,
+        _cells_probes,
         _emb,
-        _ivf_cells_probes,
     )
     from fifteenmc_spark.streaming import ann as ANN
 
-    e, cells, _ = _ivf_cells_probes(spark, sf_small, N_PROBE)
+    e, cells, _ = _cells_probes(spark, sf_small, SEED_Q, N_PROBE)
     corpus = e.select("vec_id", "embedding")
     centroids = [
         (r["vec_id"], list(r["embedding"]))
@@ -512,7 +513,7 @@ def test_streaming_ann_serves_the_serving_layout(spark, sf_small, tmp_path_facto
     over 16 cells at equal scan, and online queries get that recall
     because the default IS that layout."""
     from fifteenmc_spark import serving
-    from fifteenmc_spark.operators.similarity import N_QUERY_VECS, _emb, _tivf_topk_plan
+    from fifteenmc_spark.operators.similarity import N_QUERY_VECS, _emb, _probe_topk_plan
     from fifteenmc_spark.streaming import ann as ANN
 
     e, tcells, _ = serving.serving_cells_probes(spark, sf_small)
@@ -523,8 +524,8 @@ def test_streaming_ann_serves_the_serving_layout(spark, sf_small, tmp_path_facto
     )
     want = {
         (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
-        for r in _tivf_topk_plan(
-            spark, sf_small, serving.SERVING_NPROBE, serving.serving_seeds()
+        for r in _probe_topk_plan(
+            spark, sf_small, serving.serving_quantizer(), serving.SERVING_NPROBE
         ).collect()
     }
     assert want
@@ -700,9 +701,10 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
         IVF_SEED_IDS,
         N_PROBE,
         N_QUERY_VECS,
+        SEED_Q,
         TOP_K,
+        _cells_probes,
         _emb,
-        _ivf_cells_probes,
         _pq_index,
         _pq_query_side,
     )
@@ -711,7 +713,7 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
     # batch twin: v13's candidate ADC ranking (oracle-checked shape),
     # top-k by (approx desc, vec_id) without the exact re-rank
     e, cw, codes = _pq_index(spark, sf_small)
-    _, cells, probes = _ivf_cells_probes(spark, sf_small, N_PROBE)
+    _, cells, probes = _cells_probes(spark, sf_small, SEED_Q, N_PROBE)
     q, qparts = _pq_query_side(e, cw, N_QUERY_VECS)
     cand = (
         cells.join(probes.select("qid", "cell"), "cell")
@@ -798,18 +800,16 @@ def test_streaming_pq_adc_serves_the_serving_layout(spark, sf_small, tmp_path_fa
         N_QUERY_VECS,
         TOP_K,
         _emb,
+        _cells_probes,
         _pq_index,
         _pq_query_side,
-        _tivf_cells_probes,
     )
     from fifteenmc_spark.streaming import pq_ann as PQA
 
     assert serving.DEFAULT_QUANTIZER == "trained"
     N_PROBE = serving.SERVING_NPROBE
     e, cw, codes = _pq_index(spark, sf_small)
-    _, tcells, tprobes = _tivf_cells_probes(
-        spark, sf_small, N_PROBE, seeds=serving.serving_seeds()
-    )
+    _, tcells, tprobes = _cells_probes(spark, sf_small, serving.serving_quantizer(), N_PROBE)
     q, qparts = _pq_query_side(e, cw, N_QUERY_VECS)
     cand = (
         tcells.join(tprobes.select("qid", "cell"), "cell")
