@@ -172,13 +172,13 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     Writing ``<dir>/<table>.parquet`` into a directory that has live
     session-index entries evicts them: a table rewrite under an sf_dir
     must not leave consumers reading stale checkpointed artifacts."""
-    from .operators.session_index import invalidate
+    from .operators.session_index import _norm_dir, invalidate
 
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-    invalidate(os.path.dirname(os.path.abspath(path.rstrip("/"))))
+    invalidate(os.path.dirname(_norm_dir(path)))
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -31,6 +31,7 @@ Cache discipline — what is allowed in here:
 from __future__ import annotations
 
 import os
+from urllib.parse import urlsplit
 
 _SESSION_INDEX: dict = {}
 _MISSING = object()
@@ -41,7 +42,15 @@ def _norm_dir(sf_dir: str) -> str:
     slash.  Both session_cached and invalidate key on this, so a caller
     passing a relative path or a trailing-slash variant still hits (and
     is still evicted from) the same entry as io.write_parquet's
-    dirname(abspath(...)) invalidation."""
+    dirname(_norm_dir(...)) invalidation.  A ``file:`` URI keys as its
+    local absolute path; any other scheme-qualified path (``s3a://``,
+    ``hdfs://``) is already absolute and keys as written, so it never
+    depends on the working directory."""
+    parts = urlsplit(sf_dir)
+    if parts.scheme == "file":
+        return os.path.abspath(parts.path)
+    if parts.scheme:
+        return sf_dir.rstrip("/")
     return os.path.abspath(sf_dir)
 
 

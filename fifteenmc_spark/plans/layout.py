@@ -25,10 +25,18 @@ Scale shape
   (bounded, tiny — 4^6 = 4,096 at most here), keeps the ones whose extent
   intersects the query box (widened by one quantum so float rounding can
   only ADD a cell, never drop one), and scans with ``zp IN (...)`` — a
-  partition filter, so pruning happens at file-listing time — plus the
-  exact residual lon/lat predicate.  False-positive cells cost one extra
-  partition read; correctness never depends on the cell math because the
-  residual filter is exact.
+  partition filter — plus the exact residual lon/lat predicate.
+  False-positive cells cost one extra partition read; correctness never
+  depends on the cell math because the residual filter is exact.
+- List once, prune many: each layout path is opened once per Spark
+  session (``session_index.session_cached``, key ``zorder_layout``), on
+  its first read.  The cached DataFrame keeps its file listing and its
+  resolved schema, so every later request prunes ``zp`` against that
+  listing and starts no listing or schema-inference job.
+  ``write_zorder_layout`` evicts the path before it writes; any other
+  rewrite of a layout directory must call
+  ``session_index.invalidate(path)``, or reads keep serving the old
+  listing (and fail on its deleted files).
 - At 100 TB with ``levels=6`` a city-block query reads a handful of the
   4,096 directories instead of the whole table; the curve keeps nearby
   boxes in nearby files, so the OS/page-cache locality story holds too.
@@ -156,7 +164,13 @@ def write_zorder_layout(
     """Write ``df`` parquet clustered on the Morton curve: directory
     partitions on ``zp`` (quadtree cell), rows range-clustered and sorted on
     the full ``zkey`` within files.  See the module docstring for why the
-    prefix-of-range-key construction avoids the small-file explosion."""
+    prefix-of-range-key construction avoids the small-file explosion.
+
+    Evicts ``out_dir``'s session-index entries first, so a rewritten
+    layout is never read through the listing of the files it replaces."""
+    from ..operators.session_index import invalidate
+
+    invalidate(out_dir)
     z = zorder_key(lon_col, lat_col, layout_bbox, bits)
     keyed = df.withColumn("zkey", z).withColumn("zp", zprefix(F.col("zkey"), bits, levels))
     (
@@ -179,14 +193,18 @@ def read_zorder_bbox(
     levels: int = ZORDER_LEVELS,
 ) -> DataFrame:
     """bbox read over a :func:`write_zorder_layout` table: ``zp IN (cells)``
-    is a PARTITION filter (pruned at file listing), the lon/lat residual is
-    exact — so the result equals a full-scan bbox filter while reading only
-    the curve cells the box touches."""
+    is a PARTITION filter, the lon/lat residual is exact — so the result
+    equals a full-scan bbox filter while reading only the curve cells the
+    box touches.  The layout is listed once per session (on its first
+    read) and every call prunes against that cached listing; a rewrite
+    outside write_zorder_layout must call ``session_index.invalidate(path)``."""
+    from ..operators.session_index import session_cached
+
     qminlon, qminlat, qmaxlon, qmaxlat = query_bbox
     cells = zprefixes_for_bbox(query_bbox, layout_bbox, bits, levels)
+    table = session_cached(spark, path, "zorder_layout", lambda: spark.read.parquet(path))
     return (
-        spark.read.parquet(path)
-        .where(F.col("zp").isin(cells))
+        table.where(F.col("zp").isin(cells))
         .where(
             (F.col(lon_col) >= qminlon)
             & (F.col(lon_col) < qmaxlon)

@@ -161,7 +161,7 @@ def point_reachability_zordered(
 ) -> DataFrame:
     """G7 served end-to-end from the z-ordered geo layout: the snap (J4)
     reads only the quadtree cells intersecting the max_snap_m disc around
-    the query point (partition-pruned file listing — see
+    the query point (partition-pruned read — see
     snap.snap_single_point_zordered), and the reach lookup is the same
     node-keyed filter as point_reachability.  Same rows as the full-scan
     form by construction; this closes the loop plans/layout.py promises —
@@ -174,7 +174,14 @@ def point_reachability_zordered(
     within max_snap_m of the query point, so its reach rows live inside
     the same disc boxes the snap enumerated — both halves of the query
     are partition-pruned reads and the full reach table is never
-    scanned.  ``reach`` may then be None (it is ignored)."""
+    scanned.  ``reach`` may then be None (it is ignored).
+
+    Each layout path is listed once per Spark session, on its first
+    read (layout.read_zorder_bbox), and every later request prunes its
+    cells from that cached listing: a warm request starts no listing or
+    schema-inference job, only the snap and the reach collect.  A layout
+    rewritten outside layout.write_zorder_layout must be evicted with
+    ``session_index.invalidate(path)``."""
     snapped = snap_mod.snap_single_point_zordered(
         spark, nodes_layout_path, layout_bbox, lon, lat, max_snap_m=max_snap_m
     )

@@ -280,7 +280,8 @@ def snap_single_point_zordered(
     of scanning the full node table per point query — the Spark shape of
     the reference's per-bbox ``osmium extract`` re-run — read ONLY the
     quadtree cells intersecting the max_snap_m disc around the query point
-    (a partition-pruned file listing), then run the exact snap on that
+    (pruned from the layout's once-per-session listing — see
+    layout.read_zorder_bbox), then run the exact snap on that
     slice.  Identical contract to snap_single_point with max_snap_m set:
     every node within max_snap_m of the point lies inside the pruned box
     by construction (degree box derived with the smallest earth radius, so

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,21 @@ def _points(spark, n=500):
         (F.lit(minlon) + (((i * 37 + 11) % 193).cast("double") / 193.0) * (maxlon - minlon)).alias("lon"),
         (F.lit(minlat) + (((i * 53 + 29) % 181).cast("double") / 181.0) * (maxlat - minlat)).alias("lat"),
     )
+
+
+def _jobs_started(spark, fn):
+    """(Spark jobs ``fn`` started, its result): the jobs are read from the
+    status tracker under a job group of their own, after the listener
+    bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    group = f"test-layout-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 def _py_zkey(lon, lat, bbox, bits):
@@ -108,6 +124,44 @@ def test_zorder_read_prunes_partitions(spark, layout_dir):
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "zp" in plan
+
+
+def test_zorder_rewrite_evicts_cached_listing(spark, tmp_path):
+    """A layout is listed once per session, so a rewrite through
+    write_zorder_layout must evict that listing: the next read returns
+    the new rows instead of failing on the deleted files.  The layout is
+    opened as a file: URI and rewritten as the plain path — both key the
+    same session-index entry."""
+    d = str(tmp_path / "pts")
+
+    def ids():
+        got = layout.read_zorder_bbox(spark, "file://" + d, BBOX, BBOX)
+        return sorted(r["point_id"] for r in got.collect())
+
+    layout.write_zorder_layout(_points(spark, 300), d, BBOX)
+    assert ids() == list(range(300))
+    moved = _points(spark, 200).withColumn("point_id", F.col("point_id") + 10_000)
+    layout.write_zorder_layout(moved, d, BBOX)
+    assert ids() == list(range(10_000, 10_200))
+
+
+def test_zorder_warm_read_starts_no_jobs(spark, layout_dir):
+    """After a layout's first read, building another bbox read on it —
+    directly or as the union of a disc's boxes — lists nothing and infers
+    no schema: 0 Spark jobs.  The first read of the session pays both."""
+    from fifteenmc_spark.operators import session_index
+    from fifteenmc_spark.plans import snap
+
+    session_index.invalidate(layout_dir)
+    cold, _ = _jobs_started(spark, lambda: layout.read_zorder_bbox(spark, layout_dir, QUERY_BOX, BBOX))
+    assert cold > 0
+    warm, df = _jobs_started(spark, lambda: layout.read_zorder_bbox(spark, layout_dir, BBOX, BBOX))
+    assert warm == 0 and df.count() == 2000
+    lon, lat = (QUERY_BOX[0] + QUERY_BOX[2]) / 2, (QUERY_BOX[1] + QUERY_BOX[3]) / 2
+    warm, _ = _jobs_started(
+        spark, lambda: snap.read_zordered_disc(spark, layout_dir, BBOX, lon, lat, 500.0)
+    )
+    assert warm == 0
 
 
 def test_zorder_cell_enumeration_never_misses(spark):
@@ -531,3 +585,69 @@ def test_zordered_poi_table_serves_path_query_pruned(spark, geo_layout, tmp_path
         )
     )
     assert pruned_files < full_files, (len(pruned_files), len(full_files))
+
+
+def _reach_rows(spark, gnodes, poi_base, n=80):
+    return spark.createDataFrame(
+        [
+            (int(r["node_idx"]), cat, float(50 + 10 * k), float(5 + k), poi_base + k)
+            for k, r in enumerate(gnodes.orderBy("node_idx").limit(n).collect())
+            for cat in ("shop", "park")
+        ],
+        "node_idx int, category string, dist_m double, time_s double, poi_id long",
+    )
+
+
+def test_zordered_reach_rewrite_serves_new_rows(spark, geo_layout, tmp_path):
+    """write_reach_zordered goes through write_zorder_layout, so rewriting
+    the reach layout evicts its cached listing: G7 then answers from the
+    new table, equal to the full-scan form over it."""
+    from fifteenmc_spark.plans import query as query_mod
+    from fifteenmc_spark.plans import reach as reach_mod
+
+    gnodes, bbox = geo_layout["gnodes"], geo_layout["bbox"]
+    d = str(tmp_path / "reach")
+    r = gnodes.orderBy("node_idx").first()
+    lon, lat = float(r["lon"]) + 1e-4, float(r["lat"]) + 1e-4
+    for poi_base in (4000, 5000):
+        reach = _reach_rows(spark, gnodes, poi_base)
+        reach_mod.write_reach_zordered(reach, gnodes, d, bbox)
+        got = query_mod.point_reachability_zordered(
+            spark, None, geo_layout["path"], bbox, lon, lat, reach_layout_path=d
+        ).collect()
+        want = query_mod.point_reachability(reach, gnodes, lon, lat).collect()
+        assert got and [tuple(x) for x in got] == [tuple(x) for x in want]
+        assert all(x["poi_id"] >= poi_base for x in got)
+
+
+def test_zordered_g7_warm_jobs_at_most_full_scan(spark, geo_layout, tmp_path):
+    """A warm z-ordered G7 (both halves from layouts) starts no more Spark
+    jobs than the full-scan G7 on already-opened gold tables: the layout
+    listing and schema are paid once per session, not per request."""
+    from fifteenmc_spark.plans import query as query_mod
+    from fifteenmc_spark.plans import reach as reach_mod
+
+    gnodes, bbox = geo_layout["gnodes"], geo_layout["bbox"]
+    reach = _reach_rows(spark, gnodes, 6000)
+    d = str(tmp_path / "reach")
+    reach_mod.write_reach_zordered(reach, gnodes, d, bbox)
+    gnodes.write.parquet(str(tmp_path / "gold_nodes"))
+    reach.write.parquet(str(tmp_path / "gold_reach"))
+    gold_nodes = spark.read.parquet(str(tmp_path / "gold_nodes"))
+    gold_reach = spark.read.parquet(str(tmp_path / "gold_reach"))
+
+    r = gnodes.orderBy("node_idx").first()
+    lon, lat = float(r["lon"]) + 1e-4, float(r["lat"]) + 1e-4
+
+    def zordered():
+        return query_mod.point_reachability_zordered(
+            spark, None, geo_layout["path"], bbox, lon, lat, reach_layout_path=d
+        ).collect()
+
+    zordered()  # opens both layouts
+    warm, got = _jobs_started(spark, zordered)
+    scan, want = _jobs_started(
+        spark, lambda: query_mod.point_reachability(gold_reach, gold_nodes, lon, lat).collect()
+    )
+    assert got and got == want
+    assert warm <= scan, (warm, scan)

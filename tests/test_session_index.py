@@ -502,6 +502,41 @@ def test_session_cache_keys_normalize_sf_dir_spellings(spark, tmp_path, monkeypa
     SI.invalidate()
 
 
+def test_session_cache_keys_leave_uri_schemes_intact(spark, tmp_path, monkeypatch):
+    # a file: URI keys as its local absolute path, so an entry opened as
+    # file:///x is evicted by a rewrite of /x (write_zorder_layout,
+    # write_parquet); any other scheme-qualified path keys as written,
+    # never joined onto the working directory
+    d = str(tmp_path)
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return calls["n"]
+
+    assert SI.session_cached(spark, "file://" + d, "k", build) == 1
+    assert SI.session_cached(spark, "file:" + d + "/", "k", build) == 1  # same entry
+    assert SI.session_cached(spark, d, "k", build) == 1  # same entry
+    assert SI.invalidate(d) == 1
+    assert SI.session_cached(spark, "file://" + d, "k", build) == 2  # rebuilt
+
+    remote = "s3a://bucket/sf0.1"
+    assert SI.session_cached(spark, remote, "k", build) == 3
+    monkeypatch.chdir(d)
+    assert SI.session_cached(spark, remote + "/", "k", build) == 3  # same entry
+    app = spark.sparkContext.applicationId
+    assert (app, remote, "k") in SI._SESSION_INDEX
+    assert SI.invalidate(remote) == 1
+
+    # write_parquet evicts the entries of a dir cached under its file: URI
+    from fifteenmc_spark.io import write_parquet
+
+    assert SI.session_cached(spark, "file://" + d, "k", build) == 2  # still cached
+    write_parquet(spark.range(3).toDF("doc_id"), "file://" + d + "/documents.parquet")
+    assert SI.session_cached(spark, d, "k", build) == 4  # rebuilt
+    SI.invalidate()
+
+
 def test_pq_lloyd_step_never_increases_sample_mse(spark, sf_small):
     # Lloyd's algorithm guarantee: each assign+recenter step is
     # non-increasing in the training sample's quantization MSE (exact
