@@ -33,14 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # Queries with no driver CORRECTNESS row yet come first so every declared
 # query accumulates at least one driver-checked green row across rounds.
 _CHECK_FIRST = (
-    # Lead: queries whose builder or oracle text changed in the shared
-    # IVF stage refactor (one coarse stage, one probe top-k, one
-    # membership recall, one stacked-recall oracle; v6/v9 embed the
-    # v1 oracle, whose rank tail is now shared).
-    "v1_cosine_topk",
-    "v5_ivf_topk",
-    "v6_lsh_recall",
-    "v9_ivf_recall",
+    # Lead: queries whose builder or oracle text changed when the PQ/ADC
+    # stages were shared (one Lloyd trainer, one code assignment, one
+    # ADC builder, one re-rank tail): every PQ query, and every
+    # trained-quantizer query, whose oracle embeds the Lloyd SQL.
+    "v11_pq_topk",
     "v12_pq_recall",
     "v13_ivfpq_topk",
     "v14_ivfpq_recall",
@@ -58,6 +55,11 @@ _CHECK_FIRST = (
     "v27_filtered_tivf_topk",
     "v28_filtered_recall",
     "v29_adaptive_filtered_topk",
+    # the previous lead (shared IVF stages) not covered above
+    "v1_cosine_topk",
+    "v5_ivf_topk",
+    "v6_lsh_recall",
+    "v9_ivf_recall",
     # r16 rotation: queries whose plan changed in r16, then the backlog
     "x9_span_dedup",
     "x9_span_dedup_sampled",
@@ -116,7 +118,6 @@ _CHECK_FIRST = (
     "t11_bpe_pretoken_count",
     "t12_winnowing_fingerprint",
     "t8_length_quantiles",
-    "v11_pq_topk",
     "v15_dedup_apply",
     "v3_embedding_near_dup",
     "x10_link_pagerank",

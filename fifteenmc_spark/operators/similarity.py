@@ -635,7 +635,11 @@ class Quantizer:
         """WITH fragment ending in ``{tag}cents`` (cid, ce) — the oracle
         twin of :meth:`centroids`."""
         if self.trained:
-            return _tivf_centroid_sql(TIVF_ITERS, self.seeds, tag)
+            return f"""{tag}xt AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS xe FROM embeddings),
+    {_lloyd_sql(
+        f"{tag}xt", "xe", self.seeds, TIVF_ITERS, _COS_SCORE_SQL, True, EMB_DIM, pre=f"{tag}t"
+    )},
+    {tag}cents AS (SELECT cid, cwe AS ce FROM {tag}tcw)"""
         return f"""{tag}cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
           WHERE vec_id IN {self.seeds})"""
 
@@ -1223,100 +1227,150 @@ PQ_TRAIN_MOD = 4
 PQ_TRAIN_REM = 1
 
 
-def _subblock_expr(col: str, out: str) -> str:
-    """SQL expr exploding an array<float> column into PQ_M sub-block
-    structs (m, slice) — evaluated scan-side, no self-join."""
-    return (
+def _subs(df, arr: str, keep=("vec_id",), out: str = "sube"):
+    """(*keep, m, ``out`` array<double>): the PQ_M sub-blocks of the array
+    column ``arr`` of every row — the one sub-block definition, shared by
+    corpus (raw codes), residual, centroid and query sub-blocks.
+    Exploded scan-side, no self-join; the float→double cast is exact, so
+    every dot product downstream sees the same values either way."""
+    blocks = F.expr(
         f"transform(sequence(0, {PQ_M - 1}), "
-        f"m -> struct(m AS m, slice({col}, m * {PQ_SUB} + 1, {PQ_SUB}) AS {out}))"
+        f"m -> struct(m AS m, slice({arr}, m * {PQ_SUB} + 1, {PQ_SUB}) AS {out}))"
+    )
+    return df.select(*keep, F.explode(blocks).alias("s")).select(
+        *keep, F.col("s.m").alias("m"), F.col(f"s.{out}").cast("array<double>").alias(out)
     )
 
 
-def _lloyd_step(samp, cw):
-    """One Lloyd refinement: assign every training sub-block to its
-    argmin-L2 codeword (score = ||c||² − 2·v·c, tie-broken by cid — the
-    ||v||² term is constant under the argmin), then recompute each
-    codeword as the per-dimension mean of its assigned sub-blocks,
-    rounded to 6 digits.  The mean routes through a 1e6-scaled BIGINT
-    sum (integer-exact in any accumulation order) and ONE double
-    division, so both engines produce bitwise-identical codewords at
-    every iteration boundary — the property that keeps a compounding
-    iterative training loop oracle-checkable.  Codewords that attract no
-    points keep their previous value (the standard empty-cluster rule)."""
-    scored = samp.join(F.broadcast(cw.select("m", "cid", "cwe", "cw_ss")), "m").select(
-        "vec_id",
-        "m",
-        "cid",
-        "sube",
-        (F.col("cw_ss") - 2.0 * dot_double(F.col("sube"), F.col("cwe"))).alias("score"),
-    )
-    wpick = Window.partitionBy("vec_id", "m").orderBy("score", "cid")
+def _l2_score() -> Column:
+    """Argmin-L2 score ||c||² − 2·v·c of a sub-block ``sube`` against a
+    codeword ``cwe`` (cw_ss = ||c||²; the ||v||² term is constant under
+    the argmin) — the assignment of PQ training and PQ encoding alike."""
+    return F.col("cw_ss") - 2.0 * dot_double(F.col("sube"), F.col("cwe"))
+
+
+def _lloyd_step(samp, cw, vec: str, score: Column, desc: bool, keys=()):
+    """One Lloyd refinement of the codewords ``cw`` = (*keys, cid, cwe,
+    ...) over the training rows ``samp`` = (vec_id, *keys, ``vec``
+    array<double>): assign every row to its best codeword under
+    ``score`` — ascending, or descending when ``desc`` (an explicit sort
+    direction, never a negated score: NaN and NULL sort differently
+    under negation), ties to the lower cid — then recompute each
+    codeword as the per-dimension mean of its members.  ``keys`` splits
+    the codewords into independent codebooks: ("m",) is one per PQ
+    sub-block, () the coarse centroids.
+
+    The mean is rounded to 6 digits through a 1e6-scaled BIGINT sum
+    (integer-exact in any accumulation order) and ONE double division,
+    so both engines carry bitwise-identical codewords across every
+    iteration boundary — the property that keeps a compounding
+    iterative training loop oracle-checkable.  Codewords that attract
+    no rows keep their previous value (the standard empty-cluster
+    rule)."""
+    b = F.broadcast(cw)
+    pairs = samp.join(b, list(keys)) if keys else samp.crossJoin(b)
+    scored = pairs.select("vec_id", *keys, "cid", vec, score.alias("score"))
+    order = F.col("score").desc() if desc else F.col("score")
+    wpick = Window.partitionBy("vec_id", *keys).orderBy(order, "cid")
     assigned = (
         scored.withColumn("rn", F.row_number().over(wpick))
         .where(F.col("rn") == 1)
-        .select("m", "cid", "sube")
+        .select(*keys, "cid", vec)
     )
-    dims = assigned.select("m", "cid", F.posexplode("sube").alias("j", "v"))
-    mn = dims.groupBy("m", "cid", "j").agg(
-        F.sum(F.round(F.col("v").cast("double") * 1e6).cast("bigint")).alias("s6"),
-        F.count(F.lit(1)).alias("cnt"),
+    mn = (
+        assigned.select(*keys, "cid", F.posexplode(vec).alias("j", "v"))
+        .groupBy(*keys, "cid", "j")
+        .agg(
+            F.sum(F.round(F.col("v") * 1e6).cast("bigint")).alias("s6"),
+            F.count(F.lit(1)).alias("cnt"),
+        )
     )
     nc = (
-        mn.select("m", "cid", "j", (F.round(F.col("s6") / F.col("cnt")) / 1e6).alias("v"))
-        .groupBy("m", "cid")
+        mn.select(*keys, "cid", "j", (F.round(F.col("s6") / F.col("cnt")) / 1e6).alias("v"))
+        .groupBy(*keys, "cid")
         .agg(F.array_sort(F.collect_list(F.struct("j", "v"))).alias("a"))
-        .select("m", "cid", F.expr("transform(a, x -> x.v)").alias("nxt"))
+        .select(*keys, "cid", F.expr("transform(a, x -> x.v)").alias("nxt"))
     )
-    stepped = (
-        cw.select("m", "cid", F.col("cwe").alias("prev"))
-        .join(nc, ["m", "cid"], "left")
-        .select("m", "cid", F.coalesce("nxt", "prev").alias("cwe"))
+    return (
+        cw.select(*keys, "cid", F.col("cwe").alias("prev"))
+        .join(nc, [*keys, "cid"], "left")
+        .select(*keys, "cid", F.coalesce("nxt", "prev").alias("cwe"))
     )
-    return stepped.withColumn("cw_ss", dot_double(F.col("cwe"), F.col("cwe")))
 
 
-def _codebook_plan(subs, iters: int):
-    """Codebook (m, cid, cwe, cw_ss) from a sub-block table ``subs`` =
-    (vec_id, m, sube array<double>): the PQ_SEED_IDS rows are the init,
-    refined by ``iters`` Lloyd steps over the deterministic training
-    sample (vec_id % PQ_TRAIN_MOD == PQ_TRAIN_REM).  Source-agnostic on
-    purpose — v11 trains it on raw sub-blocks, the residual IVFADC index
-    (_rpq_index) on (x − centroid(cell(x))) sub-blocks; the Lloyd
-    machinery and its integer-exact iteration boundaries are identical.
-    iters=0 is the untrained init (kept callable so the recall test can
-    prove training strictly helps)."""
-    cw = subs.where(F.col("vec_id").isin(*PQ_SEED_IDS)).select(
-        F.col("vec_id").alias("cid"), "m", F.col("sube").alias("cwe")
+def _lloyd_plan(
+    src, vec: str, seeds: tuple, iters: int, score: Column, desc=False, keys=(), norms=False
+):
+    """Codewords (cid, *keys, cwe[, cw_ss]) trained over ``src`` =
+    (vec_id, *keys, ``vec`` array<double>): the ``seeds`` rows are the
+    init (k-means++-style init from data points), refined by ``iters``
+    _lloyd_step over the deterministic training sample (vec_id %
+    PQ_TRAIN_MOD == PQ_TRAIN_REM).  The one trainer of the PQ codebooks
+    (_codebook_plan: per-m argmin-L2, raw or residual sub-blocks) and of
+    the trained coarse centroids (_tivf_centroids_plan: full vectors,
+    argmax cosine).  ``norms`` carries cw_ss = ||c||², which the L2
+    score reads.  iters=0 is the untrained init (kept callable so the
+    training tests have their baseline)."""
+
+    def finish(cw):
+        return cw.withColumn("cw_ss", dot_double(F.col("cwe"), F.col("cwe"))) if norms else cw
+
+    cw = finish(
+        src.where(F.col("vec_id").isin(*seeds)).select(
+            F.col("vec_id").alias("cid"), *keys, F.col(vec).alias("cwe")
+        )
     )
-    cw = cw.withColumn("cw_ss", dot_double(F.col("cwe"), F.col("cwe")))
     if iters:
         samp = (
-            subs.where(F.col("vec_id") % PQ_TRAIN_MOD == PQ_TRAIN_REM)
+            src.where(F.col("vec_id") % PQ_TRAIN_MOD == PQ_TRAIN_REM)
             # the sample feeds every iteration's assignment — pin it so
-            # the corpus scan+slice runs once, not once per Lloyd step
-            .select("vec_id", "m", "sube").localCheckpoint(eager=False)
+            # the corpus scan runs once, not once per Lloyd step
+            .select("vec_id", *keys, vec).localCheckpoint(eager=False)
         )
         for _ in range(iters):
-            cw = _lloyd_step(samp, cw)
+            cw = finish(_lloyd_step(samp, cw, vec, score, desc, keys))
     return cw
 
 
-def _plain_subs(e):
-    """(vec_id, m, sube array<double>): every vector's raw PQ sub-blocks."""
-    return e.select(
-        "vec_id", F.explode(F.expr(_subblock_expr("embedding", "sube"))).alias("s")
-    ).select(
-        "vec_id",
-        F.col("s.m").alias("m"),
-        F.col("s.sube").cast("array<double>").alias("sube"),
-    )
+def _codebook_plan(subs, iters: int):
+    """PQ codebook (m, cid, cwe, cw_ss) from a sub-block table ``subs`` =
+    (vec_id, m, sube array<double>): one argmin-L2 Lloyd codebook per
+    sub-block from the PQ_SEED_IDS init.  Source-agnostic on purpose —
+    v11 trains it on raw sub-blocks, the residual IVFADC index
+    (_rpq_index) on (x − centroid(cell(x))) sub-blocks."""
+    return _lloyd_plan(subs, "sube", PQ_SEED_IDS, iters, _l2_score(), keys=("m",), norms=True)
 
 
 def _pq_codebook_plan(spark, sf_dir, iters: int):
     """v11's codebook: seed-vector RAW sub-blocks refined by ``iters``
     Lloyd steps over the deterministic training sample."""
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    return _codebook_plan(_plain_subs(e), iters)
+    return _codebook_plan(_subs(_emb(spark, sf_dir).select("vec_id", "embedding"), "embedding"), iters)
+
+
+def _assign_codes(subs, cw, keep=()):
+    """(vec_id, *keep, m, code, cw_ss6): every sub-block's argmin-L2
+    codeword — the one encoding of raw and residual sub-blocks.  A
+    min-struct aggregate tie-broken by cid: map-side combinable, the
+    shuffle carries (vec_id, m, struct), never the vectors.  cw_ss6 (the
+    chosen codeword's ||c||² scaled to BIGINT at 6 digits) rides along so
+    ADC can rebuild the reconstruction norm with an integer-exact,
+    accumulation-order-free sum (the _isum4 discipline — a 4-addend
+    double sum would be engine-order-dependent)."""
+    scored = subs.join(F.broadcast(cw), "m").select(
+        "vec_id", *keep, "m", "cid", "cw_ss", _l2_score().alias("score")
+    )
+    pick = F.min(F.struct(F.col("score"), F.col("cid").alias("cid"), F.col("cw_ss").alias("cw_ss")))
+    return (
+        scored.groupBy("vec_id", *keep, "m")
+        .agg(pick.alias("p"))
+        .select(
+            "vec_id",
+            *keep,
+            "m",
+            F.col("p.cid").alias("code"),
+            F.round(F.col("p.cw_ss") * 1e6).cast("bigint").alias("cw_ss6"),
+        )
+    )
 
 
 def _pq_index(spark, sf_dir, iters: int = PQ_ITERS):
@@ -1327,14 +1381,7 @@ def _pq_index(spark, sf_dir, iters: int = PQ_ITERS):
     cw = (m, cid, cwe, cw_ss): PQ_M×16 TRAINED codewords (seed sub-blocks
     + PQ_ITERS Lloyd steps over the deterministic sample — see
     _pq_codebook_plan) — broadcast everywhere, never shuffled.  codes =
-    per (vec_id, m) the argmin-L2 codeword: score = ||c||² − 2·v·c (the
-    ||v||² term is constant under the argmin), min-struct tie-broken by
-    cid — map-side combinable, the shuffle carries (vec_id, m, struct),
-    never the vectors.  cw_ss6 (the chosen codeword's ||c||² scaled to
-    BIGINT at 6 digits) rides along so ADC can rebuild the
-    reconstruction norm with an integer-exact, accumulation-order-free
-    sum (the _isum4 discipline — a 4-addend double sum would be
-    engine-order-dependent)."""
+    (vec_id, m, code, cw_ss6), see _assign_codes."""
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
     sfx = "" if iters == PQ_ITERS else f"_i{iters}"
 
@@ -1344,120 +1391,218 @@ def _pq_index(spark, sf_dir, iters: int = PQ_ITERS):
         f"pq_codewords{sfx}",
         lambda: _pq_codebook_plan(spark, sf_dir, iters).localCheckpoint(eager=False),
     )
-
-    def build_codes():
-        sub = e.select(
-            "vec_id", F.explode(F.expr(_subblock_expr("embedding", "sube"))).alias("s")
-        ).select("vec_id", F.col("s.m").alias("m"), F.col("s.sube").alias("sube"))
-        scored = sub.join(F.broadcast(cw), "m").select(
-            "vec_id",
-            "m",
-            "cid",
-            "cw_ss",
-            (F.col("cw_ss") - 2.0 * dot_double(F.col("sube"), F.col("cwe"))).alias("score"),
-        )
-        pick = F.min(
-            F.struct(F.col("score"), F.col("cid").alias("cid"), F.col("cw_ss").alias("cw_ss"))
-        )
-        return (
-            scored.groupBy("vec_id", "m")
-            .agg(pick.alias("p"))
-            .select(
-                "vec_id",
-                "m",
-                F.col("p.cid").alias("code"),
-                F.round(F.col("p.cw_ss") * 1e6).cast("bigint").alias("cw_ss6"),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    codes = _session_cached(spark, sf_dir, f"pq_codes{sfx}", build_codes)
+    codes = _session_cached(
+        spark,
+        sf_dir,
+        f"pq_codes{sfx}",
+        lambda: _assign_codes(_subs(e, "embedding"), cw).localCheckpoint(eager=False),
+    )
     return e, cw, codes
 
 
-def _pq_codebook_sql(iters: int, src: str = "sub") -> str:
-    """WITH-clause fragment mirroring _codebook_plan: mseq + sub (all
-    sub-blocks) + cw2 = the codebook after ``iters`` unrolled Lloyd
-    steps.  Every iteration boundary rounds codeword dims to 6 digits
-    via an integer-exact scaled-BIGINT mean, so both engines carry
-    bitwise-identical codebooks into the next assignment (the property
-    that lets a compounding iterative algorithm pass a hash compare).
-    ``src`` names the (vec_id, m, sube DOUBLE[]) sub-block CTE trained
-    over — the default emits the raw ``sub`` table (v11/v12); the
-    residual IVFADC oracle passes its own ``rsub`` CTE and emits
-    mseq/rsub itself."""
-    parts = []
-    if src == "sub":
-        parts += [
-            f"mseq AS (SELECT UNNEST(generate_series(0, {PQ_M - 1})) AS m)",
-            f"""sub AS (
-      SELECT e.vec_id, mseq.m,
-             CAST(e.embedding[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}]
-                  AS DOUBLE[]) AS sube
-      FROM embeddings e, mseq)""",
-        ]
-    parts += [
-        f"""cw_i0 AS (
-      SELECT vec_id AS cid, m, sube AS cwe, list_dot_product(sube, sube) AS cw_ss
-      FROM {src} WHERE vec_id IN {PQ_SEED_IDS})""",
+_MSEQ_SQL = f"mseq AS (SELECT UNNEST(generate_series(0, {PQ_M - 1})) AS m)"
+
+# SQL twin of _l2_score over a sub-block row ``s`` and a codeword row ``c``
+_L2_SQL = "c.cw_ss - 2 * list_dot_product(s.sube, c.cwe)"
+
+
+def _subs_sql(name: str, src: str, cols: str, arr: str, out: str = "sube") -> str:
+    """CTE ``name`` = (cols, m, ``out`` DOUBLE[]): oracle twin of _subs —
+    the PQ_M sub-blocks of the array ``arr`` of every row of ``src``
+    (``mseq`` must be in scope)."""
+    return f"""{name} AS (
+      SELECT {cols}, mseq.m,
+             CAST({arr}[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}] AS DOUBLE[]) AS {out}
+      FROM {src}, mseq)"""
+
+
+def _lloyd_sql(
+    src: str,
+    vec: str,
+    seeds: tuple,
+    iters: int,
+    score: str,
+    desc: bool,
+    width: int,
+    keys=(),
+    pre: str = "",
+) -> str:
+    """WITH fragment mirroring _lloyd_plan: ``{pre}cw_i0`` (the ``seeds``
+    rows of ``src``), ``iters`` unrolled _lloyd_step CTEs, then
+    ``{pre}cw`` = (cid, *keys, cwe, cw_ss).  ``score`` is the SQL
+    assignment score over a training row ``s`` and a codeword ``c``,
+    sorted DESC when ``desc``; ``width`` is the codeword dimension the
+    mean unnests.  Every iteration boundary rounds codeword dims to 6
+    digits via the integer-exact scaled-BIGINT mean, so both engines
+    carry bitwise-identical codewords into the next assignment.  ``pre``
+    keeps several trainings apart in one query (the PQ codebook next to
+    trained cells in v21/v23, the quantizers of v20/v24)."""
+
+    def on(a, b, cols):
+        return " AND ".join(f"{a}.{k} = {b}.{k}" for k in cols) or "TRUE"
+
+    kc = "".join(f"{k}, " for k in keys)
+    parts = [
+        f"""{pre}cw_i0 AS (
+      SELECT vec_id AS cid, {kc}{vec} AS cwe, list_dot_product({vec}, {vec}) AS cw_ss
+      FROM {src} WHERE vec_id IN {seeds})"""
     ]
-    prev = "cw_i0"
+    prev = f"{pre}cw_i0"
     for i in range(1, iters + 1):
         parts += [
-            f"""asg_i{i} AS (
-      SELECT s.m, c.cid, s.sube
-      FROM {src} s JOIN {prev} c USING (m)
+            f"""{pre}asg_i{i} AS (
+      SELECT {"".join(f"s.{k}, " for k in keys)}c.cid, s.{vec}
+      FROM {src} s JOIN {prev} c ON {on("c", "s", keys)}
       WHERE s.vec_id % {PQ_TRAIN_MOD} = {PQ_TRAIN_REM}
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-          ORDER BY c.cw_ss - 2 * list_dot_product(s.sube, c.cwe), c.cid) = 1)""",
-            f"""mn_i{i} AS (
-      SELECT m, cid, j,
-             CAST(SUM(CAST(ROUND(sube[j] * 1e6) AS BIGINT)) AS BIGINT) AS s6,
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id{"".join(f", s.{k}" for k in keys)}
+          ORDER BY {score}{" DESC" if desc else ""}, c.cid) = 1)""",
+            f"""{pre}mn_i{i} AS (
+      SELECT {kc}cid, j,
+             CAST(SUM(CAST(ROUND({vec}[j] * 1e6) AS BIGINT)) AS BIGINT) AS s6,
              COUNT(*) AS cnt
-      FROM asg_i{i}, UNNEST(generate_series(1, {PQ_SUB})) AS t(j)
-      GROUP BY m, cid, j)""",
-            f"""nc_i{i} AS (
-      SELECT m, cid, LIST(ROUND(s6 / cnt) / 1e6 ORDER BY j) AS cwe
-      FROM mn_i{i} GROUP BY m, cid)""",
-            f"""cw_i{i} AS (
-      SELECT p.m, p.cid, COALESCE(n.cwe, p.cwe) AS cwe,
+      FROM {pre}asg_i{i}, UNNEST(generate_series(1, {width})) AS t(j)
+      GROUP BY {kc}cid, j)""",
+            f"""{pre}nc_i{i} AS (
+      SELECT {kc}cid, LIST(ROUND(s6 / cnt) / 1e6 ORDER BY j) AS cwe
+      FROM {pre}mn_i{i} GROUP BY {kc}cid)""",
+            f"""{pre}cw_i{i} AS (
+      SELECT {"".join(f"p.{k}, " for k in keys)}p.cid, COALESCE(n.cwe, p.cwe) AS cwe,
              list_dot_product(COALESCE(n.cwe, p.cwe), COALESCE(n.cwe, p.cwe)) AS cw_ss
-      FROM {prev} p LEFT JOIN nc_i{i} n ON n.m = p.m AND n.cid = p.cid)""",
+      FROM {prev} p LEFT JOIN {pre}nc_i{i} n ON {on("n", "p", (*keys, "cid"))})""",
         ]
-        prev = f"cw_i{i}"
-    parts.append(f"cw2 AS (SELECT cid, m, cwe, cw_ss FROM {prev})")
+        prev = f"{pre}cw_i{i}"
+    parts.append(f"{pre}cw AS (SELECT * FROM {prev})")
     return ",\n    ".join(parts)
 
 
-def _pq_adc_ctes(iters: int, nq: int) -> str:
-    """CTE fragment shared by the PQ oracles (v11 full-corpus, v12 eval,
-    v13 IVF-pruned): trained codebook (cw2), per-vector codes, query
-    side (q, qparts — unit-normalized, see _pq_query_side)."""
-    return f"""{_pq_codebook_sql(iters)},
+def _codebook_sql(src: str) -> str:
+    """Oracle twin of _codebook_plan over the sub-block CTE ``src``: the
+    trained PQ codebook ``cw``."""
+    return _lloyd_sql(src, "sube", PQ_SEED_IDS, PQ_ITERS, _L2_SQL, False, PQ_SUB, ("m",))
+
+
+def _codes_sql(name: str, src: str, keep=()) -> str:
+    """CTE ``name`` = (vec_id, *keep, m, code, cw_ss6): oracle twin of
+    _assign_codes over the sub-block CTE ``src`` and the codebook ``cw``."""
+    return f"""{name} AS (
+      SELECT s.vec_id, {"".join(f"s.{k}, " for k in keep)}s.m, c.cid AS code,
+             CAST(ROUND(c.cw_ss * 1e6) AS BIGINT) AS cw_ss6
+      FROM {src} s JOIN cw c ON c.m = s.m
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY {_L2_SQL}, c.cid) = 1)"""
+
+
+def _pq_index_sql(residual: bool) -> str:
+    """The PQ index CTEs ending in ``codes``: oracle twin of _pq_index, or
+    with ``residual`` of _rpq_index CTE for CTE — residuals against the
+    in-scope ``cells``/``cents``, residual codebook, crosstab rc6, cell
+    stats ``cents6``."""
+    if not residual:
+        return ",\n    ".join(
+            [
+                _subs_sql("sub", "embeddings e", "e.vec_id", "e.embedding"),
+                _codebook_sql("sub"),
+                _codes_sql("codes", "sub"),
+            ]
+        )
+    return f"""resid AS (
+      SELECT e.vec_id, cl.cell,
+             list_transform(generate_series(1, {EMB_DIM}),
+                 j -> CAST(e.embedding[j] AS DOUBLE) - CAST(c.ce[j] AS DOUBLE)) AS rese
+      FROM embeddings e
+      JOIN cells cl ON cl.vec_id = e.vec_id
+      JOIN cents c ON c.cid = cl.cell),
+    {_subs_sql("rsub", "resid r", "r.vec_id, r.cell", "r.rese")},
+    {_codebook_sql("rsub")},
+    {_subs_sql("centsub", "cents c", "c.cid AS cell", "c.ce", "cente")},
+    crosstab AS (
+      SELECT cs.cell, cs.m, w.cid AS code,
+             CAST(ROUND((w.cw_ss + 2 * list_dot_product(cs.cente, w.cwe)) * 1e6)
+                  AS BIGINT) AS rc6
+      FROM centsub cs JOIN cw w USING (m)),
+    {_codes_sql("rcodes", "rsub", ("cell",))},
     codes AS (
-      SELECT sub.vec_id, sub.m, cw2.cid AS code,
-             CAST(ROUND(cw2.cw_ss * 1e6) AS BIGINT) AS cw_ss6
-      FROM sub JOIN cw2 USING (m)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.m
-          ORDER BY cw2.cw_ss - 2 * list_dot_product(sub.sube, cw2.cwe), cw2.cid) = 1),
-    q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
+      SELECT rc.vec_id, rc.cell, rc.m, rc.code, ct.rc6
+      FROM rcodes rc JOIN crosstab ct
+        ON ct.cell = rc.cell AND ct.m = rc.m AND ct.code = rc.code),
+    cents6 AS (
+      SELECT cid AS cell,
+             CAST(ROUND(list_dot_product(CAST(ce AS DOUBLE[]), CAST(ce AS DOUBLE[]))
+                  * 1e6) AS BIGINT) AS cent_ss6
+      FROM cents)"""
+
+
+def _query_side_sql(nq: int) -> str:
+    """CTEs q (the query vectors vec_id < ``nq``), qsub and qparts —
+    oracle twin of _pq_query_side (unit-normalized partials)."""
+    return f"""q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
           WHERE vec_id < {nq}),
+    {_subs_sql("qsub", "q", "q.qid, SQRT(list_dot_product(q.qe, q.qe)) AS qnorm", "q.qe", "qsube")},
     qparts AS (
-      SELECT q.qid, cw2.m, cw2.cid AS code,
-             CAST(ROUND(list_dot_product(
-                 q.qe[cw2.m * {PQ_SUB} + 1 : cw2.m * {PQ_SUB} + {PQ_SUB}], cw2.cwe)
+      SELECT s.qid, c.m, c.cid AS code,
+             CAST(ROUND(list_dot_product(s.qsube, c.cwe) / s.qnorm * 1e6) AS BIGINT) AS qdot6
+      FROM qsub s JOIN cw c ON c.m = s.m)"""
+
+
+def _pq_adc_sql(
+    nq: int, quant: Quantizer | None = None, nprobe: int = N_PROBE, residual: bool = False
+) -> str:
+    """WITH fragment ending in ``appx`` (qid, vec_id, approx): oracle twin
+    of _pq_adc, CTE for CTE — the PQ index, the query side, the coarse
+    pruning when ``quant`` is given, then ONE ADC aggregate (plus the
+    per-(query, cell) qc6 and cent_ss6 terms for residual codes) and the
+    approximate cosine."""
+    ctes = [_MSEQ_SQL]
+    if quant is not None:
+        ctes.append(_coarse_sql(quant, nq, nprobe))
+    ctes += [_pq_index_sql(residual), _query_side_sql(nq)]
+    cand = qid = group = bq = br = ""
+    r6 = "cw_ss6"
+    if quant is not None:
+        # (qid, vec_id) survivors of the coarse pruning
+        ctes.append(
+            """cand AS (
+      SELECT p.qid, x.vec_id
+      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid)"""
+        )
+        cand = "\n      JOIN cand cd ON cd.vec_id = c.vec_id"
+        qid = "qp.qid = cd.qid AND "
+    if residual:
+        ctes.append(
+            """centd AS (SELECT cid AS cell, CAST(ce AS DOUBLE[]) AS ced FROM cents),
+    qcent AS (
+      -- ced is pre-cast in its OWN CTE projection: an inline
+      -- CAST(c.ce AS DOUBLE[]) inside this cross product gets pushed by
+      -- DuckDB's optimizer below the validity gate and evaluated
+      -- speculatively on raw rows, where a NULL-element vector makes
+      -- list_dot_product raise (pinned by the edge-vector fixture)
+      SELECT q.qid, d.cell,
+             CAST(ROUND(list_dot_product(q.qe, d.ced)
                  / SQRT(list_dot_product(q.qe, q.qe)) * 1e6)
-                  AS BIGINT) AS qdot6
-      FROM q, cw2)"""
+                  AS BIGINT) AS qc6
+      FROM q, centd d)"""
+        )
+        cand += """
+      JOIN qcent qct ON qct.qid = cd.qid AND qct.cell = c.cell
+      JOIN cents6 cs ON cs.cell = c.cell"""
+        group, bq, br, r6 = ", qct.qc6, cs.cent_ss6", "qct.qc6 + ", "cs.cent_ss6 + ", "rc6"
+    ctes.append(
+        f"""adc AS (
+      SELECT qp.qid, c.vec_id,
+             CAST({bq}SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
+             CAST({br}SUM(c.{r6}) AS DOUBLE) / 1e6 AS recon_ss
+      FROM codes c{cand}
+      JOIN qparts qp ON {qid}qp.m = c.m AND qp.code = c.code
+      GROUP BY qp.qid, c.vec_id{group}),
+    appx AS (
+      SELECT qid, vec_id, adc / SQRT(recon_ss) AS approx
+      FROM adc WHERE vec_id <> qid)"""
+    )
+    return ",\n    ".join(ctes)
 
 
-# PQ back half (assumes CTEs `adc` and `q` are in scope; the query side
-# is unit-normalized, so only the reconstruction norm divides):
-# approximate cosine -> shortlist -> exact re-rank -> formatted top-k
-_PQ_TAIL_SQL = f"""appx AS (
-      SELECT a.qid, a.vec_id, a.adc / SQRT(a.recon_ss) AS approx
-      FROM adc a WHERE a.vec_id <> a.qid),
-    shortlist AS (
+# PQ back half over the ``appx`` and ``q`` CTEs (oracle twin of _pq_tail
+# + _pq_topk_plan's formatting): shortlist -> exact re-rank -> top-k
+_PQ_TAIL_SQL = f"""shortlist AS (
       SELECT qid, vec_id, approx FROM appx
       QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
           ORDER BY ROUND(approx, 6) DESC, vec_id) <= {PQ_SHORTLIST}),
@@ -1476,19 +1621,15 @@ _PQ_TAIL_SQL = f"""appx AS (
     FROM ranked WHERE rnk <= {TOP_K} ORDER BY qid, rnk"""
 
 
-def _pq_topk_sql(iters: int, nq: int) -> str:
-    """Full-corpus PQ ADC + shortlist-re-rank oracle SQL against the
-    ``iters``-step codebook, for query vectors vec_id < ``nq`` — v11's
-    oracle at (PQ_ITERS, N_QUERY_VECS); v12's recall eval embeds it at
-    (PQ_ITERS, V12_NQ) as a subquery."""
+def _pq_topk_sql(
+    nq: int, quant: Quantizer | None = None, nprobe: int = N_PROBE, residual: bool = False
+) -> str:
+    """PQ ADC + shortlist-re-rank oracle SQL, the twin of _pq_topk_plan:
+    full-corpus at quant=None (v11; v12 embeds it at V12_NQ), cell-pruned
+    raw codes over ``quant`` (v13, v21, v26; v14/v17/v23 at V12_NQ), or
+    residual codes (v16; v17/v23 at V12_NQ)."""
     return f"""
-    WITH {_pq_adc_ctes(iters, nq)},
-    adc AS (
-      SELECT qp.qid, c.vec_id,
-             CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
-             CAST(SUM(c.cw_ss6) AS DOUBLE) / 1e6 AS recon_ss
-      FROM codes c JOIN qparts qp ON qp.m = c.m AND qp.code = c.code
-      GROUP BY qp.qid, c.vec_id),
+    WITH {_pq_adc_sql(nq, quant, nprobe, residual)},
     {_PQ_TAIL_SQL}
     """
 
@@ -1510,11 +1651,11 @@ def _pq_topk_sql(iters: int, nq: int) -> str:
     "6-digit-scaled BIGINTs, so the sums are integer-exact in any "
     "accumulation order; shortlist rank ties break on round(approx, 6) "
     "then vec_id.",
-    _pq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _pq_topk_sql(N_QUERY_VECS),
     ("similarity", "ann", "pq", "pipeline"),
 )
 def v11(spark, sf_dir):
-    return _pq_topk_plan(spark, sf_dir, PQ_ITERS)
+    return _pq_topk_plan(spark, sf_dir)
 
 
 def _pq_query_side(e, cw, nq: int):
@@ -1533,11 +1674,14 @@ def _pq_query_side(e, cw, nq: int):
     training sample satisfies for any sanely-scaled embedding corpus
     (typical normalized embeddings are O(1) per element)."""
     q = e.where(F.col("vec_id") < nq)
-    qsub = q.select(
-        F.col("vec_id").alias("qid"),
-        norm2(F.col("embedding")).alias("qnorm"),
-        F.explode(F.expr(_subblock_expr("embedding", "qsube"))).alias("s"),
-    ).select("qid", "qnorm", F.col("s.m").alias("m"), F.col("s.qsube").alias("qsube"))
+    qsub = _subs(
+        q.select(
+            F.col("vec_id").alias("qid"), norm2(F.col("embedding")).alias("qnorm"), "embedding"
+        ),
+        "embedding",
+        ("qid", "qnorm"),
+        "qsube",
+    )
     qparts = qsub.join(cw, "m").select(
         "qid",
         "m",
@@ -1549,61 +1693,141 @@ def _pq_query_side(e, cw, nq: int):
     return q, qparts
 
 
-def _pq_rank_tail(e, q, adc):
-    """Shared PQ back half (v11 full-corpus ADC, v13 cell-pruned ADC):
-    approximate cosine from the ADC sums (the query side is already
-    unit-normalized, so only the reconstruction norm divides), shortlist,
-    exact re-rank, formatted top-k."""
-    appx = adc.where(F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        (F.col("adc") / F.sqrt("recon_ss")).alias("approx"),
+def _pq_adc(
+    spark,
+    sf_dir,
+    nq: int,
+    quant: Quantizer | None = None,
+    nprobe: int = N_PROBE,
+    residual: bool = False,
+    iters: int = PQ_ITERS,
+):
+    """(qid, vec_id, approx): the ADC scoring stage of every PQ query, for
+    query vectors vec_id < ``nq``.  Full-corpus over raw codes at
+    quant=None (v11, v12, the v18/v22 sweeps); pruned to the ``nprobe``
+    probed cells of ``quant`` otherwise (v13, v14, v21, v26); residual
+    codes (v16, v17, v23) add the per-(query, cell) q·centroid scalar
+    qc6 and the cell's ‖centroid‖² term cent_ss6 to the two sums.
+
+    The coarse-pruned candidates, the lookup table and the residual
+    terms broadcast; the codes table never shuffles.  Both sums are
+    BIGINTs at 1e6, integer-exact in any accumulation order, and one
+    division yields the approximate cosine (the query side is already
+    unit-normalized, so only the reconstruction norm divides).  The
+    residual index is resolved first: it rejects a layout without
+    residual codes before the coarse stage registers anything in the
+    session index."""
+    if residual:
+        e, cw, codes, cents, cents6 = _rpq_index(spark, sf_dir, iters, quant)
+    else:
+        e, cw, codes = _pq_index(spark, sf_dir, iters)
+    q, qparts = _pq_query_side(e, cw, nq)
+    on = ["m", "code"]
+    if quant is not None:
+        _, cells, probes = _cells_probes(spark, sf_dir, quant, nprobe, nq)
+        # (qid, vec_id) survivors of the coarse pruning — |queries| ×
+        # (nprobe/ncells × corpus) rows, the candidate list a serving
+        # batch materializes anyway; broadcast-small per batch
+        cand = (
+            cells.join(F.broadcast(probes.select("qid", "cell")), "cell")
+            .where(F.col("vec_id") != F.col("qid"))
+            .select("qid", "vec_id")
+        )
+        codes = codes.join(F.broadcast(cand), "vec_id")
+        on = ["qid", "m", "code"]
+    grp, r6 = (["cell"], "rc6") if residual else ([], "cw_ss6")
+    adc = (
+        codes.join(F.broadcast(qparts), on)
+        .groupBy("qid", "vec_id", *grp)
+        .agg(F.sum("qdot6").alias("qd6"), F.sum(r6).alias("rr6"))
     )
-    wshort = Window.partitionBy("qid").orderBy(F.round("approx", 6).desc(), "vec_id")
+    qd, rr = F.col("qd6"), F.col("rr6")
+    if residual:
+        # q·(cent + r̂) = q·cent + q·r̂: one residual lookup table serves
+        # every probed cell plus one scalar per (query, cell)
+        qcent = (
+            q.select(F.col("vec_id").alias("qid"), "embedding")
+            .crossJoin(F.broadcast(cents))
+            .select(
+                "qid",
+                "cell",
+                F.round(
+                    dot_double(F.col("embedding"), F.col("ce")) / norm2(F.col("embedding")) * 1e6
+                )
+                .cast("bigint")
+                .alias("qc6"),
+            )
+        )
+        adc = adc.join(F.broadcast(qcent), ["qid", "cell"]).join(F.broadcast(cents6), "cell")
+        qd, rr = F.col("qc6") + qd, F.col("cent_ss6") + rr
+    return (
+        adc.select(
+            "qid",
+            "vec_id",
+            (qd.cast("double") / 1e6).alias("adc"),
+            (rr.cast("double") / 1e6).alias("recon_ss"),
+        )
+        .where(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", (F.col("adc") / F.sqrt("recon_ss")).alias("approx"))
+    )
+
+
+def _pq_tail(spark, sf_dir, nq: int, appx, key: str | None = None):
+    """Shortlist + exact re-rank of an approx stream (``key``, qid,
+    vec_id, approx): per query the PQ_SHORTLIST best candidates by
+    round(approx, 6) then vec_id, re-scored by exact cosine, top TOP_K
+    kept — (``key``, qid, vec_id, approx, sim, rnk).  The one tail of
+    every PQ query.  ``key`` stacks several streams (v17/v23 stack the
+    two encodings) under ONE shortlist window, ONE re-rank join (the
+    corpus is scanned once) and ONE rank window partitioned by (key,
+    qid): row_number over the same ordering picks exactly the rows each
+    per-stream tail would."""
+    part = [key, "qid"] if key else ["qid"]
+    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    wshort = Window.partitionBy(*part).orderBy(F.round("approx", 6).desc(), "vec_id")
     shortlist = (
-        appx.select("qid", "vec_id", "approx", F.row_number().over(wshort).alias("srn"))
+        appx.select(*part, "vec_id", "approx", F.row_number().over(wshort).alias("srn"))
         .where(F.col("srn") <= PQ_SHORTLIST)
         .drop("srn")
     )
-    qv = q.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
+    qv = e.where(F.col("vec_id") < nq).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
     rer = (
         shortlist.join(e, "vec_id")
         .join(F.broadcast(qv), "qid")
-        .select("qid", "vec_id", "approx", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
+        .select(*part, "vec_id", "approx", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
     )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), "vec_id")
-    return (
-        rer.select("qid", "vec_id", "approx", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "qid",
-            "vec_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            F.round("approx", 4).alias("approx_sim"),
-            F.round("sim", 4).alias("sim"),
-        )
-        .orderBy("qid", "rnk")
-    )
+    wrank = Window.partitionBy(*part).orderBy(F.col("sim").desc(), "vec_id")
+    return rer.select(
+        *part, "vec_id", "approx", "sim", F.row_number().over(wrank).alias("rnk")
+    ).where(F.col("rnk") <= TOP_K)
 
 
-def _pq_topk_plan(spark, sf_dir, iters: int, nq: int = N_QUERY_VECS):
-    """The full PQ ADC + shortlist-re-rank plan against the ``iters``-step
-    codebook for query vectors vec_id < ``nq`` — v11 runs it at
-    (PQ_ITERS, N_QUERY_VECS); v12's recall eval at (PQ_ITERS, V12_NQ);
-    the strictly-helps test also at iters=0.  The index artifacts
-    (codebook, codes) are nq-independent — only the broadcast query side
-    changes width."""
-    e, cw, codes = _pq_index(spark, sf_dir, iters)
-    q, qparts = _pq_query_side(e, cw, nq)
-    adc = (
-        codes.join(F.broadcast(qparts), ["m", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(
-            (F.sum("qdot6").cast("double") / 1e6).alias("adc"),
-            (F.sum("cw_ss6").cast("double") / 1e6).alias("recon_ss"),
-        )
-    )
-    return _pq_rank_tail(e, q, adc)
+def _pq_topk_plan(
+    spark,
+    sf_dir,
+    nq: int = N_QUERY_VECS,
+    quant: Quantizer | None = None,
+    nprobe: int = N_PROBE,
+    residual: bool = False,
+    iters: int = PQ_ITERS,
+):
+    """The PQ ADC + shortlist-re-rank top-k for query vectors vec_id <
+    ``nq`` (see _pq_adc for the variants): v11/v12 full-corpus; v13/v14
+    raw codes over the seed cells (the corpus's MEASURED winner — see
+    v13's description); v16 residual codes (Jégou §V); v21 raw codes over
+    TRAINED_Q; v26 over the serving layout.  The strictly-helps test also
+    runs it at iters=0.  Index artifacts (codebook, codes) are
+    nq-independent — only the broadcast query side changes width."""
+    top = _pq_tail(spark, sf_dir, nq, _pq_adc(spark, sf_dir, nq, quant, nprobe, residual, iters))
+    return top.select(
+        "qid",
+        "vec_id",
+        F.col("rnk").cast("int").alias("rnk"),
+        F.round("approx", 4).alias("approx_sim"),
+        F.round("sim", 4).alias("sim"),
+    ).orderBy("qid", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -1637,12 +1861,13 @@ def _exact_topk_v12(spark, sf_dir):
     )
 
 
-def _recall_agg(exact, got):
-    """(qid, n_topk, n_recovered, recall): per-query recall of a
+def _recall_agg(exact, got, key: str | None = None, values=()):
+    """(qid[, key], n_topk, n_recovered, recall): per-query recall of a
     (qid, vec_id) result set against the exact ground truth — the shared
-    back half of the single-encoding ANN calibration evals (v12, v14;
-    v17/v23 run the stacked (encoding, qid) twin inside
-    _encoding_recall_plan since r16).
+    back half of the ANN calibration evals (v12, v14).  With ``key``,
+    ``got`` carries that stack column and the exact side is exploded
+    over its ``values``, so one join and one aggregate serve every
+    stacked arm (v17/v23 stack the two encodings).
 
     The result side is BROADCAST explicitly (r15): ``got`` is a top-k
     result set, bounded at |eval queries| x k rows by construction, but
@@ -1654,16 +1879,20 @@ def _recall_agg(exact, got):
     and removes both (plan: SortMergeJoin LeftOuter -> BroadcastHashJoin
     in every recall eval; the same reasoning as the broadcast ground
     truth in the v9 probe stack)."""
-    g = got.select("qid", "vec_id", F.lit(1).alias("hit"))
+    stack = [key] if key else []
+    if key:
+        exact = exact.withColumn(key, F.explode(F.array(*[F.lit(v) for v in values])))
+    g = got.select(*stack, "qid", "vec_id", F.lit(1).alias("hit"))
     return (
-        exact.join(F.broadcast(g), ["qid", "vec_id"], "left")
-        .groupBy("qid")
+        exact.join(F.broadcast(g), [*stack, "qid", "vec_id"], "left")
+        .groupBy("qid", *stack)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_topk"),
             F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
         )
         .select(
             "qid",
+            *stack,
             "n_topk",
             "n_recovered",
             F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
@@ -1720,7 +1949,7 @@ def _stacked_recall_sql(key: str, arms, ctes=()) -> str:
     "truth is a session-index artifact (k rows per eval query); the PQ "
     "side re-executes its real ADC + re-rank plan against the cached "
     "codes, so the measured cost is the serving path itself.",
-    _recall_agg_sql(_pq_topk_sql(PQ_ITERS, V12_NQ)),
+    _recall_agg_sql(_pq_topk_sql(V12_NQ)),
     ("similarity", "ann", "pq", "eval", "calibration", "pipeline"),
 )
 def v12(spark, sf_dir):
@@ -1734,8 +1963,7 @@ def v12(spark, sf_dir):
     # never shuffle, lookup table and ground truth broadcast — is the
     # 100×-scale shape.
     exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    pq = _pq_topk_plan(spark, sf_dir, PQ_ITERS, V12_NQ)
-    return _recall_agg(exact, pq).orderBy("qid")
+    return _recall_agg(exact, _pq_topk_plan(spark, sf_dir, V12_NQ)).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -1764,9 +1992,7 @@ def _residual_subs_plan(e, cells, cents):
             ).alias("rese"),
         )
     )
-    return res.select(
-        "vec_id", "cell", F.explode(F.expr(_subblock_expr("rese", "sube"))).alias("s")
-    ).select("vec_id", "cell", F.col("s.m").alias("m"), F.col("s.sube").alias("sube"))
+    return _subs(res, "rese", ("vec_id", "cell"))
 
 
 def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, quant: Quantizer = SEED_Q):
@@ -1795,7 +2021,7 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, quant: Quantizer = SEED_Q):
     (v13/v17/v23's measured adjudication), and the ``rpq_``/``trpq_``
     keys name one pool each."""
     # raise, not assert: must survive python -O
-    if quant.seeds != IVF_SEED_IDS:
+    if quant is None or quant.seeds != IVF_SEED_IDS:
         raise ValueError("residual codes exist for the default IVF_SEED_IDS cells only")
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
     _, cells, _ = _cells_probes(spark, sf_dir, quant, N_PROBE)
@@ -1814,10 +2040,7 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, quant: Quantizer = SEED_Q):
 
     # (cell, m, code, rc6): ncells × M × K rows — broadcast-tiny, built
     # once per index from the centroid sub-blocks and the codebook
-    centsub = cents.select(
-        "cell", F.explode(F.expr(_subblock_expr("ce", "cente"))).alias("s")
-    ).select("cell", F.col("s.m").alias("m"), F.col("s.cente").alias("cente"))
-    crosstab = centsub.join(cw, "m").select(
+    crosstab = _subs(cents, "ce", ("cell",), "cente").join(cw, "m").select(
         "cell",
         "m",
         F.col("cid").alias("code"),
@@ -1829,18 +2052,9 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, quant: Quantizer = SEED_Q):
     )
 
     def build_codes():
-        scored = _residual_subs_plan(e, cells, cents).join(F.broadcast(cw), "m").select(
-            "vec_id",
-            "cell",
-            "m",
-            "cid",
-            (F.col("cw_ss") - 2.0 * dot_double(F.col("sube"), F.col("cwe"))).alias("score"),
-        )
-        pick = F.min(F.struct(F.col("score"), F.col("cid").alias("cid")))
         return (
-            scored.groupBy("vec_id", "cell", "m")
-            .agg(pick.alias("p"))
-            .select("vec_id", "cell", "m", F.col("p.cid").alias("code"))
+            _assign_codes(_residual_subs_plan(e, cells, cents), cw, ("cell",))
+            .drop("cw_ss6")
             .join(F.broadcast(crosstab), ["cell", "m", "code"])
             .localCheckpoint(eager=False)
         )
@@ -1851,217 +2065,6 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, quant: Quantizer = SEED_Q):
         F.round(dot_double(F.col("ce"), F.col("ce")) * 1e6).cast("bigint").alias("cent_ss6"),
     )
     return e, cw, codes, cents, cents6
-
-
-def _rpq_query_side(e, cw, cents, nq: int):
-    """(q, qparts, qcent): the residual-ADC query side.  Because cosine is
-    linear in the reconstruction — q·(cent + r̂) = q·cent + q·r̂ — ONE
-    residual lookup table per query serves every probed cell (qparts,
-    same shape as v11's) plus one scalar per (query, cell): qc6 =
-    round(q·cent/|q| · 1e6).  Both BIGINT at 1e6, so the ADC numerator
-    qc6 + Σ qdot6 stays integer-exact in any accumulation order.  (The
-    textbook IVFADC builds nprobe per-cell tables by residualizing the
-    QUERY; the linear split needs only the |queries|×ncells qcent
-    broadcast — same math, one table.)"""
-    q, qparts = _pq_query_side(e, cw, nq)
-    qcent = (
-        q.select(F.col("vec_id").alias("qid"), "embedding")
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            "cell",
-            F.round(
-                dot_double(F.col("embedding"), F.col("ce"))
-                / norm2(F.col("embedding"))
-                * 1e6
-            )
-            .cast("bigint")
-            .alias("qc6"),
-        )
-    )
-    return q, qparts, qcent
-
-
-# (qid, vec_id) survivors of the coarse pruning (CTE twin of _ivfpq_adc's cand)
-_CAND_SQL = """cand AS (
-      SELECT p.qid, x.vec_id
-      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid)"""
-
-
-def _ivfpq_topk_sql(quant: Quantizer, nq: int, nprobe: int = N_PROBE) -> str:
-    """Raw-codes IVFADC oracle SQL for query vectors vec_id < ``nq`` over
-    ``quant``'s cells at ``nprobe`` — v13 (seed cells), v21 (trained),
-    v26 (the serving layout); v14/v17/v23 embed it at V12_NQ.  Raw (not
-    residual) by MEASURED adjudication — see v13's docstring and
-    _rivfpq_topk_sql for the residual twin."""
-    return f"""
-    WITH {_pq_adc_ctes(PQ_ITERS, nq)},
-    {_coarse_sql(quant, nq, nprobe)},
-    {_CAND_SQL},
-    adc AS (
-      SELECT cd.qid, c2.vec_id,
-             CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
-             CAST(SUM(c2.cw_ss6) AS DOUBLE) / 1e6 AS recon_ss
-      FROM codes c2
-      JOIN cand cd ON cd.vec_id = c2.vec_id
-      JOIN qparts qp ON qp.qid = cd.qid AND qp.m = c2.m AND qp.code = c2.code
-      GROUP BY cd.qid, c2.vec_id),
-    {_PQ_TAIL_SQL}
-    """
-
-
-def _rivfpq_topk_sql(quant: Quantizer, nq: int) -> str:
-    """Residual-IVFADC oracle SQL for query vectors vec_id < ``nq`` —
-    v16's oracle at N_QUERY_VECS; v17's encoding eval embeds it at V12_NQ;
-    v23 embeds the TRAINED_Q form (the same residual machinery over the
-    trained centroids, so residuals, codebook, crosstab and cell stats
-    all follow the trained cells).  Mirrors _rpq_index/_rpq_query_side
-    CTE for CTE: residuals, residual codebook (Lloyd over rsub), crosstab
-    rc6, cell stats, query table + per-cell qcent, then the shared ADC
-    tail."""
-    return f"""
-    WITH mseq AS (SELECT UNNEST(generate_series(0, {PQ_M - 1})) AS m),
-    {_coarse_sql(quant, nq, N_PROBE)},
-    resid AS (
-      SELECT e.vec_id, cl.cell,
-             list_transform(generate_series(1, {EMB_DIM}),
-                 j -> CAST(e.embedding[j] AS DOUBLE) - CAST(c.ce[j] AS DOUBLE)) AS rese
-      FROM embeddings e
-      JOIN cells cl ON cl.vec_id = e.vec_id
-      JOIN cents c ON c.cid = cl.cell),
-    rsub AS (
-      SELECT r.vec_id, r.cell, mseq.m,
-             r.rese[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}] AS sube
-      FROM resid r, mseq),
-    {_pq_codebook_sql(PQ_ITERS, src="rsub")},
-    centsub AS (
-      SELECT c.cid AS cell, mseq.m,
-             CAST(c.ce[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}]
-                  AS DOUBLE[]) AS cente
-      FROM cents c, mseq),
-    crosstab AS (
-      SELECT cs.cell, cs.m, w.cid AS code,
-             CAST(ROUND((w.cw_ss + 2 * list_dot_product(cs.cente, w.cwe)) * 1e6)
-                  AS BIGINT) AS rc6
-      FROM centsub cs JOIN cw2 w USING (m)),
-    rcodes AS (
-      SELECT s.vec_id, s.cell, s.m, cw2.cid AS code
-      FROM rsub s JOIN cw2 USING (m)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-          ORDER BY cw2.cw_ss - 2 * list_dot_product(s.sube, cw2.cwe), cw2.cid) = 1),
-    codes AS (
-      SELECT rc.vec_id, rc.cell, rc.m, rc.code, ct.rc6
-      FROM rcodes rc JOIN crosstab ct
-        ON ct.cell = rc.cell AND ct.m = rc.m AND ct.code = rc.code),
-    cents6 AS (
-      SELECT cid AS cell,
-             CAST(ROUND(list_dot_product(CAST(ce AS DOUBLE[]), CAST(ce AS DOUBLE[]))
-                  * 1e6) AS BIGINT) AS cent_ss6
-      FROM cents),
-    q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-          WHERE vec_id < {nq}),
-    qparts AS (
-      SELECT q.qid, cw2.m, cw2.cid AS code,
-             CAST(ROUND(list_dot_product(
-                 q.qe[cw2.m * {PQ_SUB} + 1 : cw2.m * {PQ_SUB} + {PQ_SUB}], cw2.cwe)
-                 / SQRT(list_dot_product(q.qe, q.qe)) * 1e6)
-                  AS BIGINT) AS qdot6
-      FROM q, cw2),
-    centd AS (SELECT cid AS cell, CAST(ce AS DOUBLE[]) AS ced FROM cents),
-    qcent AS (
-      -- ced is pre-cast in its OWN CTE projection: an inline
-      -- CAST(c.ce AS DOUBLE[]) inside this cross product gets pushed by
-      -- DuckDB's optimizer below the validity gate and evaluated
-      -- speculatively on raw rows, where a NULL-element vector makes
-      -- list_dot_product raise (pinned by the edge-vector fixture)
-      SELECT q.qid, d.cell,
-             CAST(ROUND(list_dot_product(q.qe, d.ced)
-                 / SQRT(list_dot_product(q.qe, q.qe)) * 1e6)
-                  AS BIGINT) AS qc6
-      FROM q, centd d),
-    {_CAND_SQL},
-    adc AS (
-      SELECT cd.qid, c2.vec_id,
-             CAST(qct.qc6 + SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
-             CAST(cs.cent_ss6 + SUM(c2.rc6) AS DOUBLE) / 1e6 AS recon_ss
-      FROM codes c2
-      JOIN cand cd ON cd.vec_id = c2.vec_id
-      JOIN qparts qp ON qp.qid = cd.qid AND qp.m = c2.m AND qp.code = c2.code
-      JOIN qcent qct ON qct.qid = cd.qid AND qct.cell = c2.cell
-      JOIN cents6 cs ON cs.cell = c2.cell
-      GROUP BY cd.qid, c2.vec_id, qct.qc6, cs.cent_ss6),
-    {_PQ_TAIL_SQL}
-    """
-
-
-def _ivfpq_topk_plan(
-    spark,
-    sf_dir,
-    nq: int = N_QUERY_VECS,
-    residual: bool = False,
-    quant: Quantizer = SEED_Q,
-    nprobe: int = N_PROBE,
-):
-    """The IVFADC plan for query vectors vec_id < ``nq`` — v13/v14 run it
-    with raw codes (the corpus's MEASURED winner — see v13's docstring);
-    v16/v17 with residual=True (Jégou §V's residual encoding); v21 over
-    TRAINED_Q (the spherical-k-means coarse quantizer, v19's cells —
-    the composition the v18→v20 measurements point at); v23 with BOTH
-    (residual codes rebuilt against the trained cells — the
-    re-adjudication of the encoding question on the cells the serving
-    default actually uses, since v17's verdict was conditional on seed-
-    cell tightness).  All variants share the ADC tail and the candidate
-    shape; only the cell tables and/or code tables differ."""
-    e, q, adc = _ivfpq_adc(spark, sf_dir, nq, residual, quant, nprobe)
-    return _pq_rank_tail(e, q, adc)
-
-
-def _ivfpq_adc(
-    spark, sf_dir, nq: int, residual: bool, quant: Quantizer, nprobe: int = N_PROBE
-):
-    """The IVFADC front half — coarse pruning + ADC scoring — returning
-    (e, q, adc) BEFORE the shortlist/re-rank tail, so a caller can either
-    finish one plan (_ivfpq_topk_plan -> _pq_rank_tail) or stack several
-    encodings' adc streams under ONE tail (_encoding_recall_plan, r16)."""
-    _, cells, probes = _cells_probes(spark, sf_dir, quant, nprobe, nq)
-    # (qid, vec_id) survivors of the coarse pruning — |queries| ×
-    # (nprobe/ncells × corpus) rows, the candidate list a serving batch
-    # materializes anyway; broadcast-small per batch
-    cand = (
-        cells.join(F.broadcast(probes.select("qid", "cell")), "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
-    if not residual:
-        e, cw, codes = _pq_index(spark, sf_dir)
-        q, qparts = _pq_query_side(e, cw, nq)
-        adc = (
-            codes.join(F.broadcast(cand), "vec_id")
-            .join(F.broadcast(qparts), ["qid", "m", "code"])
-            .groupBy("qid", "vec_id")
-            .agg(
-                (F.sum("qdot6").cast("double") / 1e6).alias("adc"),
-                (F.sum("cw_ss6").cast("double") / 1e6).alias("recon_ss"),
-            )
-        )
-        return e, q, adc
-    e, cw, codes, cents, cents6 = _rpq_index(spark, sf_dir, quant=quant)
-    q, qparts, qcent = _rpq_query_side(e, cw, cents, nq)
-    adc = (
-        codes.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(qparts), ["qid", "m", "code"])
-        .groupBy("qid", "vec_id", "cell")
-        .agg(F.sum("qdot6").alias("qd6"), F.sum("rc6").alias("rr6"))
-        .join(F.broadcast(qcent), ["qid", "cell"])
-        .join(F.broadcast(cents6), "cell")
-        .select(
-            "qid",
-            "vec_id",
-            ((F.col("qc6") + F.col("qd6")).cast("double") / 1e6).alias("adc"),
-            ((F.col("cent_ss6") + F.col("rr6")).cast("double") / 1e6).alias("recon_ss"),
-        )
-    )
-    return e, q, adc
 
 
 @_register(
@@ -2092,11 +2095,11 @@ def _ivfpq_adc(
     "cost) — v13 stays on seed cells through r10 so its driver-row "
     "history remains comparable; the serving default flips to the "
     "trained layout once v19–v21 are driver-attested.",
-    _ivfpq_topk_sql(SEED_Q, N_QUERY_VECS),
+    _pq_topk_sql(N_QUERY_VECS, SEED_Q),
     ("similarity", "ann", "ivf", "pq", "pipeline"),
 )
 def v13(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS)
+    return _pq_topk_plan(spark, sf_dir, quant=SEED_Q)
 
 
 # ---------------------------------------------------------------------------
@@ -2114,12 +2117,12 @@ def v13(spark, sf_dir):
     "how nprobe and codebook size are actually tuned before a 100 TB "
     "deployment.  v17 extends this eval across encodings (raw vs "
     "residual), v18 across nprobe.",
-    _recall_agg_sql(_ivfpq_topk_sql(SEED_Q, V12_NQ)),
+    _recall_agg_sql(_pq_topk_sql(V12_NQ, SEED_Q)),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v14(spark, sf_dir):
     exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    return _recall_agg(exact, _ivfpq_topk_plan(spark, sf_dir, V12_NQ)).orderBy("qid")
+    return _recall_agg(exact, _pq_topk_plan(spark, sf_dir, V12_NQ, SEED_Q)).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -2144,22 +2147,25 @@ def v14(spark, sf_dir):
     "On THIS corpus the raw encoding (v13) measures better — cells are "
     "not tight (mean cos ≈ 0.19) — which is exactly why both encodings "
     "are first-class and v17 is the eval that picks.",
-    _rivfpq_topk_sql(SEED_Q, N_QUERY_VECS),
+    _pq_topk_sql(N_QUERY_VECS, SEED_Q, residual=True),
     ("similarity", "ann", "ivf", "pq", "residual", "pipeline"),
 )
 def v16(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, residual=True)
+    return _pq_topk_plan(spark, sf_dir, quant=SEED_Q, residual=True)
 
 
 # ---------------------------------------------------------------------------
 # v17: encoding eval — raw vs residual composed recall, side by side
 # ---------------------------------------------------------------------------
+_ENCODINGS = (("raw", False), ("residual", True))  # v17/v23's stacked arms
+
+
 def _encoding_recall_sql(quant: Quantizer) -> str:
     """Oracle twin of _encoding_recall_plan: raw and residual composed
     top-k over ``quant``'s cells, stacked under ``encoding``."""
     return _stacked_recall_sql(
         "encoding",
-        [("raw", _ivfpq_topk_sql(quant, V12_NQ)), ("residual", _rivfpq_topk_sql(quant, V12_NQ))],
+        [(enc, _pq_topk_sql(V12_NQ, quant, residual=res)) for enc, res in _ENCODINGS],
     )
 
 
@@ -2215,75 +2221,16 @@ def _encoding_recall_plan(spark, sf_dir, quant: Quantizer):
     aggregates row for row.  The ADC front halves (different codes and
     codebooks per encoding) stay separate — only the bounded
     (|eval queries| x candidates) streams stack."""
-    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
     appx = None
-    e_ref = None
-    for enc, res in (("raw", False), ("residual", True)):
-        e, _q, adc = _ivfpq_adc(spark, sf_dir, V12_NQ, res, quant)
-        e_ref = e
-        s = adc.where(F.col("vec_id") != F.col("qid")).select(
-            F.lit(enc).alias("encoding"),
-            "qid",
-            "vec_id",
-            (F.col("adc") / F.sqrt("recon_ss")).alias("approx"),
+    for enc, res in _ENCODINGS:
+        arm = _pq_adc(spark, sf_dir, V12_NQ, quant, residual=res).select(
+            F.lit(enc).alias("encoding"), "qid", "vec_id", "approx"
         )
-        appx = s if appx is None else appx.unionByName(s)
-    got = _stacked_topk(e_ref, V12_NQ, appx)
-    # recall agg over the stacked key: the exact side exploded per
-    # encoding, the (bounded) stacked result broadcast — _recall_agg's
-    # shape with (encoding, qid) in place of qid
-    ex2 = exact.withColumn(
-        "encoding", F.explode(F.array(F.lit("raw"), F.lit("residual")))
-    )
-    g = got.select("encoding", "qid", "vec_id", F.lit(1).alias("hit"))
-    out = (
-        ex2.join(F.broadcast(g), ["encoding", "qid", "vec_id"], "left")
-        .groupBy("qid", "encoding")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-        )
-        .select(
-            "qid",
-            "encoding",
-            "n_topk",
-            "n_recovered",
-            F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-        )
-    )
-    return out.orderBy("qid", "encoding")
-
-
-def _stacked_topk(e, nq: int, appx):
-    """_pq_rank_tail's shortlist + exact re-rank, partitioned by
-    (encoding, qid) instead of qid — the shared tail of the stacked
-    encoding evals.  Identical ordering expressions, identical
-    shortlist/top-k bounds; returns (encoding, qid, vec_id) for the
-    recall join."""
-    wshort = Window.partitionBy("encoding", "qid").orderBy(
-        F.round("approx", 6).desc(), "vec_id"
-    )
-    shortlist = (
-        appx.select(
-            "encoding", "qid", "vec_id", F.row_number().over(wshort).alias("srn")
-        )
-        .where(F.col("srn") <= PQ_SHORTLIST)
-        .drop("srn")
-    )
-    qv = e.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    rer = shortlist.join(e, "vec_id").join(F.broadcast(qv), "qid").select(
-        "encoding",
-        "qid",
-        "vec_id",
-        cosine(F.col("qe"), F.col("embedding")).alias("sim"),
-    )
-    wrank = Window.partitionBy("encoding", "qid").orderBy(F.col("sim").desc(), "vec_id")
-    return (
-        rer.select("encoding", "qid", "vec_id", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("encoding", "qid", "vec_id")
+        appx = arm if appx is None else appx.unionByName(arm)
+    got = _pq_tail(spark, sf_dir, V12_NQ, appx, "encoding")
+    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
+    return _recall_agg(exact, got, "encoding", [enc for enc, _ in _ENCODINGS]).orderBy(
+        "qid", "encoding"
     )
 
 
@@ -2299,20 +2246,13 @@ def _nprobe_sweep_sql(quant: Quantizer) -> str:
     probe ranking down (window passes, shortlist reconstruction, recall
     stack) is identical, only the centroid source differs."""
     return f"""
-    WITH {_pq_adc_ctes(PQ_ITERS, V12_NQ)},
+    WITH {_pq_adc_sql(V12_NQ)},
     {_coarse_sql(quant, V12_NQ, N_CELLS)},
     mp AS (SELECT p.qid, x.vec_id, p.rn AS mp
            FROM probes p JOIN cells x ON x.cell = p.cell),
-    adcall AS (
-      SELECT qp.qid, cd.vec_id,
-             CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
-             CAST(SUM(cd.cw_ss6) AS DOUBLE) / 1e6 AS recon_ss
-      FROM codes cd JOIN qparts qp ON qp.m = cd.m AND qp.code = cd.code
-      GROUP BY qp.qid, cd.vec_id),
     apx AS (
-      SELECT a.qid, a.vec_id, m.mp, a.adc / SQRT(a.recon_ss) AS approx
-      FROM adcall a JOIN mp m ON m.qid = a.qid AND m.vec_id = a.vec_id
-      WHERE a.vec_id <> a.qid),
+      SELECT a.qid, a.vec_id, m.mp, a.approx
+      FROM appx a JOIN mp m ON m.qid = a.qid AND m.vec_id = a.vec_id),
     flags AS (
       SELECT qid, vec_id, mp,
              {", ".join(
@@ -2397,22 +2337,12 @@ def _nprobe_sweep_plan(spark, sf_dir, quant: Quantizer):
     from functools import reduce
     from operator import or_
 
-    e, cw, codes = _pq_index(spark, sf_dir)
     _, cells, probes = _cells_probes(spark, sf_dir, quant, N_CELLS, V12_NQ)
-    q, qparts = _pq_query_side(e, cw, V12_NQ)
     mp = cells.join(F.broadcast(probes), "cell").select(
         "qid", "vec_id", F.col("rn").alias("mp")
     )
-    apx = (
-        codes.join(F.broadcast(qparts), ["m", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(
-            (F.sum("qdot6").cast("double") / 1e6).alias("adc"),
-            (F.sum("cw_ss6").cast("double") / 1e6).alias("recon_ss"),
-        )
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(mp, ["qid", "vec_id"])
-        .select("qid", "vec_id", "mp", (F.col("adc") / F.sqrt("recon_ss")).alias("approx"))
+    apx = _pq_adc(spark, sf_dir, V12_NQ).join(mp, ["qid", "vec_id"]).select(
+        "qid", "vec_id", "mp", "approx"
     )
     wapx = (
         Window.partitionBy("qid")
@@ -2430,7 +2360,10 @@ def _nprobe_sweep_plan(spark, sf_dir, quant: Quantizer):
             for p in PROBE_SWEEP
         ],
     )
-    qv = q.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
+    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    qv = e.where(F.col("vec_id") < V12_NQ).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
     sl = (
         inp.where(reduce(or_, [F.col(f"in{p}") for p in PROBE_SWEEP]))
         .join(e, "vec_id")
@@ -2529,108 +2462,25 @@ if len(set(TIVF_SEED_POOL)) != 32 or max(TIVF_SEED_POOL) >= 500:
 NCELLS_SWEEP = (4, 8, 16, 32)
 
 
-def _spherical_lloyd_step(samp, cw):
-    """One spherical-k-means refinement for the COARSE quantizer: assign
-    every training vector to its argmax-cosine centroid (score =
-    dot/‖c‖ — the ‖x‖ factor is constant under the argmax; dot and norm
-    via the deterministic left-fold so both engines pick identical
-    cells, ties to the lower cid), then recompute each centroid as the
-    per-dimension mean of its members through the 1e6-scaled BIGINT sum
-    + ONE double division — _lloyd_step's integer-exact iteration
-    boundary at M=1 over full vectors.  Cosine assignment is scale-
-    invariant in the centroid, so the mean needs NO renormalization
-    (spherical k-means' normalize step only rescales c, which argmax
-    cos ignores) — the iteration boundary stays purely the rounded
-    mean.  Empty cells keep their previous centroid."""
-    scored = samp.crossJoin(F.broadcast(cw)).select(
-        "vec_id",
-        "cid",
-        "xe",
-        (dot_double(F.col("xe"), F.col("cwe")) / norm2(F.col("cwe"))).alias("score"),
-    )
-    wpick = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), "cid")
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(wpick))
-        .where(F.col("rn") == 1)
-        .select("cid", "xe")
-    )
-    mn = assigned.select("cid", F.posexplode("xe").alias("j", "v")).groupBy("cid", "j").agg(
-        F.sum(F.round(F.col("v") * 1e6).cast("bigint")).alias("s6"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    nc = (
-        mn.select("cid", "j", (F.round(F.col("s6") / F.col("cnt")) / 1e6).alias("v"))
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "v"))).alias("a"))
-        .select("cid", F.expr("transform(a, x -> x.v)").alias("nxt"))
-    )
-    return (
-        cw.select("cid", F.col("cwe").alias("prev"))
-        .join(nc, "cid", "left")
-        .select("cid", F.coalesce("nxt", "prev").alias("cwe"))
-    )
+# SQL twin of _tivf_centroids_plan's argmax-cosine score over a training
+# row ``s`` and a centroid ``c`` (sorted DESC)
+_COS_SCORE_SQL = "list_dot_product(s.xe, c.cwe) / SQRT(list_dot_product(c.cwe, c.cwe))"
 
 
 def _tivf_centroids_plan(spark, sf_dir, iters: int, seeds: tuple = IVF_SEED_IDS):
     """Trained coarse centroids (cid, cwe DOUBLE[]): the ``seeds``
     vectors (default IVF_SEED_IDS — the serving quantizer) refined by
-    ``iters`` spherical-Lloyd steps.  iters=0 is the seed quantizer
-    itself (kept callable so the strictly-improves test has its
-    baseline, exactly like the PQ codebook's)."""
-    xe = (
-        _emb(spark, sf_dir)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("xe"))
-    )
-    cw = xe.where(F.col("vec_id").isin(*seeds)).select(
-        F.col("vec_id").alias("cid"), F.col("xe").alias("cwe")
-    )
-    if iters:
-        samp = xe.where(
-            F.col("vec_id") % PQ_TRAIN_MOD == PQ_TRAIN_REM
-        ).localCheckpoint(eager=False)
-        for _ in range(iters):
-            cw = _spherical_lloyd_step(samp, cw)
-    return cw
-
-
-def _tivf_centroid_sql(iters: int, seeds: tuple, tag: str) -> str:
-    """WITH fragment mirroring _tivf_centroids_plan: ``iters`` unrolled
-    spherical-Lloyd steps ending in ``{tag}cents`` (cid, ce).  Same
-    integer-exact 6-digit-mean iteration boundary as the PQ codebook
-    SQL, so both engines carry bitwise-identical centroids into every
-    assignment.  ``tag`` prefixes every CTE name so several trainings
-    (v20, the v24 ncells sweep) compose in one query."""
-    parts = [
-        f"{tag}xt AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS xe FROM embeddings)",
-        f"""{tag}tcw_i0 AS (
-      SELECT vec_id AS cid, xe AS cwe FROM {tag}xt WHERE vec_id IN {seeds})""",
-    ]
-    prev = f"{tag}tcw_i0"
-    for i in range(1, iters + 1):
-        parts += [
-            f"""{tag}tasg_i{i} AS (
-      SELECT s.vec_id, c.cid, s.xe
-      FROM {tag}xt s, {prev} c
-      WHERE s.vec_id % {PQ_TRAIN_MOD} = {PQ_TRAIN_REM}
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id
-          ORDER BY list_dot_product(s.xe, c.cwe)
-                   / SQRT(list_dot_product(c.cwe, c.cwe)) DESC, c.cid) = 1)""",
-            f"""{tag}tmn_i{i} AS (
-      SELECT cid, j,
-             CAST(SUM(CAST(ROUND(xe[j] * 1e6) AS BIGINT)) AS BIGINT) AS s6,
-             COUNT(*) AS cnt
-      FROM {tag}tasg_i{i}, UNNEST(generate_series(1, {EMB_DIM})) AS t(j)
-      GROUP BY cid, j)""",
-            f"""{tag}tnc_i{i} AS (
-      SELECT cid, LIST(ROUND(s6 / cnt) / 1e6 ORDER BY j) AS cwe
-      FROM {tag}tmn_i{i} GROUP BY cid)""",
-            f"""{tag}tcw_i{i} AS (
-      SELECT p.cid, COALESCE(n.cwe, p.cwe) AS cwe
-      FROM {prev} p LEFT JOIN {tag}tnc_i{i} n ON n.cid = p.cid)""",
-        ]
-        prev = f"{tag}tcw_i{i}"
-    parts.append(f"{tag}cents AS (SELECT cid, cwe AS ce FROM {prev})")
-    return ",\n    ".join(parts)
+    ``iters`` spherical-Lloyd steps — _lloyd_plan over full vectors with
+    the argmax-cosine score dot/‖c‖ (the ‖x‖ factor is constant under
+    the argmax; dot and norm via the deterministic left fold so both
+    engines pick identical cells).  Cosine assignment is scale-invariant
+    in the centroid, so the rounded mean needs NO renormalization
+    (spherical k-means' normalize step only rescales c, which argmax cos
+    ignores).  iters=0 is the seed quantizer itself (kept callable so
+    the strictly-improves test has its baseline)."""
+    xe = _emb(spark, sf_dir).select("vec_id", F.col("embedding").cast("array<double>").alias("xe"))
+    score = dot_double(F.col("xe"), F.col("cwe")) / norm2(F.col("cwe"))
+    return _lloyd_plan(xe, "xe", seeds, iters, score, desc=True)
 
 
 @_register(
@@ -2752,11 +2602,11 @@ def v20(spark, sf_dir):
     "— doubling every query's index read — would.  Plan shape identical "
     "to v13: all-equi-join, candidate cells and ADC lookup broadcast, "
     "codes never shuffle.",
-    _ivfpq_topk_sql(TRAINED_Q, N_QUERY_VECS),
+    _pq_topk_sql(N_QUERY_VECS, TRAINED_Q),
     ("similarity", "ann", "ivf", "pq", "trained", "pipeline"),
 )
 def v21(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, quant=TRAINED_Q)
+    return _pq_topk_plan(spark, sf_dir, quant=TRAINED_Q)
 
 
 @_register(
@@ -2916,11 +2766,11 @@ def v25(spark, sf_dir):
     "(sf0.001) at equal scan, strictly-no-worse test-gated.  Plan shape "
     "identical to v13/v21: all-equi-join, candidate cells and ADC lookup "
     "broadcast, codes never shuffle.",
-    _ivfpq_topk_sql(V25_Q, N_QUERY_VECS, V25_NPROBE),
+    _pq_topk_sql(N_QUERY_VECS, V25_Q, V25_NPROBE),
     ("similarity", "ann", "ivf", "pq", "trained", "serving", "pipeline"),
 )
 def v26(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, quant=V25_Q, nprobe=V25_NPROBE)
+    return _pq_topk_plan(spark, sf_dir, quant=V25_Q, nprobe=V25_NPROBE)
 
 
 @_register(

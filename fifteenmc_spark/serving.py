@@ -193,10 +193,10 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the v24-measured capacity; v21/v13 are the 8-cell calibration
     baselines)."""
     from .operators.relational import QUERIES
-    from .operators.similarity import N_QUERY_VECS, _ivfpq_topk_plan
+    from .operators.similarity import N_QUERY_VECS, _pq_topk_plan
 
     if DEFAULT_QUANTIZER == "trained":
-        return _ivfpq_topk_plan(
+        return _pq_topk_plan(
             spark, sf_dir, N_QUERY_VECS, quant=serving_quantizer(), nprobe=SERVING_NPROBE
         )
     return QUERIES[_IVFPQ_SEED_QUERY].build(spark, sf_dir)

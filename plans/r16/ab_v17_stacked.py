@@ -1,6 +1,6 @@
 """Alternating same-session A/B: v17/v23 stacked rank tail (r16) vs the
 r15 per-encoding twin-tail form, reconstructed inline from the same
-building blocks (_ivfpq_topk_plan + _recall_agg still exist for
+building blocks (_pq_topk_plan + _recall_agg still exist for
 v12/v14/v16 etc.).  Noop-sink timings per guide §1.4; alternation per
 the r15 host-noise discipline.  Also asserts result equality once per
 variant pair before timing.
@@ -32,7 +32,7 @@ def old_form(spark, quant):
     for enc, res in (("raw", False), ("residual", True)):
         r = S._recall_agg(
             exact,
-            S._ivfpq_topk_plan(spark, SF_DIR, S.V12_NQ, residual=res, quant=quant),
+            S._pq_topk_plan(spark, SF_DIR, S.V12_NQ, residual=res, quant=quant),
         ).select("qid", F.lit(enc).alias("encoding"), "n_topk", "n_recovered", "recall")
         out = r if out is None else out.unionByName(r)
     return out.orderBy("qid", "encoding")

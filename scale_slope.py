@@ -1177,7 +1177,7 @@ def main() -> None:
         # composed strictly-no-worse gate: 64 flips only if recall@5 of
         # the full IVFADC pipeline is no worse than 32 at equal scan
         def _composed(nc: int) -> float:
-            plan = S._ivfpq_topk_plan(
+            plan = S._pq_topk_plan(
                 spark, sf_dir, S.V12_NQ,
                 quant=S.Quantizer(pool_t[:nc], trained=True), nprobe=nc // 4,
             )

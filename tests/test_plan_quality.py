@@ -379,9 +379,9 @@ def test_v23_trained_residual_plan_shape(spark, sf_small):
     # plan r11 added) keeps v16's discipline: codes equi-join only, the
     # single permitted nested-loop is the broadcast-tiny |queries| x
     # |cells| qcent product, everything else broadcast hash
-    from fifteenmc_spark.operators.similarity import TRAINED_Q, V12_NQ, _ivfpq_topk_plan
+    from fifteenmc_spark.operators.similarity import TRAINED_Q, V12_NQ, _pq_topk_plan
 
-    df = _ivfpq_topk_plan(spark, sf_small, V12_NQ, residual=True, quant=TRAINED_Q)
+    df = _pq_topk_plan(spark, sf_small, V12_NQ, residual=True, quant=TRAINED_Q)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     tree = df._jdf.queryExecution().executedPlan().toString()
@@ -394,7 +394,7 @@ def test_v17_stacked_tail_equals_per_encoding_plans(spark, sf_small):
     # (single shortlist window, single exact re-rank, single recall
     # aggregate over (encoding, qid)).  The declared result must be
     # bit-identical to the per-encoding plans it replaced: recall rows
-    # from _recall_agg over each encoding's complete _ivfpq_topk_plan.
+    # from _recall_agg over each encoding's complete _pq_topk_plan.
     from pyspark.sql import functions as SF
 
     from fifteenmc_spark.operators import similarity as S
@@ -408,7 +408,7 @@ def test_v17_stacked_tail_equals_per_encoding_plans(spark, sf_small):
         for enc, res in (("raw", False), ("residual", True)):
             r = S._recall_agg(
                 exact,
-                S._ivfpq_topk_plan(spark, sf_small, S.V12_NQ, residual=res, quant=quant),
+                S._pq_topk_plan(spark, sf_small, S.V12_NQ, residual=res, quant=quant),
             ).select(
                 "qid", SF.lit(enc).alias("encoding"), "n_topk", "n_recovered", "recall"
             )
@@ -588,3 +588,35 @@ def test_t9_vocab_aggregate_runs_once(spark, sf_small):
     df.write.format("noop").mode("overwrite").save()
     tree = df._jdf.queryExecution().executedPlan().toString()
     assert tree.count("hashpartitioning(token") == 1, tree
+
+
+# Exchange (shuffle + broadcast) count of every v-query's pre-execution
+# physical plan, recorded under this suite's session confs (sf0.001,
+# 8 shuffle partitions) before the PQ/ADC stages were shared.  A change
+# to a shared similarity stage may move operators, never add an exchange.
+_V_EXCHANGES = {
+    "v1_cosine_topk": 3, "v2_lsh_bucket": 2, "v2_lsh_bucket_16": 2,
+    "v3_embedding_near_dup": 3, "v4_embedding_stats": 2, "v5_ivf_topk": 5,
+    "v6_lsh_recall": 4, "v7_lsh_banded_near_dup": 5, "v8_embedding_clusters": 1,
+    "v9_ivf_recall": 5, "v10_embedding_validity": 2, "v11_pq_topk": 9,
+    "v12_pq_recall": 11, "v13_ivfpq_topk": 11, "v14_ivfpq_recall": 13,
+    "v15_dedup_apply": 3, "v16_rivfpq_topk": 15, "v17_encoding_recall": 23,
+    "v18_ivfpq_nprobe_sweep": 13, "v19_tivf_topk": 5, "v20_tivf_recall": 7,
+    "v21_tivfpq_topk": 11, "v22_tivf_nprobe_sweep": 13, "v23_tencoding_recall": 22,
+    "v24_ncells_sweep": 13, "v25_serving_tivf_topk": 5, "v26_serving_ivfpq_topk": 11,
+    "v27_filtered_tivf_topk": 5, "v28_filtered_recall": 8,
+    "v29_adaptive_filtered_topk": 8,
+}
+
+
+def test_v_exchange_pins_cover_the_v_family():
+    assert set(_V_EXCHANGES) == {n for n in QUERIES if n.startswith("v")}
+
+
+@pytest.mark.parametrize("name", sorted(_V_EXCHANGES))
+def test_v_query_gains_no_exchange(spark, sf_small, name):
+    import re
+
+    tree = QUERIES[name].build(spark, sf_small)._jdf.queryExecution().executedPlan().toString()
+    n = len(re.findall(r"(?<![A-Za-z])(?:Broadcast)?Exchange ", tree))
+    assert n <= _V_EXCHANGES[name], tree

@@ -39,7 +39,7 @@ from fifteenmc_spark.operators.similarity import (
     _cells_probes,
     _emb,
     _exact_topk_v12,
-    _ivfpq_topk_plan,
+    _pq_topk_plan,
     _probe_topk_plan,
     _recall_agg,
 )
@@ -79,9 +79,24 @@ def test_quantizer_rejects_layouts_without_an_index(spark, sf_small):
     with pytest.raises(ValueError, match="trained=True"):
         Quantizer(TIVF_SEED_POOL[:16])
     with pytest.raises(ValueError, match="residual codes"):
-        _ivfpq_topk_plan(
+        _pq_topk_plan(
             spark, sf_small, residual=True, quant=Quantizer(TIVF_SEED_POOL[:16], trained=True)
         )
+
+
+def test_rejected_residual_request_registers_no_index_entry(spark, sf_small):
+    # a layout without residual codes is rejected before the coarse
+    # stage runs: the failed request leaves no centroid, score, cell or
+    # probe entry behind in the session index (12 cells: a pool no
+    # declared query or serving path builds)
+    from fifteenmc_spark.operators import session_index as SI
+
+    before = set(SI._SESSION_INDEX)
+    with pytest.raises(ValueError, match="residual codes"):
+        _pq_topk_plan(
+            spark, sf_small, V12_NQ, Quantizer(TIVF_SEED_POOL[:12], trained=True), residual=True
+        )
+    assert set(SI._SESSION_INDEX) == before
 
 
 def test_ann_topk_default_pins_to_v25(spark, sf_small):
@@ -104,7 +119,7 @@ def test_ivfpq_topk_default_pins_to_v26(spark, sf_small):
     got = _rows(serving.ivfpq_topk(spark, sf_small))
     assert got and got == _rows(QUERIES["v26_serving_ivfpq_topk"].build(spark, sf_small))
     assert got == _rows(
-        _ivfpq_topk_plan(
+        _pq_topk_plan(
             spark,
             sf_small,
             N_QUERY_VECS,
@@ -175,12 +190,12 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
     prior."""
     exact = _exact_topk_v12(spark, sf_small).select("qid", "vec_id")
     base8 = _mean_recall(
-        _recall_agg(exact, _ivfpq_topk_plan(spark, sf_small, V12_NQ, quant=TRAINED_Q))
+        _recall_agg(exact, _pq_topk_plan(spark, sf_small, V12_NQ, quant=TRAINED_Q))
     )
     prior16 = _mean_recall(
         _recall_agg(
             exact,
-            _ivfpq_topk_plan(
+            _pq_topk_plan(
                 spark, sf_small, V12_NQ, nprobe=4,
                 quant=Quantizer(TIVF_SEED_POOL[:16], trained=True),
             ),
@@ -189,7 +204,7 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
     new = _mean_recall(
         _recall_agg(
             exact,
-            _ivfpq_topk_plan(
+            _pq_topk_plan(
                 spark,
                 sf_small,
                 V12_NQ,

@@ -130,7 +130,7 @@ def test_warm_session_index_materializes_all_artifacts(spark, sf_small):
             "simhash64", "df_stats_64", "pq_codewords", "pq_codes",
             "rpq_codewords", "rpq_codes", "trpq_codewords", "trpq_codes",
             "tivf_cents", "tivf_scored", "tivf_cells",
-            "tivf_cents_c16", "tivf_c16_scored", "tivf_c16_cells"} <= keys
+            "tivf_cents_c32", "tivf_c32_scored", "tivf_c32_cells"} <= keys
 
 
 def test_pq_training_strictly_improves_recall(spark, sf_small):
@@ -155,7 +155,7 @@ def test_pq_training_strictly_improves_recall(spark, sf_small):
     for iters in (0, PQ_ITERS):
         got = {
             (r.qid, r.vec_id)
-            for r in _pq_topk_plan(spark, sf_small, iters, V12_NQ)
+            for r in _pq_topk_plan(spark, sf_small, V12_NQ, iters=iters)
             .select("qid", "vec_id")
             .collect()
         }
@@ -175,10 +175,11 @@ def test_encoding_adjudication_tightness_predicts_winner(spark, sf_small):
     # independent numpy replication: recon MSE 0.62 raw vs 0.80 residual).
     from fifteenmc_spark.operators.similarity import (
         IVF_SEED_IDS,
+        SEED_Q,
         V12_NQ,
         _emb,
         _exact_topk_v12,
-        _ivfpq_topk_plan,
+        _pq_topk_plan,
         cosine,
     )
 
@@ -203,7 +204,7 @@ def test_encoding_adjudication_tightness_predicts_winner(spark, sf_small):
     for residual in (False, True):
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, residual=residual)
+            for r in _pq_topk_plan(spark, sf_small, V12_NQ, SEED_Q, residual=residual)
             .select("qid", "vec_id")
             .collect()
         }
@@ -227,7 +228,7 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
         TRAINED_Q,
         V12_NQ,
         _exact_topk_v12,
-        _ivfpq_topk_plan,
+        _pq_topk_plan,
         _emb,
         cosine,
     )
@@ -251,7 +252,7 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
     for residual in (False, True):
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(
+            for r in _pq_topk_plan(
                 spark, sf_small, V12_NQ, residual=residual, quant=TRAINED_Q
             )
             .select("qid", "vec_id")
@@ -342,7 +343,7 @@ def test_trained_cells_strictly_improve_composed_recall(spark, sf_small):
         TRAINED_Q,
         V12_NQ,
         _exact_topk_v12,
-        _ivfpq_topk_plan,
+        _pq_topk_plan,
     )
 
     exact = {
@@ -353,7 +354,7 @@ def test_trained_cells_strictly_improve_composed_recall(spark, sf_small):
     for name, quant in (("seed", SEED_Q), ("trained", TRAINED_Q)):
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, quant=quant)
+            for r in _pq_topk_plan(spark, sf_small, V12_NQ, quant=quant)
             .select("qid", "vec_id")
             .collect()
         }
@@ -403,7 +404,7 @@ def test_nprobe_sweep_matches_standalone_plan_at_every_point(spark, sf_small, sw
         V12_NQ,
         Quantizer,
         _exact_topk_v12,
-        _ivfpq_topk_plan,
+        _pq_topk_plan,
     )
 
     exact = {
@@ -417,7 +418,7 @@ def test_nprobe_sweep_matches_standalone_plan_at_every_point(spark, sf_small, sw
     for p in PROBE_SWEEP:
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(
+            for r in _pq_topk_plan(
                 spark, sf_small, V12_NQ, quant=Quantizer(trained=trained), nprobe=p
             )
             .select("qid", "vec_id")
