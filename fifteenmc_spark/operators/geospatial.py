@@ -184,10 +184,10 @@ _G3_SQL = f"""
 @_register(
     "g3_bounded_reach",
     "Bounded multi-source shortest paths (G2, precompute_poi_reach.py:"
-    "86-125) as the iterative frontier loop in plans/reach.py, on a "
-    "127-node directed binary tree with two seeds.  Oracle: recursive CTE "
-    "path enumeration + per-node min — an independent fixed point of the "
-    "same relaxation.",
+    "86-125) through the size dispatch in plans/reach.py (the one-task "
+    "heap Dijkstra at this size), on a 127-node directed binary tree with "
+    "two seeds.  Oracle: recursive CTE path enumeration + per-node min — "
+    "an independent fixed point of the same relaxation.",
     _G3_SQL,
     ("geo", "graph", "iterative"),
 )
@@ -201,7 +201,7 @@ def g3(spark, sf_dir):
     seeds = spark.createDataFrame(
         [(0, "c", 100), (5, "c", 105)], "node_idx INT, category STRING, poi_id BIGINT"
     )
-    sp = reach_mod.shortest_paths_bounded(edges, seeds, limit_m=_LIMIT, max_rounds=16)
+    sp = reach_mod.shortest_paths_bounded(edges, seeds, limit_m=_LIMIT)
     # checkpoint before the sort: the range sampler would re-run the
     # one-task Dijkstra (a Python worker round-trip) a second time
     return (

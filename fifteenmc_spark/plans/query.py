@@ -1,10 +1,13 @@
 """Serving-side queries over the gold tables (SURVEY.md §3.2, §3.3):
-point reachability (G7) and path-to-nearest-POI (G4/G5 + W1).
+point reachability (G7), path-to-nearest-POI (G4/G5 + W1) and the
+point-to-point route (G3).
 
-Both consume the precomputed `reach` table — the materialized-view design
-the reference pins (`poi_query.py:97-99`): a point query never touches the
-graph, it reads one node's rows from a category-partitioned parquet table
-(partition-pruned scan at cluster scale).
+Point queries consume the precomputed `reach` table — the
+materialized-view design the reference pins (`poi_query.py:97-99`): a
+point query never touches the graph, it reads one node's rows from a
+category-partitioned parquet table (partition-pruned scan at cluster
+scale).  Both path queries solve their shortest paths through
+reach.nearest_seed_chain.
 """
 
 from __future__ import annotations
@@ -18,97 +21,7 @@ from . import snap as snap_mod
 
 MAX_SNAP_M_DEFAULT = 300.0  # test_path.py:374
 
-_MAX_DOUBLINGS = 20  # chains up to 2^20 nodes — far beyond any walking path
-
-
-def _backtrack_chain(state: DataFrame, tip_idx: int, tip_dist: float) -> list[int]:
-    """G4 prev-pointer backtrack WITHOUT collecting the settled state:
-    pointer doubling over the prev table, so the driver receives O(path)
-    rows while the O(reached) settled set stays distributed (the r10
-    verdict's watch-item — a dense urban mega-tile's settled set was the
-    engine's largest driver transfer; the chain itself is bounded by
-    limit_m / min-edge-length).
-
-    Round k holds the chain's first 2^k nodes and a jump table mapping
-    each settled node to its 2^k-th ancestor (NULL once the walk passes
-    the root): extending the chain is a broadcast-small join of the known
-    chain against the jump table, and the jump table squares by one
-    self-join — ceil(log2(path_len)) rounds of shuffle-bound distributed
-    work.  The jump table is pre-pruned to dist_m <= the tip's settled
-    distance, which never drops a chain node (every prev-ancestor settles
-    strictly closer to its source).  Returns tip → root order."""
-    spark = state.sparkSession
-    jump = (
-        state.where(F.col("dist_m") <= F.lit(float(tip_dist)))
-        .select("node_idx", F.col("prev").alias("anc"))
-        .localCheckpoint()
-    )
-    chain = spark.createDataFrame([(0, int(tip_idx))], "offset INT, node_idx INT")
-    length = 1
-    for _ in range(_MAX_DOUBLINGS):
-        nxt = (
-            F.broadcast(chain)
-            .join(jump, "node_idx")
-            .where(F.col("anc").isNotNull())
-            .select(
-                (F.col("offset") + F.lit(length)).alias("offset"),
-                F.col("anc").alias("node_idx"),
-            )
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        chain = chain.unionAll(nxt)
-        jump = (
-            jump.join(
-                jump.select(F.col("node_idx").alias("anc"), F.col("anc").alias("anc2")),
-                "anc",
-                "left",
-            )
-            .select("node_idx", F.col("anc2").alias("anc"))
-            .localCheckpoint()
-        )
-        length *= 2
-    else:
-        # The loop exhausted _MAX_DOUBLINGS with the walk still extending:
-        # a >2^_MAX_DOUBLINGS-node walking path always means corrupted
-        # prev pointers (a cycle), so fail loudly rather than return a
-        # plausible-looking truncated chain with a wrong cum_m (r11 ADVICE).
-        raise RuntimeError(
-            f"path backtrack did not converge within 2^{_MAX_DOUBLINGS} nodes "
-            f"from tip {tip_idx}; prev pointers likely contain a cycle"
-        )
-    rows = chain.orderBy("offset").collect()  # O(path) — the only chain-sized collect
-    return [int(r["node_idx"]) for r in rows]
-
-
-def _nearest_seed_chain(
-    edges: DataFrame, seeds: DataFrame, start_idx: int, limit_m: float
-) -> tuple[int, list[int]] | None:
-    """G2 + G4 for one start node: ``(poi_id, chain)`` of the seed nearest
-    to ``start_idx``, chain in start → seed order, or None when no seed
-    lies within ``limit_m``.
-
-    The size split of reach.shortest_paths_bounded, on ONE edge-count
-    probe: at or below LOCAL_EDGE_THRESHOLD edges a single cogrouped task
-    solves the heap Dijkstra and walks prev from the start node
-    (reach.nearest_seed_path_local); larger graphs run the frontier loop
-    and the pointer-doubling ``_backtrack_chain``.  Either way the driver
-    receives O(path) rows."""
-    edges = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
-    n_edges = edges.count()
-    if n_edges <= reach_mod.LOCAL_EDGE_THRESHOLD:
-        rows = sorted(
-            reach_mod.nearest_seed_path_local(edges, seeds, start_idx, limit_m).collect(),
-            key=lambda r: r["seq"],
-        )
-        return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
-    sp = reach_mod.shortest_paths_frontier(edges, seeds, n_edges, limit_m=limit_m, track_prev=True)
-    # one row for the start node, then the O(path) backtrack
-    tip = sp.where(F.col("node_idx") == start_idx).select("dist_m", "poi_id").first()
-    if tip is None:
-        return None
-    return tip["poi_id"], _backtrack_chain(sp, start_idx, float(tip["dist_m"]))
+_PATH_SCHEMA = "seq INT, node_idx INT, lon FLOAT, lat FLOAT, step_m FLOAT, cum_m FLOAT"
 
 
 def point_reachability(
@@ -201,112 +114,63 @@ def point_to_point_path(
     end_lonlat: tuple[float, float],
     limit_m: float = 5000.0,
     max_snap_m: float = MAX_SNAP_M_DEFAULT,
-    max_rounds: int = reach_mod.MAX_ROUNDS_DEFAULT,
 ) -> DataFrame:
     """G3 (`astar_csr`, test_path.py:33-76): point-to-point walking route.
 
-    Distributed A* flavor: a bounded frontier relaxation from the start
-    node where every candidate is pruned by the admissible haversine
-    heuristic — a node survives only if ``dist_so_far + straight_line(node,
-    target) <= limit_m`` (it could still reach the target in budget), and
-    the loop stops as soon as the settled target cannot be improved
-    (frontier minimum f-score >= target distance).  The heap of the
-    single-machine A* becomes per-round pruning; correctness matches plain
-    bounded Dijkstra because the heuristic never overestimates.
+    SURVEY's "bounded G2" with one seed: the snapped start node is the
+    only seed, reach.nearest_seed_chain solves the bounded shortest paths
+    from it (one-task heap Dijkstra at tile scale, the frontier loop
+    above — the loop has no A* pruning, so it settles the whole
+    ``limit_m`` disc) and walks prev from the snapped target back to the
+    start.  The chain is reversed and re-costed (G5 + W1); every step of
+    the forward chain is an edge, so the haversine fallback never fires.
+    Ties between equal-length routes go to the lexicographic min
+    (dist, prev).
 
     Output rows: seq, node_idx, lon, lat, step_m, cum_m (B7 shape minus the
-    POI columns)."""
+    POI columns); empty when either point cannot be snapped or the target
+    lies beyond ``limit_m``."""
     spark = nodes.sparkSession
-    out_schema = "seq INT, node_idx INT, lon FLOAT, lat FLOAT, step_m FLOAT, cum_m FLOAT"
     s = snap_mod.snap_single_point(nodes, *start_lonlat, max_snap_m=max_snap_m)
     t = snap_mod.snap_single_point(nodes, *end_lonlat, max_snap_m=max_snap_m)
-    if s is None or t is None:
-        return spark.createDataFrame([], out_schema)
-    start_idx, target_idx = s[0], t[0]
-    trow = nodes.where(F.col("node_idx") == target_idx).select("lon", "lat").first()
-    t_lon, t_lat = float(trow["lon"]), float(trow["lat"])
+    found = None
+    if s is not None and t is not None:
+        seed = spark.createDataFrame([(s[0], "route", 0)], "node_idx INT, category STRING, poi_id BIGINT")
+        found = reach_mod.nearest_seed_chain(edges, seed, t[0], limit_m)
+    if found is None:
+        return spark.createDataFrame([], _PATH_SCHEMA)
+    return _recost(nodes, edges, found[1][::-1]).orderBy("seq")
 
-    e = edges.select("src", "dst", F.col("w").cast("double").alias("w")).repartition("src").cache()
-    # h(node) = straight-line distance to target — admissible for walking
-    coords = nodes.select(
-        "node_idx",
-        geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(t_lon), F.lit(t_lat), geo.R_QUERY_M).alias("h"),
+
+def _recost(nodes: DataFrame, edges: DataFrame, chain: list[int]) -> DataFrame:
+    """G5 + W1 over a node chain, shared by both path queries: pair
+    consecutive nodes (lag), join the edge table for the true step weight
+    with the haversine R=6371000 fallback (test_path.py:318-328) where a
+    step has no edge in that direction, and accumulate the running total.
+    Returns the _PATH_SCHEMA columns, unordered."""
+    path = nodes.sparkSession.createDataFrame(
+        [(i, int(n)) for i, n in enumerate(chain)], "seq INT, node_idx INT"
     )
-
-    state = spark.createDataFrame(
-        [(start_idx, 0.0, None)], "node_idx INT, dist_m DOUBLE, prev INT"
-    ).localCheckpoint()
-    frontier = state
-    best_target = float("inf")
-    for _ in range(max_rounds):
-        cand = (
-            frontier.withColumnRenamed("node_idx", "src")
-            .join(e, "src")
-            .select(
-                F.col("dst").alias("node_idx"),
-                (F.col("dist_m") + F.col("w")).alias("dist_m"),
-                F.col("src").alias("prev"),
-            )
-            .where(F.col("dist_m") <= F.lit(float(limit_m)))
-        )
-        # A* pruning: drop nodes whose optimistic total exceeds the budget
-        # or the already-settled target distance
-        bound = min(float(limit_m), best_target)
-        cand = cand.join(coords, "node_idx").where(F.col("dist_m") + F.col("h") <= F.lit(bound)).drop("h")
-        cand_min = cand.groupBy("node_idx").agg(F.min(F.struct("dist_m", "prev")).alias("v"))
-        improved = (
-            cand_min.join(
-                state.select("node_idx", F.struct("dist_m", "prev").alias("v_old")),
-                ["node_idx"],
-                "left",
-            )
-            .where(F.col("v_old").isNull() | (F.col("v") < F.col("v_old")))
-            .select("node_idx", F.col("v.dist_m").alias("dist_m"), F.col("v.prev").alias("prev"))
-            .localCheckpoint()
-        )
-        # ONE driver job per round: emptiness check + target lookup fused
-        # into an aggregate over the (checkpointed) improved frame.  The
-        # target's settled distance only changes in a round where it
-        # improves, so the running min over improved rounds IS state's
-        # current target distance — no extra scan of state.
-        probe = improved.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.when(F.col("node_idx") == target_idx, F.col("dist_m"))).alias("t_dist"),
-        ).first()
-        if probe["n"] == 0:
-            break
-        if probe["t_dist"] is not None:
-            best_target = min(best_target, float(probe["t_dist"]))
-        state = (
-            state.unionAll(improved)
-            .groupBy("node_idx")
-            .agg(F.min(F.struct("dist_m", "prev")).alias("v"))
-            .select("node_idx", F.col("v.dist_m").alias("dist_m"), F.col("v.prev").alias("prev"))
-            .localCheckpoint()
-        )
-        frontier = improved
-    e.unpersist()
-
-    tip = state.where(F.col("node_idx") == target_idx).select("dist_m").first()
-    if tip is None:
-        return spark.createDataFrame([], out_schema)
-    chain = _backtrack_chain(state, target_idx, float(tip["dist_m"]))
-    chain.reverse()  # start → target
-    path = spark.createDataFrame([(i, int(n)) for i, n in enumerate(chain)], "seq INT, node_idx INT")
     w_seq = Window.orderBy("seq")
     paired = (
         path.join(nodes.select("node_idx", "lon", "lat"), "node_idx")
         .withColumn("prev_node", F.lag("node_idx").over(w_seq))
+        .withColumn("prev_lon", F.lag("lon").over(w_seq))
+        .withColumn("prev_lat", F.lag("lat").over(w_seq))
     )
-    ew = edges.select(F.col("src").alias("prev_node"), F.col("dst").alias("node_idx"), "w")
-    step = F.when(F.col("prev_node").isNull(), F.lit(0.0)).otherwise(F.col("w").cast("double"))
-    w_cum = w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    e = edges.select(F.col("src").alias("prev_node"), F.col("dst").alias("node_idx"), "w")
+    step = F.when(F.col("prev_node").isNull(), F.lit(0.0)).otherwise(
+        F.coalesce(
+            F.col("w").cast("double"),
+            geo.haversine_m(F.col("prev_lon"), F.col("prev_lat"), F.col("lon"), F.col("lat"), geo.R_QUERY_M),
+        )
+    )
+    w_cum = w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)  # W1
     return (
-        paired.join(ew, ["prev_node", "node_idx"], "left")
+        paired.join(e, ["prev_node", "node_idx"], "left")
         .withColumn("step_m", step.cast("float"))
         .withColumn("cum_m", F.sum("step_m").over(w_cum).cast("float"))
         .select("seq", "node_idx", "lon", "lat", "step_m", "cum_m")
-        .orderBy("seq")
     )
 
 
@@ -338,19 +202,16 @@ def path_to_nearest_poi(
     """§3.3 (test_path.py:366-420): walking path from (lon, lat) to the
     nearest POI of ``category``.
 
-    Runs the bounded multi-source job with prev tracking (G2), backtracks
-    start→source (G4), then re-costs each step and accumulates the running
-    total (G5 + W1).  Output rows (B7 schema): seq, node_idx, lon, lat,
+    Solves the bounded multi-source shortest paths from the category's
+    POI seeds (G2), backtracks start→source (G4), then re-costs each step
+    and accumulates the running total (G5 + W1, _recost).  Output rows (B7 schema): seq, node_idx, lon, lat,
     step_m, cum_m, poi_id, category.
 
     G2 + G4 run in one task at tile scale and distributed above it (see
-    _nearest_seed_chain); either way the driver receives only the O(path)
+    reach.nearest_seed_chain); either way the driver receives only the O(path)
     chain, never the settled state."""
     spark = nodes.sparkSession
-    out_schema = (
-        "seq INT, node_idx INT, lon FLOAT, lat FLOAT, step_m FLOAT, cum_m FLOAT, "
-        "poi_id BIGINT, category STRING"
-    )
+    out_schema = _PATH_SCHEMA + ", poi_id BIGINT, category STRING"
     snapped = snap_mod.snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
     if snapped is None:
         return spark.createDataFrame([], out_schema)
@@ -362,45 +223,13 @@ def path_to_nearest_poi(
         .where(geo.sanitize_key(F.col("category")) == key)
         .select("node_idx", F.lit(category).alias("category"), "poi_id")
     )
-    found = _nearest_seed_chain(edges, seeds, start_idx, limit_m)
+    found = reach_mod.nearest_seed_chain(edges, seeds, start_idx, limit_m)
     if found is None:
         return spark.createDataFrame([], out_schema)  # no POI within limit_m
     poi_id, chain = found
-    path = spark.createDataFrame(
-        [(i, int(n)) for i, n in enumerate(chain)], "seq INT, node_idx INT"
-    )
-
-    # G5: pair consecutive nodes (lag), join the edge table for the true
-    # step weight, haversine R=6371000 fallback (test_path.py:318-328)
-    w_seq = Window.orderBy("seq")
-    paired = (
-        path.join(nodes.select("node_idx", "lon", "lat"), "node_idx")
-        .withColumn("prev_node", F.lag("node_idx").over(w_seq))
-        .withColumn("prev_lon", F.lag("lon").over(w_seq))
-        .withColumn("prev_lat", F.lag("lat").over(w_seq))
-    )
-    e = edges.select(F.col("src").alias("prev_node"), F.col("dst").alias("node_idx"), "w")
-    step = F.when(F.col("prev_node").isNull(), F.lit(0.0)).otherwise(
-        F.coalesce(
-            F.col("w").cast("double"),
-            geo.haversine_m(F.col("prev_lon"), F.col("prev_lat"), F.col("lon"), F.col("lat"), geo.R_QUERY_M),
-        )
-    )
-    w_cum = w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)  # W1
     return (
-        paired.join(e, ["prev_node", "node_idx"], "left")
-        .withColumn("step_m", step.cast("float"))
-        .withColumn("cum_m", F.sum("step_m").over(w_cum).cast("float"))
-        .select(
-            "seq",
-            "node_idx",
-            "lon",
-            "lat",
-            "step_m",
-            "cum_m",
-            F.lit(poi_id).cast("bigint").alias("poi_id"),
-            F.lit(category).alias("category"),
-        )
+        _recost(nodes, edges, chain)
+        .select("*", F.lit(poi_id).cast("bigint").alias("poi_id"), F.lit(category).alias("category"))
         .orderBy("seq")
     )
 

@@ -1,13 +1,22 @@
-"""Iterative bounded multi-source shortest paths → the `reach` gold table
-(SURVEY.md §2.8 G2, the reference's compute core).
+"""Bounded shortest paths → the `reach` gold table (SURVEY.md §2.8 G2,
+the reference's compute core), and the one place that decides how every
+bounded shortest path in the engine is solved.
 
 The reference runs a binary-heap Dijkstra over CSR arrays per category
-(`precompute_poi_reach.py:86-125`), bounded at `limit_m`.  A heap is a
-single-address-space structure; the distributed equivalent is frontier
-Bellman-Ford: each round relaxes every edge leaving the frontier
-(join) and keeps the per-node minimum (groupBy-min) — exactly the kernel
-declared as query d22.  Rounds ≈ hop diameter within `limit_m` (tens, on a
-walking graph); every round is one co-partitioned join + one aggregation.
+(`precompute_poi_reach.py:86-125`), bounded at `limit_m`, and the same
+heap for its point-to-point A* (`test_path.py:33-76`).  Here one size
+dispatch (``_dispatch``: one ``edges.count()`` probe) serves all three
+walking queries — G2 reach (compute_reach), the start → nearest-seed
+chain of path-to-nearest-POI (G4) and the point-to-point route (G3), both
+through nearest_seed_chain:
+
+- at or below LOCAL_EDGE_THRESHOLD edges, that heap Dijkstra runs in ONE
+  cogrouped task (``_heap_dijkstra``) — the tile-scale case;
+- above it, frontier Bellman-Ford: each round relaxes every edge leaving
+  the frontier (join) and keeps the per-node minimum (groupBy-min) —
+  exactly the kernel declared as query d22.  Rounds ≈ hop diameter within
+  `limit_m` (tens, on a walking graph); every round is one co-partitioned
+  join + one aggregation.
 
 Differences from the reference, by design:
 - ALL categories run in one pass (category is a state column) instead of
@@ -42,13 +51,15 @@ from pyspark.sql import functions as F
 from ..functions import geo
 
 LIMIT_M_DEFAULT = 1000.0  # precompute_poi_reach.py:132
-MAX_ROUNDS_DEFAULT = 200
+# frontier loop: synchronization-round cap and edge relaxations per round
+MAX_ROUNDS = 200
+HOPS_PER_ROUND = 2
 _CKPT_EVERY = 3
-HOPS_PER_ROUND_DEFAULT = 2
-# graphs at or below this edge count solve in ONE task (strategy="auto"):
+# graphs at or below this edge count solve in ONE task:
 # ~150k edges is a few MB of adjacency and milliseconds of heap Dijkstra —
 # far below the per-round scheduling cost of even one frontier barrier
 LOCAL_EDGE_THRESHOLD = 150_000
+_MAX_DOUBLINGS = 20  # backtrack chains up to 2^20 nodes — far beyond any walking path
 
 
 def _valid_sources(pois: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -125,7 +136,7 @@ def shortest_paths_bounded_local(
     seeds: DataFrame,
     limit_m: float = LIMIT_M_DEFAULT,
 ) -> DataFrame:
-    """G2 kernel, single-task strategy: classic binary-heap Dijkstra
+    """G2 kernel, single-task side: classic binary-heap Dijkstra
     (_heap_dijkstra) inside ONE cogrouped applyInPandas task.
 
     This is the right plan whenever the (sub)graph fits in a task — which
@@ -133,7 +144,7 @@ def shortest_paths_bounded_local(
     (grid_creation.py:235-236) makes every tile's reach independent, so
     the cluster runs thousands of these tasks in parallel, one per tile,
     with zero inter-tile shuffles (see tests/test_tile_parallel.py).  The
-    frontier loop (shortest_paths_bounded) exists for the uncommon case —
+    frontier loop (shortest_paths_frontier) exists for the uncommon case —
     one connected region bigger than a task.
 
     Semantics are identical to the frontier loop: bounded by ``limit_m``,
@@ -164,36 +175,36 @@ def shortest_paths_bounded_local(
 def nearest_seed_path_local(
     edges: DataFrame,
     seeds: DataFrame,
-    start_idx: int,
+    tip_idx: int,
     limit_m: float = LIMIT_M_DEFAULT,
 ) -> DataFrame:
     """G2 + G4 in ONE cogrouped task: solve the bounded Dijkstra from
-    ``seeds`` (one category) and walk ``prev`` from ``start_idx`` back to
+    ``seeds`` (one category) and walk ``prev`` from ``tip_idx`` back to
     its winning seed in the same task.  Emits only the O(path) chain
-    ``(seq, node_idx, poi_id)`` in start → seed order (seq 0 is the start
+    ``(seq, node_idx, poi_id)`` in tip → seed order (seq 0 is the tip
     node) and no rows when no seed lies within ``limit_m`` — the settled
     state never leaves the task.
 
     Zero-weight edges can make the (dist, poi_id, prev) tie-break cyclic
     (hand-made inputs only: graph_build clamps weights at 0.01 m), so the
     walk raises once it takes more steps than there are settled nodes,
-    like query._backtrack_chain."""
-    start, lim = int(start_idx), float(limit_m)
+    like _backtrack_chain."""
+    tip, lim = int(tip_idx), float(limit_m)
 
     def walk(e_pdf, s_pdf):
         import pandas as pd
 
         # seeds carry one category, so the settled state keys on node
         settled = {node: v for (node, _cat), v in _heap_dijkstra(e_pdf, s_pdf, lim).items()}
-        chain = [start] if start in settled else []
+        chain = [tip] if tip in settled else []
         while chain and settled[chain[-1]][2] >= 0:
             if len(chain) > len(settled):
                 raise RuntimeError(
                     f"path backtrack did not converge within {len(settled)} settled nodes "
-                    f"from tip {start}; prev pointers likely contain a cycle"
+                    f"from tip {tip}; prev pointers likely contain a cycle"
                 )
             chain.append(settled[chain[-1]][2])
-        poi = settled[start][1] if chain else 0
+        poi = settled[tip][1] if chain else 0
         return pd.DataFrame({
             "seq": pd.Series(range(len(chain)), dtype="int32"),
             "node_idx": pd.Series(chain, dtype="int32"),
@@ -205,50 +216,130 @@ def nearest_seed_path_local(
     )
 
 
+def _dispatch(edges: DataFrame, local, frontier):
+    """The one size split behind every bounded shortest path: ONE
+    ``edges.count()`` probe, then ``local(edges)`` at or below
+    LOCAL_EDGE_THRESHOLD edges (the one-task heap solver) and
+    ``frontier(edges, n_edges)`` above it (the distributed loop, which
+    sizes its shuffles from the same count).  ``edges`` reaches either
+    side as ``(src, dst, w DOUBLE)``.  Tests force the frontier side by
+    setting LOCAL_EDGE_THRESHOLD to -1."""
+    edges = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
+    n_edges = edges.count()
+    if n_edges <= LOCAL_EDGE_THRESHOLD:
+        return local(edges)
+    return frontier(edges, n_edges)
+
+
 def shortest_paths_bounded(
     edges: DataFrame,
     seeds: DataFrame,
     limit_m: float = LIMIT_M_DEFAULT,
-    max_rounds: int = MAX_ROUNDS_DEFAULT,
-    hops_per_round: int = HOPS_PER_ROUND_DEFAULT,
-    strategy: str = "auto",
 ) -> DataFrame:
     """G2 kernel: multi-source bounded shortest paths over
     ``edges(src, dst, w)`` from ``seeds(node_idx, category, poi_id)``.
 
     Returns ``(node_idx, category, dist_m, poi_id)`` for every node within
-    ``limit_m`` of a seed of that category.
+    ``limit_m`` of a seed of that category, solved on whichever side of
+    the size dispatch (``_dispatch``) the graph falls: one-task heap
+    Dijkstra (shortest_paths_bounded_local) at tile scale, the frontier
+    loop (shortest_paths_frontier) above it.  Both sides return the same
+    table (pinned by test_reach_local_strategy_equivalent)."""
+    return _dispatch(
+        edges,
+        lambda e: shortest_paths_bounded_local(e, seeds, limit_m),
+        lambda e, n_edges: shortest_paths_frontier(e, seeds, n_edges, limit_m),
+    )
 
-    ``hops_per_round`` batches k edge relaxations into one synchronization
-    round: the candidate set is the union of 1..k-hop extensions of the
-    frontier, min-merged once.  Rounds needed drop from hop-diameter D to
-    ceil(D/k) — on a 1 km walking-graph reach (~70 hops at ~15 m edges)
-    k=4 cuts ~70 global barriers to ~18.  Correctness is k-independent:
-    every hop stays bounded by ``limit_m``, each hop is min-merged, and
-    the round-end strict-improvement-vs-state check subsumes any
-    non-shortest intermediates (golden Dijkstra tests run both k=1 and
-    k=4).  Default is 2 — measured on local[32] it is ~20% faster than
-    k=1 on a 30-hop lattice and neutral on a depth-7 tree, while k>=4
-    loses on shallow graphs (wasted hops after the frontier empties
-    mid-round).  Raise it on a real cluster where per-round scheduling +
-    straggler barriers dominate shuffle cost, or on high-diameter graphs.
 
-    ``strategy``: "auto" (default) solves graphs at or below
-    LOCAL_EDGE_THRESHOLD edges with one-task heap Dijkstra
-    (shortest_paths_bounded_local — at tile scale the dominant, shuffle-
-    free plan) and larger graphs with the frontier loop; "local" /
-    "frontier" force a path (equivalence pinned by
-    test_reach_local_strategy_equivalent).
-    """
-    if strategy not in ("auto", "frontier", "local"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "local":
-        return shortest_paths_bounded_local(edges, seeds, limit_m)
-    edges = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
-    n_edges = edges.count()
-    if strategy == "auto" and n_edges <= LOCAL_EDGE_THRESHOLD:
-        return shortest_paths_bounded_local(edges, seeds, limit_m)
-    return shortest_paths_frontier(edges, seeds, n_edges, limit_m, max_rounds, hops_per_round=hops_per_round)
+def nearest_seed_chain(
+    edges: DataFrame, seeds: DataFrame, tip_idx: int, limit_m: float
+) -> tuple[int, list[int]] | None:
+    """G2 + G4 for one tip node: ``(poi_id, chain)`` of the seed nearest
+    to ``tip_idx``, chain in tip → seed order, or None when no seed lies
+    within ``limit_m``.  ``seeds`` carry one category.  Path-to-nearest-POI
+    walks from its start node to the POI seeds; the point-to-point route
+    (G3) seeds its start node alone and walks from its target.
+
+    Through the size dispatch: at tile scale one cogrouped task solves the
+    heap Dijkstra and walks prev from the tip (nearest_seed_path_local);
+    larger graphs run the frontier loop and the pointer-doubling
+    ``_backtrack_chain``.  Either way the driver receives O(path) rows."""
+
+    def local(e):
+        rows = sorted(nearest_seed_path_local(e, seeds, tip_idx, limit_m).collect(), key=lambda r: r["seq"])
+        return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
+
+    def frontier(e, n_edges):
+        sp = shortest_paths_frontier(e, seeds, n_edges, limit_m, track_prev=True)
+        # one row for the tip node, then the O(path) backtrack
+        tip = sp.where(F.col("node_idx") == tip_idx).select("dist_m", "poi_id").first()
+        if tip is None:
+            return None
+        return tip["poi_id"], _backtrack_chain(sp, tip_idx, float(tip["dist_m"]))
+
+    return _dispatch(edges, local, frontier)
+
+
+def _backtrack_chain(state: DataFrame, tip_idx: int, tip_dist: float) -> list[int]:
+    """G4 prev-pointer backtrack WITHOUT collecting the settled state:
+    pointer doubling over the prev table, so the driver receives O(path)
+    rows while the O(reached) settled set stays distributed (the r10
+    verdict's watch-item — a dense urban mega-tile's settled set was the
+    engine's largest driver transfer; the chain itself is bounded by
+    limit_m / min-edge-length).
+
+    Round k holds the chain's first 2^k nodes and a jump table mapping
+    each settled node to its 2^k-th ancestor (NULL once the walk passes
+    the root): extending the chain is a broadcast-small join of the known
+    chain against the jump table, and the jump table squares by one
+    self-join — ceil(log2(path_len)) rounds of shuffle-bound distributed
+    work.  The jump table is pre-pruned to dist_m <= the tip's settled
+    distance, which never drops a chain node (every prev-ancestor settles
+    strictly closer to its source).  Returns tip → root order."""
+    spark = state.sparkSession
+    jump = (
+        state.where(F.col("dist_m") <= F.lit(float(tip_dist)))
+        .select("node_idx", F.col("prev").alias("anc"))
+        .localCheckpoint()
+    )
+    chain = spark.createDataFrame([(0, int(tip_idx))], "offset INT, node_idx INT")
+    length = 1
+    for _ in range(_MAX_DOUBLINGS):
+        nxt = (
+            F.broadcast(chain)
+            .join(jump, "node_idx")
+            .where(F.col("anc").isNotNull())
+            .select(
+                (F.col("offset") + F.lit(length)).alias("offset"),
+                F.col("anc").alias("node_idx"),
+            )
+            .localCheckpoint()
+        )
+        if nxt.isEmpty():
+            break
+        chain = chain.unionAll(nxt)
+        jump = (
+            jump.join(
+                jump.select(F.col("node_idx").alias("anc"), F.col("anc").alias("anc2")),
+                "anc",
+                "left",
+            )
+            .select("node_idx", F.col("anc2").alias("anc"))
+            .localCheckpoint()
+        )
+        length *= 2
+    else:
+        # The loop exhausted _MAX_DOUBLINGS with the walk still extending:
+        # a >2^_MAX_DOUBLINGS-node walking path always means corrupted
+        # prev pointers (a cycle), so fail loudly rather than return a
+        # plausible-looking truncated chain with a wrong cum_m (r11 ADVICE).
+        raise RuntimeError(
+            f"path backtrack did not converge within 2^{_MAX_DOUBLINGS} nodes "
+            f"from tip {tip_idx}; prev pointers likely contain a cycle"
+        )
+    rows = chain.orderBy("offset").collect()  # O(path) — the only chain-sized collect
+    return [int(r["node_idx"]) for r in rows]
 
 
 def shortest_paths_frontier(
@@ -256,16 +347,28 @@ def shortest_paths_frontier(
     seeds: DataFrame,
     n_edges: int,
     limit_m: float = LIMIT_M_DEFAULT,
-    max_rounds: int = MAX_ROUNDS_DEFAULT,
     track_prev: bool = False,
-    hops_per_round: int = HOPS_PER_ROUND_DEFAULT,
 ) -> DataFrame:
-    """G2 kernel, frontier strategy (see shortest_paths_bounded) over
-    ``edges(src, dst, w DOUBLE)`` whose row count ``n_edges`` the caller's
+    """G2 kernel, frontier side of the size dispatch, over
+    ``edges(src, dst, w DOUBLE)`` whose row count ``n_edges`` the
     dispatch probe already took.  With ``track_prev=True`` the result
     carries ``prev``, the upstream node on the winning path (NULL at
     seeds, ties broken by lexicographic min (dist, poi_id, prev)) — input
-    to the pointer-doubling backtrack (G4, query._backtrack_chain)."""
+    to the pointer-doubling backtrack (G4, _backtrack_chain).
+
+    Each synchronization round batches HOPS_PER_ROUND edge relaxations:
+    the candidate set is the union of 1..k-hop extensions of the
+    frontier, min-merged once, so rounds drop from hop-diameter D to
+    ceil(D/k).  Correctness is k-independent: every hop stays bounded by
+    ``limit_m``, each hop is min-merged, and the round-end
+    strict-improvement-vs-state check subsumes any non-shortest
+    intermediates (golden tests run k=1 and k=4).  k=2 measured ~20%
+    faster than k=1 on a 30-hop lattice on local[32] and neutral on a
+    depth-7 tree, while k>=4 loses on shallow graphs (wasted hops after
+    the frontier empties mid-round).
+
+    Raises RuntimeError when MAX_ROUNDS rounds end with the frontier
+    still improving, rather than return a truncated table."""
     spark = edges.sparkSession
     # The loop tunes session-global confs: AQE off (each tiny round
     # otherwise pays query-stage materialization + re-optimization —
@@ -353,8 +456,8 @@ def shortest_paths_frontier(
                 .agg(F.min("v").alias("v"))
             )
 
-        hops = max(1, int(hops_per_round))
-        for _ in range(max_rounds):
+        hops = HOPS_PER_ROUND
+        for _ in range(MAX_ROUNDS):
             # k chained relaxations, ONE synchronization round: the hops
             # pipeline inside a single job, so the driver pays one
             # isEmpty/checkpoint barrier per k hops instead of per hop
@@ -391,6 +494,13 @@ def shortest_paths_frontier(
                 state = state.localCheckpoint()
                 rounds_since_ckpt = 0
             frontier = improved
+        else:
+            # the frontier still improved in the last allowed round: the
+            # table would be cut short of limit_m, so fail loudly
+            raise RuntimeError(
+                f"frontier shortest paths did not converge within {MAX_ROUNDS} rounds "
+                f"of {hops} hops; the graph needs more hops within limit_m={limit_m}"
+            )
 
         if rounds_since_ckpt:
             state = state.localCheckpoint()  # cut lineage before edges unpersist
@@ -400,10 +510,9 @@ def shortest_paths_frontier(
         # checkpointed, so the resolved plan is a thin projection over
         # pinned blocks and survives the view drop below
         out.createOrReplaceGlobalTempView(f"{tag}_out")
-        res = spark.table(f"global_temp.{tag}_out")
-        edges.unpersist()
-        return res
+        return spark.table(f"global_temp.{tag}_out")
     finally:
+        edges.unpersist()
         for v in ("edges", "seeds", "out"):
             spark.catalog.dropGlobalTempView(f"{tag}_{v}")
 
@@ -413,24 +522,19 @@ def compute_reach(
     edges: DataFrame,
     pois: DataFrame,
     limit_m: float = LIMIT_M_DEFAULT,
-    speed_mps: float = geo.WALK_SPEED_MPS,
-    max_rounds: int = MAX_ROUNDS_DEFAULT,
-    hops_per_round: int = HOPS_PER_ROUND_DEFAULT,
-    strategy: str = "auto",
-    dense: bool = False,
 ) -> DataFrame:
     """The `reach` gold table (SURVEY.md §1.1, B6): ``node_idx, category,
-    dist_m FLOAT, time_s FLOAT, poi_id BIGINT``.  Categories are
-    sanitized keys (F7).
+    dist_m FLOAT, time_s FLOAT, poi_id BIGINT``, with ``time_s`` at
+    geo.WALK_SPEED_MPS.  Categories are sanitized keys (F7); the solve
+    goes through the size dispatch of shortest_paths_bounded.
 
-    SPARSE by default: one row per REACHED (node, category) pair.  The
-    reference emits full length-N arrays per category (inf / -1 for
-    unreachable, precompute_poi_reach.py:159-218), but at 100 TB the
-    dense node × category cube stores the unreachable fraction as
-    explicit rows — on a country-scale graph with sparse POI categories
-    that fraction dominates, and every downstream aggregate/point query
-    already treats absent and NULL identically.  ``dense=True`` (or
-    ``densify_reach`` on an existing sparse table) materializes the
+    SPARSE: one row per REACHED (node, category) pair.  The reference
+    emits full length-N arrays per category (inf / -1 for unreachable,
+    precompute_poi_reach.py:159-218), but at 100 TB the dense node ×
+    category cube stores the unreachable fraction as explicit rows — on a
+    country-scale graph with sparse POI categories that fraction
+    dominates, and every downstream aggregate/point query already treats
+    absent and NULL identically.  ``densify_reach`` materializes the
     reference's cube — NULL rows where unreachable — which is the shape
     the reference-hash parity sinks need.
 
@@ -439,24 +543,13 @@ def compute_reach(
     seeds = _valid_sources(pois, nodes).select(
         "node_idx", geo.sanitize_key(F.col("category")).alias("category"), "poi_id"
     )
-    reached = shortest_paths_bounded(
-        edges,
-        seeds,
-        limit_m=limit_m,
-        max_rounds=max_rounds,
-        hops_per_round=hops_per_round,
-        strategy=strategy,
-    )
-    sparse = reached.select(
+    return shortest_paths_bounded(edges, seeds, limit_m).select(
         "node_idx",
         "category",
         F.col("dist_m").cast("float").alias("dist_m"),
-        geo.walking_time_s(F.col("dist_m"), speed_mps).cast("float").alias("time_s"),
+        geo.walking_time_s(F.col("dist_m")).cast("float").alias("time_s"),
         "poi_id",
     )
-    if dense:
-        return densify_reach(sparse, nodes, seeds.select("category").distinct())
-    return sparse
 
 
 def densify_reach(

@@ -1025,9 +1025,15 @@ def main() -> None:
                     """
 
                 def g3_df(strategy):
-                    sp = reach_mod.shortest_paths_bounded(
-                        edges, seeds, limit_m=LIMIT, strategy=strategy
-                    )
+                    # "frontier" forces the distributed side of the size
+                    # dispatch; "auto" leaves it to the edge count
+                    threshold = reach_mod.LOCAL_EDGE_THRESHOLD
+                    if strategy == "frontier":
+                        reach_mod.LOCAL_EDGE_THRESHOLD = -1
+                    try:
+                        sp = reach_mod.shortest_paths_bounded(edges, seeds, limit_m=LIMIT)
+                    finally:
+                        reach_mod.LOCAL_EDGE_THRESHOLD = threshold
                     return (
                         sp.select(
                             "node_idx", F.round(F.col("dist_m"), 4).alias("dist_m"), "poi_id"

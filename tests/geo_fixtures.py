@@ -262,3 +262,31 @@ def golden_reach(gnodes: pd.DataFrame, gedges: pd.DataFrame, snapped_pois: pd.Da
         ok = np.where(dmat[:, j] <= dist[j] + EPS)[0]
         winners.append(frozenset(int(poi_ids[i]) for i in ok))
     return dist, winners
+
+
+def golden_route(gedges: pd.DataFrame, start: int, target: int, limit_m: float) -> list[int]:
+    """G3 golden: textbook heap Dijkstra from ``start`` bounded at
+    ``limit_m`` that keeps, per node, the lexicographic min (dist, prev)
+    (prev -1 at the start), then walks prev back from ``target``.  Returns
+    the start → target node chain, or [] when the target lies beyond
+    ``limit_m``."""
+    adj: dict[int, list[tuple[int, float]]] = {}
+    for r in gedges.itertuples():
+        adj.setdefault(int(r.src), []).append((int(r.dst), float(r.w)))
+    best = {start: (0.0, -1)}
+    pq = [(0.0, -1, start)]
+    while pq:
+        d, p, u = heapq.heappop(pq)
+        if best[u] != (d, p):
+            continue
+        for v, w in adj.get(u, ()):
+            cand = (d + w, u)
+            if cand[0] <= limit_m and (v not in best or cand < best[v]):
+                best[v] = cand
+                heapq.heappush(pq, (cand[0], u, v))
+    if target not in best:
+        return []
+    chain = [target]
+    while best[chain[-1]][1] >= 0:
+        chain.append(best[chain[-1]][1])
+    return chain[::-1]

@@ -229,11 +229,11 @@ def reach_ctx(spark, fx):
     pois_sdf = spark.createDataFrame(
         snapped[["poi_id", "category", "node_idx"]].astype({"node_idx": "int32"})
     )
-    # dense=True: the golden/sentinel/pivot tests assert the reference's
+    # densified: the golden/sentinel/pivot tests assert the reference's
     # full node x category cube; the engine default is the sparse form
     # (test_sparse_reach_default_equals_dense_reached_set)
-    reach_df = reach.compute_reach(
-        fx["gnodes"], fx["gedges"], pois_sdf, limit_m=LIMIT_M, dense=True
+    reach_df = reach.densify_reach(
+        reach.compute_reach(fx["gnodes"], fx["gedges"], pois_sdf, limit_m=LIMIT_M), fx["gnodes"]
     ).cache()
     return {"snapped": snapped, "pois_sdf": pois_sdf, "reach": reach_df}
 
@@ -261,20 +261,17 @@ def test_reach_matches_scipy_golden(fx, reach_ctx):
 
 
 @pytest.mark.parametrize("hops", [1, 4])
-def test_reach_hop_batching_equivalent(fx, reach_ctx, hops):
-    # the barrier-reduction knob must not change results: k=1 and k=4
-    # produce the identical reach table as the auto-strategy baseline
-    # (strategy="frontier" forced — auto would pick the local solver on
+def test_reach_hop_batching_equivalent(fx, reach_ctx, hops, monkeypatch):
+    # the barrier-reduction constant must not change results: k=1 and k=4
+    # produce the identical reach table as the dispatched baseline
+    # (frontier side forced — the dispatch would pick the local solver on
     # this small fixture and never exercise the loop)
+    monkeypatch.setattr(reach, "HOPS_PER_ROUND", hops)
+    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
     batched = (
-        reach.compute_reach(
+        reach.densify_reach(
+            reach.compute_reach(fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M),
             fx["gnodes"],
-            fx["gedges"],
-            reach_ctx["pois_sdf"],
-            limit_m=LIMIT_M,
-            hops_per_round=hops,
-            strategy="frontier",
-            dense=True,
         )
         .orderBy("node_idx", "category")
         .toPandas()
@@ -283,7 +280,7 @@ def test_reach_hop_batching_equivalent(fx, reach_ctx, hops):
     pd.testing.assert_frame_equal(batched, base, check_exact=False, atol=1e-6)
 
 
-def test_reach_loop_does_not_leak_conf(fx, reach_ctx, spark):
+def test_reach_loop_does_not_leak_conf(fx, reach_ctx, spark, monkeypatch):
     """The frontier loop's planner tuning (AQE off, graph-sized shuffle
     partitions) runs on a private newSession(): the CALLER session's conf
     is untouched both while the loop is live (polled from a concurrent
@@ -306,12 +303,12 @@ def test_reach_loop_does_not_leak_conf(fx, reach_ctx, spark):
             )
             time.sleep(0.02)
 
+    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
     t = threading.Thread(target=poll)
     t.start()
     try:
         out = reach.compute_reach(
-            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M,
-            strategy="frontier",
+            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M
         ).toPandas()
     finally:
         done.set()
@@ -323,26 +320,39 @@ def test_reach_loop_does_not_leak_conf(fx, reach_ctx, spark):
     assert not bad, f"caller-session conf changed mid-loop: {bad[:3]}"
 
 
-def test_reach_local_strategy_equivalent(fx, reach_ctx):
+def test_reach_local_strategy_equivalent(fx, reach_ctx, monkeypatch):
     # one-task heap Dijkstra and the distributed frontier loop are the
     # same operator: identical (node, category, dist, poi) tables
-    frontier = (
-        reach.compute_reach(
-            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M,
-            strategy="frontier", dense=True,
+    def dense_reach():
+        return (
+            reach.densify_reach(
+                reach.compute_reach(fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M),
+                fx["gnodes"],
+            )
+            .orderBy("node_idx", "category")
+            .toPandas()
         )
-        .orderBy("node_idx", "category")
-        .toPandas()
-    )
-    local = (
-        reach.compute_reach(
-            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M,
-            strategy="local", dense=True,
-        )
-        .orderBy("node_idx", "category")
-        .toPandas()
-    )
+
+    local = dense_reach()  # the fixture is far below the dispatch threshold
+    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
+    frontier = dense_reach()
     pd.testing.assert_frame_equal(local, frontier, check_exact=False, atol=1e-6)
+
+
+def test_frontier_raises_when_round_cap_runs_out(spark, monkeypatch):
+    # a 10-node chain at 1 m per edge needs 9 hops; 3 rounds of 2 hops
+    # cover 6, so the loop must raise instead of returning nodes 0..6
+    # as if they were the whole reach table
+    edges = spark.createDataFrame([(i, i + 1, 1.0) for i in range(9)], "src INT, dst INT, w DOUBLE")
+    seeds = spark.createDataFrame([(0, "c", 7)], "node_idx INT, category STRING, poi_id BIGINT")
+    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
+    monkeypatch.setattr(reach, "MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        reach.shortest_paths_bounded(edges, seeds, limit_m=100.0)
+    monkeypatch.setattr(reach, "MAX_ROUNDS", 6)  # 5 improving rounds + the empty one
+    got = reach.shortest_paths_bounded(edges, seeds, limit_m=100.0).orderBy("node_idx").toPandas()
+    assert got["node_idx"].tolist() == list(range(10))
+    assert got["dist_m"].tolist() == [float(i) for i in range(10)]
 
 
 def test_sparse_reach_default_equals_dense_reached_set(fx, reach_ctx):
@@ -468,28 +478,54 @@ def test_point_reachability(fx, reach_ctx):
     assert got["dist_m"].is_monotonic_increasing
 
 
-def test_point_to_point_path(fx):
-    import heapq
-
-    a = fx["gnodes_pdf"].iloc[30]
-    b = fx["gnodes_pdf"].iloc[350]
-    path = query.point_to_point_path(
+def _route(fx, a: int, b: int, limit_m: float = 5000.0):
+    pa, pb = fx["gnodes_pdf"].iloc[a], fx["gnodes_pdf"].iloc[b]
+    return query.point_to_point_path(
         fx["gnodes"],
         fx["gedges"],
-        (float(a["lon"]), float(a["lat"])),
-        (float(b["lon"]), float(b["lat"])),
-        limit_m=5000.0,
-    ).toPandas()
-    assert len(path) >= 2
-    assert path.iloc[0]["node_idx"] == a["node_idx"]
-    assert path.iloc[-1]["node_idx"] == b["node_idx"]
-    # total distance equals the independent Dijkstra oracle's
+        (float(pa["lon"]), float(pa["lat"])),
+        (float(pb["lon"]), float(pb["lat"])),
+        limit_m=limit_m,
+    )
+
+
+@pytest.mark.parametrize("side", ["local", "frontier"])
+def test_point_to_point_path(fx, side, monkeypatch):
+    # G3 on both sides of reach's size dispatch: the whole node chain
+    # equals a heapq golden with the (dist, prev) tie-break, cum_m its
+    # distance, every step an edge weight; start == target is one row at
+    # 0 m, a target beyond limit_m an empty route
+    if side == "frontier":
+        monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
     n = len(fx["gnodes_pdf"])
     adj = [[] for _ in range(n)]
     for r in fx["gedges_pdf"].itertuples():
         adj[int(r.src)].append((int(r.dst), float(r.w)))
-    want = gf._single_source_dijkstra(adj, int(a["node_idx"]), n)[int(b["node_idx"])]
-    assert abs(path["cum_m"].iloc[-1] - want) < 1e-2
+    ge = fx["gedges_pdf"].set_index(["src", "dst"])["w"]
+    for a, b in [(30, 350), (0, 399), (150, 151), (77, 311), (5, 205)]:
+        path = _route(fx, a, b).toPandas()
+        assert path["seq"].tolist() == list(range(len(path)))
+        assert path["node_idx"].tolist() == gf.golden_route(fx["gedges_pdf"], a, b, 5000.0), (a, b)
+        want = gf._single_source_dijkstra(adj, a, n)[b]
+        assert abs(path["cum_m"].iloc[-1] - want) < 1e-2, (a, b)
+        assert path["step_m"].iloc[0] == 0.0
+        for i in range(1, len(path)):
+            u, v = int(path["node_idx"].iloc[i - 1]), int(path["node_idx"].iloc[i])
+            assert abs(path["step_m"].iloc[i] - float(ge.loc[(u, v)])) < 1e-3, (a, b, u, v)
+    same = _route(fx, 42, 42).toPandas()
+    assert same["node_idx"].tolist() == [42] and same["cum_m"].tolist() == [0.0]
+    assert gf.golden_route(fx["gedges_pdf"], 0, 399, 100.0) == []
+    assert len(_route(fx, 0, 399, limit_m=100.0).toPandas()) == 0
+
+
+def test_point_to_point_path_jobs(spark, fx):
+    # the one-task solve + walk, then one re-cost: a lattice route starts
+    # a bounded handful of jobs, not a few per relaxation round
+    from .test_layout import _jobs_started
+
+    n_jobs, path = _jobs_started(spark, lambda: _route(fx, 30, 350).toPandas())
+    assert len(path) > 1
+    assert n_jobs <= 20, n_jobs
 
 
 def test_backtrack_collects_o_path_not_o_reached(spark, monkeypatch):
@@ -515,7 +551,7 @@ def test_backtrack_collects_o_path_not_o_reached(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    chain = query._backtrack_chain(state, 5, 5.0)
+    chain = reach._backtrack_chain(state, 5, 5.0)
     assert chain == [5, 4, 3, 2, 1, 0]
     assert sum(counted) == len(chain), counted  # O(path) driver transfer
 
@@ -523,11 +559,11 @@ def test_backtrack_collects_o_path_not_o_reached(spark, monkeypatch):
 def test_backtrack_raises_on_prev_cycle(spark, monkeypatch):
     # r11 ADVICE: corrupted prev pointers (a cycle) must raise, not
     # return a plausible-looking truncated chain with wrong cum_m
-    monkeypatch.setattr(query, "_MAX_DOUBLINGS", 3)
+    monkeypatch.setattr(reach, "_MAX_DOUBLINGS", 3)
     cyc = [(0, 1.0, 1), (1, 1.0, 2), (2, 1.0, 0)]  # 0 -> 1 -> 2 -> 0
     state = spark.createDataFrame(cyc, "node_idx INT, dist_m DOUBLE, prev INT")
     with pytest.raises(RuntimeError, match="did not converge"):
-        query._backtrack_chain(state, 0, 1.0)
+        reach._backtrack_chain(state, 0, 1.0)
 
 
 def test_path_to_nearest_poi(fx, reach_ctx):
@@ -637,7 +673,7 @@ def test_path_raises_on_zero_weight_prev_cycle(spark, monkeypatch):
     with pytest.raises(PythonException, match="RuntimeError: path backtrack did not converge"):
         serve()
     monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    monkeypatch.setattr(query, "_MAX_DOUBLINGS", 3)
+    monkeypatch.setattr(reach, "_MAX_DOUBLINGS", 3)
     with pytest.raises(RuntimeError, match="did not converge"):
         serve()
 

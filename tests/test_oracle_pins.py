@@ -1,13 +1,15 @@
 """Pinned results of the v-family DuckDB oracles (the 30 declared v*
-queries) on the sf0.001 test corpus.
+queries) and the g-family ones (the 6 declared g* queries) on the
+sf0.001 test corpus.
 
 Every oracle-equality test compares a Spark plan with its SQL twin, so a
 refactor that rewrites both sides (the shared IVF stage builders feed
 both) could move them together unnoticed.  These pins are the
 normalized result hash tests/driver_sim.py computes (columns sorted by
 name, floats rounded to 4 decimals, rows sorted, md5), recorded from the
-oracles before the coarse-stage builders were shared, plus row counts.
-DuckDB only — about 40 s for all 30."""
+oracles before the coarse-stage builders were shared (v) and before every
+bounded shortest path went through one size dispatch in plans/reach.py
+(g), plus row counts.  DuckDB only — about 40 s for all of them."""
 
 import hashlib
 import math
@@ -52,6 +54,15 @@ PINS = {
     "v9_ivf_recall": ("c5e212b19aefc92be449c07c40a85184", 6),
 }
 
+G_PINS = {
+    "g1_grid_tiles": ("8b8bef7442ee6a77abe5d766e22a2b4b", 20),
+    "g2_knn_snap": ("d04d0b722309782a2815a96046dc010f", 60),
+    "g3_bounded_reach": ("ce0a6349d0ab71fbccde1a31251bec7b", 76),
+    "g4_tile_assign": ("1a053e36685a2a41cc33c8b24a515226", 149),
+    "g5_tile_occupancy": ("ed7c9b955ac3809efe910ec1b67cd0a7", 20),
+    "g6_zorder_layout": ("c7c43aae6d36c14ea658699f4614cf62", 200),
+}
+
 
 def _norm(v):
     if v is None or (isinstance(v, float) and math.isnan(v)):
@@ -78,9 +89,22 @@ def test_pins_cover_the_v_family():
     assert set(PINS) == {n for n in QUERIES if n.startswith("v")}
 
 
-@pytest.mark.parametrize("name", sorted(PINS))
-def test_v_oracle_result_is_pinned(con, name):
+def test_pins_cover_the_g_family():
+    assert set(G_PINS) == {n for n in QUERIES if n.startswith("g")}
+
+
+def _pinned(con, name):
     res = con.execute(QUERIES[name].oracle)
     cols = [d[0] for d in res.description]
     rows = res.fetchall()
-    assert (_hash(cols, rows), len(rows)) == PINS[name]
+    return _hash(cols, rows), len(rows)
+
+
+@pytest.mark.parametrize("name", sorted(PINS))
+def test_v_oracle_result_is_pinned(con, name):
+    assert _pinned(con, name) == PINS[name]
+
+
+@pytest.mark.parametrize("name", sorted(G_PINS))
+def test_g_oracle_result_is_pinned(con, name):
+    assert _pinned(con, name) == G_PINS[name]

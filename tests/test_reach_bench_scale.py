@@ -149,11 +149,13 @@ def test_bench_scale_snap_matches_golden(spark, bfx):
 
 
 @pytest.mark.parametrize("strategy", ["local", "frontier"])
-def test_bench_scale_reach_matches_golden(bfx, strategy):
+def test_bench_scale_reach_matches_golden(bfx, strategy, monkeypatch):
+    if strategy == "frontier":  # the lattice is below the dispatch threshold
+        monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
     got_all = (
-        reach.compute_reach(
-            bfx["gnodes"], bfx["gedges"], bfx["pois_sdf"], limit_m=LIMIT_M,
-            strategy=strategy, dense=True,  # golden checks every node's row
+        reach.densify_reach(  # golden checks every node's row
+            reach.compute_reach(bfx["gnodes"], bfx["gedges"], bfx["pois_sdf"], limit_m=LIMIT_M),
+            bfx["gnodes"],
         )
         .cache()
     )
