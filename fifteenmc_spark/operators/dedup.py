@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -191,7 +191,8 @@ def minhash_sig_index(spark, sf_dir, n: int = N_MINHASH) -> DataFrame:
     x3_16 calibration, and the x7/p7 pair graphs.  MIN is idempotent
     under duplicate shingles, so building from the distinct shingle index
     yields values identical to any multiset feed."""
-    assert n <= len(_MH_A)
+    if not 0 < n <= len(_MH_A):
+        raise ValueError(f"minhash signature width {n} outside 1..{len(_MH_A)}")
     sig = _session_cached(
         spark,
         sf_dir,
@@ -279,18 +280,21 @@ def x2(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # x3: MinHash-LSH candidate pairs + exact Jaccard verification
 # ---------------------------------------------------------------------------
-@_register(
-    "x3_minhash_lsh_pairs",
-    "Near-dup pairs: LSH banding (2 bands × 2 rows) proposes candidates, "
-    "exact shingle-set Jaccard >= 0.3 confirms.  The pair join is bounded "
-    "by band buckets — never O(n²) over the corpus.",
-    f"""
+def _x3_oracle(n_hashes: int, n_bands: int) -> str:
+    """The x3-family oracle at one banding calibration — ONE SQL body for
+    x3 and x3_16, the DuckDB mirror of lsh_band_rows + lsh_jaccard_pairs."""
+    r = n_hashes // n_bands
+    bands = "\n      UNION ALL\n      ".join(
+        "SELECT doc_id, {b} AS band, {k} AS bkey FROM sig".format(
+            b=band, k=" || '|' || ".join(f"mh{band * r + i}" for i in range(r))
+        )
+        for band in range(n_bands)
+    )
+    return f"""
     WITH sh AS ({_SHINGLES_SQL}),
-    sig AS ({_minhash_sig_sql()}),
+    sig AS ({_minhash_sig_sql(n_hashes)}),
     bands AS (
-      SELECT doc_id, 0 AS band, mh0 || '|' || mh1 AS bkey FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS band, mh2 || '|' || mh3 AS bkey FROM sig),
+      {bands}),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
@@ -307,27 +311,69 @@ def x2(spark, sf_dir):
     FROM pairs
     WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= {JACCARD_THRESHOLD}
     ORDER BY doc_a, doc_b
-    """,
+    """
+
+
+@_register(
+    "x3_minhash_lsh_pairs",
+    "Near-dup pairs: LSH banding (2 bands × 2 rows) proposes candidates, "
+    "exact shingle-set Jaccard >= 0.3 confirms.  The pair join is bounded "
+    "by band buckets — never O(n²) over the corpus.",
+    _x3_oracle(N_MINHASH, 2),
     ("dedup", "minhash", "lsh", "jaccard", "pipeline"),
 )
 def x3(spark, sf_dir):
     # shingle + signature tables come from the session index — reused by
     # sizes, the pair intersection, and every other text-dedup consumer
     ex = shingle_index(spark, sf_dir)
-    return lsh_jaccard_pairs(
-        ex, sig=minhash_sig_index(spark, sf_dir, N_MINHASH)
-    ).orderBy("doc_a", "doc_b")
+    return lsh_jaccard_pairs(ex, minhash_sig_index(spark, sf_dir, N_MINHASH)).orderBy(
+        "doc_a", "doc_b"
+    )
+
+
+def lsh_band_rows(df: DataFrame, minhash, n_hashes: int, n_bands: int, keep=("doc_id",)):
+    """(*keep, band, bkey): one row per LSH band of every doc — THE
+    banding of the MinHash family, shared by batch x3 (lsh_jaccard_pairs,
+    over the signature table) and the streaming registry
+    (minhash_lsh.minhash_features, over per-row minima), so both runtimes
+    emit bit-identical bkey strings.  ``minhash(j)`` is seed j's minimum
+    as a column; band b joins seeds b·r .. b·r+r-1 with '|'
+    (r = n_hashes / n_bands).  Raises ValueError unless n_hashes is a
+    multiple of n_bands within the seed count — a check that must hold
+    under ``python -O`` too, or a ragged split silently drops seeds.
+
+    ONE band table via explode, NOT a unionAll of per-band projections:
+    the signature aggregate sits directly on the checkpointed shingle
+    partitioning (no exchange of its own), so a b-way union would
+    re-execute the n-MIN aggregate once PER BAND (measured 0.24 s per
+    execution at n=16/sf0.1 — the dominant avoidable cost of the x3_16
+    calibration).  The explode is a narrow op over one aggregate pass."""
+    if n_bands < 1 or n_hashes % n_bands or not 0 < n_hashes <= len(_MH_A):
+        raise ValueError(
+            f"LSH banding needs n_hashes ({n_hashes}) = n_bands ({n_bands}) × rows, "
+            f"with at most {len(_MH_A)} seeds"
+        )
+    r = n_hashes // n_bands
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(band).alias("band"),
+                F.concat_ws("|", *[minhash(band * r + i).cast("string") for i in range(r)]).alias(
+                    "bkey"
+                ),
+            )
+            for band in range(n_bands)
+        ]
+    )
+    return df.select(*keep, F.explode(band_arr).alias("b")).select(*keep, "b.band", "b.bkey")
 
 
 def lsh_jaccard_pairs(
-    ex: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    n_hashes: int = N_MINHASH,
-    n_bands: int = 2,
-    sig: DataFrame | None = None,
+    ex: DataFrame, sig: DataFrame, n_hashes: int = N_MINHASH, n_bands: int = 2
 ) -> DataFrame:
-    """(doc_a, doc_b, jaccard) near-dup pairs from shingle ROWS: LSH band
-    candidates verified by exact shingle-set Jaccard >= threshold.  The
+    """(doc_a, doc_b, jaccard) near-dup pairs from shingle ROWS ``ex`` and
+    their signature table ``sig`` (doc_id, mh0..): LSH band candidates
+    verified by exact shingle-set Jaccard >= JACCARD_THRESHOLD.  The
     single source of the x3 pipeline — x3 (pair list) and x7 (cluster
     assignment) both call this, so a banding change can never
     desynchronize the two declared queries.
@@ -340,29 +386,7 @@ def lsh_jaccard_pairs(
     (e.g. r=4..8, b sized from the target recall at the dedup threshold)
     — candidate volume is the sum of per-bucket squares, exactly like the
     x6 pigeonhole blocks."""
-    r, rem = divmod(n_hashes, n_bands)
-    assert rem == 0 and n_hashes <= len(_MH_A), "n_hashes must be n_bands*r, <= seed count"
-    if sig is None:  # generic/streaming callers: derive from the shingle rows
-        sig = minhash_signatures(ex, n=n_hashes)
-    # ONE band table via explode, NOT a unionAll of per-band projections:
-    # the signature aggregate sits directly on the checkpointed shingle
-    # partitioning (no exchange of its own), so a b-way union would
-    # re-execute the n-MIN aggregate once PER BAND (measured 0.24 s per
-    # execution at n=16/sf0.1 — the dominant avoidable cost of the x3_16
-    # calibration, and exactly what the r6 verdict's profiling ask
-    # uncovered).  The explode is a narrow op over one aggregate pass.
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.concat_ws("|", *[f"mh{band * r + i}" for i in range(r)]).alias("bkey"),
-            )
-            for band in range(n_bands)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_arr).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
-    )
+    bands = lsh_band_rows(sig, lambda j: F.col(f"mh{j}"), n_hashes, n_bands)
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -389,18 +413,8 @@ def lsh_jaccard_pairs(
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .where(jac >= threshold)
+        .where(jac >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
-
-
-def _lsh_bands_sql(n_hashes: int, n_bands: int) -> str:
-    r = n_hashes // n_bands
-    return "\n      UNION ALL\n      ".join(
-        "SELECT doc_id, {b} AS band, {k} AS bkey FROM sig".format(
-            b=band, k=" || '|' || ".join(f"mh{band * r + i}" for i in range(r))
-        )
-        for band in range(n_bands)
     )
 
 
@@ -416,38 +430,13 @@ X3_WIDE_BANDS = 4
     "candidates than a corpus-scale r would; the same exact-Jaccard "
     "verify makes every calibration a subset of the true >= t pair set, "
     "differing only in recall.",
-    f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    sig AS ({_minhash_sig_sql(X3_WIDE_HASHES)}),
-    bands AS (
-      {_lsh_bands_sql(X3_WIDE_HASHES, X3_WIDE_BANDS)}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-      WHERE a.doc_id < b.doc_id),
-    pairs AS (
-      SELECT c.doc_a, c.doc_b,
-             LEN(list_intersect(ja.shingles, jb.shingles)) AS n_common,
-             LEN(ja.shingles) AS na, LEN(jb.shingles) AS nb
-      FROM cand c
-      JOIN sh ja ON ja.doc_id = c.doc_a
-      JOIN sh jb ON jb.doc_id = c.doc_b)
-    SELECT doc_a, doc_b,
-           ROUND(CAST(n_common AS DOUBLE) / (na + nb - n_common), 4) AS jaccard
-    FROM pairs
-    WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= {JACCARD_THRESHOLD}
-    ORDER BY doc_a, doc_b
-    """,
+    _x3_oracle(X3_WIDE_HASHES, X3_WIDE_BANDS),
     ("dedup", "minhash", "lsh", "jaccard", "pipeline", "calibration"),
 )
 def x3_16(spark, sf_dir):
     ex = shingle_index(spark, sf_dir)
-    return lsh_jaccard_pairs(
-        ex,
-        n_hashes=X3_WIDE_HASHES,
-        n_bands=X3_WIDE_BANDS,
-        sig=minhash_sig_index(spark, sf_dir, X3_WIDE_HASHES),
-    ).orderBy("doc_a", "doc_b")
+    sig = minhash_sig_index(spark, sf_dir, X3_WIDE_HASHES)
+    return lsh_jaccard_pairs(ex, sig, X3_WIDE_HASHES, X3_WIDE_BANDS).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -549,6 +538,69 @@ def simhash_code_index(spark, sf_dir, wide: bool = False) -> DataFrame:
 X6_HAMMING_K = 1  # block count = k+1; 2 blocks of 8 bits over the 16-bit code
 
 
+def pigeonhole_blocks(df: DataFrame, code: str, bits: int, k: int) -> DataFrame:
+    """(doc_id, code, blk, bval): one row per pigeonhole block — split a
+    ``bits``-wide SimHash into k+1 blocks of bits/(k+1) bits; any pair
+    within Hamming k agrees EXACTLY on at least one block, so
+    (blk, bval) is a complete candidate key.  THE block builder of the
+    SimHash family: x6, x6_64 and the streaming registry
+    (near_dup.flag_near_dups, whose bucket state key it is) all call it.
+    One posexplode over the code row, not a union of per-block
+    projections — the same narrow shape x3's bands use."""
+    block_bits = bits // (k + 1)
+    mask = (1 << block_bits) - 1
+    vals = [F.shiftright(code, block_bits * blk).bitwiseAND(F.lit(mask)) for blk in range(k + 1)]
+    return df.select("doc_id", code, F.posexplode(F.array(*vals)).alias("blk", "bval"))
+
+
+def _hamming_pairs(sig: DataFrame, code: str, bits: int, k: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) pairs at Hamming <= k: pigeonhole block
+    self-join, then exact bit_count(xor) verify on candidates only — the
+    x6 and x6_64 plan."""
+    blocks = pigeonhole_blocks(sig, code, bits, k)
+    a, b = blocks.alias("a"), blocks.alias("b")
+    cand = (
+        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.bval") == F.col("b.bval")))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col(f"a.{code}").alias("ha"),
+            F.col(f"b.{code}").alias("hb"),
+        )
+        .distinct()
+    )
+    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    return (
+        cand.where(ham <= k)
+        .select("doc_a", "doc_b", ham.cast("bigint").alias("hamming"))
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+def _hamming_sql(sig_sql: str, code: str, bits: int, k: int) -> str:
+    """The x6-family oracle: the DuckDB mirror of _hamming_pairs over the
+    signature query ``sig_sql`` (ONE SQL body for x6 and x6_64)."""
+    block_bits = bits // (k + 1)
+    blks = ", ".join(str(b) for b in range(k + 1))
+    return f"""
+    WITH sig AS ({sig_sql}),
+    blocks AS (
+      SELECT doc_id, {code}, bl.blk,
+             ({code} >> ({block_bits} * bl.blk)) & {(1 << block_bits) - 1} AS bval
+      FROM sig, (SELECT UNNEST([{blks}]) AS blk) bl),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                      a.{code} AS ha, b.{code} AS hb
+      FROM blocks a JOIN blocks b ON a.blk = b.blk AND a.bval = b.bval
+      WHERE a.doc_id < b.doc_id)
+    SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
+    FROM cand
+    WHERE bit_count(xor(ha, hb)) <= {k}
+    ORDER BY doc_a, doc_b
+    """
+
+
 @_register(
     "x6_simhash_hamming",
     "Near-dup pairs at Hamming distance <= k over the 16-bit SimHash "
@@ -558,51 +610,14 @@ X6_HAMMING_K = 1  # block count = k+1; 2 blocks of 8 bits over the 16-bit code
     "per-bucket, never all-pairs.  Exact bit_count(xor) verify on "
     "candidates only.  Catches the 1-bit-off near-dups x4's equal-code "
     "grouping misses.",
-    f"""
-    WITH sig AS ({_SIMHASH_SIG_SQL}),
-    blocks AS (
-      SELECT doc_id, simhash, 0 AS blk, simhash & 255 AS bval FROM sig
-      UNION ALL
-      SELECT doc_id, simhash, 1 AS blk, simhash >> 8 AS bval FROM sig),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                      a.simhash AS ha, b.simhash AS hb
-      FROM blocks a JOIN blocks b ON a.blk = b.blk AND a.bval = b.bval
-      WHERE a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
-    FROM cand
-    WHERE bit_count(xor(ha, hb)) <= {X6_HAMMING_K}
-    ORDER BY doc_a, doc_b
-    """,
+    _hamming_sql(_SIMHASH_SIG_SQL, "simhash", _SIMHASH_BITS, X6_HAMMING_K),
     ("dedup", "simhash", "hamming", "pipeline"),
 )
 def x6(spark, sf_dir):
-    # one small row per doc, served by the session code index — the two
-    # block projections and the self-join read one materialization
+    # one small row per doc, served by the session code index — the block
+    # rows and the self-join read one materialization
     sig = simhash_code_index(spark, sf_dir)
-    blocks = sig.select(
-        "doc_id", "simhash", F.lit(0).alias("blk"), F.col("simhash").bitwiseAND(F.lit(255)).alias("bval")
-    ).unionAll(
-        sig.select("doc_id", "simhash", F.lit(1).alias("blk"), F.shiftright("simhash", 8).alias("bval"))
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.bval") == F.col("b.bval")))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        cand.where(ham <= X6_HAMMING_K)
-        .select("doc_a", "doc_b", ham.cast("bigint").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return _hamming_pairs(sig, "simhash", _SIMHASH_BITS, X6_HAMMING_K)
 
 
 # ---------------------------------------------------------------------------
@@ -621,15 +636,16 @@ SIMHASH_WIDE_BITS = 64
 X6_64_HAMMING_K = 3
 
 
-def simhash_codes_wide(spark, sf_dir, bits: int = SIMHASH_WIDE_BITS) -> DataFrame:
-    """(doc_id, simhash64): up-to-64-bit SimHash — code bit j is the
+def simhash_codes_wide(spark, sf_dir) -> DataFrame:
+    """(doc_id, simhash64): 64-bit SimHash — code bit j is the
     per-doc majority vote over tokens of bit j of the token-md5's 64-bit
     prefix.  Same two-base-conversions-per-token shape as the 16-bit
     demo: bits 0-3 come from the 16th hex digit, bits 4-63 from the
     60-bit value of digits 1-15; all bit extraction is shiftright/mod
     arithmetic inside codegen, and the vote aggregation is map-side
-    combinable (the only shuffle carries `bits` partial sums per doc)."""
-    assert 4 <= bits <= 64
+    combinable (the only shuffle carries 64 partial sums per doc).  The
+    reference builder the scan-side kernel (simhash64_col) is
+    parity-tested against."""
     d = read_table(spark, sf_dir, "documents").repartition(d_spark_parallelism(spark), "doc_id")
     tok = (
         d.select("doc_id", F.explode(F.split(_norm_text(F.col("text")), " ")).alias("t"))
@@ -645,13 +661,13 @@ def simhash_codes_wide(spark, sf_dir, bits: int = SIMHASH_WIDE_BITS) -> DataFram
         return (F.shiftright("p4", j) if j < 4 else F.shiftright("h60", j - 4)) % 2
 
     votes = tok.groupBy("doc_id").agg(
-        *[F.sum(2 * bit(j) - 1).alias(f"v{j}") for j in range(bits)]
+        *[F.sum(2 * bit(j) - 1).alias(f"v{j}") for j in range(SIMHASH_WIDE_BITS)]
     )
     # assemble with bitwise OR of shifted bits, not +: bit 63 is the sign
     # bit of a signed BIGINT — shiftleft wraps (Java semantics) where an
     # arithmetic sum would overflow under ANSI
     code = F.lit(0).cast("bigint")
-    for j in range(bits):
+    for j in range(SIMHASH_WIDE_BITS):
         code = code.bitwiseOR(
             F.when(F.col(f"v{j}") > 0, F.shiftleft(F.lit(1).cast("bigint"), j)).otherwise(
                 F.lit(0).cast("bigint")
@@ -721,13 +737,15 @@ def simhash64_col(text_col) -> "F.Column":
     return _simhash64_udf(token_hashes)
 
 
-def _simhash_wide_sig_sql(bits: int = SIMHASH_WIDE_BITS) -> str:
+def _simhash_wide_sig_sql() -> str:
     def bit(j):
         return f"((p4 >> {j}) & 1)" if j < 4 else f"((h60 >> {j - 4}) & 1)"
 
-    votes = ",\n             ".join(f"SUM(2 * {bit(j)} - 1) AS v{j}" for j in range(bits))
+    votes = ",\n             ".join(
+        f"SUM(2 * {bit(j)} - 1) AS v{j}" for j in range(SIMHASH_WIDE_BITS)
+    )
     terms = []
-    for j in range(bits):
+    for j in range(SIMHASH_WIDE_BITS):
         if j == 63:
             # DuckDB raises on 1::BIGINT << 63 (overflow-checked shift);
             # spell the sign bit as the min-BIGINT literal instead
@@ -812,23 +830,7 @@ def x4_64(spark, sf_dir):
     "over 64-bit SimHash via 4 pigeonhole blocks of 16 bits — 65 536 "
     "buckets per block keeps the candidate space ~4·N²/65536 instead of "
     "the 16-bit demo's N²/256.  Same exact bit_count(xor) verify.",
-    f"""
-    WITH sig AS ({_simhash_wide_sig_sql()}),
-    blocks AS (
-      SELECT doc_id, simhash64, bl.blk,
-             (simhash64 >> ({SIMHASH_WIDE_BITS // (X6_64_HAMMING_K + 1)} * bl.blk))
-               & {(1 << (SIMHASH_WIDE_BITS // (X6_64_HAMMING_K + 1))) - 1} AS bval
-      FROM sig, (SELECT UNNEST([{", ".join(str(b) for b in range(X6_64_HAMMING_K + 1))}]) AS blk) bl),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                      a.simhash64 AS ha, b.simhash64 AS hb
-      FROM blocks a JOIN blocks b ON a.blk = b.blk AND a.bval = b.bval
-      WHERE a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
-    FROM cand
-    WHERE bit_count(xor(ha, hb)) <= {X6_64_HAMMING_K}
-    ORDER BY doc_a, doc_b
-    """,
+    _hamming_sql(_simhash_wide_sig_sql(), "simhash64", SIMHASH_WIDE_BITS, X6_64_HAMMING_K),
     ("dedup", "simhash", "hamming", "pipeline", "calibration"),
 )
 def x6_64(spark, sf_dir):
@@ -837,38 +839,7 @@ def x6_64(spark, sf_dir):
     # the session code index — so the two 64-bit queries and their plan
     # gates can never diverge
     sig = simhash_code_index(spark, sf_dir, wide=True)
-    block_bits = SIMHASH_WIDE_BITS // (X6_64_HAMMING_K + 1)
-    mask = (1 << block_bits) - 1
-    parts = [
-        sig.select(
-            "doc_id",
-            "simhash64",
-            F.lit(blk).alias("blk"),
-            F.shiftright("simhash64", block_bits * blk).bitwiseAND(F.lit(mask)).alias("bval"),
-        )
-        for blk in range(X6_64_HAMMING_K + 1)
-    ]
-    blocks = parts[0]
-    for p in parts[1:]:
-        blocks = blocks.unionAll(p)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.bval") == F.col("b.bval")))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash64").alias("ha"),
-            F.col("b.simhash64").alias("hb"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        cand.where(ham <= X6_64_HAMMING_K)
-        .select("doc_a", "doc_b", ham.cast("bigint").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return _hamming_pairs(sig, "simhash64", SIMHASH_WIDE_BITS, X6_64_HAMMING_K)
 
 
 # ---------------------------------------------------------------------------
@@ -883,9 +854,12 @@ X5_THRESHOLD = 0.5
     "missed pairs.  Plan: inverted-index self-join (docs pair once per "
     "shared shingle) -> map-side-combinable pair count -> size-filtered "
     "Jaccard.  The pair-row volume is sum(df^2) over shingles (2.8M at "
-    "sf0.1, measured; the prefix-filtered PPJoin variant produced 310k "
-    "candidate pairs whose verification re-join cost 16M rows — 10x "
-    "worse HERE, see ngram_jaccard_prefix_filtered for when it wins).",
+    "sf0.1, measured).  A PPJoin prefix filter measured 10x slower on "
+    "this corpus (310k candidate pairs whose verification re-join cost "
+    "16M rows) and 16x slower on a saturated bounded-vocabulary corpus "
+    "(r12: 522.8 s vs 33.1 s): prefix pruning only pays when document "
+    "frequencies vary across shingles, so it is not carried; the df-capped "
+    "variant (x5_capped) is the guard against a viral tail.",
     f"""
     WITH sh AS ({_SHINGLES_SQL}),
     ex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
@@ -925,58 +899,6 @@ def _index_join_intersections(ex: DataFrame) -> DataFrame:
     )
 
 
-def _prefix_filtered_intersections(ex: DataFrame, t: float) -> DataFrame:
-    """PPJoin-style alternative: order each doc's shingles globally by
-    (document-frequency, shingle), index only the first n - ceil(t*n) + 1
-    — any pair with Jaccard >= t provably collides inside both prefixes —
-    then verify candidates against the full index.
-
-    Use when sum(df²) explodes from a heavy TAIL (few viral shingles over
-    a rare-shingle bulk): the candidate join touches only the rare-shingle
-    prefix slice.  On THIS corpus (df <= 25, near-dup-rich) it measured
-    10x slower than _index_join_intersections — 310k candidates whose
-    verification re-join expands to 16M rows vs 2.8M pair rows for the
-    plain index join.  On a shingle-SATURATED corpus it is far worse, not
-    better (r12 measured 522.8 s vs 33.1 s plain on the 10x bounded-vocab
-    decade, max_df 139 / high_frac 0.997): when every shingle is common,
-    each doc's "rarest" prefix entries are still high-df, so the prefix
-    self-join inherits the same df² blowup it exists to avoid — prefix
-    pruning needs df DIVERSITY, which neither tail shape of this corpus
-    family provides.  Equivalence is pinned by
-    test_x5_prefix_filter_equivalence."""
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "s")
-    prefix = (
-        ex.join(dfreq, "s")
-        .select("doc_id", "s", F.row_number().over(w).alias("r"))
-        .join(sizes, "doc_id")
-        .where(F.col("r") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1)
-        .select("doc_id", "s", "n")
-    )
-    a = prefix.select(F.col("doc_id").alias("doc_a"), "s", F.col("n").alias("na"))
-    b = prefix.select(F.col("doc_id").alias("doc_b"), "s", F.col("n").alias("nb"))
-    cand = (
-        a.join(b, "s")
-        .where(
-            (F.col("doc_a") < F.col("doc_b"))
-            # size filter: J >= t forces min(na,nb)/max(na,nb) >= t
-            & (F.col("nb") >= F.lit(t) * F.col("na"))
-            & (F.col("na") >= F.lit(t) * F.col("nb"))
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    ea = ex.select(F.col("doc_id").alias("doc_a"), "s")
-    eb = ex.select(F.col("doc_id").alias("doc_b"), "s")
-    return (
-        cand.join(ea, "doc_a")
-        .join(eb, ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-
-
 def _jaccard_from_intersections(ex: DataFrame, inter: DataFrame, t: float = X5_THRESHOLD) -> DataFrame:
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
@@ -989,12 +911,6 @@ def _jaccard_from_intersections(ex: DataFrame, inter: DataFrame, t: float = X5_T
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
         .orderBy("doc_a", "doc_b")
     )
-
-
-def ngram_jaccard_prefix_filtered(spark, sf_dir, t: float = X5_THRESHOLD) -> DataFrame:
-    """x5's scale-path twin (see _prefix_filtered_intersections)."""
-    ex = shingle_index(spark, sf_dir)
-    return _jaccard_from_intersections(ex, _prefix_filtered_intersections(ex, t), t)
 
 
 # Document-frequency cap for the capped variant's index join.  Sizing: the
@@ -1164,26 +1080,25 @@ def _max_df(spark, sf_dir) -> int | None:
     QUERIES["x5_ngram_jaccard"].oracle,
     ("dedup", "jaccard", "df-cap", "pipeline"),
 )
-def x5_capped(
-    spark, sf_dir, cap: int = X5_MAX_DF, high_frac_max: float = X5_HIGH_DF_FRAC
-):
+def x5_capped(spark, sf_dir):
     # Measured dispatch (same pattern as the reach strategies and d8),
     # TWO cached catalog scalars over the dfreq table (already a required
     # input of either plan):
     # - max df within the cap → path 2 and the split verify are provably
     #   empty; the capped machinery would only re-derive the plain index
     #   join at ~3x the cost (measured 4.6 s vs 1.2 s at sf0.1) → plain.
-    # - max df OVER the cap but high-df occupancy above ``high_frac_max``
+    # - max df OVER the cap but high-df occupancy above X5_HIGH_DF_FRAC
     #   → the viral-tail premise is false (the high slice is the bulk of
     #   the index) and the capped plan degenerates (r11 scale-slope synth
     #   corpus: 403.6 s capped vs 42.0 s plain at 10x sf0.1) → plain.
     # - genuine viral tail (max df over cap, occupancy small) → capped.
-    # ``cap``/``high_frac_max`` are parameterized so tests can bind them
-    # around the corpus stats and exercise THIS function's capped branch,
-    # not just the helper (test_x5_capped_dispatch_capped_branch).
+    # Both bounds are module constants read HERE, at call time, so tests
+    # drive this function's capped branch by monkeypatching them around
+    # the corpus stats (test_x5_capped_dispatch_capped_branch).
+    cap = X5_MAX_DF
     ex = shingle_index(spark, sf_dir)
     max_df, high_frac = _df_stats(spark, sf_dir, cap)
-    if max_df is not None and max_df > cap and high_frac <= high_frac_max:
+    if max_df is not None and max_df > cap and high_frac <= X5_HIGH_DF_FRAC:
         inter = _capped_intersections(ex, X5_THRESHOLD, cap)
     else:
         inter = _index_join_intersections(ex)
@@ -1193,132 +1108,49 @@ def x5_capped(
 # ---------------------------------------------------------------------------
 # x7: near-dup cluster assignment (connected components over x3 pairs)
 # ---------------------------------------------------------------------------
-def near_dup_clusters(
-    pairs: DataFrame,
-    max_rounds: int = 20,
-    strategy: str = "auto",
-    local_max_pairs: int | None = None,
-    pairs_materialized: bool = False,
-) -> DataFrame:
+# Driver-memory bound for the union-find side: collect() materializes
+# PySpark Row objects (~100+ bytes each, not 16), plus the union-find
+# dict and the labels list — ~100-200 MB at this bound, safe on any
+# reasonably-sized driver but far from free.  Raise only with the
+# driver's memory budget in hand.
+LOCAL_CLUSTER_MAX_PAIRS = 200_000
+# Round cap of the star contraction: O(log² n) rounds suffice for any
+# graph, so running out means pathological input, and it raises.
+STAR_MAX_ROUNDS = 20
+
+
+def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components of the near-dup pair graph: every member's
     cluster_id is the MIN doc_id reachable through near-dup edges — the
     step a real dedup pipeline needs between pair generation (x3/x5/x6)
     and keep-one-per-cluster filtering (pairs alone can't pick canonicals:
     A~B, B~C must collapse to ONE cluster even though A~C was never
-    emitted).
+    emitted).  Every endpoint of the input gets a label, self-pairs
+    included.
 
-    Strategies (equivalence-tested against each other and a union-find
-    oracle on chain + random graphs):
-    - ``"local"`` — driver-side union-find over the collected pair list.
-      Exact, and free of the per-round scheduling latency that dominates
-      the distributed loops when the pair graph is small (a few distributed
-      rounds cost ~0.5 s each; a million-edge union-find costs
-      milliseconds).  Only valid under ``LOCAL_CLUSTER_MAX_PAIRS``.
-    - ``"propagate"`` — hash-min label propagation: push labels across
-      edges, fold with MIN (map-side combinable), converge when no label
-      changes.  Rounds = component diameter: right for the near-dup
-      regime, where components are shallow (dozens of docs).  RAISES
-      RuntimeError if ``max_rounds`` rounds don't converge — never
-      silently returns truncated labels.
-    - ``"star"`` — alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-      O(log² n) rounds regardless of diameter — the 100 TB path for
-      adversarial chain-shaped components.
-    - ``"auto"`` (default) — measured dispatch, the same pattern as the
-      reach one-task strategy (plans/reach.py) and the x5_capped max-df
-      dispatch: count the (already-materialized) pair list; under the
-      local bound run union-find on the driver, else propagate with a
-      star fallback.  At corpus scale the near-dup pair graph of a
-      100 TB corpus far exceeds the bound and always takes the
-      distributed path.
+    ``pairs`` (doc_a, doc_b) must be a materialized pair graph (a
+    checkpoint, a cached session index like _pair_graph, or local rows):
+    the size probe and the chosen side both read it.
 
-    localCheckpoint per round cuts lineage exactly like the reach
-    frontier loop (plans/reach.py)."""
-    if strategy not in ("auto", "local", "propagate", "star"):
-        raise ValueError(f"near_dup_clusters: unknown strategy {strategy!r}")
-    if strategy == "star":
-        return _clusters_star(pairs, max_rounds)
-    if strategy in ("local", "auto"):
-        bound = LOCAL_CLUSTER_MAX_PAIRS if local_max_pairs is None else local_max_pairs
-        p = pairs.select("doc_a", "doc_b")
-        if not pairs_materialized:
-            # skipped when the caller hands in an already-checkpointed pair
-            # graph (the session-cached _pair_graph) — re-checkpointing
-            # would copy the pair list a second time per call
-            p = p.localCheckpoint(eager=False)
-        # Dispatch probe: limit(bound+1).count() ships ONE number to the
-        # driver — never the rows — so the over-bound (corpus-scale) path
-        # pays no 100-200 MB Row transfer just to learn it is over bound;
-        # the under-bound path then collects from the cache the probe
-        # materialized (lazy checkpoint).  A plain count() would scan the
-        # full pair set even when bound+1 rows already decide.
-        n_probe = p.limit(bound + 1).count()
-        if n_probe <= bound:
-            return _clusters_local_rows(p.collect(), p.sparkSession)
-        if strategy == "local":
-            raise RuntimeError(
-                f"near_dup_clusters(local): over {bound} pairs exceeds the "
-                f"local bound; use a distributed strategy"
-            )
-        pairs = p  # auto over the bound: fall through, reuse materialization
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).localCheckpoint()
-    labels = (
-        e.select(F.col("a").alias("doc_id")).distinct().withColumn("label", F.col("doc_id"))
-    ).localCheckpoint()
-    converged = False
-    for _ in range(max_rounds):
-        nbr = e.join(labels, e["a"] == labels["doc_id"]).select(
-            F.col("b").alias("doc_id"), "label", F.lit(False).alias("is_old")
-        )
-        # Convergence probe fused into the round's ONE job: tag the prior
-        # labels through the min-agg (every doc_id has exactly one prior
-        # row, so min(label WHERE is_old) recovers it), then count
-        # label < old_label as an Observation metric of the checkpoint
-        # action itself.  The previous shape paid a SECOND job per round —
-        # a full join + limit(1).count() against the old labels — and
-        # rounds × per-job floor dominates the cluster queries' cost.
-        # min-agg labels are monotonically non-increasing, so "changed"
-        # is exactly label < old_label.
-        tagged = labels.select("doc_id", "label", F.lit(True).alias("is_old")).unionAll(
-            nbr
-        )
-        agg = tagged.groupBy("doc_id").agg(
-            F.min("label").alias("label"),
-            F.min(F.when(F.col("is_old"), F.col("label"))).alias("old_label"),
-        )
-        obs = Observation()
-        labels = (
-            agg.observe(
-                obs,
-                F.sum((F.col("label") < F.col("old_label")).cast("long")).alias(
-                    "n_changed"
-                ),
-            )
-            .select("doc_id", "label")
-            .localCheckpoint()  # eager: the action that fires the metric
-        )
-        # `or 0`: SUM over ZERO rows is NULL, and None == 0 is False — an
-        # empty label table (empty pair graph) must converge on round 1,
-        # not spin max_rounds into a spurious non-convergence error
-        if (obs.get["n_changed"] or 0) == 0:
-            converged = True
-            break
-    if not converged:
-        if strategy == "auto":
-            return _clusters_star(pairs, max_rounds)
-        raise RuntimeError(
-            f"near_dup_clusters: label propagation did not converge in "
-            f"{max_rounds} rounds (component diameter exceeds max_rounds); "
-            f"use strategy='star' for deep components"
-        )
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-def _clusters_local(pairs: DataFrame) -> DataFrame:
-    """Driver-side union-find over a BOUNDED pair DataFrame (collect is
-    gated by LOCAL_CLUSTER_MAX_PAIRS in near_dup_clusters)."""
-    return _clusters_local_rows(pairs.collect(), pairs.sparkSession)
+    One size dispatch, the same shape as reach's (plans/reach.py): one
+    ``limit(bound+1).count()`` probe against LOCAL_CLUSTER_MAX_PAIRS,
+    read at call time.  It ships ONE number to the driver — never the
+    rows — so an over-bound graph pays no Row transfer just to learn it
+    is over bound.
+    - At or below the bound: driver-side union-find over the collected
+      pair list.  Exact, and free of the per-round scheduling latency
+      that dominates a distributed loop on a small graph (a few rounds
+      cost ~0.5 s each; a million-edge union-find costs milliseconds).
+    - Above it: alternating large-star/small-star contraction
+      (_clusters_star) — O(log² n) rounds regardless of component
+      diameter, so a chain-shaped component costs no more rounds than a
+      clique.  The near-dup pair graph of a 100 TB corpus always takes
+      this side."""
+    p = pairs.select("doc_a", "doc_b")
+    bound = LOCAL_CLUSTER_MAX_PAIRS
+    if p.limit(bound + 1).count() <= bound:
+        return _clusters_local_rows(p.collect(), p.sparkSession)
+    return _clusters_star(p)
 
 
 def _clusters_local_rows(rows, spark) -> DataFrame:
@@ -1346,20 +1178,13 @@ def _clusters_local_rows(rows, spark) -> DataFrame:
     return spark.createDataFrame(labels, "doc_id BIGINT, cluster_id BIGINT")
 
 
-# Driver-memory bound for the local strategy: collect() materializes
-# PySpark Row objects (~100+ bytes each, not 16), plus the union-find
-# dict and the labels list — ~100-200 MB at this bound, safe on any
-# reasonably-sized driver but far from free.  Raise only with the
-# driver's memory budget in hand.
-LOCAL_CLUSTER_MAX_PAIRS = 200_000
-
-
-def _clusters_star(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
+def _clusters_star(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star/small-star edge
-    contraction — O(log² n) rounds independent of component diameter.
+    contraction (Kiveris et al., "Connected Components in MapReduce and
+    Beyond") — O(log² n) rounds independent of component diameter.
 
     Each round rewrites the undirected edge set (kept symmetric+deduped as
-    its canonical form):
+    its canonical form, self-loops dropped):
     - large-star: every node u attaches its strictly-LARGER neighbors to
       m(u) = min(Γ(u) ∪ {u});
     - small-star: every node u attaches its smaller neighbors AND itself
@@ -1367,17 +1192,22 @@ def _clusters_star(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     Both steps preserve connectivity and monotonically pull components
     toward stars rooted at the component minimum; convergence = the edge
     set stops changing, at which point every node's m(u) IS its component
-    min.  All steps are plain groupBy-min + join — map-side combinable,
-    no driver state."""
+    min.  A node with no edge but a self-pair is its own component: the
+    labels are left-joined back onto every input endpoint.  All steps are
+    plain groupBy-min + join — map-side combinable, no driver state.
+    Raises RuntimeError after 2·STAR_MAX_ROUNDS phases without
+    convergence."""
     e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    nodes = e.select(F.col("a").alias("doc_id")).union(e.select("b")).distinct()
     e = (
-        e.where(F.col("a") != F.col("b"))
-        .unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
     )
     n_e = e.count()
-    for _ in range(2 * max_rounds):
+    rounds = STAR_MAX_ROUNDS
+    for _ in range(2 * rounds):
         # a path graph is a fixed point of small-star ALONE, so convergence
         # requires zero change across BOTH phases of one iteration
         changed_any = 0
@@ -1404,12 +1234,9 @@ def _clusters_star(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             # the fresh checkpoint), then ONE one-sided exceptAll only on
             # a count tie — both edge sets are distinct()-canonical, so
             # |new| = |old| and new \ old = ∅ together imply equality.
-            # The previous probe ran TWO full-shuffle exceptAll jobs per
-            # phase (4 per round) unconditionally; while the edge set is
-            # still shrinking the count differs and the phase pays zero
-            # exceptAll, so only the final (converged) round runs one per
-            # phase.  Chain-fixture equivalence vs the union-find oracle
-            # stays green (test_near_dup_clusters_chain_convergence).
+            # While the edge set is still shrinking the count differs and
+            # the phase pays zero exceptAll, so only the final (converged)
+            # round runs one per phase.
             n_new = new_e.count()
             if n_new != n_e or new_e.exceptAll(e).limit(1).count() > 0:
                 changed_any += 1
@@ -1419,12 +1246,14 @@ def _clusters_star(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     else:
         raise RuntimeError(
             f"near_dup_clusters(star): edge set did not stabilize in "
-            f"{2 * max_rounds} star rounds — pathological input"
+            f"{2 * rounds} star rounds — pathological input"
         )
     labels = e.groupBy("a").agg(F.min("b").alias("mb")).select(
-        "a", F.least("a", "mb").alias("m")
+        F.col("a").alias("doc_id"), F.least("a", "mb").alias("m")
     )
-    return labels.select(F.col("a").alias("doc_id"), F.col("m").alias("cluster_id"))
+    return nodes.join(labels, "doc_id", "left").select(
+        "doc_id", F.coalesce("m", "doc_id").alias("cluster_id")
+    )
 
 
 def _closure_cte(pairs_oracle: str) -> str:
@@ -1450,9 +1279,10 @@ _CLUSTER_LABELS = (
 
 @_register(
     "x7_near_dup_clusters",
-    "Near-dup CLUSTERS from the x3 pair list: connected components via "
-    "iterative hash-min label propagation (cluster_id = min doc_id in the "
-    "component).  Completes the dedup story — pairs alone cannot pick "
+    "Near-dup CLUSTERS from the x3 pair list: connected components "
+    "(cluster_id = min doc_id in the component) through one size "
+    "dispatch — driver-local union-find up to a pair bound, star "
+    "contraction above it.  Completes the dedup story — pairs alone cannot pick "
     "canonicals when A~B and B~C but A~C was never emitted.  Oracle: "
     "recursive-CTE transitive label closure + MIN.",
     f"""
@@ -1462,9 +1292,7 @@ _CLUSTER_LABELS = (
     ("dedup", "clustering", "graph", "pipeline"),
 )
 def x7(spark, sf_dir):
-    return near_dup_clusters(
-        _pair_graph(spark, sf_dir, "x3"), pairs_materialized=True
-    ).orderBy("doc_id")
+    return near_dup_clusters(_pair_graph(spark, sf_dir, "x3")).orderBy("doc_id")
 
 
 def _pair_graph(spark, sf_dir, source: str) -> DataFrame:
@@ -1479,9 +1307,7 @@ def _pair_graph(spark, sf_dir, source: str) -> DataFrame:
     def build():
         if source == "x3":
             ex = shingle_index(spark, sf_dir)
-            pairs = lsh_jaccard_pairs(
-                ex, sig=minhash_sig_index(spark, sf_dir, N_MINHASH)
-            )
+            pairs = lsh_jaccard_pairs(ex, minhash_sig_index(spark, sf_dir, N_MINHASH))
         elif source == "x5_capped":
             pairs = QUERIES["x5_ngram_jaccard_capped"].build(spark, sf_dir)
         elif source == "x6_64":
@@ -1511,9 +1337,7 @@ def _pair_graph(spark, sf_dir, source: str) -> DataFrame:
     ("dedup", "clustering", "simhash", "graph", "pipeline"),
 )
 def x7_hamming(spark, sf_dir):
-    return near_dup_clusters(
-        _pair_graph(spark, sf_dir, "x6_64"), pairs_materialized=True
-    ).orderBy("doc_id")
+    return near_dup_clusters(_pair_graph(spark, sf_dir, "x6_64")).orderBy("doc_id")
 
 
 @_register(
@@ -1535,9 +1359,7 @@ def x7_hamming(spark, sf_dir):
     ("dedup", "clustering", "jaccard", "graph", "pipeline"),
 )
 def x7_jaccard(spark, sf_dir):
-    return near_dup_clusters(
-        _pair_graph(spark, sf_dir, "x5_capped"), pairs_materialized=True
-    ).orderBy("doc_id")
+    return near_dup_clusters(_pair_graph(spark, sf_dir, "x5_capped")).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1660,9 +1482,7 @@ def x8(spark, sf_dir):
     ("dedup", "clustering", "pipeline", "apply"),
 )
 def p7(spark, sf_dir):
-    clusters = near_dup_clusters(
-        _pair_graph(spark, sf_dir, "x3"), pairs_materialized=True
-    )
+    clusters = near_dup_clusters(_pair_graph(spark, sf_dir, "x3"))
     d = read_table(spark, sf_dir, "documents").select("doc_id")
     canonical = F.coalesce("cluster_id", "doc_id")
     return (
@@ -1876,15 +1696,36 @@ def _span_dup(spans):
     return out.localCheckpoint(eager=False).orderBy("doc_id", "pos")
 
 
-_X9_ORACLE = f"""
+def _span_table(spark, sf_dir, sample: tuple = ()) -> DataFrame:
+    """The pinned (doc_id, pos, h60, hb) span table every x9 plan starts
+    from — ONE builder for x9, x9_sampled, x9_prefiltered and the
+    prefilter measurement.  The span kernel runs wide via _parallel_docs
+    and executes ONCE (lazy checkpoint: the phase-1 aggregate and the
+    semi-join consume different subtrees, so exchange reuse could never
+    dedupe it).  ``sample`` keeps only spans whose md5 starts with one of
+    those hex nibbles — a CONTENT-keyed filter between the hash
+    projection and the exchange (x9_sampled)."""
+    d = _parallel_docs(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    spans = span_rows(d)
+    if sample:
+        spans = spans.where(F.substring("h", 1, 1).isin(*sample))
+    return _pack_spans(spans).localCheckpoint(eager=False)
+
+
+def _x9_oracle(sample: tuple = ()) -> str:
+    """The x9-family oracle — ONE SQL body for x9 (and x9_prefiltered,
+    which shares its answer) and x9_sampled (``sample`` nibbles)."""
+    keep = f" WHERE SUBSTRING(h, 1, 1) IN {sample}" if sample else ""
+    return f"""
     WITH toks AS (
       SELECT doc_id, string_split_regex(TRIM(text), '[ \\t\\n\\x0B\\f\\r]+') AS tk
       FROM documents WHERE TRIM(text) <> ''),
-    sp AS (
+    spans AS (
       SELECT doc_id, CAST(i AS INT) AS pos,
              md5(array_to_string(tk[i:i+{SPAN_W - 1}], ' ')) AS h
       FROM toks, UNNEST(generate_series(1, LEN(tk) - {SPAN_W} + 1)) AS t(i)
       WHERE LEN(tk) >= {SPAN_W}),
+    sp AS (SELECT * FROM spans{keep}),
     dup AS (
       SELECT h, CAST(COUNT(*) AS INT) AS n_occ
       FROM sp GROUP BY h HAVING MIN(doc_id) <> MAX(doc_id))
@@ -1892,6 +1733,11 @@ _X9_ORACLE = f"""
     FROM sp JOIN dup USING (h)
     ORDER BY sp.doc_id, sp.pos
     """
+
+
+# hash-mod sampling rate for x9_sampled: spans whose first hex nibble is
+# 0-3 = exactly 4/16 of the md5 space -> a 1/4 shuffle
+X9_SAMPLE_NIBBLES = ("0", "1", "2", "3")
 
 
 @_register(
@@ -1921,27 +1767,16 @@ _X9_ORACLE = f"""
     "duplicated span is sampled in ALL its occurrences or none; a "
     "positional stride would sample different windows of the same shared "
     "region in docs whose offsets differ mod s and miss the match).",
-    _X9_ORACLE,
+    _x9_oracle(),
     ("dedup", "spans", "pipeline"),
 )
 def x9(spark, sf_dir):
-    # sf decomposition and plan shape: the span kernel (tokenize ->
-    # position explode -> md5 projection, all whole-stage codegen) runs
-    # wide via _parallel_docs and executes ONCE (checkpoint-pinned: the
-    # aggregate and the semi-join consume different subtrees, so
-    # exchange reuse can never dedupe it — the r8 judge's one plan
-    # defect).  The only corpus-sized exchange is phase 1's partial->
-    # final aggregate on the 60-bit key; the join-back never shuffles
-    # the span table (broadcast Bloom semi-join + candidate-sized
-    # equi-join), at ANY corpus size — see _span_dup.
-    d = _parallel_docs(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    spans = _pack_spans(span_rows(d)).localCheckpoint(eager=False)
-    return _span_dup(spans)
-
-
-# hash-mod sampling rate for x9_sampled: spans whose first hex nibble is
-# 0-3 = exactly 4/16 of the md5 space -> a 1/4 shuffle
-X9_SAMPLE_NIBBLES = ("0", "1", "2", "3")
+    # the span kernel executes once (pinned by _span_table); the only
+    # corpus-sized exchange is phase 1's partial->final aggregate on the
+    # 60-bit key, and the join-back never shuffles the span table
+    # (broadcast Bloom semi-join + candidate-sized window) at ANY corpus
+    # size — see _span_dup
+    return _span_dup(_span_table(spark, sf_dir))
 
 
 @_register(
@@ -1969,32 +1804,11 @@ X9_SAMPLE_NIBBLES = ("0", "1", "2", "3")
     "the sample).  An engine-side size dispatch would silently change "
     "what a declared query RETURNS as the corpus grows — the one thing "
     "a fixed oracle contract exists to forbid.",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(TRIM(text), '[ \\t\\n\\x0B\\f\\r]+') AS tk
-      FROM documents WHERE TRIM(text) <> ''),
-    sp AS (
-      SELECT doc_id, CAST(i AS INT) AS pos,
-             md5(array_to_string(tk[i:i+{SPAN_W - 1}], ' ')) AS h
-      FROM toks, UNNEST(generate_series(1, LEN(tk) - {SPAN_W} + 1)) AS t(i)
-      WHERE LEN(tk) >= {SPAN_W}),
-    sps AS (SELECT * FROM sp WHERE SUBSTRING(h, 1, 1) IN {X9_SAMPLE_NIBBLES}),
-    dup AS (
-      SELECT h, CAST(COUNT(*) AS INT) AS n_occ
-      FROM sps GROUP BY h HAVING MIN(doc_id) <> MAX(doc_id))
-    SELECT sps.doc_id, sps.pos, sps.h, dup.n_occ
-    FROM sps JOIN dup USING (h)
-    ORDER BY sps.doc_id, sps.pos
-    """,
+    _x9_oracle(X9_SAMPLE_NIBBLES),
     ("dedup", "spans", "sampling", "pipeline"),
 )
 def x9_sampled(spark, sf_dir):
-    d = _parallel_docs(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    spans = (
-        _pack_spans(span_rows(d).where(F.substring("h", 1, 1).isin(*X9_SAMPLE_NIBBLES)))
-        .localCheckpoint(eager=False)
-    )
-    return _span_dup(spans)
+    return _span_dup(_span_table(spark, sf_dir, X9_SAMPLE_NIBBLES))
 
 
 @_register(
@@ -2023,16 +1837,14 @@ def x9_sampled(spark, sf_dir):
     "content-keyed so a surviving hash keeps ALL its occurrences.",
     # the oracle IS x9's oracle — the prefilter is answer-preserving by
     # construction, which is the declared contract being tested
-    _X9_ORACLE,
+    _x9_oracle(),
     ("dedup", "spans", "pipeline"),
 )
 def x9_prefiltered(spark, sf_dir):
     # shares x9's entire plan since r13 (see docstring): kernel pinned,
     # narrow-key candidate aggregate, structural Bloom semi-join, exact
     # md5 boundary
-    d = _parallel_docs(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    spans = _pack_spans(span_rows(d)).localCheckpoint(eager=False)
-    return _span_dup(spans)
+    return _span_dup(_span_table(spark, sf_dir))
 
 
 def x9_prefilter_reduction(spark, sf_dir) -> dict:
@@ -2043,8 +1855,7 @@ def x9_prefilter_reduction(spark, sf_dir) -> dict:
     records.  Built from the SAME helpers the serving path uses
     (_span_dup's phase-1 shape), so the evidence always measures the
     shipped plan."""
-    d = _parallel_docs(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    spans = _pack_spans(span_rows(d)).localCheckpoint(eager=False)
+    spans = _span_table(spark, sf_dir)
     pre = _span_candidates(spans).localCheckpoint(eager=False)
     dup_h = (
         pre.groupBy("hb")

@@ -294,64 +294,12 @@ def d7(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # D8 exact percentile / median (A4)
 # ---------------------------------------------------------------------------
-def grouped_rank_ranged(df, keys: list[str], value: str):
-    """Per-group 0-based rank of ``value`` WITHOUT a per-group window.
-
-    ``row_number() OVER (PARTITION BY g ORDER BY v)`` hashes every row of a
-    group onto ONE reducer — with few groups (d8 has 3 return flags) that
-    is a single-task sort of the whole table, a real collapse at 100 TB.
-    Here the sort parallelism is independent of group count:
-
-    1. repartitionByRange(keys..., value) + sortWithinPartitions: each
-       partition holds a contiguous (group, value) range, sorted.
-    2. per-(partition, group) counts (tiny) → two prefix sums: __start
-       (rows of earlier groups within the partition) and __off (the
-       group's rows in earlier partitions).
-    3. rank = in-partition row number − __start + __off, all JVM-side
-       (same mono-id bit layout as plans/graph_build.assign_dense_index).
-
-    Returns df + columns __rank (0-based within group) and __n (group
-    size).  localCheckpoint pins the sampled range boundaries so the
-    counts job and the main job see identical partitions."""
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(npart, *keys, value)
-        .sortWithinPartitions(*keys, value)
-        .select(
-            F.spark_partition_id().alias("__pid"),
-            F.monotonically_increasing_id().alias("__mid"),
-            "*",
-        )
-        .localCheckpoint()
-    )
-    counts = ranged.groupBy("__pid", *keys).agg(F.count(F.lit(1)).alias("__cnt"))
-    w_in_pid = (
-        Window.partitionBy("__pid").orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_in_grp = (
-        Window.partitionBy(*keys).orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_grp = Window.partitionBy(*keys)
-    offs = counts.select(
-        "__pid",
-        *keys,
-        F.coalesce(F.sum("__cnt").over(w_in_pid), F.lit(0)).alias("__start"),
-        F.coalesce(F.sum("__cnt").over(w_in_grp), F.lit(0)).alias("__off"),
-        F.sum("__cnt").over(w_grp).alias("__n"),
-    )
-    row_in_part = F.col("__mid") - F.col("__pid").cast("long") * F.lit(1 << 33)
-    return (
-        ranged.join(F.broadcast(offs), ["__pid", *keys])
-        .withColumn("__rank", row_in_part - F.col("__start") + F.col("__off"))
-        .drop("__pid", "__mid", "__start", "__off")
-    )
-
-
 @_register(
     "d8_median",
     "Exact median per group — the reference uses np.median for summary "
     "stats (precompute_poi_reach.py:206-207); engine computes it exactly "
-    "via a parallel ranged rank, never approx, for oracle parity.",
+    "from an approx_percentile bracket plus an exact in-bracket sort, "
+    "never approx, for oracle parity.",
     """
     SELECT l_returnflag, ROUND(MEDIAN(l_extendedprice), 4) AS med_price
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
@@ -413,61 +361,6 @@ def d8(spark, sf_dir):
     return agg.select(
         "l_returnflag", F.round(med, 4).alias("med_price")
     ).orderBy("l_returnflag")
-
-
-def grouped_prefix_sum_ranged(df, keys: list[str], order_col: str, measure: str, out: str = "cum"):
-    """Per-group running SUM(measure) in ``order_col`` order WITHOUT a
-    per-group window — the W1 running-total twin of grouped_rank_ranged,
-    for the regime where one group outgrows a task (e.g. p3's packing if
-    a single source dominated the corpus):
-
-    1. range-repartition by (keys, order_col), sort within partitions;
-    2. per-(partition, group) measure totals (tiny) → prefix offsets of
-       earlier partitions per group;
-    3. local running sum over the (partition, group) slice — bounded by
-       the partition size, so every task does bounded work — plus the
-       broadcast offset.
-
-    Ties in order_col that straddle a partition boundary make the running
-    total order-ambiguous exactly as they do for any non-unique sort; use
-    a unique order column.  Returns df + ``out`` (inclusive running sum)."""
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(npart, *keys, order_col)
-        .sortWithinPartitions(*keys, order_col)
-        .select(F.spark_partition_id().alias("__pid"), "*")
-        .localCheckpoint()
-    )
-    part_sums = ranged.groupBy("__pid", *keys).agg(F.sum(measure).alias("__s"))
-    w_prev = (
-        Window.partitionBy(*keys).orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = part_sums.select(
-        "__pid", *keys, F.coalesce(F.sum("__s").over(w_prev), F.lit(0)).alias("__off")
-    )
-    w_local = (
-        Window.partitionBy("__pid", *keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        ranged.join(F.broadcast(offs), ["__pid", *keys])
-        .withColumn(out, F.sum(measure).over(w_local) + F.col("__off"))
-        .drop("__pid", "__off")
-    )
-
-
-def grouped_median_ranged(df, keys: list[str], value: str, out: str = "median"):
-    """Exact per-group median on grouped_rank_ranged — the few-groups ×
-    huge-table scale path for d8's operator (no per-group single-reducer
-    sort).  Equivalence with the window form is pinned by
-    test_grouped_median_ranged_equivalence."""
-    ranked = grouped_rank_ranged(df, keys, value)
-    rn = F.col("__rank") + 1  # 1-based
-    mid = ranked.where(
-        (rn == F.floor((F.col("__n") + 1) / 2)) | (rn == F.ceil((F.col("__n") + 1) / 2))
-    )
-    return mid.groupBy(*keys).agg(F.avg(value).alias(out))
 
 
 # ---------------------------------------------------------------------------

@@ -1060,7 +1060,7 @@ def v8(spark, sf_dir):
     from .dedup import near_dup_clusters
 
     return (
-        near_dup_clusters(_pairs_v7(spark, sf_dir), pairs_materialized=True)
+        near_dup_clusters(_pairs_v7(spark, sf_dir))
         .select(F.col("doc_id").alias("vec_id"), "cluster_id")
         .orderBy("vec_id")
     )
@@ -2986,7 +2986,7 @@ def v29(spark, sf_dir):
 def v15(spark, sf_dir):
     from .dedup import near_dup_clusters
 
-    clusters = near_dup_clusters(_pairs_v7(spark, sf_dir), pairs_materialized=True).select(
+    clusters = near_dup_clusters(_pairs_v7(spark, sf_dir)).select(
         F.col("doc_id").alias("vec_id"), "cluster_id"
     )
     e = _emb(spark, sf_dir).select("vec_id")

@@ -391,10 +391,8 @@ PACK_BUDGET_TOKENS = 2048
     ("text", "packing", "pipeline"),
 )
 def p3(spark, sf_dir):
-    # If one source ever dominated the corpus (a single group bigger than
-    # a task), swap the window for relational.grouped_prefix_sum_ranged —
-    # the same running total with group-count-independent parallelism
-    # (equivalence-tested).
+    # One window per source: a source bigger than one task would funnel
+    # onto one reducer (the per-group window's known scale wall).
     from pyspark.sql import Window
 
     d = read_table(spark, sf_dir, "documents")
@@ -585,7 +583,7 @@ CHUNK_DF_K = 3  # corpus frequency at/above which a chunk is boilerplate
 BP_COLLECT_BOUND = 100_000
 
 
-_chunk_udfs: dict = {}  # per-width pandas UDFs, built lazily (need a session)
+_chunk_udf = None  # built lazily: pandas_udf needs an active session
 
 
 def _chunk_batch(norm, w: int):
@@ -618,53 +616,41 @@ def _chunk_batch(norm, w: int):
     return pd.DataFrame({"chunks": chunks_out, "cks": cks_out})
 
 
-def chunk_struct_col(text_col, w: int = CHUNK_W):
+def chunk_struct_col(text_col):
     """struct<chunks: array<string>, cks: array<string>> of a text column
     as a scan-side Arrow-batched projection (the simhash64_col pattern).
 
     Replaces the previous double formulation — a Java
-    ``\\S+( \\S+){0,w-1}`` regexp_extract_all pass for the chunk array
+    ``\\S+( \\S+){0,4}`` regexp_extract_all pass for the chunk array
     plus per-chunk JVM md5s re-run by BOTH p5 passes — with one kernel
     evaluation that yields the chunk text AND its hash key together, so
     frequency counting and the rebuild can share a single computation."""
     from pyspark.sql.functions import pandas_udf
 
-    if w not in _chunk_udfs:
+    global _chunk_udf
+    if _chunk_udf is None:
 
         @pandas_udf("struct<chunks: array<string>, cks: array<string>>")
         def _f(norm):
-            return _chunk_batch(norm, w)
+            return _chunk_batch(norm, CHUNK_W)
 
-        _chunk_udfs[w] = _f
+        _chunk_udf = _f
     norm = F.regexp_replace(F.trim(F.lower(text_col)), r"\s+", " ")
-    return _chunk_udfs[w](norm)
+    return _chunk_udf(norm)
 
 
-def doc_chunks(spark, sf_dir, w: int = CHUNK_W):
+def doc_chunks(spark, sf_dir):
     """(doc_id, chunks array<string>, cks array<string>) — one kernel
     evaluation per document, shared by pass A and pass B via the caller's
     checkpoint."""
     d = read_table(spark, sf_dir, "documents")
-    cc = d.select("doc_id", chunk_struct_col(F.col("text"), w).alias("cc"))
+    cc = d.select("doc_id", chunk_struct_col(F.col("text")).alias("cc"))
     return cc.select(
         "doc_id", F.col("cc.chunks").alias("chunks"), F.col("cc.cks").alias("cks")
     )
 
 
-def boilerplate_chunks(spark, sf_dir, w: int = CHUNK_W, k: int = CHUNK_DF_K):
-    """Chunk hashes whose corpus frequency is >= k.  The only shuffle
-    carries (md5, partial_count) after map-side combine — never chunk text."""
-    ck = doc_chunks(spark, sf_dir, w).select(F.explode("cks").alias("ck"))
-    return ck.groupBy("ck").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") >= k)
-
-
-def chunk_dedup(
-    spark,
-    sf_dir,
-    w: int = CHUNK_W,
-    k: int = CHUNK_DF_K,
-    collect_bound: int = BP_COLLECT_BOUND,
-):
+def chunk_dedup(spark, sf_dir):
     """Per-doc boilerplate removal: (doc_id, n_chunks, n_removed, clean_text).
 
     One kernel evaluation, two consumers.  The (chunks, cks) arrays are
@@ -674,10 +660,11 @@ def chunk_dedup(
     set; pass B rebuilds each document from the same materialized arrays,
     dispatching on the measured size (the x5_capped/reach pattern):
 
-    - set size <= collect_bound (the common case — boilerplate is a
-      heavy-hitter set): keys become an InSet predicate over the
-      PRECOMPUTED cks (no md5 in the rebuild at all) and the rebuild is
-      a zero-shuffle projection (plan-tested).  Text never shuffles.
+    - set size <= BP_COLLECT_BOUND, read at call time (the common case —
+      boilerplate is a heavy-hitter set): keys become an InSet predicate
+      over the PRECOMPUTED cks (no md5 in the rebuild at all) and the
+      rebuild is a zero-shuffle projection (plan-tested).  Text never
+      shuffles.
     - larger: posexplode the (chunk, key) pairs → left join the
       boilerplate keys → re-group per doc (array_sort restores chunk
       order).  One shuffle of (doc_id, chunk) — still never the
@@ -707,20 +694,21 @@ def chunk_dedup(
     # rebuild then reads executor memory.  (An eager checkpoint here would
     # spend a third job — measured ~0.4 s of pure scheduling floor at
     # sf0.1 — just to materialize before immediately re-scanning.)
-    cc = doc_chunks(spark, sf_dir, w).localCheckpoint(eager=False)
+    cc = doc_chunks(spark, sf_dir).localCheckpoint(eager=False)
     bp_plan = (
         cc.select(F.explode("cks").alias("ck"))
         .groupBy("ck")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") >= k)
+        .where(F.col("df") >= CHUNK_DF_K)
         .select("ck")
     )
     # ONE driver job measures AND fetches the set: collect bound+1 rows —
     # if we got at most the bound, those rows ARE the full set (no separate
     # checkpoint/count/collect round-trips).
-    head = bp_plan.limit(collect_bound + 1).collect()
+    bound = BP_COLLECT_BOUND
+    head = bp_plan.limit(bound + 1).collect()
 
-    if len(head) <= collect_bound:
+    if len(head) <= bound:
         keys = [r["ck"] for r in head]
         if keys:
             kept = F.zip_with(
@@ -928,26 +916,6 @@ def length_quantiles_windowed(tok):
     )
 
 
-def length_quantiles_ranged(tok):
-    """The huge-group twin: same quantiles via relational.grouped_rank_ranged
-    (sort parallelism independent of group count — the plan for a corpus
-    where one source outgrows a single reducer).  Equivalence-tested
-    against the windowed form; quantile VALUES are tie-insensitive because
-    equal ranks under any tie order hold equal values."""
-    from .relational import grouped_rank_ranged
-
-    r = grouped_rank_ranged(tok, ["source"], "v")
-
-    def q(k, alias):
-        # same exact integer rank arithmetic as the windowed form
-        tgt = F.expr(f"(__n * {k} + 9) div 10")
-        return F.max(F.when(F.col("__rank") + 1 == tgt, F.col("v"))).alias(alias)
-
-    return r.groupBy("source").agg(
-        F.max("__n").cast("bigint").alias("n_docs"), q(1, "p10"), q(5, "p50"), q(9, "p90")
-    )
-
-
 @_register(
     "t8_length_quantiles",
     "Per-source token-count distribution: exact p10/p50/p90 order "
@@ -955,9 +923,8 @@ def length_quantiles_ranged(tok):
     "calibration query a pipeline runs before choosing min/max-length "
     "cutoffs, and the drift monitor it runs per ingest batch.  Exact "
     "because cutoffs chosen from sketches differ per engine; one "
-    "sort-window serves every quantile, and the ranged twin "
-    "(length_quantiles_ranged, equivalence-tested) removes the per-group "
-    "reducer bottleneck when one source dominates the corpus.",
+    "sort-window serves every quantile (one reducer per source — the "
+    "per-group window's scale wall if one source dominated the corpus).",
     """
     WITH tok AS (
       SELECT source, doc_id,
@@ -979,9 +946,8 @@ def length_quantiles_ranged(tok):
 )
 def t8(spark, sf_dir):
     # COALESCE pins NULL text to 0 tokens (same as empty text) — otherwise
-    # Spark windows sort NULL first and DuckDB last, shifting every rank,
-    # and the ranged twin's repartitionByRange would order NULLs a third
-    # way.  Pinned by the edge-corpus test.
+    # Spark windows sort NULL first and DuckDB last, shifting every rank.
+    # Pinned by the edge-corpus test.
     d = read_table(spark, sf_dir, "documents")
     tok = d.select(
         "source",

@@ -76,6 +76,7 @@ from ..operators.dedup import (
     N_MINHASH,
     _norm_text,
     _shingle_hash60,
+    lsh_band_rows,
 )
 
 STATE_TTL_MS = 3600 * 1000  # evict buckets idle for an hour
@@ -130,10 +131,10 @@ def minhash_features(
 ) -> DataFrame:
     """(doc_id, sh array<bigint>, band int, bkey string): one row per LSH
     band, carrying the doc's shingle-hash set for the exact verify.  The
-    bkey string is bit-identical to the batch lsh_jaccard_pairs banding
-    (pinned by test_streaming_lsh_bkeys_match_batch_signatures)."""
-    r, rem = divmod(n_hashes, n_bands)
-    assert rem == 0 and n_hashes <= len(_MH_A), "n_hashes must be n_bands*r, <= seed count"
+    bands come from the batch builder itself (dedup.lsh_band_rows), so
+    the bkey string is bit-identical to lsh_jaccard_pairs' (pinned by
+    test_streaming_lsh_bkeys_match_batch_signatures) and a ragged
+    n_hashes/n_bands split raises ValueError the same way."""
     sh = _shingle_hashes(F.col("text"))
 
     def _affine_min(j: int):
@@ -146,26 +147,10 @@ def minhash_features(
             F.transform(F.col("sh"), lambda h: (_MH_A[j] * (h % _MH_P) + _MH_B[j]) % _MH_P)
         )
 
-    mins = [_affine_min(j) for j in range(n_hashes)]
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.concat_ws("|", *[mins[band * r + i].cast("string") for i in range(r)]).alias(
-                    "bkey"
-                ),
-            )
-            for band in range(n_bands)
-        ]
-    )
     # NULL-text docs drop at the scan (batch parity: shingle_rows' explode
     # emits no rows for NULL text, so those docs never reach the index)
-    return (
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", sh.alias("sh"))
-        .select("doc_id", "sh", F.explode(band_arr).alias("b"))
-        .select("doc_id", "sh", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey"))
-    )
+    docs = docs.where(F.col("text").isNotNull()).select("doc_id", sh.alias("sh"))
+    return lsh_band_rows(docs, _affine_min, n_hashes, n_bands, keep=("doc_id", "sh"))
 
 
 def _match_factory(threshold: float, ttl_ms: int):

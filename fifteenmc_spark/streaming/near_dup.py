@@ -21,8 +21,9 @@ Design, stage by stage:
   downstream stateful operator, which a streaming groupBy vote (the batch
   shape) is not — Structured Streaming cannot stack a complete-mode
   aggregation under keyed state.
-- ``flag_near_dups``: explode each doc into its k+1 (block, value) rows;
-  the bucket (blk, bval) is the state key.  Each bucket's state is the
+- ``flag_near_dups``: explode each doc into its k+1 (block, value) rows
+  with the batch x6/x6_64 block builder (dedup.pigeonhole_blocks); the
+  bucket (blk, bval) is the state key.  Each bucket's state is the
   list of (doc_id, code) admitted so far; an arrival is checked against
   that list with an exact Hamming verify (pigeonhole makes the bucket a
   complete candidate set, the verify removes false positives).  Matches
@@ -57,6 +58,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.dedup import pigeonhole_blocks
 from ..operators.dedup import simhash64_col as simhash64  # shared batch/stream code builder
 
 SIMHASH_BITS = 64
@@ -80,24 +82,6 @@ STATE_SCHEMA = StructType(
         StructField("codes", ArrayType(LongType())),
     ]
 )
-
-
-def _blocks(df: DataFrame, k: int) -> DataFrame:
-    """(doc_id, code, blk, bval): one row per pigeonhole block."""
-    block_bits = SIMHASH_BITS // (k + 1)
-    mask = (1 << block_bits) - 1
-    return df.select(
-        "doc_id",
-        "code",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("code", block_bits * blk).bitwiseAND(F.lit(mask))
-                    for blk in range(k + 1)
-                ]
-            )
-        ).alias("blk", "bval"),
-    )
 
 
 def _match_factory(k: int, ttl_ms: int):
@@ -157,7 +141,7 @@ def flag_near_dups(
     sigs = docs.where(F.col("text").isNotNull()).select(
         "doc_id", simhash64(F.col("text")).alias("code")
     )
-    blocks = _blocks(sigs, k)
+    blocks = pigeonhole_blocks(sigs, "code", SIMHASH_BITS, k)
     if docs.isStreaming:
         return blocks.groupBy("blk", "bval").applyInPandasWithState(
             _match_factory(k, ttl_ms),

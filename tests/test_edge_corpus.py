@@ -146,14 +146,15 @@ def test_edge_null_payload_survives_m2_with_null_stats(spark, edge_dir):
     assert len(rows) == len(EDGE_DOCS)
 
 
-def test_edge_null_doc_survives_p5_both_paths(spark, edge_dir):
+def test_edge_null_doc_survives_p5_both_paths(spark, edge_dir, monkeypatch):
     """The rebuild keeps the NULL-text doc with clean_text='' on the InSet
     path AND the join path (which must re-anchor on the documents scan)."""
-    from fifteenmc_spark.operators.textops import chunk_dedup
+    from fifteenmc_spark.operators import textops
 
-    for bound in (None, 0):  # None → literal path; 0 → forced join path
-        kwargs = {} if bound is None else {"collect_bound": bound}
-        rows = {r["doc_id"]: r for r in chunk_dedup(spark, edge_dir, **kwargs).collect()}
+    # the module bound → literal path; 0 → forced join path
+    for bound in (textops.BP_COLLECT_BOUND, 0):
+        monkeypatch.setattr(textops, "BP_COLLECT_BOUND", bound)
+        rows = {r["doc_id"]: r for r in textops.chunk_dedup(spark, edge_dir).collect()}
         assert rows[9]["n_chunks"] == 0 and rows[9]["clean_text"] == ""
         assert len(rows) == len(EDGE_DOCS)
 

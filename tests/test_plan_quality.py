@@ -620,3 +620,26 @@ def test_v_query_gains_no_exchange(spark, sf_small, name):
     tree = QUERIES[name].build(spark, sf_small)._jdf.queryExecution().executedPlan().toString()
     n = len(re.findall(r"(?<![A-Za-z])(?:Broadcast)?Exchange ", tree))
     assert n <= _V_EXCHANGES[name], tree
+
+
+# Exchange count of every dedup-family query whose builder is shared
+# (banding, pigeonhole blocks, span table, cluster dispatch, chunk
+# rebuild), recorded the same way before those builders were shared.
+# Held exactly: a shared builder must not move a plan either way.
+_DEDUP_EXCHANGES = {
+    "x3_minhash_lsh_pairs": 9, "x3_minhash_lsh_pairs_16": 9,
+    "x5_ngram_jaccard_capped": 7, "x6_simhash_hamming": 3,
+    "x6_simhash_hamming_64": 3, "x7_near_dup_clusters": 1,
+    "x7_hamming_clusters": 1, "x7_jaccard_clusters": 1, "x9_span_dedup": 1,
+    "x9_span_dedup_sampled": 1, "x9_span_dedup_prefiltered": 1,
+    "p5_chunk_dedup": 1, "p7_dedup_apply": 3,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DEDUP_EXCHANGES))
+def test_dedup_query_exchanges_are_pinned(spark, sf_small, name):
+    import re
+
+    tree = QUERIES[name].build(spark, sf_small)._jdf.queryExecution().executedPlan().toString()
+    n = len(re.findall(r"(?<![A-Za-z])(?:Broadcast)?Exchange ", tree))
+    assert n == _DEDUP_EXCHANGES[name], tree

@@ -49,172 +49,106 @@ def test_x5_capped_equivalence(spark, sf_small, max_df):
     assert len(base) > 0
 
 
-def test_x5_capped_dispatch_capped_branch(spark, sf_small):
+def test_x5_capped_dispatch_capped_branch(spark, sf_small, monkeypatch):
     """The REGISTERED x5_capped function's capped branch must be wired
-    correctly — drive it by binding the cap below the corpus's max df AND
-    lifting the occupancy threshold (this small corpus has no viral tail,
-    so the real threshold would correctly dispatch to the plain join)."""
-    from fifteenmc_spark.operators.dedup import x5_capped
+    correctly — drive it by monkeypatching the cap below the corpus's max
+    df AND lifting the occupancy threshold (this small corpus has no viral
+    tail, so the real threshold would correctly dispatch to the plain
+    join)."""
+    from fifteenmc_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "X5_MAX_DF", 3)
+    monkeypatch.setattr(dedup, "X5_HIGH_DF_FRAC", 1.0)
     base = QUERIES["x5_ngram_jaccard"].build(spark, sf_small).collect()
-    capped = x5_capped(spark, sf_small, cap=3, high_frac_max=1.0).collect()
-    assert sorted(map(tuple, base)) == sorted(map(tuple, capped))
+    df = dedup.x5_capped(spark, sf_small)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "window" in plan.lower(), "dispatch took the plain branch"
+    assert sorted(map(tuple, base)) == sorted(map(tuple, df.collect()))
     assert len(base) > 0
 
 
-def test_x5_capped_dispatch_refuses_bulk_high_df(spark, sf_small):
+def test_x5_capped_dispatch_refuses_bulk_high_df(spark, sf_small, monkeypatch):
     """When the high-df slice is the BULK of the index (occupancy over the
     threshold), the dispatch must take the plain join even though max df
     exceeds the cap — the r11 scale measurement: on a bounded-vocab 10x
     corpus with high_frac ~ 1.0 the capped plan ran 403.6 s vs the plain
     join's 42.0 s.  The capped plan is the only x5 shape with a window
     (the per-doc prefix rank), so its absence identifies the branch."""
-    from fifteenmc_spark.operators.dedup import _df_stats, x5_capped
+    from fifteenmc_spark.operators import dedup
 
-    max_df, high_frac = _df_stats(spark, sf_small, 3)
+    max_df, high_frac = dedup._df_stats(spark, sf_small, 3)
     assert max_df > 3 and high_frac > 0.0  # premise: cap exceeded, tail not tiny
-    df = x5_capped(spark, sf_small, cap=3, high_frac_max=0.0)
+    monkeypatch.setattr(dedup, "X5_MAX_DF", 3)
+    monkeypatch.setattr(dedup, "X5_HIGH_DF_FRAC", 0.0)
+    df = dedup.x5_capped(spark, sf_small)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "window" not in plan.lower(), "dispatch took the capped branch"
     assert df.count() > 0
 
 
-def test_x5_prefix_filter_equivalence(spark, sf_small):
-    """The PPJoin prefix-filtered plan (x5's scale path) is lossless: it
-    returns exactly the pairs of the plain inverted-index plan."""
-    from fifteenmc_spark.operators.dedup import ngram_jaccard_prefix_filtered
+@pytest.fixture(params=["local", "star"])
+def cluster_side(request, monkeypatch):
+    """Run a near_dup_clusters test on one side of its size dispatch:
+    every fixture here is under LOCAL_CLUSTER_MAX_PAIRS, so the star
+    side is forced by dropping the bound below any pair count."""
+    if request.param == "star":
+        from fifteenmc_spark.operators import dedup
 
-    base = QUERIES["x5_ngram_jaccard"].build(spark, sf_small).collect()
-    pf = ngram_jaccard_prefix_filtered(spark, sf_small).collect()
-    assert sorted(map(tuple, base)) == sorted(map(tuple, pf))
-    assert len(base) > 0
-
-
-def test_grouped_median_ranged_equivalence(spark):
-    """The ranged-rank median (group-count-independent parallelism — the
-    few-groups-at-scale path for d8's operator) matches exact
-    percentile(0.5) interpolation on a skewed synthetic frame."""
-    from pyspark.sql import functions as F
-
-    from fifteenmc_spark.operators.relational import grouped_median_ranged
-
-    df = spark.range(0, 5001).select(
-        (F.col("id") % 7).alias("g"),
-        (F.hash(F.col("id").cast("string")) % 997).cast("double").alias("v"),
-    )
-    got = {
-        r["g"]: r["median"]
-        for r in grouped_median_ranged(df, ["g"], "v").collect()
-    }
-    want = {
-        r["g"]: r["m"]
-        for r in df.groupBy("g").agg(F.percentile("v", F.lit(0.5)).alias("m")).collect()
-    }
-    assert got.keys() == want.keys()
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, k
+        monkeypatch.setattr(dedup, "LOCAL_CLUSTER_MAX_PAIRS", -1)
+    return request.param
 
 
-def test_grouped_prefix_sum_ranged_equivalence(spark):
-    """The ranged running total (W1's few-groups-at-scale path) matches
-    the plain per-group window on a synthetic frame."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from fifteenmc_spark.operators.relational import grouped_prefix_sum_ranged
-
-    df = spark.range(0, 4001).select(
-        (F.col("id") % 5).alias("g"),
-        F.col("id").alias("o"),
-        ((F.col("id") * 37) % 101).cast("long").alias("m"),
-    )
-    got = {
-        (r["g"], r["o"]): r["cum"]
-        for r in grouped_prefix_sum_ranged(df, ["g"], "o", "m").collect()
-    }
-    w = (
-        Window.partitionBy("g").orderBy("o").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {
-        (r["g"], r["o"]): r["cum"]
-        for r in df.withColumn("cum", F.sum("m").over(w)).collect()
-    }
-    assert got == want
-
-
-@pytest.mark.parametrize("strategy", ["propagate", "star", "auto", "local"])
-def test_near_dup_clusters_transitivity(spark, strategy):
-    """A~B and B~C must land in ONE cluster even though A~C was never an
-    edge; disjoint components keep distinct min-doc_id labels — under
-    every strategy."""
+def _clusters(pairs) -> dict:
     from fifteenmc_spark.operators.dedup import near_dup_clusters
 
+    return {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+
+
+def test_near_dup_clusters_transitivity(spark, cluster_side):
+    """A~B and B~C must land in ONE cluster even though A~C was never an
+    edge; disjoint components keep distinct min-doc_id labels, and a doc
+    paired only with itself is its own cluster (the recursive-CTE oracle
+    keeps it) — on both dispatch sides."""
     pairs = spark.createDataFrame(
-        [(2, 9), (9, 4), (7, 8), (20, 21), (21, 3)],
+        [(2, 9), (9, 4), (7, 8), (20, 21), (21, 3), (5, 5)],
         "doc_a BIGINT, doc_b BIGINT",
     )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in near_dup_clusters(pairs, strategy=strategy).collect()
-    }
-    assert got == {2: 2, 9: 2, 4: 2, 7: 7, 8: 7, 20: 3, 21: 3, 3: 3}
+    assert _clusters(pairs) == {2: 2, 9: 2, 4: 2, 7: 7, 8: 7, 20: 3, 21: 3, 3: 3, 5: 5}
 
 
-@pytest.mark.parametrize("strategy", ["propagate", "star", "auto", "local"])
-def test_near_dup_clusters_empty_graph(spark, strategy):
-    """An EMPTY pair graph must return an empty cluster table immediately
-    under every strategy — in particular 'propagate' must converge on
-    round 1, not spin max_rounds into a spurious non-convergence error
-    (regression: the Observation-fused probe read SUM over zero rows as
-    NULL, and None == 0 is False)."""
-    from fifteenmc_spark.operators.dedup import near_dup_clusters
-
+def test_near_dup_clusters_empty_graph(spark, cluster_side):
+    """An EMPTY pair graph returns an empty cluster table on both sides."""
     pairs = spark.createDataFrame([], "doc_a BIGINT, doc_b BIGINT")
-    assert near_dup_clusters(pairs, strategy=strategy).collect() == []
+    assert _clusters(pairs) == {}
 
 
-def test_near_dup_clusters_chain_convergence(spark):
-    """A 50-node chain (diameter 49): 'propagate' at max_rounds=5 must
-    RAISE (never silently return truncated labels), 'star' converges in
-    O(log n) star rounds regardless of diameter, and 'auto' falls back
-    from exhausted propagation to star and still returns correct labels."""
-    from fifteenmc_spark.operators.dedup import near_dup_clusters
+def test_near_dup_clusters_chain_convergence(spark, monkeypatch):
+    """A 50-node chain (diameter 49) gets one label on both dispatch
+    sides — star contraction converges in O(log n) star rounds regardless
+    of diameter — and the star side RAISES once its round cap runs out
+    (never silently returns truncated labels)."""
+    from fifteenmc_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 149)], "doc_a BIGINT, doc_b BIGINT"
     )
     want = {i: 100 for i in range(100, 150)}
+    assert _clusters(pairs) == want
+    monkeypatch.setattr(dedup, "LOCAL_CLUSTER_MAX_PAIRS", -1)
+    assert _clusters(pairs) == want
 
-    got_star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in near_dup_clusters(pairs, strategy="star").collect()
-    }
-    assert got_star == want
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(pairs, max_rounds=5, strategy="propagate")
-
-    # local_max_pairs=0 forces auto past the driver-local dispatch so the
-    # propagate→star fallback path is the one exercised
-    got_auto = {
-        r["doc_id"]: r["cluster_id"]
-        for r in near_dup_clusters(
-            pairs, max_rounds=5, strategy="auto", local_max_pairs=0
-        ).collect()
-    }
-    assert got_auto == want
-
-    with pytest.raises(RuntimeError, match="exceeds the local bound"):
-        near_dup_clusters(pairs, strategy="local", local_max_pairs=0)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not stabilize"):
+        dedup.near_dup_clusters(pairs)
 
 
-def test_near_dup_clusters_random_graphs(spark):
-    """Star contraction equals hash-min propagation equals an independent
-    union-find oracle on randomized graphs (mixed component shapes: stars,
-    chains, cliques, isolated edges)."""
+def test_near_dup_clusters_random_graphs(spark, monkeypatch):
+    """Both dispatch sides equal an independent union-find oracle on
+    randomized graphs (mixed component shapes: stars, chains, cliques,
+    isolated edges)."""
     import random
 
-    from fifteenmc_spark.operators.dedup import near_dup_clusters
+    from fifteenmc_spark.operators import dedup
 
     rng = random.Random(7)
     for trial in range(3):
@@ -242,40 +176,43 @@ def test_near_dup_clusters_random_graphs(spark):
         want = {x: find(x) for x in parent}
 
         pairs = spark.createDataFrame(edges, "doc_a BIGINT, doc_b BIGINT")
-        for strategy in ("propagate", "star", "local"):
-            got = {
-                r["doc_id"]: r["cluster_id"]
-                for r in near_dup_clusters(pairs, strategy=strategy).collect()
-            }
-            assert got == want, (trial, strategy)
+        for bound in (dedup.LOCAL_CLUSTER_MAX_PAIRS, -1):
+            monkeypatch.setattr(dedup, "LOCAL_CLUSTER_MAX_PAIRS", bound)
+            assert _clusters(pairs) == want, (trial, bound)
 
 
-def test_p5_chunk_dedup_paths_equivalent(spark, sf_small):
+def test_p5_chunk_dedup_paths_equivalent(spark, sf_small, monkeypatch):
     """The join-path rebuild (boilerplate set too big to collect) must match
-    the literal InSet scan-side rebuild row-for-row — forced by binding
-    collect_bound=0 so the dispatch cannot take the scan-side shortcut."""
-    from fifteenmc_spark.operators.textops import chunk_dedup
+    the literal InSet scan-side rebuild row-for-row — forced by dropping
+    BP_COLLECT_BOUND to 0 so the dispatch cannot take the scan-side
+    shortcut."""
+    from fifteenmc_spark.operators import textops
 
-    lit = chunk_dedup(spark, sf_small).collect()
-    joined = chunk_dedup(spark, sf_small, collect_bound=0).collect()
+    lit = textops.chunk_dedup(spark, sf_small).collect()
+    monkeypatch.setattr(textops, "BP_COLLECT_BOUND", 0)
+    joined = textops.chunk_dedup(spark, sf_small).collect()
     assert sorted(map(tuple, lit)) == sorted(map(tuple, joined))
     assert any(r["n_removed"] > 0 for r in lit)  # the demo actually removes
 
 
-def test_t8_quantile_twins_equivalent(spark, sf_small):
-    """The ranged (group-count-independent) quantile plan returns the same
-    exact order statistics as the windowed form."""
-    from pyspark.sql import functions as F
-
-    from fifteenmc_spark.functions import text as T
+def test_lsh_banding_rejects_a_ragged_split(spark, sf_small):
+    """A band split that does not divide the seeds raises ValueError on
+    the batch and streaming sides alike — a check that holds under
+    ``python -O``, where n_hashes=6, n_bands=4 would otherwise band on
+    mh0..mh3 and silently ignore mh4/mh5."""
     from fifteenmc_spark.io import read_table
-    from fifteenmc_spark.operators.textops import (
-        length_quantiles_ranged,
-        length_quantiles_windowed,
+    from fifteenmc_spark.operators.dedup import (
+        lsh_jaccard_pairs,
+        minhash_sig_index,
+        shingle_index,
     )
+    from fifteenmc_spark.streaming.minhash_lsh import minhash_features
 
-    d = read_table(spark, sf_small, "documents")
-    tok = d.select("source", "doc_id", T.token_count(F.col("text")).cast("bigint").alias("v"))
-    a = {r["source"]: tuple(r) for r in length_quantiles_windowed(tok).collect()}
-    b = {r["source"]: tuple(r) for r in length_quantiles_ranged(tok).collect()}
-    assert a == b and len(a) > 0
+    ex = shingle_index(spark, sf_small)
+    sig = minhash_sig_index(spark, sf_small, 6)
+    with pytest.raises(ValueError):
+        lsh_jaccard_pairs(ex, sig, n_hashes=6, n_bands=4)
+    with pytest.raises(ValueError):
+        minhash_features(read_table(spark, sf_small, "documents"), n_hashes=6, n_bands=4)
+    with pytest.raises(ValueError):
+        minhash_sig_index(spark, sf_small, 17)
