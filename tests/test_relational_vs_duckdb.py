@@ -86,14 +86,16 @@ def test_x5_capped_dispatch_refuses_bulk_high_df(spark, sf_small, monkeypatch):
     assert df.count() > 0
 
 
-@pytest.fixture(params=["local", "star"])
+@pytest.fixture(params=["auto", "local", "star"])
 def cluster_side(request, monkeypatch):
-    """Run a near_dup_clusters test on one side of its size dispatch:
-    every fixture here is under LOCAL_CLUSTER_MAX_PAIRS, so the star
-    side is forced by dropping the bound below any pair count."""
-    if request.param == "star":
-        from fifteenmc_spark.operators import dedup
+    """Run a near_dup_clusters test under its unforced size dispatch
+    ('auto') or forced onto one side of it: 'local' lifts the bound above
+    any pair count, 'star' drops it below any pair count."""
+    from fifteenmc_spark.operators import dedup
 
+    if request.param == "local":
+        monkeypatch.setattr(dedup, "LOCAL_CLUSTER_MAX_PAIRS", 1 << 30)
+    elif request.param == "star":
         monkeypatch.setattr(dedup, "LOCAL_CLUSTER_MAX_PAIRS", -1)
     return request.param
 
@@ -108,7 +110,7 @@ def test_near_dup_clusters_transitivity(spark, cluster_side):
     """A~B and B~C must land in ONE cluster even though A~C was never an
     edge; disjoint components keep distinct min-doc_id labels, and a doc
     paired only with itself is its own cluster (the recursive-CTE oracle
-    keeps it) — on both dispatch sides."""
+    keeps it) — unforced and on both dispatch sides."""
     pairs = spark.createDataFrame(
         [(2, 9), (9, 4), (7, 8), (20, 21), (21, 3), (5, 5)],
         "doc_a BIGINT, doc_b BIGINT",
@@ -117,7 +119,8 @@ def test_near_dup_clusters_transitivity(spark, cluster_side):
 
 
 def test_near_dup_clusters_empty_graph(spark, cluster_side):
-    """An EMPTY pair graph returns an empty cluster table on both sides."""
+    """An EMPTY pair graph returns an empty cluster table, unforced and on
+    both sides."""
     pairs = spark.createDataFrame([], "doc_a BIGINT, doc_b BIGINT")
     assert _clusters(pairs) == {}
 
