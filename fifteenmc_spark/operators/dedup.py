@@ -1149,11 +1149,11 @@ def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     p = pairs.select("doc_a", "doc_b")
     bound = LOCAL_CLUSTER_MAX_PAIRS
     if p.limit(bound + 1).count() <= bound:
-        return _clusters_local_rows(p.collect(), p.sparkSession)
+        return _clusters_union_find(p.collect(), p.sparkSession)
     return _clusters_star(p)
 
 
-def _clusters_local_rows(rows, spark) -> DataFrame:
+def _clusters_union_find(rows, spark) -> DataFrame:
     """Union-find over an ALREADY-COLLECTED bounded pair list (PySpark
     Rows cost ~100+ bytes each, so the 200k bound is ~100-200 MB
     driver-side including the parent dict; same class of bounded collect
@@ -1195,8 +1195,8 @@ def _clusters_star(pairs: DataFrame) -> DataFrame:
     min.  A node with no edge but a self-pair is its own component: the
     labels are left-joined back onto every input endpoint.  All steps are
     plain groupBy-min + join — map-side combinable, no driver state.
-    Raises RuntimeError after 2·STAR_MAX_ROUNDS phases without
-    convergence."""
+    Raises RuntimeError after 2·STAR_MAX_ROUNDS large-star/small-star
+    iterations without convergence."""
     e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     nodes = e.select(F.col("a").alias("doc_id")).union(e.select("b")).distinct()
     e = (
@@ -1246,7 +1246,7 @@ def _clusters_star(pairs: DataFrame) -> DataFrame:
     else:
         raise RuntimeError(
             f"near_dup_clusters(star): edge set did not stabilize in "
-            f"{2 * rounds} star rounds — pathological input"
+            f"{2 * rounds} large-star/small-star iterations — pathological input"
         )
     labels = e.groupBy("a").agg(F.min("b").alias("mb")).select(
         F.col("a").alias("doc_id"), F.least("a", "mb").alias("m")

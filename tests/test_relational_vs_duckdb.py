@@ -179,7 +179,7 @@ def test_near_dup_clusters_random_graphs(spark, monkeypatch):
         want = {x: find(x) for x in parent}
 
         pairs = spark.createDataFrame(edges, "doc_a BIGINT, doc_b BIGINT")
-        for bound in (dedup.LOCAL_CLUSTER_MAX_PAIRS, -1):
+        for bound in (1 << 30, -1):
             monkeypatch.setattr(dedup, "LOCAL_CLUSTER_MAX_PAIRS", bound)
             assert _clusters(pairs) == want, (trial, bound)
 
