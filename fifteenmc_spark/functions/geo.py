@@ -81,26 +81,6 @@ def equirectangular_m2(lon, lat, lon0, lat0) -> Column:
     return x * x + y * y
 
 
-def bbox_from_point_radius(lon, lat, radius_m) -> Column:
-    """F4: bbox struct around a point (grid_extraction_script.py:18-27),
-    WGS84 equatorial radius."""
-    lon, lat, radius_m = _c(lon).cast("double"), _c(lat).cast("double"), _c(radius_m).cast("double")
-    dlat = radius_m / F.lit(R_WGS84_EQUATORIAL_M) * F.lit(180.0 / math.pi)
-    dlon = dlat / F.cos(F.radians(lat))
-    return F.struct(
-        (lon - dlon).alias("minlon"),
-        (lat - dlat).alias("minlat"),
-        (lon + dlon).alias("maxlon"),
-        (lat + dlat).alias("maxlat"),
-    )
-
-
-def km_per_deg_lon(lat) -> Column:
-    """F5: km per degree of longitude at latitude, with the reference's
-    1e-9 floor guard (grid_creation.py:30-37)."""
-    return F.greatest(F.lit(KM_PER_DEG_LAT) * F.cos(F.radians(_c(lat).cast("double"))), F.lit(1e-9))
-
-
 def walking_time_s(dist_m, speed_mps: float = WALK_SPEED_MPS) -> Column:
     """F6: time_s = dist_m / speed (precompute_poi_reach.py:134,166,197)."""
     return _c(dist_m).cast("double") / F.lit(float(speed_mps))
@@ -121,11 +101,6 @@ def sanitize_key(col) -> Column:
 def norm_tag(col) -> Column:
     """F8: strip().lower() with None→'' (graph_construction.py:34-35)."""
     return F.lower(F.trim(F.coalesce(_c(col), F.lit(""))))
-
-
-def fixed_point_e7(coord) -> Column:
-    """F9: (coord*1e7) rounded to int32 (graph_construction.py:294-295)."""
-    return F.round(_c(coord).cast("double") * 1e7, 0).cast("int")
 
 
 def web_mercator_x(lon) -> Column:

@@ -10,11 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Tiny multilingual stopword list used for the quality score — deterministic,
-# no external model.  (The real reference has no text pipeline; this is the
-# engine's 100 TB training-data surface.)
-STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "de", "la", "el", "le", "und", "der")
-
 PUNCT_RE = "[^a-zA-Z0-9 ]"
 # translate() complement of PUNCT_RE: length(translate(col, ALNUM_SPACE,
 # "")) counts exactly the chars PUNCT_RE matches (every char NOT in this
@@ -49,10 +44,6 @@ def token_count(col) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, TOKEN_SPLIT_RE)))
 
 
-def char_count(col) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col) -> Column:
     """Fraction of characters that are not [a-zA-Z0-9 ]."""
     n = F.length(col).cast("double")
@@ -65,14 +56,6 @@ def mean_token_len(col) -> Column:
     nchars = F.length(F.regexp_replace(col, "[ \\t\\n\\x0B\\f\\r]", "")).cast("double")
     ntok = token_count(col).cast("double")
     return F.when(ntok > 0, nchars / ntok).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col) -> Column:
-    """Fraction of tokens that are in the small stopword list."""
-    toks = tokens(F.lower(col))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    total = F.size(toks)
-    return F.when(total > 0, hits.cast("double") / total.cast("double")).otherwise(F.lit(0.0))
 
 
 def quality_score(col) -> Column:
@@ -93,11 +76,6 @@ def fingerprint64(col) -> Column:
     doc instead of shipping full text through the shuffle."""
     norm = F.regexp_replace(F.lower(F.trim(col)), "[ \\t\\n\\x0B\\f\\r]+", " ")
     return F.xxhash64(norm)
-
-
-def md5_hex(col) -> Column:
-    """Portable content hash — identical hex in Spark and DuckDB oracle."""
-    return F.md5(F.col(col).cast("binary") if isinstance(col, str) else col.cast("binary"))
 
 
 def split_bucket(doc_id, salt: str = "", mod: int = 100) -> Column:

@@ -1,10 +1,8 @@
 """Table registry and IO helpers (SURVEY.md §2.1, S1-S9 / K1-K6).
 
-The reference hand-validates schemas on every load (case-insensitive column
-matching at precompute_poi_reach.py:48, required-column checks at
-precompute_poi_reach.py:49-51).  Here the same discipline is a small helper
-over `spark.read.parquet` — Catalyst handles pushdown/pruning once the data
-is parquet.
+Readers are small helpers over `spark.read` — Catalyst handles
+pushdown/pruning once the data is parquet.  ``read_table`` normalizes the
+synthetic tables' timestamp encodings at runtime.
 """
 
 from __future__ import annotations
@@ -80,30 +78,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
         finally:
             spark.conf.set("spark.sql.session.timeZone", prev_tz)
-    return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view for spark.sql use."""
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def require_columns(df: DataFrame, cols: list[str], where: str = "") -> DataFrame:
-    """Schema validation on load, case-insensitive (ref:
-    precompute_poi_reach.py:48-51, test_path.py:251-254)."""
-    have = {c.lower(): c for c in df.columns}
-    missing = [c for c in cols if c.lower() not in have]
-    if missing:
-        raise ValueError(f"missing required columns {missing} {where}: have {df.columns}")
-    # canonicalize names to the requested spelling
-    renames = {have[c.lower()]: c for c in cols if have[c.lower()] != c}
-    for old, new in renames.items():
-        df = df.withColumnRenamed(old, new)
     return df
 
 

@@ -158,25 +158,26 @@ _COS_SQL = (
 EMB_DIM = 64  # contract dimension of the embeddings table (TESTDATA.md)
 
 
-def valid_embeddings(df):
-    """Rows that can participate in cosine math: embedding non-NULL, the
-    contract dimension, no NULL elements, and a finite strictly-positive
-    squared norm.  A real ingest WILL contain violations (NULL rows,
-    truncated arrays, zero vectors from failed encoders) and an ungated
-    cosine either crashes (ANSI divide-by-zero on a zero norm) or poisons
-    every score downstream with NaN/NULL — gating at the scan keeps the
-    pushed-down filter next to the read.  In Spark a NULL element or NULL
+def valid_vector(c: Column) -> Column:
+    """True for a vector that can participate in cosine math: non-NULL,
+    the contract dimension, no NULL elements, and a finite
+    strictly-positive squared norm.  In Spark a NULL element or NULL
     array makes the self-dot NULL, so `ss > 0` alone excludes those rows;
     the explicit isNotNull/size conjuncts keep the predicate readable and
     let Catalyst push the cheap checks ahead of the HOF."""
-    ss = dot_double(F.col("embedding"), F.col("embedding"))
-    return df.where(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") == EMB_DIM)
-        & ~F.isnan(ss)
-        & (ss < float("inf"))
-        & (ss > 0)
-    )
+    ss = dot_double(c, c)
+    return c.isNotNull() & (F.size(c) == EMB_DIM) & ~F.isnan(ss) & (ss < float("inf")) & (ss > 0)
+
+
+def valid_embeddings(df):
+    """Rows whose ``embedding`` is a :func:`valid_vector`.  A real ingest
+    WILL contain violations (NULL rows, truncated arrays, zero vectors
+    from failed encoders) and an ungated cosine either crashes (ANSI
+    divide-by-zero on a zero norm) or poisons every score downstream
+    with NaN/NULL — gating at the scan keeps the pushed-down filter next
+    to the read.  The streaming tiers gate their query vectors with the
+    same predicate."""
+    return df.where(valid_vector(F.col("embedding")))
 
 
 _DOT_SELF = "list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))"
@@ -2712,22 +2713,19 @@ def v24(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # v25/v26: the SERVING layout as declared queries (driver-attested)
 # ---------------------------------------------------------------------------
-# The layout serving.py dispatches to (SERVING_NCELLS=32 trained cells,
-# nprobe 8 = the calibration default's 25% scan fraction — the r13 flip,
-# acting on v24's r12 ncells=32 extension exactly as r12 acted on 16:
-# composed v21-shape recall@5 0.408 -> 0.460 (sf0.01) and 0.400 -> 0.404
-# (sf0.001), membership recall 0.520 -> 0.608 / 0.572 -> 0.600, all at
-# the same 25% of the index read per query, strictly-no-worse test-gated
-# in test_serving_default).  Declared here so the layout a user actually
-# gets is DRIVER-ATTESTED, not only test-gated; test_serving_default pins
-# serving.ann_topk/ivfpq_topk row-equal to v25/v26, so the dispatch
-# point and the declared queries cannot drift apart silently.
-V25_NPROBE = 8  # = SERVING_NCELLS // 4, the constant scan fraction
+# The serving layout, declared once (serving.py names these values):
+# 32 trained cells at nprobe 8 = the calibration default's 25% scan
+# fraction — the r13 flip, acting on v24's r12 ncells=32 extension
+# exactly as r12 acted on 16: composed v21-shape recall@5 0.408 -> 0.460
+# (sf0.01) and 0.400 -> 0.404 (sf0.001), membership recall
+# 0.520 -> 0.608 / 0.572 -> 0.600, all at the same 25% of the index read
+# per query, strictly-no-worse test-gated in test_serving_default.
+# Declared here so the layout a user actually gets is DRIVER-ATTESTED:
+# serving.ann_topk/ivfpq_topk/filtered_ann_topk ARE v25/v26/v29.
+V25_NPROBE = 8  # = V25_NCELLS // 4, the constant scan fraction
 # The serving layout's pool is an explicit PREFIX of the sweep pool: v24's
 # ncells axis may grow the pool (it did in r12, 16 -> 32 for the ncells=32
-# point) without silently changing the declared serving layout.  serving.py
-# guards SERVING_NCELLS == len(V25_POOL).  Rolling back = 16 here + in
-# serving.SERVING_NCELLS.
+# point) without changing the declared serving layout.
 V25_NCELLS = 32
 V25_POOL = TIVF_SEED_POOL[:V25_NCELLS]
 V25_Q = Quantizer(V25_POOL, trained=True)

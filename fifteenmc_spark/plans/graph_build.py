@@ -202,17 +202,6 @@ def build_graph(nodes_raw: DataFrame, edges_raw: DataFrame) -> tuple[DataFrame, 
     return nodes, edges
 
 
-def degree_stats(edges: DataFrame, n_nodes: int) -> DataFrame:
-    """A2+A5 invariants (validate_csr.py:12-18): out-degree mean/max and
-    zero-degree node count over the canonical symmetric edge table."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    return deg.agg(
-        F.round(F.sum("deg") / F.lit(n_nodes), 4).alias("mean_deg"),
-        F.max("deg").alias("max_deg"),
-        (F.lit(n_nodes) - F.count(F.lit(1))).alias("n_zero_deg"),
-    )
-
-
 def reciprocity_violations(edges: DataFrame) -> DataFrame:
     """J8 existence check (validate_csr.py:21-29): edges (u,v) with no
     (v,u) — must be empty for the symmetrized graph.  Left-anti self-join

@@ -12,17 +12,17 @@ Spark and the pruning is visible in the plan (``PartitionFilters``).
 Scale shape
 -----------
 - The Morton key is pure JVM column arithmetic (shift/and/or — whole-stage
-  codegen, no UDF); quantization is ``bits`` per dimension (default 16 →
-  a 32-bit key, ~600 m cells at planet scale).
+  codegen, no UDF); quantization is ZORDER_BITS per dimension (16 → a
+  32-bit key, ~600 m cells at planet scale).
 - ``write_zorder_layout`` range-partitions on the FULL key (balanced output
   files regardless of point skew — a dense city and an empty ocean get the
-  same rows per task) and directory-partitions on the key's top ``2*levels``
-  bits (the quadtree cell at depth ``levels``).  Because the prefix is a
-  prefix OF the range key, each write task touches ~1-2 directories — no
-  small-file explosion, which is the classic failure of partitionBy over a
-  shuffled column.
-- ``read_zorder_bbox`` enumerates the 4^levels quadtree cells driver-side
-  (bounded, tiny — 4^6 = 4,096 at most here), keeps the ones whose extent
+  same rows per task) and directory-partitions on the key's top
+  ``2*ZORDER_LEVELS`` bits (the quadtree cell at depth ZORDER_LEVELS).
+  Because the prefix is a prefix OF the range key, each write task
+  touches ~1-2 directories — no small-file explosion, which is the
+  classic failure of partitionBy over a shuffled column.
+- ``read_zorder_bbox`` enumerates the 4^ZORDER_LEVELS quadtree cells
+  driver-side (bounded, tiny — 64 here), keeps the ones whose extent
   intersects the query box (widened by one quantum so float rounding can
   only ADD a cell, never drop one), and scans with ``zp IN (...)`` — a
   partition filter — plus the exact residual lon/lat predicate.
@@ -37,7 +37,11 @@ Scale shape
   rewrite of a layout directory must call
   ``session_index.invalidate(path)``, or reads keep serving the old
   listing (and fail on its deleted files).
-- At 100 TB with ``levels=6`` a city-block query reads a handful of the
+- The geometry is module constants, not parameters: a layout records
+  neither, so a layout written with one value and read with another
+  would silently prune the wrong cells.  Every writer and reader uses
+  the same ZORDER_BITS/ZORDER_LEVELS and the ``lon``/``lat`` columns.
+- At 100 TB with a depth of 6 a city-block query reads a handful of the
   4,096 directories instead of the whole table; the curve keeps nearby
   boxes in nearby files, so the OS/page-cache locality story holds too.
 """
@@ -51,33 +55,34 @@ ZORDER_BITS = 16      # per-dimension quantization (32-bit Morton key)
 ZORDER_LEVELS = 3     # quadtree depth of the directory partition (4^3 = 64 cells)
 
 
-def _quantize(coord, lo: float, hi: float, bits: int) -> Column:
-    """bits-bit integer cell index of ``coord`` within [lo, hi] — clamped so
-    out-of-box rows land in the edge cells instead of corrupting the key."""
-    n = (1 << bits) - 1
+def _quantize(coord, lo: float, hi: float) -> Column:
+    """ZORDER_BITS-bit integer cell index of ``coord`` within [lo, hi] —
+    clamped so out-of-box rows land in the edge cells instead of
+    corrupting the key."""
+    n = (1 << ZORDER_BITS) - 1
     scaled = F.floor((coord - F.lit(lo)) / F.lit(hi - lo) * F.lit(float(n)))
     return F.least(F.greatest(scaled, F.lit(0)), F.lit(n)).cast("bigint")
 
 
-def zorder_key(lon, lat, bbox: tuple[float, float, float, float], bits: int = ZORDER_BITS) -> Column:
+def zorder_key(lon, lat, bbox: tuple[float, float, float, float]) -> Column:
     """Morton-interleaved key of (lon, lat) over ``bbox``: lon bits at even
     positions, lat bits at odd.  Pure shift/and/or column expression —
     whole-stage codegen end to end."""
     minlon, minlat, maxlon, maxlat = bbox
-    u = _quantize(F.col(lon) if isinstance(lon, str) else lon, minlon, maxlon, bits)
-    v = _quantize(F.col(lat) if isinstance(lat, str) else lat, minlat, maxlat, bits)
+    u = _quantize(F.col(lon) if isinstance(lon, str) else lon, minlon, maxlon)
+    v = _quantize(F.col(lat) if isinstance(lat, str) else lat, minlat, maxlat)
     z: Column = F.lit(0).cast("bigint")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         z = z.bitwiseOR(F.shiftleft(F.shiftright(u, i).bitwiseAND(F.lit(1)), 2 * i))
         z = z.bitwiseOR(F.shiftleft(F.shiftright(v, i).bitwiseAND(F.lit(1)), 2 * i + 1))
     return z
 
 
-def zorder_key_sql(lon_expr: str, lat_expr: str, bbox: tuple[float, float, float, float], bits: int = ZORDER_BITS) -> str:
+def zorder_key_sql(lon_expr: str, lat_expr: str, bbox: tuple[float, float, float, float]) -> str:
     """The ANSI-SQL twin of :func:`zorder_key` (DuckDB-runnable) — generated
     from the same constants so the oracle computes the identical key."""
     minlon, minlat, maxlon, maxlat = bbox
-    n = (1 << bits) - 1
+    n = (1 << ZORDER_BITS) - 1
 
     def q(expr: str, lo: float, hi: float) -> str:
         return (
@@ -86,16 +91,16 @@ def zorder_key_sql(lon_expr: str, lat_expr: str, bbox: tuple[float, float, float
 
     u, v = q(lon_expr, minlon, maxlon), q(lat_expr, minlat, maxlat)
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"((({u} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({v} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"
 
 
-def zprefix(zkey: Column, bits: int = ZORDER_BITS, levels: int = ZORDER_LEVELS) -> Column:
-    """Top ``2*levels`` bits of the Morton key = the depth-``levels``
-    quadtree cell id (the directory-partition column)."""
-    return F.shiftright(zkey, 2 * (bits - levels)).cast("int")
+def zprefix(zkey: Column) -> Column:
+    """Top ``2*ZORDER_LEVELS`` bits of the Morton key = the quadtree cell
+    id at depth ZORDER_LEVELS (the directory-partition column)."""
+    return F.shiftright(zkey, 2 * (ZORDER_BITS - ZORDER_LEVELS)).cast("int")
 
 
 def _interleave_int(i: int, j: int, p: int) -> int:
@@ -111,14 +116,12 @@ def _interleave_int(i: int, j: int, p: int) -> int:
 def zprefixes_for_bbox(
     query_bbox: tuple[float, float, float, float],
     layout_bbox: tuple[float, float, float, float],
-    bits: int = ZORDER_BITS,
-    levels: int = ZORDER_LEVELS,
 ) -> list[int]:
-    """The depth-``levels`` quadtree cells whose extent intersects
+    """The depth-ZORDER_LEVELS quadtree cells whose extent intersects
     ``query_bbox`` — the partition-filter value set for a bbox read.
 
-    Driver-side over 4^levels cells (bounded by construction — the levels
-    knob IS the listing-granularity knob, it never tracks row count).  Each
+    Driver-side over 4^ZORDER_LEVELS cells (bounded by construction — the
+    depth IS the listing granularity, it never tracks row count).  Each
     cell's lon/lat extent is derived from the quantization inverse and
     widened by one quantum so float rounding can only produce a false
     positive (an extra partition scanned), never a false negative (a
@@ -126,6 +129,7 @@ def zprefixes_for_bbox(
     """
     minlon, minlat, maxlon, maxlat = layout_bbox
     qminlon, qminlat, qmaxlon, qmaxlat = query_bbox
+    bits, levels = ZORDER_BITS, ZORDER_LEVELS
     n = (1 << bits) - 1
     last = (1 << levels) - 1
     span = 1 << (bits - levels)  # quanta per cell edge
@@ -156,10 +160,6 @@ def write_zorder_layout(
     df: DataFrame,
     out_dir: str,
     layout_bbox: tuple[float, float, float, float],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    bits: int = ZORDER_BITS,
-    levels: int = ZORDER_LEVELS,
 ) -> None:
     """Write ``df`` parquet clustered on the Morton curve: directory
     partitions on ``zp`` (quadtree cell), rows range-clustered and sorted on
@@ -171,8 +171,8 @@ def write_zorder_layout(
     from ..operators.session_index import invalidate
 
     invalidate(out_dir)
-    z = zorder_key(lon_col, lat_col, layout_bbox, bits)
-    keyed = df.withColumn("zkey", z).withColumn("zp", zprefix(F.col("zkey"), bits, levels))
+    z = zorder_key("lon", "lat", layout_bbox)
+    keyed = df.withColumn("zkey", z).withColumn("zp", zprefix(F.col("zkey")))
     (
         keyed.repartitionByRange(F.col("zkey"))
         .sortWithinPartitions("zkey")
@@ -187,10 +187,6 @@ def read_zorder_bbox(
     path: str,
     query_bbox: tuple[float, float, float, float],
     layout_bbox: tuple[float, float, float, float],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    bits: int = ZORDER_BITS,
-    levels: int = ZORDER_LEVELS,
 ) -> DataFrame:
     """bbox read over a :func:`write_zorder_layout` table: ``zp IN (cells)``
     is a PARTITION filter, the lon/lat residual is exact — so the result
@@ -201,14 +197,14 @@ def read_zorder_bbox(
     from ..operators.session_index import session_cached
 
     qminlon, qminlat, qmaxlon, qmaxlat = query_bbox
-    cells = zprefixes_for_bbox(query_bbox, layout_bbox, bits, levels)
+    cells = zprefixes_for_bbox(query_bbox, layout_bbox)
     table = session_cached(spark, path, "zorder_layout", lambda: spark.read.parquet(path))
     return (
         table.where(F.col("zp").isin(cells))
         .where(
-            (F.col(lon_col) >= qminlon)
-            & (F.col(lon_col) < qmaxlon)
-            & (F.col(lat_col) >= qminlat)
-            & (F.col(lat_col) < qmaxlat)
+            (F.col("lon") >= qminlon)
+            & (F.col("lon") < qmaxlon)
+            & (F.col("lat") >= qminlat)
+            & (F.col("lat") < qmaxlat)
         )
     )

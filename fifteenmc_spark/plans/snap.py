@@ -247,21 +247,15 @@ def read_zordered_disc(
     lon: float,
     lat: float,
     max_snap_m: float,
-    bits: int | None = None,
-    levels: int | None = None,
 ):
     """Partition-pruned read of every row whose (lon, lat) could lie
     within ``max_snap_m`` of the query point — the union of the disc's
     pruning boxes over a write_zorder_layout table."""
     from . import layout as layout_mod
 
-    bits = layout_mod.ZORDER_BITS if bits is None else bits
-    levels = layout_mod.ZORDER_LEVELS if levels is None else levels
     out = None
     for box in snap_disc_boxes(lon, lat, max_snap_m):
-        part = layout_mod.read_zorder_bbox(
-            spark, layout_path, box, layout_bbox, bits=bits, levels=levels
-        )
+        part = layout_mod.read_zorder_bbox(spark, layout_path, box, layout_bbox)
         out = part if out is None else out.unionByName(part)
     return out
 
@@ -273,8 +267,6 @@ def snap_single_point_zordered(
     lon: float,
     lat: float,
     max_snap_m: float = 300.0,
-    bits: int | None = None,
-    levels: int | None = None,
 ) -> tuple[int, float] | None:
     """J4 served from the z-ordered node layout (plans/layout.py): instead
     of scanning the full node table per point query — the Spark shape of
@@ -299,7 +291,5 @@ def snap_single_point_zordered(
 
     At 100 TB this is the difference between a point query touching a
     handful of files and touching the planet table."""
-    nodes = read_zordered_disc(
-        spark, layout_path, layout_bbox, lon, lat, max_snap_m, bits=bits, levels=levels
-    )
+    nodes = read_zordered_disc(spark, layout_path, layout_bbox, lon, lat, max_snap_m)
     return snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)

@@ -1,205 +1,57 @@
-"""Serving warm-up: build every session-index artifact up front.
+"""The ANN serving surface: one layout, its declared builders, and the
+session warm-up.
 
-A serving session (the online ANN path in streaming/ann.py, a dashboard
-issuing the declared queries, the driver's correctness sweep) otherwise
-pays each index build inside whichever query touches it first.  One call
-here materializes the shared feeds — gated corpus, LSH signature table,
-IVF cells, exact-eval ground truth, shingle/MinHash/SimHash tables — so
-every later query runs at its warm cost.  This is the session twin of a
-lake pipeline's "build the index tables, then open the query endpoint"
-startup, and it is deliberately an explicit call: nothing in the engine
-warms implicitly, so batch-only sessions never pay for artifacts they
-don't use.
+The serving layout is the declared v25 layout (similarity.V25_Q): 32
+trained spherical-k-means cells probed 8 at a time, so a query reads
+the same 25% of the index as the 8-cell calibration queries (v5/v19)
+and the recall gain over them is quantizer capacity, not extra bytes
+(measured by v24's ncells axis and gated in test_serving_default).
+Batch serving is the declared builders themselves — ``ann_topk`` is
+v25, ``ivfpq_topk`` is v26, ``filtered_ann_topk`` is v29 — so what a
+serving session returns is exactly what the driver attests.  The
+streaming tiers (streaming/ann.py, streaming/pq_ann.py) take the same
+layout's cells and centroids from ``serving_cells_probes`` and
+``serving_centroids``.
 
-Returns {artifact: row_count} — the counts are the materializing actions,
-and non-zero counts double as a cheap ingest sanity check.
+``warm_session_index`` builds every session-index artifact up front.  A
+serving session (the online ANN path, a dashboard issuing the declared
+queries, the driver's correctness sweep) otherwise pays each index
+build inside whichever query touches it first.  One call materializes
+the shared feeds — gated corpus, LSH signature table, IVF cells,
+exact-eval ground truth, shingle/MinHash/SimHash tables — so every
+later query runs at its warm cost.  It is deliberately an explicit
+call: nothing in the engine warms implicitly, so batch-only sessions
+never pay for artifacts they don't use.  It returns {artifact:
+row_count} — the counts are the materializing actions, and non-zero
+counts double as a cheap ingest sanity check.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-# The coarse quantizer every serving surface uses unless the caller
-# explicitly asks for the seed layout.  "trained" = spherical-k-means
-# cells — the r10 measurement chain's pick (v20: 2-probe cell
-# membership recall 0.35 -> 0.51; v21: composed IVFADC recall@5
-# 0.27 -> 0.38 at identical nprobe/bytes/shortlist; v22: trained@1
-# nprobe matches seed@2, halving the index bytes read per query).  The
-# seed layout stays first-class as the calibration baseline (v5/v13 and
-# their oracles are unchanged); flipping this constant back is the
-# entire rollback.
-DEFAULT_QUANTIZER = "trained"
+from .operators.similarity import V25_NPROBE, V25_Q, _cells_probes, v25, v26, v29
 
-# The serving CELL COUNT (r11/r12/r13 verdict chain, acting on what v24
-# measures each round): ncells is the knob that grows with the corpus at
-# 100 TB (FAISS sizes it ~sqrt(N)), and each v24 extension has measured
-# finer cells buying recall at CONSTANT scan fraction.  8 -> 16 (r12
-# flip): membership recall 0.500 -> 0.520 (sf0.01), 0.448 -> 0.572
-# (sf0.001).  16 -> 32 (r13 flip): membership 0.520 -> 0.608 (sf0.01),
-# 0.572 -> 0.600 (sf0.001); composed v21-shape IVFADC recall@5
-# 0.408 -> 0.460 (sf0.01) and 0.400 -> 0.404 (sf0.001) at the same 25%
-# scan (test-gated strictly-no-worse in test_serving_default.py).
-# SERVING_NPROBE holds the scan fraction at the 8-cell default's
-# nprobe/ncells = 2/8: a serving query still reads 25% of the index —
-# the recall gain is pure quantizer capacity, not extra bytes.  The
-# declared queries v19/v21 stay on the 8-cell layout as calibration
-# baselines with unchanged oracles; rolling back = SERVING_NCELLS = 16
-# here + V25_NCELLS = 16 in similarity.py.
-SERVING_NCELLS = 32
-SERVING_NPROBE = SERVING_NCELLS // 4  # = the calibration scan fraction
+SERVING_Q = V25_Q
+SERVING_NPROBE = V25_NPROBE
+SERVING_NCELLS = SERVING_Q.ncells
 
-# The corpus-adaptive capacity rule (r15, acting on the banked r14
-# ncells_axis receipts).  At 100 TB ncells is the knob that must GROW
-# with the corpus (FAISS sizes it ~sqrt(N)); a fixed 32 is right for the
-# declared eval corpora (500-2000 vectors: sqrt(N) = 22-45, so 64 cells
-# starves) and wrong for a grown one (the 20k-vector synth corpus
-# measured membership recall 0.584/0.656/0.728/0.796 at 16/32/64/128
-# cells, constant 25% scan, with the composed v21-shape IVFADC
-# strictly-no-worse gate PASSING for 64-vs-32 — SCALE_SLOPE.json
-# ncells_axis).  The rule flips only through gate-validated steps:
-# - floor = SERVING_NCELLS (32): gate-measured strictly-no-worse on
-#   every declared corpus (the r12/r13 flip chain), never size down;
-# - 64 engages at n_vectors >= 64^2 (the sqrt-N support bound) — the
-#   composed 64-vs-32 gate receipt is banked;
-# - deeper layouts (128: membership recall rises, composed gate banked
-#   r15) engage the same way, each step requiring its own composed
-#   receipt before joining the ladder.
-SERVING_NCELLS_LADDER = (32, 64, 128)
+ann_topk = v25
+ivfpq_topk = v26
+filtered_ann_topk = v29
 
 
-def serving_ncells_for(n_vectors: int) -> int:
-    """The serving cell count for a corpus of ``n_vectors``: the deepest
-    gate-validated ladder entry c with c*c <= n_vectors (sqrt-N support),
-    floored at the declared SERVING_NCELLS.  Declared corpora (500-2000
-    vectors) size to exactly SERVING_NCELLS, so the declared v25-v29
-    contract and its oracles are unchanged by construction."""
-    best = SERVING_NCELLS
-    for c in SERVING_NCELLS_LADDER:
-        if c * c <= n_vectors:
-            best = c
-    return best
-
-
-def serving_seeds_for(n_vectors: int) -> tuple:
-    """The seed pool for :func:`serving_ncells_for`'s layout: the first
-    ncells ids of the extended deterministic pool (declared
-    TIVF_SEED_POOL first — so any layout's first 32 cells ARE the
-    declared calibration construction — extended past 32 on the same
-    deterministic stride the ncells_axis measurement used, every id
-    < 500 so it exists at every SF and in every synth corpus)."""
-    from .operators.similarity import TIVF_SEED_POOL
-
-    n = serving_ncells_for(n_vectors)
-    pool = list(TIVF_SEED_POOL)
-    j = 0
-    while len(pool) < n:
-        cand = (j * 7 + 3) % 500
-        if cand not in pool:
-            pool.append(cand)
-        j += 1
-    return tuple(pool[:n])
-
-# seed-quantizer ROLLBACK plans, one per tier: the trained default builds
-# the parameterized serving plan directly (ann_topk/ivfpq_topk below), so
-# these names are read ONLY on the DEFAULT_QUANTIZER='seed' branch
-_ANN_SEED_QUERY = "v5_ivf_topk"
-_IVFPQ_SEED_QUERY = "v13_ivfpq_topk"
-
-
-def serving_seeds() -> tuple:
-    """The DEFAULT quantizer's seed pool: the first SERVING_NCELLS ids of
-    the deterministic TIVF_SEED_POOL (whose first 8 ARE the calibration
-    layout's IVF_SEED_IDS — the v24 sweep's construction, so the 8-cell
-    calibration rows stay directly comparable)."""
-    from .operators.similarity import V25_POOL
-
-    # raise, not assert: declared layout == dispatch layout must survive
-    # python -O (r12 ADVICE — bare asserts vanish under optimized bytecode)
-    if SERVING_NCELLS != len(V25_POOL):
-        raise RuntimeError(
-            f"serving layout drift: SERVING_NCELLS={SERVING_NCELLS} but the "
-            f"declared v25 pool has {len(V25_POOL)} cells"
-        )
-    return V25_POOL
-
-
-def serving_quantizer(name: str | None = None):
-    """The ``name`` quantizer ("seed" or "trained"; default
-    DEFAULT_QUANTIZER) at the serving layout — the single dispatch point
-    batch plans, index builders and the streaming tiers share, so 'which
-    cells does serving use' is answered in exactly one place."""
-    from .operators.similarity import SEED_Q, Quantizer
-
-    if (name or DEFAULT_QUANTIZER) == "trained":
-        return Quantizer(serving_seeds(), trained=True)
-    return SEED_Q
-
-
-def serving_cells_probes(
-    spark: SparkSession, sf_dir: str, max_probe: int | None = None, nq: int | None = None
-):
-    """(e, cells, probes) for the DEFAULT serving quantizer AND layout.
-    ``max_probe`` defaults to SERVING_NPROBE (the constant-scan-fraction
-    probe count)."""
-    from .operators.similarity import N_QUERY_VECS, _cells_probes
-
-    mp = SERVING_NPROBE if max_probe is None else max_probe
-    q = N_QUERY_VECS if nq is None else nq
-    return _cells_probes(spark, sf_dir, serving_quantizer(), mp, q)
-
-
-def filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FILTERED ANN serving default: label-predicate search at the
-    serving layout with the per-predicate probe dispatch (v29 — v28's
-    recall measurement acted on).  Each query's probe depth scales with
-    its label slice's selectivity under a constant candidate budget,
-    clamped to [SERVING_NPROBE, SERVING_NCELLS]; unselective predicates
-    serve at exactly the fixed-nprobe v27 plan.  Row-equality pinned to
-    the declared query v29 in test_serving_default."""
-    from .operators.similarity import _probe_topk_plan
-
-    return _probe_topk_plan(
-        spark, sf_dir, serving_quantizer("trained"), SERVING_NPROBE, label_depth=True
-    )
+def serving_cells_probes(spark: SparkSession, sf_dir: str):
+    """(e, cells, probes) of the serving layout at SERVING_NPROBE."""
+    return _cells_probes(spark, sf_dir, SERVING_Q, SERVING_NPROBE)
 
 
 def serving_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
-    """The DEFAULT quantizer's centroid table collected as the
-    broadcast-small closure constant the streaming tiers take
-    ((cid, vector) sorted by cid — n_cells x dim, a few KB).  Streaming
-    ann/pq_ann stay quantizer-agnostic operators; this is where a
-    serving session gets 'the' centroids without naming a quantizer."""
-    rows = serving_quantizer().centroids(spark, sf_dir).orderBy("cid").collect()
+    """The serving layout's centroid table collected as the closure
+    constant the streaming tiers take ((cid, vector) sorted by cid —
+    n_cells x dim, a few KB)."""
+    rows = SERVING_Q.centroids(spark, sf_dir).orderBy("cid").collect()
     return [(r["cid"], list(r["ce"])) for r in rows]
-
-
-def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch ANN serving default: cell-probe top-k with exact
-    in-cell cosine over the DEFAULT quantizer at the SERVING layout
-    (SERVING_NCELLS trained cells, SERVING_NPROBE probes — v19's plan
-    shape at the v24-measured capacity; v19/v5 are the 8-cell
-    calibration baselines)."""
-    from .operators.relational import QUERIES
-    from .operators.similarity import _probe_topk_plan
-
-    if DEFAULT_QUANTIZER == "trained":
-        return _probe_topk_plan(spark, sf_dir, serving_quantizer(), SERVING_NPROBE)
-    return QUERIES[_ANN_SEED_QUERY].build(spark, sf_dir)
-
-
-def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The codes-only (IVFADC) serving default: SERVING-layout trained
-    cells x raw PQ codes x exact shortlist re-rank (v21's plan shape at
-    the v24-measured capacity; v21/v13 are the 8-cell calibration
-    baselines)."""
-    from .operators.relational import QUERIES
-    from .operators.similarity import N_QUERY_VECS, _pq_topk_plan
-
-    if DEFAULT_QUANTIZER == "trained":
-        return _pq_topk_plan(
-            spark, sf_dir, N_QUERY_VECS, quant=serving_quantizer(), nprobe=SERVING_NPROBE
-        )
-    return QUERIES[_IVFPQ_SEED_QUERY].build(spark, sf_dir)
 
 
 def warm_session_index(spark: SparkSession, sf_dir: str) -> dict[str, int]:
@@ -216,7 +68,6 @@ def warm_session_index(spark: SparkSession, sf_dir: str) -> dict[str, int]:
         SIG_PLANES,
         TRAINED_Q,
         V12_NQ,
-        _cells_probes,
         _emb,
         _exact_topk,
         _exact_topk_v12,
@@ -238,9 +89,8 @@ def warm_session_index(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     _, tcells, tprobes = _cells_probes(spark, sf_dir, TRAINED_Q, N_PROBE)
     counts["tivf_cells"] = tcells.count()
     counts["tivf_probes"] = tprobes.count()
-    # the SERVING layout (SERVING_NCELLS trained cells at the constant
-    # scan fraction) — what ann_topk/ivfpq_topk and the streaming tiers
-    # actually serve
+    # the serving layout — what ann_topk/ivfpq_topk and the streaming
+    # tiers actually serve
     _, scells, sprobes = serving_cells_probes(spark, sf_dir)
     counts[f"tivf{SERVING_NCELLS}_cells"] = scells.count()
     counts[f"tivf{SERVING_NCELLS}_probes"] = sprobes.count()

@@ -1,42 +1,53 @@
-"""Streaming ANN query serving: the online twin of the batch similarity
-family (operators/similarity.py v1/v5).
+"""Streaming ANN query serving: the online twin of the batch cell-probe
+top-k (operators/similarity.py _probe_topk_plan — v1/v5/v25/v27/v29).
 
 The batch queries answer "what are the top-k neighbors of these query
 vectors over this corpus".  A serving pipeline needs the ONLINE form: a
 stream of query vectors arrives, each must get its top-k against a
 STATIC, pre-built index — exactly the artifact the session index
-materializes (IVF cells / gated corpus).  This module provides that, and
-the stream≡batch equivalence is the correctness contract
-(tests/test_streaming.py): over a bounded stream, the emitted top-k per
-query EQUALS v5's output at the same nprobe, and equals exact v1 when
-every cell is probed.
+materializes (IVF cells / gated corpus).  ``topk_stream`` provides that
+for every batch plan shape, and the stream≡batch equivalence is the
+correctness contract (tests/test_streaming.py): over a bounded stream,
+the emitted top-k per query EQUALS the batch plan's output at the same
+layout — v5 at the seed cells, exact v1 when every cell is probed, v25
+at the serving layout, v27 with ``label_filter`` and v29 with
+``label_depth``.
 
 Design, stage by stage:
 
+- the query gate: a query vector the batch side would never answer
+  (NULL, wrong dimension, NULL element, zero norm) is dropped with the
+  batch corpus gate's own predicate (similarity.valid_vector) before
+  any kernel sees it — an invalid query is not answered, and it cannot
+  fail the stream for the valid ones.
 - ``probe_cells_col``: the query's nprobe nearest centroids as a pure
   SCAN-SIDE projection — the centroid matrix is tiny (n_cells × dim, the
   side v5 broadcasts) so it rides into the Arrow kernel as a closure
   constant; one BLAS matmul per batch ranks all cells with the exact
   batch tie-break (sim desc, cid asc).  No join, no window: composable
   under the downstream stateful operator, which a streaming window rank
-  is not.
+  is not.  With ``label_depth`` the kernel ranks every cell once and
+  each query keeps the first npl(its label) of them — the streaming
+  form of v29's ``rn <= npl`` gate, npl from v29's own _label_nprobe.
 - stream-STATIC equi-join on ``cell``: the corpus side stays partitioned
   by cell (the IVF layout — at 100 TB the query touches nprobe/ncells of
-  the corpus, never scans it); candidates get the exact cosine verify
+  the corpus, never scans it); a label predicate composes into this
+  join before the cosine, and candidates get the exact cosine verify
   with the same Arrow kernel as every batch query.
-- ``topk_per_query``: applyInPandasWithState keyed by qid.  State is the
-  query's CURRENT top-k only — k (vec_id, sim) entries, not the
-  candidate list — merged with each arriving candidate batch, so state
-  stays O(k) per query no matter how many candidates a probed cell
-  holds and the operator is robust to a query's candidate set being
-  split across micro-batches (re-deliveries merge idempotently: a
-  (vec_id, sim) pair already in the top-k replaces itself).  Idle
-  queries evict on a processing-time timeout, the same bounded-state
-  discipline as the dedup registries.  Each invocation emits the
-  query's updated full top-k stamped with a monotonically increasing
-  per-qid ``rev``; the emission with the highest rev is the current
-  answer, so a downstream consumer does a keep-last-rev upsert (with
-  availableNow and one delivery there is exactly one rev).
+- ``serve_topk``: applyInPandasWithState keyed by qid, shared with
+  streaming/pq_ann.py.  State is the query's CURRENT top-k only —
+  TOP_K (vec_id, sim) entries, not the candidate list — merged with
+  each arriving candidate batch, so state stays O(k) per query no
+  matter how many candidates a probed cell holds and the operator is
+  robust to a query's candidate set being split across micro-batches
+  (re-deliveries merge idempotently: a (vec_id, sim) pair already in
+  the top-k replaces itself).  Idle queries evict on a processing-time
+  timeout, the same bounded-state discipline as the dedup registries.
+  Each invocation emits the query's updated full top-k stamped with a
+  monotonically increasing per-qid ``rev``; the emission with the
+  highest rev is the current answer, so a downstream consumer does a
+  keep-last-rev upsert (with availableNow and one delivery there is
+  exactly one rev).
 """
 
 from __future__ import annotations
@@ -58,7 +69,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.similarity import TOP_K, cosine
+from ..operators.similarity import TOP_K, _label_nprobe, cosine, valid_vector
 
 STATE_TTL_MS = 3600 * 1000  # evict queries idle for an hour
 
@@ -115,32 +126,41 @@ def probe_cells_col(centroids: list[tuple[int, list[float]]], nprobe: int):
     return _probes
 
 
-def _merge_factory(k: int, ttl_ms: int):
-    def _merge(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        vec_ids, sims, rev = state.get if state.exists else ([], [], 0)
-        best = dict(zip((int(v) for v in vec_ids), (float(s) for s in sims)))
-        for pdf in pdfs:
-            for vec_id, sim in zip(pdf["vec_id"].tolist(), pdf["sim"].tolist()):
-                best[int(vec_id)] = float(sim)  # re-delivery replaces itself
-        # keep the k best by (sim desc, vec_id asc) — the batch rank order
-        top = sorted(best.items(), key=lambda t: (-t[1], t[0]))[:k]
-        rev = int(rev) + 1
-        state.update(([v for v, _ in top], [s for _, s in top], rev))
-        state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            {
-                "qid": [key[0]] * len(top),
-                "vec_id": [v for v, _ in top],
-                "rnk": list(range(1, len(top) + 1)),
-                "sim": [round(s, 4) for _, s in top],
-                "rev": [rev] * len(top),
-            }
-        )
+def _merge(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    if state.hasTimedOut:
+        state.remove()
+        return
+    vec_ids, sims, rev = state.get if state.exists else ([], [], 0)
+    best = dict(zip((int(v) for v in vec_ids), (float(s) for s in sims)))
+    for pdf in pdfs:
+        for vec_id, sim in zip(pdf["vec_id"].tolist(), pdf["sim"].tolist()):
+            best[int(vec_id)] = float(sim)  # re-delivery replaces itself
+    # keep the TOP_K best by (sim desc, vec_id asc) — the batch rank order
+    top = sorted(best.items(), key=lambda t: (-t[1], t[0]))[:TOP_K]
+    rev = int(rev) + 1
+    state.update(([v for v, _ in top], [s for _, s in top], rev))
+    state.setTimeoutDuration(STATE_TTL_MS)
+    yield pd.DataFrame(
+        {
+            "qid": [key[0]] * len(top),
+            "vec_id": [v for v, _ in top],
+            "rnk": list(range(1, len(top) + 1)),
+            "sim": [round(s, 4) for _, s in top],
+            "rev": [rev] * len(top),
+        }
+    )
 
-    return _merge
+
+def serve_topk(cand: DataFrame) -> DataFrame:
+    """(qid, vec_id, rnk, sim, rev): the O(k)-state revisioned per-query
+    top-k over a streaming (qid, vec_id, sim) candidate frame."""
+    return cand.groupBy("qid").applyInPandasWithState(
+        _merge,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
 
 
 def topk_stream(
@@ -149,126 +169,36 @@ def topk_stream(
     cells: DataFrame,
     centroids: list[tuple[int, list[float]]],
     nprobe: int,
-    k: int = TOP_K,
-    ttl_ms: int = STATE_TTL_MS,
+    label_filter: bool = False,
+    label_depth: bool = False,
 ) -> DataFrame:
-    """(qid, vec_id, rnk, sim): per-query top-k over the probed cells of a
-    static IVF index.  ``queries`` is a STREAMING frame (qid, qe);
-    ``corpus`` (vec_id, embedding) and ``cells`` (vec_id, cell) are the
-    static index tables (at toy scale the session-index artifacts; at
-    100 TB the lake tables, cell-partitioned).  ``nprobe = len(centroids)``
-    probes every cell — the exact (v1) calibration."""
-    probed = queries.select(
-        "qid", "qe", F.explode(probe_cells_col(centroids, nprobe)(F.col("qe"))).alias("cell")
+    """(qid, vec_id, rnk, sim, rev): per-query top-k over the probed cells
+    of a static IVF index.  ``queries`` is a STREAMING frame (qid, qe,
+    plus qlabel when filtered); ``corpus`` (vec_id, embedding, plus
+    label when filtered) and ``cells`` (vec_id, cell) are the static
+    index tables (at toy scale the session-index artifacts; at 100 TB
+    the lake tables, cell-partitioned).  ``nprobe = len(centroids)``
+    probes every cell — the exact (v1) calibration.  ``label_filter``
+    and ``label_depth`` decide as in the batch _probe_topk_plan: the
+    former keeps only candidates sharing the query's label (v27), the
+    latter implies it and probes npl(label) >= ``nprobe`` cells per
+    query (v29)."""
+    by_label = label_filter or label_depth
+    depth = len(centroids) if label_depth else nprobe
+    probed = queries.where(valid_vector(F.col("qe"))).select(
+        "*", F.posexplode(probe_cells_col(centroids, depth)(F.col("qe"))).alias("pos", "cell")
     )
-    indexed = cells.join(corpus, "vec_id")  # static side: (vec_id, cell, embedding)
-    cand = (
-        probed.join(indexed, "cell")  # stream-static equi-join on the cell key
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    return cand.groupBy("qid").applyInPandasWithState(
-        _merge_factory(k, ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def adaptive_filtered_topk_stream(
-    queries: DataFrame,
-    corpus: DataFrame,
-    cells: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    label_nprobe: DataFrame,
-    k: int = TOP_K,
-    ttl_ms: int = STATE_TTL_MS,
-) -> DataFrame:
-    """v29's ONLINE form — filtered serving with the per-predicate probe
-    dispatch: each arriving (qid, qe, qlabel) probes ``npl(qlabel)``
-    cells instead of a fixed nprobe, so a selective label (a small slice
-    of the corpus) probes deeper instead of starving the re-rank, and an
-    unselective one keeps the serving scan fraction.  ``label_nprobe``
-    is the STATIC (label, npl) selectivity table — the |labels|-row
-    broadcast aggregate v29 computes (_label_nprobe); passing it in
-    keeps this tier quantizer- and layout-agnostic like the rest of the
-    module (at 100 TB it comes from table statistics, refreshed with the
-    index, never from the stream).  Plan shape: the probe kernel ranks
-    ALL cells once (the same one-matmul scan-side projection), posexplode
-    carries the rank, and the per-label depth is a WHERE on that rank
-    after the broadcast stream-static join — the streaming form of v29's
-    ``rn <= npl`` gate.  Everything downstream (label predicate composed
-    into the candidate join before the cosine, O(k)-state merge, TTL)
-    is shared with filtered_topk_stream.  Stream≡batch is pinned to the
-    declared v29 in test_streaming."""
-    probed = (
-        queries.join(F.broadcast(label_nprobe), queries["qlabel"] == label_nprobe["label"])
-        .drop(label_nprobe["label"])
-        .select(
-            "qid",
-            "qe",
-            "qlabel",
-            "npl",
-            F.posexplode(probe_cells_col(centroids, len(centroids))(F.col("qe"))).alias(
-                "pos", "cell"
-            ),
+    if label_depth:
+        npl = _label_nprobe(corpus, len(centroids), nprobe)
+        probed = (
+            probed.join(F.broadcast(npl), F.col("qlabel") == F.col("label"))
+            .where(F.col("pos") < F.col("npl"))
+            .drop("label", "npl")
         )
-        .where(F.col("pos") < F.col("npl"))
-        .drop("pos", "npl")
-    )
-    indexed = cells.join(corpus, "vec_id")  # static side: (vec_id, cell, embedding, label)
-    cand = (
-        probed.join(indexed, "cell")
-        .where((F.col("vec_id") != F.col("qid")) & (F.col("label") == F.col("qlabel")))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    return cand.groupBy("qid").applyInPandasWithState(
-        _merge_factory(k, ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def filtered_topk_stream(
-    queries: DataFrame,
-    corpus: DataFrame,
-    cells: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    nprobe: int,
-    k: int = TOP_K,
-    ttl_ms: int = STATE_TTL_MS,
-) -> DataFrame:
-    """v27's ONLINE form — filtered serving for a query stream: each
-    arriving (qid, qe, qlabel) gets its top-k over the probed cells of
-    the static index RESTRICTED to candidates whose metadata matches the
-    query's (label equality, the 'nearest within my class/language/
-    license bucket' query).  The predicate composes INTO the stream-
-    static candidate join before the cosine — exactly v27's plan shape,
-    so selectivity multiplies with the coarse filter instead of
-    post-filtering a shortlist (which starves recall at selective
-    predicates).  ``corpus`` is (vec_id, embedding, label); everything
-    else matches topk_stream — the same O(k)-state merge serves both, so
-    the filtered tier inherits the retroactive-merge and TTL semantics.
-    Stream≡batch is pinned to the declared v27 in test_streaming."""
-    probed = queries.select(
-        "qid",
-        "qe",
-        "qlabel",
-        F.explode(probe_cells_col(centroids, nprobe)(F.col("qe"))).alias("cell"),
-    )
-    indexed = cells.join(corpus, "vec_id")  # static side: (vec_id, cell, embedding, label)
-    cand = (
-        probed.join(indexed, "cell")  # stream-static equi-join on the cell key
-        .where((F.col("vec_id") != F.col("qid")) & (F.col("label") == F.col("qlabel")))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    return cand.groupBy("qid").applyInPandasWithState(
-        _merge_factory(k, ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    indexed = cells.join(corpus, "vec_id")  # static side: (vec_id, cell, embedding[, label])
+    cand = probed.drop("pos").join(indexed, "cell").where(F.col("vec_id") != F.col("qid"))
+    if by_label:
+        cand = cand.where(F.col("label") == F.col("qlabel"))
+    return serve_topk(
+        cand.select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
     )

@@ -32,13 +32,15 @@ Design, stage by stage:
   fixed-M integer fold over the lookup table (tiny, per-row, no
   shuffle), approx = sum/1e6 / sqrt(recon_ss6/1e6) rounded to 6 digits
   — the batch shortlist's exact tie-break precision.
-- ``topk_per_query``: the SAME O(k)-state revisioned merge as ann.py
-  (_merge_factory is imported, not re-implemented).
+- the query gate and the per-query top-k are ann.py's: invalid query
+  vectors are dropped with the batch gate's predicate
+  (similarity.valid_vector) before the kernel, and the O(k)-state
+  revisioned merge is ann.serve_topk, not a copy.
 
 Stream≡batch contract (tests/test_streaming.py): over a bounded stream
 the emitted top-k per query equals the batch ADC ranking of the same
-probed cells from the same session-index artifacts, across micro-batches
-and under re-delivery.
+probed cells from the same session-index artifacts — at the seed cells
+and at the serving layout — across micro-batches and under re-delivery.
 """
 
 from __future__ import annotations
@@ -50,43 +52,27 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.streaming.state import GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, LongType
 
-from ..operators.similarity import PQ_M, TOP_K
-from .ann import OUTPUT_SCHEMA, STATE_SCHEMA, STATE_TTL_MS, _merge_factory, probe_cells_col
-
-# per-query scan-side features: probe cells + the M×K ADC lookup table
-_QFEAT_SCHEMA = StructType(
-    [
-        StructField("cells", ArrayType(LongType())),
-        StructField("adctab6", ArrayType(LongType())),
-    ]
-)
+from ..operators.similarity import PQ_M, valid_vector
+from .ann import probe_cells_col, serve_topk
 
 
-def build_pq_serving_index(spark, sf_dir, nprobe: int, quantizer: str | None = None):
-    """(static, centroids, codebook): the codes-only serving layout.
+def build_pq_serving_index(spark, sf_dir, quant):
+    """(static, codebook): the codes-only serving layout over the
+    ``quant`` quantizer's cells (serving.SERVING_Q for the serving
+    layout, similarity.SEED_Q for v13's cells).
 
     static = (vec_id, cell, codes array<int> dense 0..K-1 per sub-block,
     recon_ss6) — derived from the session-index artifacts, no embedding
     column.  codebook = {m: (sorted cids, ndarray K×PQ_SUB)} for the
-    query kernel's closure.  ``quantizer`` picks the cell layout: "seed"
-    (v13's cells) or "trained" (the SERVING layout — serving.SERVING_NCELLS
-    spherical-k-means cells, the v24-measured capacity); the default
-    (None) follows ``serving.DEFAULT_QUANTIZER`` — the serving tier
-    follows whichever index the batch evals picked, same operator
-    either way."""
+    query kernel's closure."""
     from ..operators.similarity import _cells_probes, _pq_index
-    from ..serving import serving_quantizer
 
     _, cw, codes = _pq_index(spark, sf_dir)
-    _, cells, _ = _cells_probes(spark, sf_dir, serving_quantizer(quantizer), nprobe)
+    # only the cell table is read; ncells // 4 (the 25% scan fraction)
+    # names the probe entry the quantizer's declared queries already use
+    _, cells, _ = _cells_probes(spark, sf_dir, quant, quant.ncells // 4)
 
     books: dict[int, tuple[list[int], np.ndarray]] = {}
     rows = cw.select("m", "cid", "cwe").collect()
@@ -192,13 +178,7 @@ def query_features_col(centroids, books, nprobe: int):
 
 
 def topk_stream(
-    queries: DataFrame,
-    static: DataFrame,
-    books,
-    centroids,
-    nprobe: int,
-    k: int = TOP_K,
-    ttl_ms: int = STATE_TTL_MS,
+    queries: DataFrame, static: DataFrame, books, centroids, nprobe: int
 ) -> DataFrame:
     """(qid, vec_id, rnk, sim, rev): per-query top-k by ADC approximate
     cosine over the probed cells of the static codes-only index.
@@ -207,7 +187,7 @@ def topk_stream(
     exact re-rank of these k rows is the downstream cold-store
     enrichment, as in batch v13."""
     feat, K = query_features_col(centroids, books, nprobe)
-    probed = queries.select(
+    probed = queries.where(valid_vector(F.col("qe"))).select(
         "qid", feat(F.col("qe")).alias("f")
     ).select("qid", F.col("f.adctab6").alias("adctab6"), F.explode("f.cells").alias("cell"))
     adc_expr = " + ".join(f"adctab6[{m} * {K} + codes[{m}]]" for m in range(PQ_M))
@@ -224,10 +204,4 @@ def topk_stream(
             ).alias("sim"),
         )
     )
-    return cand.groupBy("qid").applyInPandasWithState(
-        _merge_factory(k, ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return serve_topk(cand)

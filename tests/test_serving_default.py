@@ -34,6 +34,7 @@ from fifteenmc_spark.operators.similarity import (
     TIVF_SEED_POOL,
     TRAINED_Q,
     V25_POOL,
+    V25_Q,
     V12_NQ,
     Quantizer,
     _cells_probes,
@@ -51,12 +52,11 @@ def _rows(df):
 
 
 def test_serving_default_is_trained_at_32_cells():
-    assert serving.DEFAULT_QUANTIZER == "trained"
     assert serving.SERVING_NCELLS == 32
-    assert len(serving.serving_seeds()) == serving.SERVING_NCELLS
+    assert len(serving.SERVING_Q.seeds) == serving.SERVING_NCELLS
     # the first 8 seed ids ARE the calibration layout's, so the 8-cell
     # rows stay directly comparable (the v24 sweep's construction)
-    assert serving.serving_seeds()[:8] == IVF_SEED_IDS
+    assert serving.SERVING_Q.seeds[:8] == IVF_SEED_IDS
     # constant scan fraction: serving reads the same 25% of the index per
     # query as the 8-cell calibration default (N_PROBE / N_CELLS)
     assert serving.SERVING_NPROBE / serving.SERVING_NCELLS == N_PROBE / N_CELLS
@@ -105,10 +105,7 @@ def test_ann_topk_default_pins_to_v25(spark, sf_small):
     got = _rows(serving.ann_topk(spark, sf_small))
     assert got and got == _rows(QUERIES["v25_serving_tivf_topk"].build(spark, sf_small))
     assert got == _rows(
-        _probe_topk_plan(
-            spark, sf_small, Quantizer(serving.serving_seeds(), trained=True),
-            serving.SERVING_NPROBE,
-        )
+        _probe_topk_plan(spark, sf_small, serving.SERVING_Q, serving.SERVING_NPROBE)
     )
     # the layout flip is real: the serving default no longer equals the
     # 8-cell calibration query (whose oracle is unchanged)
@@ -123,7 +120,7 @@ def test_ivfpq_topk_default_pins_to_v26(spark, sf_small):
             spark,
             sf_small,
             N_QUERY_VECS,
-            quant=Quantizer(serving.serving_seeds(), trained=True),
+            quant=serving.SERVING_Q,
             nprobe=serving.SERVING_NPROBE,
         )
     )
@@ -154,17 +151,15 @@ def test_serving_cells_probes_default_equals_serving_layout_trained_index(spark,
 
 
 def test_pq_serving_index_default_is_the_serving_layout(spark, sf_small):
-    dstatic, _ = build_pq_serving_index(spark, sf_small, serving.SERVING_NPROBE)
-    tstatic, _ = build_pq_serving_index(
-        spark, sf_small, serving.SERVING_NPROBE, quantizer="trained"
-    )
-    assert _rows(dstatic.select("vec_id", "cell")) == _rows(tstatic.select("vec_id", "cell"))
+    # the serving quantizer IS the declared v25 layout (one declaration)
+    assert serving.SERVING_Q is V25_Q
+    dstatic, _ = build_pq_serving_index(spark, sf_small, serving.SERVING_Q)
     # well over the prior 16-cell layout's count actually serves (the
     # capacity is real, not nominal)
     assert dstatic.select("cell").distinct().count() > 16
     # and the dispatch is real: the explicit seed layout assigns at
     # least one vector to a different cell on this corpus
-    sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
+    sstatic, _ = build_pq_serving_index(spark, sf_small, SEED_Q)
     assert _rows(sstatic.select("vec_id", "cell")) != _rows(dstatic.select("vec_id", "cell"))
 
 
@@ -172,7 +167,7 @@ def test_seed_cells_remain_the_calibration_baseline(spark, sf_small):
     # flipping the default did NOT change the seed index or its queries:
     # the explicit seed layout still equals v5's cell table
     _, scells, _ = _cells_probes(spark, sf_small, SEED_Q, N_PROBE)
-    sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
+    sstatic, _ = build_pq_serving_index(spark, sf_small, SEED_Q)
     assert _rows(sstatic.select("vec_id", "cell")) == _rows(scells)
 
 
@@ -208,7 +203,7 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
                 spark,
                 sf_small,
                 V12_NQ,
-                quant=Quantizer(serving.serving_seeds(), trained=True),
+                quant=serving.SERVING_Q,
                 nprobe=serving.SERVING_NPROBE,
             ),
         )
@@ -306,45 +301,3 @@ def test_filtered_dispatch_recall_no_worse_than_fixed_nprobe(spark, sf_small):
         S.FILTERED_SHORTLIST_MULT = old
     r_new = _mean_recall(_recall_agg(exact, fixed.select("qid", "vec_id")))
     assert r_new >= r_base, (r_new, r_base)
-
-
-def test_serving_ncells_for_is_corpus_sized_and_gate_validated():
-    """r15 (r14 verdict item 7): the serving capacity rule — deepest
-    gate-validated ladder entry c with c*c <= n_vectors, floored at the
-    declared 32.  Declared corpora size to exactly SERVING_NCELLS, so
-    the declared v25-v29 contract is unchanged by construction; the
-    64/128 rungs engage only for corpora that support them (receipts in
-    SCALE_SLOPE.json ncells_axis)."""
-    from fifteenmc_spark import serving
-
-    # the declared eval corpora (sf0.001 ~500 vectors, sf0.01 ~2000):
-    # sqrt-N cannot support 64 cells -> the declared layout, unchanged
-    assert serving.serving_ncells_for(500) == serving.SERVING_NCELLS
-    assert serving.serving_ncells_for(2000) == serving.SERVING_NCELLS
-    assert serving.serving_ncells_for(4095) == serving.SERVING_NCELLS
-    # the 20k synth corpus (sqrt = 141) supports every banked rung
-    assert serving.serving_ncells_for(64 * 64) == 64
-    deep = serving.serving_ncells_for(20_000)
-    assert deep == max(serving.SERVING_NCELLS_LADDER)
-    # monotone in corpus size, never below the declared floor
-    last = 0
-    for n in (0, 1, 500, 2000, 5000, 20_000, 10**9):
-        c = serving.serving_ncells_for(n)
-        assert c >= serving.SERVING_NCELLS and c >= last
-        last = c
-
-
-def test_serving_seeds_for_extends_declared_pool_deterministically():
-    from fifteenmc_spark import serving
-    from fifteenmc_spark.operators.similarity import TIVF_SEED_POOL
-
-    # at declared sizes the pool IS the declared pool
-    assert serving.serving_seeds_for(2000) == TIVF_SEED_POOL[: serving.SERVING_NCELLS]
-    # at grown sizes: declared pool is a PREFIX (calibration cells keep
-    # their ids), extension ids are distinct and < 500 (exist at any SF)
-    big = serving.serving_seeds_for(20_000)
-    assert big[: len(TIVF_SEED_POOL)] == TIVF_SEED_POOL
-    assert len(set(big)) == len(big) == serving.serving_ncells_for(20_000)
-    assert all(0 <= i < 500 for i in big)
-    # deterministic
-    assert big == serving.serving_seeds_for(20_000)

@@ -504,14 +504,13 @@ def test_streaming_ann_topk_equals_batch_v5_and_v1(spark, sf_small, tmp_path_fac
 
 def test_streaming_ann_serves_the_serving_layout(spark, sf_small, tmp_path_factory):
     """The streaming ANN tier is quantizer-AGNOSTIC (cells + centroids
-    are inputs), and the serving DEFAULT is the trained layout at the
-    constant scan fraction (32 cells as of r13): the cells/centroids
-    here come from the serving dispatch helpers with no quantizer or
-    layout named anywhere, and the stream top-k equals the batch serving
-    plan exactly.  The serving story follows the measured index: v20
+    are inputs), and the serving layout is the trained 32-cell layout at
+    the constant scan fraction (serving.SERVING_Q, the declared v25
+    layout): the cells/centroids here come from the serving helpers, and
+    the stream top-k equals the batch serving plan exactly.  The serving story follows the measured index: v20
     picked trained over seed cells, v24's sweep picked 16 over 8 then 32
     over 16 cells at equal scan, and online queries get that recall
-    because the default IS that layout."""
+    because serving IS that layout."""
     from fifteenmc_spark import serving
     from fifteenmc_spark.operators.similarity import N_QUERY_VECS, _emb, _probe_topk_plan
     from fifteenmc_spark.streaming import ann as ANN
@@ -525,7 +524,7 @@ def test_streaming_ann_serves_the_serving_layout(spark, sf_small, tmp_path_facto
     want = {
         (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
         for r in _probe_topk_plan(
-            spark, sf_small, serving.serving_quantizer(), serving.SERVING_NPROBE
+            spark, sf_small, serving.SERVING_Q, serving.SERVING_NPROBE
         ).collect()
     }
     assert want
@@ -550,7 +549,7 @@ def test_streaming_filtered_ann_equals_batch_v27(spark, sf_small, tmp_path_facto
     label predicate composes into the stream-static candidate join, and
     the stream top-k equals the declared v27 exactly — the serving
     layout's filtered matrix entry.  Cells/centroids come from the
-    serving dispatch helpers with no layout named anywhere."""
+    serving helpers."""
     from fifteenmc_spark import serving
     from fifteenmc_spark.operators.relational import QUERIES
     from fifteenmc_spark.operators.similarity import N_QUERY_VECS, _emb
@@ -574,8 +573,8 @@ def test_streaming_filtered_ann_equals_batch_v27(spark, sf_small, tmp_path_facto
     queries.coalesce(1).write.mode("overwrite").parquet(str(out / "f0"))
     stream = spark.readStream.schema(queries.schema).parquet(str(out) + "/*/")
     W.run_to_memory(
-        ANN.filtered_topk_stream(
-            stream, corpus, tcells, centroids, nprobe=serving.SERVING_NPROBE
+        ANN.topk_stream(
+            stream, corpus, tcells, centroids, nprobe=serving.SERVING_NPROBE, label_filter=True
         ),
         "sink_ann_filtered",
         output_mode="append",
@@ -622,8 +621,8 @@ def test_streaming_adaptive_filtered_ann_equals_batch_v29(spark, sf_small, tmp_p
     queries.coalesce(1).write.mode("overwrite").parquet(str(out / "f0"))
     stream = spark.readStream.schema(queries.schema).parquet(str(out) + "/*/")
     W.run_to_memory(
-        ANN.adaptive_filtered_topk_stream(
-            stream, corpus, tcells, centroids, label_nprobe=npl
+        ANN.topk_stream(
+            stream, corpus, tcells, centroids, nprobe=serving.SERVING_NPROBE, label_depth=True
         ),
         "sink_ann_adaptive",
         output_mode="append",
@@ -686,34 +685,21 @@ def test_streaming_span_registry_equals_batch_x9(spark, sf_small, tmp_path_facto
     assert any(chunks == {0, 1} for chunks in by_h.values())
 
 
-def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory):
-    # stream≡batch contract for the codes-only serving path (v13's front
-    # half online): the top-k by ADC approximate cosine over the probed
-    # cells, served from the static (cell, codes, recon_ss6) layout with
-    # NO embedding column on the static side, equals the batch ADC
-    # ranking from the same session-index artifacts — across
-    # micro-batches and under query re-delivery
-    import time
-
-    from pyspark.sql import Window as W2
-
+def _batch_adc_topk(spark, sf_small, quant, nprobe):
+    """The batch twin of the codes-only stream: v13's candidate ADC
+    ranking (oracle-checked shape) over ``quant``'s probed cells, top-k
+    by (approx desc, vec_id) without the exact re-rank, as
+    (qid, vec_id, rnk, sim) tuples."""
     from fifteenmc_spark.operators.similarity import (
-        IVF_SEED_IDS,
-        N_PROBE,
         N_QUERY_VECS,
-        SEED_Q,
         TOP_K,
         _cells_probes,
-        _emb,
         _pq_index,
         _pq_query_side,
     )
-    from fifteenmc_spark.streaming import pq_ann as PQA
 
-    # batch twin: v13's candidate ADC ranking (oracle-checked shape),
-    # top-k by (approx desc, vec_id) without the exact re-rank
     e, cw, codes = _pq_index(spark, sf_small)
-    _, cells, probes = _cells_probes(spark, sf_small, SEED_Q, N_PROBE)
+    _, cells, probes = _cells_probes(spark, sf_small, quant, nprobe)
     q, qparts = _pq_query_side(e, cw, N_QUERY_VECS)
     cand = (
         cells.join(probes.select("qid", "cell"), "cell")
@@ -732,8 +718,8 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
     appx = adc.select(
         "qid", "vec_id", F.round(F.col("adc") / F.sqrt("recon_ss"), 6).alias("sim")
     )
-    wr = W2.partitionBy("qid").orderBy(F.col("sim").desc(), "vec_id")
-    want = {
+    wr = Window.partitionBy("qid").orderBy(F.col("sim").desc(), "vec_id")
+    return {
         (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
         for r in appx.select(
             "qid", "vec_id", F.row_number().over(wr).alias("rnk"), F.round("sim", 4).alias("sim")
@@ -741,12 +727,35 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
         .where(F.col("rnk") <= TOP_K)
         .collect()
     }
+
+
+def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory):
+    # stream≡batch contract for the codes-only serving path (v13's front
+    # half online): the top-k by ADC approximate cosine over the probed
+    # cells, served from the static (cell, codes, recon_ss6) layout with
+    # NO embedding column on the static side, equals the batch ADC
+    # ranking from the same session-index artifacts — across
+    # micro-batches and under query re-delivery
+    import time
+
+    from pyspark.sql import Window as W2
+
+    from fifteenmc_spark.operators.similarity import (
+        IVF_SEED_IDS,
+        N_PROBE,
+        N_QUERY_VECS,
+        SEED_Q,
+        _emb,
+    )
+    from fifteenmc_spark.streaming import pq_ann as PQA
+
+    want = _batch_adc_topk(spark, sf_small, SEED_Q, N_PROBE)
     assert want
 
     # stream side: same artifacts through the serving layout — the SEED
-    # cells are the calibration baseline now, so this test names them
-    # explicitly (the serving default is the trained quantizer)
-    static, books = PQA.build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
+    # cells are the calibration baseline, so this test names them
+    # explicitly (the serving layout is the trained v25 quantizer)
+    static, books = PQA.build_pq_serving_index(spark, sf_small, SEED_Q)
     assert "embedding" not in static.columns  # codes-only static side
     centroids = [
         (r["vec_id"], list(r["embedding"]))
@@ -787,61 +796,20 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
 
 
 def test_streaming_pq_adc_serves_the_serving_layout(spark, sf_small, tmp_path_factory):
-    # the codes-only serving tier's DEFAULT layout: built with no
-    # quantizer argument it serves the SERVING layout (trained coarse
-    # cells x raw PQ codes at the constant scan fraction —
-    # serving.DEFAULT_QUANTIZER + SERVING_NCELLS), and the stream top-k
-    # equals the batch ADC ranking over those probed cells — the online
-    # form of the index the r10-r12 evals picked, now the default
-    from pyspark.sql import Window as W2
-
+    # the codes-only serving tier over the SERVING layout (trained coarse
+    # cells x raw PQ codes at the constant scan fraction — serving.SERVING_Q,
+    # the declared v25 layout): the stream top-k equals the batch ADC
+    # ranking over those probed cells — the online form of the index the
+    # r10-r13 evals picked
     from fifteenmc_spark import serving
-    from fifteenmc_spark.operators.similarity import (
-        N_QUERY_VECS,
-        TOP_K,
-        _emb,
-        _cells_probes,
-        _pq_index,
-        _pq_query_side,
-    )
+    from fifteenmc_spark.operators.similarity import N_QUERY_VECS, _emb
     from fifteenmc_spark.streaming import pq_ann as PQA
 
-    assert serving.DEFAULT_QUANTIZER == "trained"
     N_PROBE = serving.SERVING_NPROBE
-    e, cw, codes = _pq_index(spark, sf_small)
-    _, tcells, tprobes = _cells_probes(spark, sf_small, serving.serving_quantizer(), N_PROBE)
-    q, qparts = _pq_query_side(e, cw, N_QUERY_VECS)
-    cand = (
-        tcells.join(tprobes.select("qid", "cell"), "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
-    adc = (
-        codes.join(cand, "vec_id")
-        .join(qparts, ["qid", "m", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(
-            (F.sum("qdot6").cast("double") / 1e6).alias("adc"),
-            (F.sum("cw_ss6").cast("double") / 1e6).alias("recon_ss"),
-        )
-    )
-    appx = adc.select(
-        "qid", "vec_id", F.round(F.col("adc") / F.sqrt("recon_ss"), 6).alias("sim")
-    )
-    wr = W2.partitionBy("qid").orderBy(F.col("sim").desc(), "vec_id")
-    want = {
-        (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
-        for r in appx.select(
-            "qid", "vec_id", F.row_number().over(wr).alias("rnk"), F.round("sim", 4).alias("sim")
-        )
-        .where(F.col("rnk") <= TOP_K)
-        .collect()
-    }
+    want = _batch_adc_topk(spark, sf_small, serving.SERVING_Q, N_PROBE)
     assert want
 
-    # the DEFAULT layout — no quantizer parameter anywhere on the
-    # serving side of this test
-    static, books = PQA.build_pq_serving_index(spark, sf_small, N_PROBE)
+    static, books = PQA.build_pq_serving_index(spark, sf_small, serving.SERVING_Q)
     assert "embedding" not in static.columns
     centroids = serving.serving_centroids(spark, sf_small)
     queries = _emb(spark, sf_small).where(F.col("vec_id") < N_QUERY_VECS).select(
@@ -860,6 +828,67 @@ def test_streaming_pq_adc_serves_the_serving_layout(spark, sf_small, tmp_path_fa
         for r in spark.table("sink_pq_adc_trained").distinct().collect()
     }
     assert got == want
+
+
+def test_stream_tiers_drop_invalid_query_vectors(spark, sf_small, tmp_path_factory):
+    """Both stream tiers gate their query vectors with the batch corpus
+    gate's predicate: a zero-norm query, a NULL element, a NULL vector
+    and a wrong-dimension vector are dropped, not answered with
+    arbitrary rows (zero norm, NULL element) and not allowed to fail the
+    whole stream (wrong dimension) — the emitted rows are exactly the
+    valid queries' batch answer at the serving layout."""
+    from fifteenmc_spark import serving
+    from fifteenmc_spark.operators.relational import QUERIES
+    from fifteenmc_spark.operators.similarity import EMB_DIM, N_QUERY_VECS, _emb
+    from fifteenmc_spark.streaming import ann as ANN
+    from fifteenmc_spark.streaming import pq_ann as PQA
+
+    valid = _emb(spark, sf_small).where(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
+    bad = spark.createDataFrame(
+        [
+            (1000, [0.0] * EMB_DIM),
+            (1001, [None] + [0.5] * (EMB_DIM - 1)),
+            (1002, [0.5] * (EMB_DIM - 1)),
+            (1003, None),
+        ],
+        valid.schema,
+    )
+    out = tmp_path_factory.mktemp("invalid_query_stream")
+    valid.unionByName(bad).coalesce(1).write.mode("overwrite").parquet(str(out / "f0"))
+
+    def served(stream_df, name):
+        W.run_to_memory(stream_df, name, output_mode="append")
+        return {
+            (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
+            for r in spark.table(name).distinct().collect()
+        }
+
+    e, cells, _ = serving.serving_cells_probes(spark, sf_small)
+    centroids = serving.serving_centroids(spark, sf_small)
+    stream = spark.readStream.schema(valid.schema).parquet(str(out) + "/*/")
+    want = {
+        (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
+        for r in QUERIES["v25_serving_tivf_topk"].build(spark, sf_small).collect()
+    }
+    assert want
+    got = served(
+        ANN.topk_stream(
+            stream, e.select("vec_id", "embedding"), cells, centroids, serving.SERVING_NPROBE
+        ),
+        "sink_ann_invalid",
+    )
+    assert got == want
+
+    static, books = PQA.build_pq_serving_index(spark, sf_small, serving.SERVING_Q)
+    want_pq = _batch_adc_topk(spark, sf_small, serving.SERVING_Q, serving.SERVING_NPROBE)
+    assert want_pq
+    got_pq = served(
+        PQA.topk_stream(stream, static, books, centroids, serving.SERVING_NPROBE),
+        "sink_pq_invalid",
+    )
+    assert got_pq == want_pq
 
 
 def test_streaming_sampled_span_registry_equals_batch_x9_sampled(spark, sf_small, tmp_path_factory):
@@ -934,7 +963,7 @@ def test_stateful_timeout_branches_emit_nothing():
     fns = [
         ML._match_factory(0.5, 1000),
         ND._match_factory(8, 1000),
-        ANN._merge_factory(5, 1000),
+        ANN._merge,
         SD._flag,
         ST._update,
     ]
