@@ -33,7 +33,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # Queries with no driver CORRECTNESS row yet come first so every declared
 # query accumulates at least one driver-checked green row across rounds.
 _CHECK_FIRST = (
-    # Lead: queries whose builder or oracle text changed when the PQ/ADC
+    # Lead: g3 now calls the one-task solver directly, in place of the
+    # size dispatch it went through before.
+    "g3_bounded_reach",
+    # Then: queries whose builder or oracle text changed when the PQ/ADC
     # stages were shared (one Lloyd trainer, one code assignment, one
     # ADC builder, one re-rank tail): every PQ query, and every
     # trained-quantizer query, whose oracle embeds the Lloyd SQL.

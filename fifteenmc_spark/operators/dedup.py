@@ -1081,7 +1081,7 @@ def _max_df(spark, sf_dir) -> int | None:
     ("dedup", "jaccard", "df-cap", "pipeline"),
 )
 def x5_capped(spark, sf_dir):
-    # Measured dispatch (same pattern as the reach strategies and d8),
+    # Measured dispatch (same pattern as d8),
     # TWO cached catalog scalars over the dfreq table (already a required
     # input of either plan):
     # - max df within the cap → path 2 and the split verify are provably
@@ -1132,7 +1132,7 @@ def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     checkpoint, a cached session index like _pair_graph, or local rows):
     the size probe and the chosen side both read it.
 
-    One size dispatch, the same shape as reach's (plans/reach.py): one
+    One size dispatch: one
     ``limit(bound+1).count()`` probe against LOCAL_CLUSTER_MAX_PAIRS,
     read at call time.  It ships ONE number to the driver — never the
     rows — so an over-bound graph pays no Row transfer just to learn it
@@ -1156,8 +1156,7 @@ def near_dup_clusters(pairs: DataFrame) -> DataFrame:
 def _clusters_union_find(rows, spark) -> DataFrame:
     """Union-find over an ALREADY-COLLECTED bounded pair list (PySpark
     Rows cost ~100+ bytes each, so the 200k bound is ~100-200 MB
-    driver-side including the parent dict; same class of bounded collect
-    as the reach prev-map backtrack).  Union-by-min + path compression:
+    driver-side including the parent dict).  Union-by-min + path compression:
     the final root of every tree is the component's minimum doc_id."""
     parent: dict = {}
 

@@ -184,10 +184,11 @@ _G3_SQL = f"""
 @_register(
     "g3_bounded_reach",
     "Bounded multi-source shortest paths (G2, precompute_poi_reach.py:"
-    "86-125) through the size dispatch in plans/reach.py (the one-task "
-    "heap Dijkstra at this size), on a 127-node directed binary tree with "
-    "two seeds.  Oracle: recursive CTE path enumeration + per-node min — "
-    "an independent fixed point of the same relaxation.",
+    "86-125) through the engine's one solver, the one-task heap Dijkstra "
+    "of plans/reach.py, on a coordinate-free 127-node directed binary "
+    "tree with two seeds, solved as one group.  Oracle: recursive CTE "
+    "path enumeration + per-node min — an independent fixed point of the "
+    "same relaxation.",
     _G3_SQL,
     ("geo", "graph", "iterative"),
 )
@@ -198,10 +199,12 @@ def g3(spark, sf_dir):
         i.cast("int").alias("dst"),
         (F.lit(1.0) + (i % 7).cast("double") * 0.5).alias("w"),
     )
-    seeds = spark.createDataFrame(
-        [(0, "c", 100), (5, "c", 105)], "node_idx INT, category STRING, poi_id BIGINT"
+    seeds = spark.createDataFrame([(0, "c", 100), (5, "c", 105)], "node_idx INT, category STRING, poi_id BIGINT")
+    rows = reach_mod.graph_rows(edges, seeds, spark.range(_N_TREE).select(F.col("id").alias("node_idx")))
+    # one group, every node core
+    sp = reach_mod.shortest_paths_bounded_local(
+        rows.select(F.lit("tree").alias("grid_id"), F.lit(True).alias("core"), "*"), limit_m=_LIMIT
     )
-    sp = reach_mod.shortest_paths_bounded(edges, seeds, limit_m=_LIMIT)
     # checkpoint before the sort: the range sampler would re-run the
     # one-task Dijkstra (a Python worker round-trip) a second time
     return (

@@ -976,9 +976,9 @@ def d21(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @_register(
     "d22_graph_relax",
-    "One shortest-path relaxation round = join + group-min — the exact "
-    "DataFrame kernel the iterative bounded Dijkstra (plans/reach.py) "
-    "repeats until the frontier drains (ref G2, "
+    "One shortest-path relaxation round = join + group-min — the "
+    "DataFrame form of the edge relaxation that the heap Dijkstra of "
+    "plans/reach.py runs inside one task per tile (ref G2, "
     "precompute_poi_reach.py:86-125).  Edges synthesized from nation.",
     """
     SELECT e.src AS node_id, ROUND(MIN(s.d + e.w), 4) AS dist_m

@@ -54,7 +54,7 @@ def _emb(spark, sf_dir):
     participate in cosine math (valid_embeddings).
 
     Measured dispatch on the SCAN's partition count — the same pattern as
-    the reach one-task strategy and the x5 max-df dispatch:
+    the x5 max-df dispatch:
     - few partitions (< defaultParallelism) ⇒ the corpus is small (parquet
       splits at maxPartitionBytes, so partition count tracks bytes): pin
       the gated table with a lazy localCheckpoint so the scan + gate HOF

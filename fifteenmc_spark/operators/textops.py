@@ -658,7 +658,7 @@ def chunk_dedup(spark, sf_dir):
     shuffle); pass A aggregates chunk-hash frequencies off the
     precomputed keys (hash-only shuffle) and measures the boilerplate
     set; pass B rebuilds each document from the same materialized arrays,
-    dispatching on the measured size (the x5_capped/reach pattern):
+    dispatching on the measured size (the x5_capped pattern):
 
     - set size <= BP_COLLECT_BOUND, read at call time (the common case —
       boilerplate is a heavy-hitter set): keys become an InSet predicate

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo
@@ -108,19 +108,59 @@ def generate_tiles(
     )
 
 
+def tiles_over(
+    nodes: DataFrame,
+    tile_km: float = TILE_KM_DEFAULT,
+    buffer_km: float = BUFFER_KM_DEFAULT,
+) -> DataFrame:
+    """generate_tiles over the extent of ``nodes(lon, lat)``, with both max
+    edges pushed out by 1e-9 deg: tile cores exclude their max edges, so
+    a node on the extent's max lon or lat would otherwise lie in no core.
+
+    A graph across the ±180 meridian is tiled in its eastward frame
+    (longitudes in [0, 360), negative ones shifted by 360) whenever that
+    extent is the narrower one, so its tiles are a few cells wide and not
+    the whole globe; frame_lon maps node longitudes into that frame."""
+    lon = F.col("lon").cast("double")
+    east = frame_lon(lon, 0.0)
+    r = nodes.agg(
+        F.min(lon), F.max(lon), F.min(east), F.max(east), F.min("lat"), F.max("lat")
+    ).first()
+    minlon, maxlon = (r[0], r[1]) if r[1] - r[0] <= r[3] - r[2] else (r[2], r[3])
+    bbox = (minlon, float(r[4]), maxlon + 1e-9, float(r[5]) + 1e-9)
+    return generate_tiles(nodes.sparkSession, bbox, tile_km=tile_km, buffer_km=buffer_km)
+
+
+def frame_lon(lon: Column, west: float) -> Column:
+    """``lon`` (degrees in [-180, 180]) as a double in the 360-degree
+    frame that starts at ``west``: shifted by ±360 only when it falls
+    outside [west, west + 360), so a longitude already in the frame is
+    unchanged to the bit."""
+    lon = lon.cast("double")
+    return (
+        F.when(lon < west, lon + 360.0).when(lon >= west + 360.0, lon - 360.0).otherwise(lon)
+    )
+
+
 def assign_points_to_tiles(points: DataFrame, tiles: DataFrame, use_buffer: bool = True) -> DataFrame:
     """Q1 buffer-halo assignment: point → every tile whose (buffer) bbox
     contains it.  1-to-many by design — the halo duplication is what makes
     per-tile reach computation independent.  Tiles broadcast (small side);
     the points scan never shuffles."""
     bb = F.col("buffer_bbox") if use_buffer else F.col("tile_bbox")
-    cond = (
+    return points.join(F.broadcast(tiles), contains(bb), "inner")
+
+
+def contains(bb: Column) -> Column:
+    """Half-open containment of the row's (lon, lat) in the bbox struct
+    ``bb``: min edges inclusive, max edges exclusive, so adjacent tile
+    cores never share a point."""
+    return (
         (F.col("lon") >= bb["minlon"])
         & (F.col("lon") < bb["maxlon"])
         & (F.col("lat") >= bb["minlat"])
         & (F.col("lat") < bb["maxlat"])
     )
-    return points.join(F.broadcast(tiles), cond, "inner")
 
 
 def k_nearest_tiles(tiles: DataFrame, lon: float, lat: float, k: int = 5) -> DataFrame:

@@ -22,7 +22,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions import geo
 from ..io import write_parquet
 from . import graph_build, grid, poi, reach, snap
 
@@ -43,28 +42,21 @@ def build_all(
     edges_raw: DataFrame,
     elements: DataFrame | None = None,
     pois_raw: DataFrame | None = None,
-    bbox: tuple[float, float, float, float] | None = None,
-    tile_km: float = grid.TILE_KM_DEFAULT,
-    buffer_km: float = grid.BUFFER_KM_DEFAULT,
     limit_m: float = reach.LIMIT_M_DEFAULT,
     max_snap_m: float = 300.0,
 ) -> GoldTables:
     """Run the full DAG.  POIs come either from an OSM `elements` table
     (classified via the tag map) or pre-extracted `pois_raw(poi_id,
-    category, lon, lat, name)`."""
-    if bbox is None:
-        import pyspark.sql.functions as F
-
-        r = nodes_raw.agg(
-            F.min("lon").alias("a"), F.min("lat").alias("b"), F.max("lon").alias("c"), F.max("lat").alias("d")
-        ).first()
-        bbox = (r["a"], r["b"], r["c"], r["d"] + 1e-9)
-
-    tiles = grid.generate_tiles(spark, bbox, tile_km, buffer_km)
-
+    category, lon, lat, name)`.  Tiles are grid.TILE_KM_DEFAULT cells
+    with grid.BUFFER_KM_DEFAULT halos over the graph nodes' extent
+    (grid.tiles_over), so every graph node lies in exactly one tile core.
+    The tile table is cached: reach reads it to check its buffer and to
+    assign nodes, and write_gold writes it."""
     gnodes, gedges = graph_build.build_graph(nodes_raw, graph_build.clean_walkable_edges(edges_raw))
     gnodes = gnodes.cache()
     gedges = gedges.cache()
+
+    tiles = grid.tiles_over(gnodes).cache()
 
     if pois_raw is None:
         if elements is None:
@@ -72,7 +64,7 @@ def build_all(
         pois_raw = poi.classify_pois(elements)
     pois_snapped = snap.snap_points_to_nodes(pois_raw, gnodes, max_snap_m=max_snap_m)
 
-    reach_df = reach.compute_reach(gnodes, gedges, pois_snapped.where("node_idx IS NOT NULL"), limit_m=limit_m)
+    reach_df = reach.compute_reach(gnodes, gedges, pois_snapped.where("node_idx IS NOT NULL"), tiles, limit_m=limit_m)
     summary = reach.reach_summary(reach_df, pois_snapped, gnodes, limit_m)
     return GoldTables(tiles, gnodes, gedges, pois_snapped, reach_df, summary)
 

@@ -6,8 +6,9 @@ Point queries consume the precomputed `reach` table — the
 materialized-view design the reference pins (`poi_query.py:97-99`): a
 point query never touches the graph, it reads one node's rows from a
 category-partitioned parquet table (partition-pruned scan at cluster
-scale).  Both path queries solve their shortest paths through
-reach.nearest_seed_chain.
+scale).  Both path queries solve inside the limit disc of their start
+point (_solve_in_disc): one reach.nearest_seed_path_local task over the
+graph within ``max_snap_m + limit_m`` of it.
 """
 
 from __future__ import annotations
@@ -20,6 +21,9 @@ from . import reach as reach_mod
 from . import snap as snap_mod
 
 MAX_SNAP_M_DEFAULT = 300.0  # test_path.py:374
+# disc slack over max_snap_m + limit_m: float32 edge weights may sum a
+# path a few millimetres shorter than its great-circle length
+_DISC_PAD_M = 1.0
 
 _PATH_SCHEMA = "seq INT, node_idx INT, lon FLOAT, lat FLOAT, step_m FLOAT, cum_m FLOAT"
 
@@ -118,12 +122,11 @@ def point_to_point_path(
     """G3 (`astar_csr`, test_path.py:33-76): point-to-point walking route.
 
     SURVEY's "bounded G2" with one seed: the snapped start node is the
-    only seed, reach.nearest_seed_chain solves the bounded shortest paths
-    from it (one-task heap Dijkstra at tile scale, the frontier loop
-    above — the loop has no A* pruning, so it settles the whole
-    ``limit_m`` disc) and walks prev from the snapped target back to the
-    start.  The chain is reversed and re-costed (G5 + W1); every step of
-    the forward chain is an edge, so the haversine fallback never fires.
+    only seed, _solve_in_disc solves the bounded shortest paths from it
+    inside the start point's limit disc (one heap-Dijkstra task, no A*
+    pruning) and walks prev from the snapped target back to the start.
+    The chain is reversed and re-costed (G5 + W1); every step of the
+    forward chain is an edge, so the haversine fallback never fires.
     Ties between equal-length routes go to the lexicographic min
     (dist, prev).
 
@@ -136,10 +139,43 @@ def point_to_point_path(
     found = None
     if s is not None and t is not None:
         seed = spark.createDataFrame([(s[0], "route", 0)], "node_idx INT, category STRING, poi_id BIGINT")
-        found = reach_mod.nearest_seed_chain(edges, seed, t[0], limit_m)
+        found = _solve_in_disc(nodes, edges, seed, start_lonlat, t[0], limit_m, max_snap_m)
     if found is None:
         return spark.createDataFrame([], _PATH_SCHEMA)
     return _recost(nodes, edges, found[1][::-1]).orderBy("seq")
+
+
+def _solve_in_disc(nodes, edges, seeds, center, tip_idx, limit_m, max_snap_m):
+    """G2 + G4 for one tip node inside the disc of radius ``max_snap_m +
+    limit_m`` (plus _DISC_PAD_M) around the query point ``center``:
+    ``(poi_id, chain)`` of the seed nearest to ``tip_idx``, chain in tip →
+    seed order, or None when no seed lies within ``limit_m``.
+
+    The disc loses nothing.  Edges are symmetric and weigh their haversine
+    length, so a node on a seed-to-tip path no longer than ``limit_m``
+    lies within ``limit_m`` great-circle distance of the path's query-side
+    end (the tip for path-to-nearest-POI, the seed for the route), and
+    that node lies within ``max_snap_m`` of ``center``.  Every node on the
+    winning chain, and every tie candidate for its prev, is on such a
+    path.  Only nodes in the disc, edges with both ends in it and seeds on
+    its nodes enter the one reach.nearest_seed_path_local task, and only
+    the O(path) chain comes back to the driver."""
+    lon, lat = center
+    radius_m = float(max_snap_m) + float(limit_m) + _DISC_PAD_M
+    disc = nodes.where(
+        geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(float(lon)), F.lit(float(lat)), geo.R_EDGE_WEIGHTS_M)
+        <= F.lit(radius_m)
+    ).select("node_idx")
+    # the disc's node ids are a small table: broadcast, the edges never shuffle
+    keys = F.broadcast(disc)
+    disc_edges = edges.join(keys.withColumnRenamed("node_idx", "src"), "src", "left_semi").join(
+        keys.withColumnRenamed("node_idx", "dst"), "dst", "left_semi"
+    )
+    chain = reach_mod.nearest_seed_path_local(
+        disc_edges, reach_mod._valid_sources(seeds, disc), tip_idx, limit_m
+    )
+    rows = sorted(chain.collect(), key=lambda r: r["seq"])
+    return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
 
 
 def _recost(nodes: DataFrame, edges: DataFrame, chain: list[int]) -> DataFrame:
@@ -203,13 +239,12 @@ def path_to_nearest_poi(
     nearest POI of ``category``.
 
     Solves the bounded multi-source shortest paths from the category's
-    POI seeds (G2), backtracks start→source (G4), then re-costs each step
-    and accumulates the running total (G5 + W1, _recost).  Output rows (B7 schema): seq, node_idx, lon, lat,
-    step_m, cum_m, poi_id, category.
-
-    G2 + G4 run in one task at tile scale and distributed above it (see
-    reach.nearest_seed_chain); either way the driver receives only the O(path)
-    chain, never the settled state."""
+    POI seeds (G2) and backtracks start→source (G4) in one task over the
+    graph inside the query point's limit disc (_solve_in_disc), then
+    re-costs each step and accumulates the running total (G5 + W1,
+    _recost).  Output rows (B7 schema): seq, node_idx, lon, lat, step_m,
+    cum_m, poi_id, category.  The driver receives only the O(path) chain,
+    never the settled state."""
     spark = nodes.sparkSession
     out_schema = _PATH_SCHEMA + ", poi_id BIGINT, category STRING"
     snapped = snap_mod.snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
@@ -218,12 +253,10 @@ def path_to_nearest_poi(
     start_idx, _ = snapped
 
     key = geo.sanitize_key(F.lit(category))
-    seeds = (
-        reach_mod._valid_sources(pois, nodes)
-        .where(geo.sanitize_key(F.col("category")) == key)
-        .select("node_idx", F.lit(category).alias("category"), "poi_id")
+    seeds = pois.where(geo.sanitize_key(F.col("category")) == key).select(
+        "node_idx", F.lit(category).alias("category"), "poi_id"
     )
-    found = reach_mod.nearest_seed_chain(edges, seeds, start_idx, limit_m)
+    found = _solve_in_disc(nodes, edges, seeds, (lon, lat), start_idx, limit_m, max_snap_m)
     if found is None:
         return spark.createDataFrame([], out_schema)  # no POI within limit_m
     poi_id, chain = found

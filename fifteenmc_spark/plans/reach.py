@@ -1,26 +1,30 @@
 """Bounded shortest paths → the `reach` gold table (SURVEY.md §2.8 G2,
-the reference's compute core), and the one place that decides how every
-bounded shortest path in the engine is solved.
+the reference's compute core), and the one solver behind every bounded
+shortest path in the engine.
 
 The reference runs a binary-heap Dijkstra over CSR arrays per category
-(`precompute_poi_reach.py:86-125`), bounded at `limit_m`, and the same
-heap for its point-to-point A* (`test_path.py:33-76`).  Here one size
-dispatch (``_dispatch``: one ``edges.count()`` probe) serves all three
-walking queries — G2 reach (compute_reach), the start → nearest-seed
-chain of path-to-nearest-POI (G4) and the point-to-point route (G3), both
-through nearest_seed_chain:
+(`precompute_poi_reach.py:86-125`), bounded at `limit_m`, once per tile,
+and the same heap for its point-to-point A* (`test_path.py:33-76`).  Here
+that heap (``_heap_dijkstra``) is the only solver, always inside one
+applyInPandas task per group:
 
-- at or below LOCAL_EDGE_THRESHOLD edges, that heap Dijkstra runs in ONE
-  cogrouped task (``_heap_dijkstra``) — the tile-scale case;
-- above it, frontier Bellman-Ford: each round relaxes every edge leaving
-  the frontier (join) and keeps the per-node minimum (groupBy-min) —
-  exactly the kernel declared as query d22.  Rounds ≈ hop diameter within
-  `limit_m` (tens, on a walking graph); every round is one co-partitioned
-  join + one aggregation.
+- G2 reach (compute_reach) groups by tile: a tile's group holds the edges
+  out of its buffer nodes and the seeds in its buffer, and keeps the rows
+  of its core nodes.  The buffer is wider than `limit_m`
+  (grid_creation.py:235-236: 2 km against 1 km), so no shortest path that
+  ends in a core leaves its tile's buffer and tiles never exchange state;
+  compute_reach refuses a buffer narrower than `limit_m` on the ground.
+- the start → nearest-seed chain of path-to-nearest-POI (G4) and the
+  point-to-point route (G3) solve in one group holding only the graph
+  inside their limit disc (nearest_seed_path_local, called from
+  plans/query.py).
+
+A tile that outgrows a task calls for a smaller grid.TILE_KM_DEFAULT, not
+a second solver.
 
 Differences from the reference, by design:
 - ALL categories run in one pass (category is a state column) instead of
-  the reference's per-category loop — one job, shared edge scan.
+  the reference's per-category loop — one task per tile, shared edge scan.
 - Tie-break is deterministic set semantics: the winning source for a node
   is min(dist, poi_id) lexicographically.  The reference's winner on
   exact distance ties depends on heap pop order
@@ -29,37 +33,19 @@ Differences from the reference, by design:
   under any partitioning.
 - Unreachable = NULL (reference: inf / -1); sentinels are materialized
   only at reference-shaped sinks (SURVEY.md §1.2).
-
-Scale notes
------------
-- The edge table is repartitioned by `src` once and cached; every round's
-  frontier join reuses that partitioning, so only the (small) frontier
-  shuffles per round.
-- State and frontier are localCheckpoint'ed each round to truncate the
-  growing lineage (on a cluster use a reliable checkpoint dir instead).
-- The `limit_m` bound keeps the frontier from sweeping the whole graph;
-  with per-tile processing (buffer 2 km > limit 1 km,
-  grid_creation.py:235-236) tiles never exchange state, so the whole
-  computation is tile-parallel.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from . import grid
 
 LIMIT_M_DEFAULT = 1000.0  # precompute_poi_reach.py:132
-# frontier loop: synchronization-round cap and edge relaxations per round
-MAX_ROUNDS = 200
-HOPS_PER_ROUND = 2
-_CKPT_EVERY = 3
-# graphs at or below this edge count solve in ONE task:
-# ~150k edges is a few MB of adjacency and milliseconds of heap Dijkstra —
-# far below the per-round scheduling cost of even one frontier barrier
-LOCAL_EDGE_THRESHOLD = 150_000
-_MAX_DOUBLINGS = 20  # backtrack chains up to 2^20 nodes — far beyond any walking path
 
 
 def _valid_sources(pois: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -80,9 +66,8 @@ def _heap_dijkstra(e_pdf, s_pdf, limit_m: float) -> dict:
     shortest_paths_bounded_local and nearest_seed_path_local.
 
     Returns ``state[(node, category)] = (dist, poi_id, prev)``, the
-    lexicographic-min winner per key, with prev -1 at seeds so seeds order
-    first on ties exactly like the frontier loop's struct-min (NULLs
-    first)."""
+    lexicographic-min winner per key, with prev -1 at seeds so a seed
+    orders first on ties."""
     import heapq
     from collections import defaultdict
 
@@ -113,62 +98,80 @@ def _heap_dijkstra(e_pdf, s_pdf, limit_m: float) -> dict:
     return state
 
 
-def _one_task(edges: DataFrame, seeds: DataFrame):
-    """Both inputs keyed on one constant group, ready for a single
-    cogrouped applyInPandas task."""
-    e = edges.select(
-        F.lit(0).alias("g"),
-        F.col("src").cast("int").alias("src"),
-        F.col("dst").cast("int").alias("dst"),
-        F.col("w").cast("double").alias("w"),
+def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame) -> DataFrame:
+    """One row per fact about a node, the input shape of
+    shortest_paths_bounded_local once keyed by group: ``(node_idx, dst, w,
+    seed, category, poi_id)``.  An edge ``edges(src, dst, w)`` is a row of
+    its source with ``dst``; a seed ``seeds(node_idx, category, poi_id)``
+    is a ``seed`` row; every ``nodes(node_idx)`` row gets a bare row, so a
+    node with neither still names its group.  Unused fields hold -1, 0.0,
+    false, NULL and 0, never NULL numbers, which pandas would widen to
+    float."""
+    return (
+        edges.select(
+            F.col("src").cast("int").alias("node_idx"),
+            F.col("dst").cast("int").alias("dst"),
+            F.col("w").cast("double").alias("w"),
+            F.lit(False).alias("seed"),
+            F.lit(None).cast("string").alias("category"),
+            F.lit(0).cast("bigint").alias("poi_id"),
+        )
+        .unionByName(
+            seeds.select(
+                F.col("node_idx").cast("int").alias("node_idx"),
+                F.lit(-1).alias("dst"),
+                F.lit(0.0).alias("w"),
+                F.lit(True).alias("seed"),
+                F.col("category").cast("string").alias("category"),
+                F.col("poi_id").cast("bigint").alias("poi_id"),
+            )
+        )
+        .unionByName(
+            nodes.select(
+                F.col("node_idx").cast("int").alias("node_idx"),
+                F.lit(-1).alias("dst"),
+                F.lit(0.0).alias("w"),
+                F.lit(False).alias("seed"),
+                F.lit(None).cast("string").alias("category"),
+                F.lit(0).cast("bigint").alias("poi_id"),
+            )
+        )
     )
-    s = seeds.select(
-        F.lit(0).alias("g"),
-        F.col("node_idx").cast("int").alias("node_idx"),
-        "category",
-        F.col("poi_id").cast("bigint").alias("poi_id"),
-    )
-    return e.groupBy("g").cogroup(s.groupBy("g"))
 
 
-def shortest_paths_bounded_local(
-    edges: DataFrame,
-    seeds: DataFrame,
-    limit_m: float = LIMIT_M_DEFAULT,
-) -> DataFrame:
-    """G2 kernel, single-task side: classic binary-heap Dijkstra
-    (_heap_dijkstra) inside ONE cogrouped applyInPandas task.
+def shortest_paths_bounded_local(rows: DataFrame, limit_m: float = LIMIT_M_DEFAULT) -> DataFrame:
+    """G2 kernel: multi-source bounded shortest paths per ``grid_id``
+    group, solved by the heap Dijkstra (_heap_dijkstra) in ONE
+    applyInPandas task per group.
 
-    This is the right plan whenever the (sub)graph fits in a task — which
-    at 100 TB is the COMMON case: the buffer>limit tile design
-    (grid_creation.py:235-236) makes every tile's reach independent, so
-    the cluster runs thousands of these tasks in parallel, one per tile,
-    with zero inter-tile shuffles (see tests/test_tile_parallel.py).  The
-    frontier loop (shortest_paths_frontier) exists for the uncommon case —
-    one connected region bigger than a task.
-
-    Semantics are identical to the frontier loop: bounded by ``limit_m``,
-    winner per (node, category) = lexicographic min (dist, poi_id)."""
+    ``rows(grid_id, core, node_idx, dst, w, seed, category, poi_id)`` are
+    graph_rows keyed by group: a row with ``dst`` >= 0 holds the edge
+    node_idx → dst of weight ``w``, a ``seed`` row holds the seed
+    (category, poi_id) on node_idx, and ``core`` on a node's rows keeps
+    that node's answers.  Returns ``(node_idx, category, dist_m, poi_id)``
+    for every core node within ``limit_m`` of a seed of that category
+    inside its group; the winner per (node, category) is the
+    lexicographic min (dist, poi_id).  Groups never exchange state, so a
+    tiled graph runs as one plain task per tile with no shuffle between
+    them."""
     lim = float(limit_m)
 
-    def solve(e_pdf, s_pdf):
+    def solve(pdf):
         import pandas as pd
 
-        state = _heap_dijkstra(e_pdf, s_pdf, lim)
-        rows = {
-            "node_idx": [k[0] for k in state],
-            "category": [k[1] for k in state],
-            "dist_m": [v[0] for v in state.values()],
-            "poi_id": [v[1] for v in state.values()],
-        }
-        out = pd.DataFrame(rows)
-        out["node_idx"] = out["node_idx"].astype("int32")
-        out["poi_id"] = out["poi_id"].astype("int64")
-        return out
+        e_pdf = pdf[pdf["dst"] >= 0].rename(columns={"node_idx": "src"})
+        core = set(pdf["node_idx"][pdf["core"]])
+        state = _heap_dijkstra(e_pdf, pdf[pdf["seed"]], lim)
+        keys = [k for k in state if k[0] in core]
+        return pd.DataFrame({
+            "node_idx": pd.Series([k[0] for k in keys], dtype="int32"),
+            "category": pd.Series([k[1] for k in keys], dtype="object"),
+            "dist_m": pd.Series([state[k][0] for k in keys], dtype="float64"),
+            "poi_id": pd.Series([state[k][1] for k in keys], dtype="int64"),
+        })
 
-    return _one_task(edges, seeds).applyInPandas(
-        lambda el, sl: solve(el, sl),
-        schema="node_idx INT, category STRING, dist_m DOUBLE, poi_id BIGINT",
+    return rows.groupBy("grid_id").applyInPandas(
+        solve, schema="node_idx INT, category STRING, dist_m DOUBLE, poi_id BIGINT"
     )
 
 
@@ -178,17 +181,17 @@ def nearest_seed_path_local(
     tip_idx: int,
     limit_m: float = LIMIT_M_DEFAULT,
 ) -> DataFrame:
-    """G2 + G4 in ONE cogrouped task: solve the bounded Dijkstra from
-    ``seeds`` (one category) and walk ``prev`` from ``tip_idx`` back to
-    its winning seed in the same task.  Emits only the O(path) chain
-    ``(seq, node_idx, poi_id)`` in tip → seed order (seq 0 is the tip
-    node) and no rows when no seed lies within ``limit_m`` — the settled
-    state never leaves the task.
+    """G2 + G4 in ONE cogrouped task: solve the bounded Dijkstra over
+    ``edges(src, dst, w)`` from ``seeds(node_idx, category, poi_id)`` (one
+    category) and walk ``prev`` from ``tip_idx`` back to its winning seed
+    in the same task.  Emits only the O(path) chain ``(seq, node_idx,
+    poi_id)`` in tip → seed order (seq 0 is the tip node) and no rows when
+    no seed lies within ``limit_m`` — the settled state never leaves the
+    task.
 
     Zero-weight edges can make the (dist, poi_id, prev) tie-break cyclic
     (hand-made inputs only: graph_build clamps weights at 0.01 m), so the
-    walk raises once it takes more steps than there are settled nodes,
-    like _backtrack_chain."""
+    walk raises once it takes more steps than there are settled nodes."""
     tip, lim = int(tip_idx), float(limit_m)
 
     def walk(e_pdf, s_pdf):
@@ -211,322 +214,83 @@ def nearest_seed_path_local(
             "poi_id": pd.Series([poi] * len(chain), dtype="int64"),
         })
 
-    return _one_task(edges, seeds).applyInPandas(
-        lambda el, sl: walk(el, sl), schema="seq INT, node_idx INT, poi_id BIGINT"
+    e = edges.select(F.lit(0).alias("g"), "src", "dst", F.col("w").cast("double").alias("w"))
+    s = seeds.select(F.lit(0).alias("g"), "node_idx", "category", "poi_id")
+    return e.groupBy("g").cogroup(s.groupBy("g")).applyInPandas(
+        walk, schema="seq INT, node_idx INT, poi_id BIGINT"
     )
 
 
-def _dispatch(edges: DataFrame, local, frontier):
-    """The one size split behind every bounded shortest path: ONE
-    ``edges.count()`` probe, then ``local(edges)`` at or below
-    LOCAL_EDGE_THRESHOLD edges (the one-task heap solver) and
-    ``frontier(edges, n_edges)`` above it (the distributed loop, which
-    sizes its shuffles from the same count).  ``edges`` reaches either
-    side as ``(src, dst, w DOUBLE)``.  Tests force the frontier side by
-    setting LOCAL_EDGE_THRESHOLD to -1."""
-    edges = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
-    n_edges = edges.count()
-    if n_edges <= LOCAL_EDGE_THRESHOLD:
-        return local(edges)
-    return frontier(edges, n_edges)
+def _buffer_width_m(rows) -> float:
+    """The narrowest ground width of any tile's buffer halo over the
+    collected tile ``rows``, in metres of edge-weight haversine
+    (geo.R_EDGE_WEIGHTS_M): a node in a tile's core lies at least this
+    far, great-circle, from every node outside that tile's buffer, so
+    every network path between them is at least as long.
+
+    grid.compute_degrees converts at 111.32 km per degree and sizes the
+    longitude halo at the bbox's top latitude, so the nominal
+    ``buffer_km`` overstates both: the latitude halo is measured here at
+    R_EDGE_WEIGHTS_M, and the longitude halo, as the distance from a point
+    to a meridian dlon away, at the core latitude farthest from the
+    equator."""
+    dlat = min(r["buffer_deg"]["dlat"] for r in rows)
+    dlon = min(r["buffer_deg"]["dlon"] for r in rows)
+    lat = max(max(abs(r["tile_bbox"]["minlat"]), abs(r["tile_bbox"]["maxlat"])) for r in rows)
+    cos_lat = math.cos(math.radians(min(lat, 90.0)))
+    lon_rad = math.asin(min(1.0, cos_lat * math.sin(math.radians(min(dlon, 90.0)))))
+    return geo.R_EDGE_WEIGHTS_M * min(math.radians(dlat), lon_rad)
 
 
-def shortest_paths_bounded(
-    edges: DataFrame,
-    seeds: DataFrame,
-    limit_m: float = LIMIT_M_DEFAULT,
-) -> DataFrame:
-    """G2 kernel: multi-source bounded shortest paths over
-    ``edges(src, dst, w)`` from ``seeds(node_idx, category, poi_id)``.
-
-    Returns ``(node_idx, category, dist_m, poi_id)`` for every node within
-    ``limit_m`` of a seed of that category, solved on whichever side of
-    the size dispatch (``_dispatch``) the graph falls: one-task heap
-    Dijkstra (shortest_paths_bounded_local) at tile scale, the frontier
-    loop (shortest_paths_frontier) above it.  Both sides return the same
-    table (pinned by test_reach_local_strategy_equivalent)."""
-    return _dispatch(
-        edges,
-        lambda e: shortest_paths_bounded_local(e, seeds, limit_m),
-        lambda e, n_edges: shortest_paths_frontier(e, seeds, n_edges, limit_m),
-    )
-
-
-def nearest_seed_chain(
-    edges: DataFrame, seeds: DataFrame, tip_idx: int, limit_m: float
-) -> tuple[int, list[int]] | None:
-    """G2 + G4 for one tip node: ``(poi_id, chain)`` of the seed nearest
-    to ``tip_idx``, chain in tip → seed order, or None when no seed lies
-    within ``limit_m``.  ``seeds`` carry one category.  Path-to-nearest-POI
-    walks from its start node to the POI seeds; the point-to-point route
-    (G3) seeds its start node alone and walks from its target.
-
-    Through the size dispatch: at tile scale one cogrouped task solves the
-    heap Dijkstra and walks prev from the tip (nearest_seed_path_local);
-    larger graphs run the frontier loop and the pointer-doubling
-    ``_backtrack_chain``.  Either way the driver receives O(path) rows."""
-
-    def local(e):
-        rows = sorted(nearest_seed_path_local(e, seeds, tip_idx, limit_m).collect(), key=lambda r: r["seq"])
-        return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
-
-    def frontier(e, n_edges):
-        sp = shortest_paths_frontier(e, seeds, n_edges, limit_m, track_prev=True)
-        # one row for the tip node, then the O(path) backtrack
-        tip = sp.where(F.col("node_idx") == tip_idx).select("dist_m", "poi_id").first()
-        if tip is None:
-            return None
-        return tip["poi_id"], _backtrack_chain(sp, tip_idx, float(tip["dist_m"]))
-
-    return _dispatch(edges, local, frontier)
-
-
-def _backtrack_chain(state: DataFrame, tip_idx: int, tip_dist: float) -> list[int]:
-    """G4 prev-pointer backtrack WITHOUT collecting the settled state:
-    pointer doubling over the prev table, so the driver receives O(path)
-    rows while the O(reached) settled set stays distributed (the r10
-    verdict's watch-item — a dense urban mega-tile's settled set was the
-    engine's largest driver transfer; the chain itself is bounded by
-    limit_m / min-edge-length).
-
-    Round k holds the chain's first 2^k nodes and a jump table mapping
-    each settled node to its 2^k-th ancestor (NULL once the walk passes
-    the root): extending the chain is a broadcast-small join of the known
-    chain against the jump table, and the jump table squares by one
-    self-join — ceil(log2(path_len)) rounds of shuffle-bound distributed
-    work.  The jump table is pre-pruned to dist_m <= the tip's settled
-    distance, which never drops a chain node (every prev-ancestor settles
-    strictly closer to its source).  Returns tip → root order."""
-    spark = state.sparkSession
-    jump = (
-        state.where(F.col("dist_m") <= F.lit(float(tip_dist)))
-        .select("node_idx", F.col("prev").alias("anc"))
-        .localCheckpoint()
-    )
-    chain = spark.createDataFrame([(0, int(tip_idx))], "offset INT, node_idx INT")
-    length = 1
-    for _ in range(_MAX_DOUBLINGS):
-        nxt = (
-            F.broadcast(chain)
-            .join(jump, "node_idx")
-            .where(F.col("anc").isNotNull())
-            .select(
-                (F.col("offset") + F.lit(length)).alias("offset"),
-                F.col("anc").alias("node_idx"),
-            )
-            .localCheckpoint()
+def _tile_frame(tiles: DataFrame, limit_m: float) -> float:
+    """Read the (small) tile table once and return the west edge of its
+    longitude frame, the least buffer minlon.  Raises ValueError when the
+    buffer is narrower on the ground than ``limit_m`` (_buffer_width_m),
+    or when the buffers span 360 degrees of longitude: a graph that
+    circles the globe has no frame in which every node has one position."""
+    rows = tiles.select("buffer_deg", "tile_bbox", "buffer_bbox").collect()
+    if not rows:
+        raise ValueError("compute_reach needs at least one tile")
+    width_m = _buffer_width_m(rows)
+    if width_m < limit_m:
+        raise ValueError(
+            f"tile buffer is {width_m:.1f} m wide on the ground, less than limit_m={limit_m}: "
+            "a shortest path ending in a tile core could leave the tile's buffer"
         )
-        if nxt.isEmpty():
-            break
-        chain = chain.unionAll(nxt)
-        jump = (
-            jump.join(
-                jump.select(F.col("node_idx").alias("anc"), F.col("anc").alias("anc2")),
-                "anc",
-                "left",
-            )
-            .select("node_idx", F.col("anc2").alias("anc"))
-            .localCheckpoint()
+    west = min(r["buffer_bbox"]["minlon"] for r in rows)
+    east = max(r["buffer_bbox"]["maxlon"] for r in rows)
+    if east - west >= 360.0:
+        raise ValueError(
+            f"tile buffers span {east - west:.1f} degrees of longitude: tile a graph across "
+            "the ±180 meridian in its eastward frame (grid.tiles_over)"
         )
-        length *= 2
-    else:
-        # The loop exhausted _MAX_DOUBLINGS with the walk still extending:
-        # a >2^_MAX_DOUBLINGS-node walking path always means corrupted
-        # prev pointers (a cycle), so fail loudly rather than return a
-        # plausible-looking truncated chain with a wrong cum_m (r11 ADVICE).
-        raise RuntimeError(
-            f"path backtrack did not converge within 2^{_MAX_DOUBLINGS} nodes "
-            f"from tip {tip_idx}; prev pointers likely contain a cycle"
-        )
-    rows = chain.orderBy("offset").collect()  # O(path) — the only chain-sized collect
-    return [int(r["node_idx"]) for r in rows]
-
-
-def shortest_paths_frontier(
-    edges: DataFrame,
-    seeds: DataFrame,
-    n_edges: int,
-    limit_m: float = LIMIT_M_DEFAULT,
-    track_prev: bool = False,
-) -> DataFrame:
-    """G2 kernel, frontier side of the size dispatch, over
-    ``edges(src, dst, w DOUBLE)`` whose row count ``n_edges`` the
-    dispatch probe already took.  With ``track_prev=True`` the result
-    carries ``prev``, the upstream node on the winning path (NULL at
-    seeds, ties broken by lexicographic min (dist, poi_id, prev)) — input
-    to the pointer-doubling backtrack (G4, _backtrack_chain).
-
-    Each synchronization round batches HOPS_PER_ROUND edge relaxations:
-    the candidate set is the union of 1..k-hop extensions of the
-    frontier, min-merged once, so rounds drop from hop-diameter D to
-    ceil(D/k).  Correctness is k-independent: every hop stays bounded by
-    ``limit_m``, each hop is min-merged, and the round-end
-    strict-improvement-vs-state check subsumes any non-shortest
-    intermediates (golden tests run k=1 and k=4).  k=2 measured ~20%
-    faster than k=1 on a 30-hop lattice on local[32] and neutral on a
-    depth-7 tree, while k>=4 loses on shallow graphs (wasted hops after
-    the frontier empties mid-round).
-
-    Raises RuntimeError when MAX_ROUNDS rounds end with the frontier
-    still improving, rather than return a truncated table."""
-    spark = edges.sparkSession
-    # The loop tunes session-global confs: AQE off (each tiny round
-    # otherwise pays query-stage materialization + re-optimization —
-    # measured 28% slower on a 10k-node lattice) and a graph-sized shuffle
-    # partition count.  It runs on a PRIVATE spark.newSession() — same
-    # SparkContext, block manager, and cache; its own SQLConf — so a
-    # concurrent query on the caller's session keeps its own planner
-    # settings (pinned by test_reach_loop_does_not_leak_conf).  DataFrames
-    # can't cross sessions directly; global temp views (context-scoped)
-    # carry the inputs in and the result out, and the result's lineage
-    # bottoms out in localCheckpoint blocks, so it stays executable after
-    # the views are dropped.
-    import uuid
-
-    tag = f"reach_loop_{uuid.uuid4().hex}"
-    loop = spark.newSession()
-    # Materialize both inputs to LogicalRDD leaves BEFORE registering the
-    # views: edges and seeds typically derive from the same base frames
-    # (nodes/graph), and carrying those shared subplans (and exprIds) into
-    # the loop session trips Union constraint rewriting during the state
-    # merge (NoSuchElementException in AttributeMap).  Checkpointing cuts
-    # the lineage so each view is a self-contained leaf; the loop cached
-    # the (repartitioned) edges anyway, so this adds no extra scan.
-    edges.localCheckpoint().createOrReplaceGlobalTempView(f"{tag}_edges")
-    seeds.localCheckpoint().createOrReplaceGlobalTempView(f"{tag}_seeds")
-    edges = loop.table(f"global_temp.{tag}_edges")
-    seeds = loop.table(f"global_temp.{tag}_seeds")
-    # cap from the CALLER's conf, not the fresh session's: newSession()
-    # resets runtime-set conf to builder defaults, and the cap's purpose
-    # is to respect the tuning of the session that invoked the operator
-    parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    # Constraint propagation off for the loop (another knob the private
-    # session makes safe to set): Union constraint rewriting trips a
-    # NoSuchElementException in AttributeMap when the state-merge union
-    # mixes checkpointed LogicalRDDs with plans referencing the shared
-    # CacheManager's in-memory relations, and inferred-filter pushdown
-    # buys nothing for these tiny per-round plans anyway.
-    loop.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        # with AQE off, every round would otherwise shuffle into the full
-        # session partition count even for a tiny tile graph (32 scheduled
-        # tasks for a few hundred frontier rows dominates round latency).
-        # Size the loop's shuffles to the graph instead — exactly what AQE
-        # coalescing would have picked (~50k edges per shuffle partition
-        # keeps rounds in-memory); n_edges was counted at dispatch.
-        loop_parts = max(1, min(int(parts_was), n_edges // 50_000 + 1))
-        loop.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        edges = edges.repartition(loop_parts, "src").cache()
-
-        val_cols = ["dist_m", "poi_id"] + (["prev"] if track_prev else [])
-
-        def as_state(df: DataFrame) -> DataFrame:
-            # the lexicographic (dist, poi_id) struct IS the merge operator
-            return df.select("node_idx", "category", F.struct(*val_cols).alias("v"))
-
-        init = seeds.select(
-            "node_idx", "category", F.lit(0.0).alias("dist_m"), "poi_id",
-            *([F.lit(None).cast("int").alias("prev")] if track_prev else []),
-        )
-        # duplicate seeds on one node: min poi_id wins (deterministic twin of
-        # the reference's first-in-list rule, precompute_poi_reach.py:99-104)
-        state = as_state(init).groupBy("node_idx", "category").agg(F.min("v").alias("v")).localCheckpoint()
-        frontier = state
-        rounds_since_ckpt = 0
-
-        def relax(fr: DataFrame) -> DataFrame:
-            # one edge relaxation, returned in state shape and min-merged
-            # (the merge bounds within-round growth: ≤ |nodes×categories|
-            # candidates per hop, never out-degree^k)
-            return (
-                as_state(
-                    fr.withColumnRenamed("node_idx", "src")
-                    .join(edges, "src")
-                    .select(
-                        F.col("dst").alias("node_idx"),
-                        "category",
-                        (F.col("v.dist_m") + F.col("w")).alias("dist_m"),
-                        F.col("v.poi_id").alias("poi_id"),
-                        *([F.col("src").alias("prev")] if track_prev else []),
-                    )
-                    .where(F.col("dist_m") <= F.lit(float(limit_m)))  # bounded search
-                )
-                .groupBy("node_idx", "category")
-                .agg(F.min("v").alias("v"))
-            )
-
-        hops = HOPS_PER_ROUND
-        for _ in range(MAX_ROUNDS):
-            # k chained relaxations, ONE synchronization round: the hops
-            # pipeline inside a single job, so the driver pays one
-            # isEmpty/checkpoint barrier per k hops instead of per hop
-            hop = relax(frontier)
-            cands = [hop]
-            for _h in range(1, hops):
-                hop = relax(hop)
-                cands.append(hop)
-            cand_min = cands[0]
-            for extra in cands[1:]:
-                cand_min = cand_min.unionAll(extra)
-            if hops > 1:
-                cand_min = cand_min.groupBy("node_idx", "category").agg(F.min("v").alias("v"))
-            # strict improvement vs current state (reference's `nd < dist[v]`,
-            # extended with the poi_id tie-break for determinism)
-            improved = (
-                cand_min.join(
-                    state.select("node_idx", "category", F.col("v").alias("v_old")),
-                    ["node_idx", "category"],
-                    "left",
-                )
-                .where(F.col("v_old").isNull() | (F.col("v") < F.col("v_old")))
-                .select("node_idx", "category", "v")
-                .localCheckpoint()
-            )
-            if improved.isEmpty():
-                break
-            state = state.unionAll(improved).groupBy("node_idx", "category").agg(F.min("v").alias("v"))
-            rounds_since_ckpt += 1
-            # checkpoint every few rounds, not every round: each eager
-            # localCheckpoint is a full job; a 3-deep union/agg chain over
-            # already-checkpointed inputs re-plans cheaply
-            if rounds_since_ckpt >= _CKPT_EVERY:
-                state = state.localCheckpoint()
-                rounds_since_ckpt = 0
-            frontier = improved
-        else:
-            # the frontier still improved in the last allowed round: the
-            # table would be cut short of limit_m, so fail loudly
-            raise RuntimeError(
-                f"frontier shortest paths did not converge within {MAX_ROUNDS} rounds "
-                f"of {hops} hops; the graph needs more hops within limit_m={limit_m}"
-            )
-
-        if rounds_since_ckpt:
-            state = state.localCheckpoint()  # cut lineage before edges unpersist
-        out = state.select("node_idx", "category", F.col("v.dist_m").alias("dist_m"), F.col("v.poi_id").alias("poi_id"),
-                           *([F.col("v.prev").alias("prev")] if track_prev else []))
-        # re-root the result in the CALLER's session: state is fully
-        # checkpointed, so the resolved plan is a thin projection over
-        # pinned blocks and survives the view drop below
-        out.createOrReplaceGlobalTempView(f"{tag}_out")
-        return spark.table(f"global_temp.{tag}_out")
-    finally:
-        edges.unpersist()
-        for v in ("edges", "seeds", "out"):
-            spark.catalog.dropGlobalTempView(f"{tag}_{v}")
+    return west
 
 
 def compute_reach(
     nodes: DataFrame,
     edges: DataFrame,
     pois: DataFrame,
+    tiles: DataFrame,
     limit_m: float = LIMIT_M_DEFAULT,
 ) -> DataFrame:
     """The `reach` gold table (SURVEY.md §1.1, B6): ``node_idx, category,
     dist_m FLOAT, time_s FLOAT, poi_id BIGINT``, with ``time_s`` at
-    geo.WALK_SPEED_MPS.  Categories are sanitized keys (F7); the solve
-    goes through the size dispatch of shortest_paths_bounded.
+    geo.WALK_SPEED_MPS.  Categories are sanitized keys (F7).
+
+    Solved per tile (grid.tiles_over), the reference's per-tile loop:
+    nodes go to every tile whose buffer holds them
+    (grid.assign_points_to_tiles, at their longitude in the tiles' frame,
+    so a graph across the ±180 meridian tiles like any other), an edge to
+    every tile whose buffer holds its source, a seed to every tile whose
+    buffer holds its node.  shortest_paths_bounded_local solves each tile
+    in one task and keeps the rows of the tile's core nodes; the
+    half-open cores give every node inside the tiles exactly one.  An
+    edge out of the buffer is a dead end in its tile, since its target
+    has no edges there, and every path that ends in a core within
+    ``limit_m`` stays inside the buffer: the answer equals the whole
+    graph's.  Raises ValueError before solving when the buffer is
+    narrower on the ground than ``limit_m`` (_tile_frame).
 
     SPARSE: one row per REACHED (node, category) pair.  The reference
     emits full length-N arrays per category (inf / -1 for unreachable,
@@ -540,10 +304,18 @@ def compute_reach(
 
     Materialized once, partitioned by category on write — point queries
     then read one node's rows, never touching the graph."""
-    seeds = _valid_sources(pois, nodes).select(
+    west = _tile_frame(tiles, limit_m)
+    pts = nodes.select("node_idx", grid.frame_lon(F.col("lon"), west).alias("lon"), "lat")
+    tiled = grid.assign_points_to_tiles(pts, tiles).select(
+        "grid_id", grid.contains(F.col("tile_bbox")).alias("core"), "node_idx"
+    )
+    seeds = pois.where(F.col("node_idx") >= 0).select(
         "node_idx", geo.sanitize_key(F.col("category")).alias("category"), "poi_id"
     )
-    return shortest_paths_bounded(edges, seeds, limit_m).select(
+    # one join to the tile assignment keys every fact by tile; it also
+    # keeps only seeds on graph nodes (P3)
+    rows = tiled.join(graph_rows(edges, seeds, nodes), "node_idx")
+    return shortest_paths_bounded_local(rows, limit_m).select(
         "node_idx",
         "category",
         F.col("dist_m").cast("float").alias("dist_m"),
@@ -561,8 +333,8 @@ def densify_reach(
     crossJoin of the node ids against the (tiny, broadcast) category
     list, and the sparse table left-joins onto it — no recompute."""
     cats = categories if categories is not None else sparse.select("category").distinct()
-    grid = nodes.select("node_idx").crossJoin(F.broadcast(cats))
-    return grid.join(sparse, ["node_idx", "category"], "left").select(
+    cube = nodes.select("node_idx").crossJoin(F.broadcast(cats))
+    return cube.join(sparse, ["node_idx", "category"], "left").select(
         "node_idx",
         "category",
         F.col("dist_m").cast("float").alias("dist_m"),

@@ -410,16 +410,27 @@ def pbf_graph_inputs(spark: SparkSession, path: str) -> tuple[DataFrame, DataFra
     contract (plans/graph_build.py:150-162) straight from the raw decode.
 
     The reference gets this from pyrosm's get_network("walking")
-    (graph_construction.py:216-217); here each way explodes into
-    consecutive-ref segments (u, v) carrying the way's walkability tags,
-    and nodes_raw is every node (tagged or not — way shape points ARE the
-    graph vertices).  clean_walkable_edges then prunes by tag exactly as
-    the reference's clean step does."""
+    (graph_construction.py:216-217), whose node table holds the
+    network's nodes only; here each way explodes into consecutive-ref
+    segments (u, v) carrying the way's walkability tags, and nodes_raw is
+    every node (tagged or not — way shape points ARE the graph vertices)
+    that a ``highway`` way references.  Standalone POI nodes and the shape
+    points of buildings or parks stay out: as isolated vertices they would
+    win a POI's snap and cut it off from the network.
+    clean_walkable_edges then prunes edges by tag exactly as the
+    reference's clean step does, and, as there, the nodes of the ways it
+    drops stay in the node table (graph_construction.py:229-243 indexes
+    every node of the network)."""
     raw = read_pbf_raw(spark, path)
-    nodes_raw = raw.where(F.col("elem_type") == "node").select(
-        F.col("elem_id").alias("osm_node_id"), "lon", "lat"
-    )
     tags = F.map_from_arrays("tag_keys", "tag_vals")
+    on_highway = raw.where(
+        (F.col("elem_type") == "way") & F.element_at(tags, "highway").isNotNull()
+    ).select(F.explode("refs").alias("osm_node_id"))
+    nodes_raw = (
+        raw.where(F.col("elem_type") == "node")
+        .select(F.col("elem_id").alias("osm_node_id"), "lon", "lat")
+        .join(on_highway, "osm_node_id", "left_semi")
+    )
     # slice() is 1-based but bracket indexing is 0-based: slice element i
     # (0-based lambda index) IS refs[i], so its successor is refs[i + 1].
     segs = F.expr(

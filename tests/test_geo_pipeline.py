@@ -232,10 +232,11 @@ def reach_ctx(spark, fx):
     # densified: the golden/sentinel/pivot tests assert the reference's
     # full node x category cube; the engine default is the sparse form
     # (test_sparse_reach_default_equals_dense_reached_set)
+    tiles = grid.tiles_over(fx["gnodes"]).cache()
     reach_df = reach.densify_reach(
-        reach.compute_reach(fx["gnodes"], fx["gedges"], pois_sdf, limit_m=LIMIT_M), fx["gnodes"]
+        reach.compute_reach(fx["gnodes"], fx["gedges"], pois_sdf, tiles, limit_m=LIMIT_M), fx["gnodes"]
     ).cache()
-    return {"snapped": snapped, "pois_sdf": pois_sdf, "reach": reach_df}
+    return {"snapped": snapped, "pois_sdf": pois_sdf, "tiles": tiles, "reach": reach_df}
 
 
 def test_reach_matches_scipy_golden(fx, reach_ctx):
@@ -260,107 +261,12 @@ def test_reach_matches_scipy_golden(fx, reach_ctx):
                 assert abs(r.time_s - r.dist_m / 1.111) < 1e-3
 
 
-@pytest.mark.parametrize("hops", [1, 4])
-def test_reach_hop_batching_equivalent(fx, reach_ctx, hops, monkeypatch):
-    # the barrier-reduction constant must not change results: k=1 and k=4
-    # produce the identical reach table as the dispatched baseline
-    # (frontier side forced — the dispatch would pick the local solver on
-    # this small fixture and never exercise the loop)
-    monkeypatch.setattr(reach, "HOPS_PER_ROUND", hops)
-    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    batched = (
-        reach.densify_reach(
-            reach.compute_reach(fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M),
-            fx["gnodes"],
-        )
-        .orderBy("node_idx", "category")
-        .toPandas()
-    )
-    base = reach_ctx["reach"].orderBy("node_idx", "category").toPandas()
-    pd.testing.assert_frame_equal(batched, base, check_exact=False, atol=1e-6)
-
-
-def test_reach_loop_does_not_leak_conf(fx, reach_ctx, spark, monkeypatch):
-    """The frontier loop's planner tuning (AQE off, graph-sized shuffle
-    partitions) runs on a private newSession(): the CALLER session's conf
-    is untouched both while the loop is live (polled from a concurrent
-    thread) and after it returns."""
-    import threading
-    import time
-
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions")
-    observed: list[tuple[str, str]] = []
-    done = threading.Event()
-
-    def poll():
-        while not done.is_set():
-            observed.append(
-                (
-                    spark.conf.get("spark.sql.adaptive.enabled"),
-                    spark.conf.get("spark.sql.shuffle.partitions"),
-                )
-            )
-            time.sleep(0.02)
-
-    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    t = threading.Thread(target=poll)
-    t.start()
-    try:
-        out = reach.compute_reach(
-            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M
-        ).toPandas()
-    finally:
-        done.set()
-        t.join()
-    assert len(out) > 0
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
-    assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
-    bad = [o for o in observed if o != (aqe_before, parts_before)]
-    assert not bad, f"caller-session conf changed mid-loop: {bad[:3]}"
-
-
-def test_reach_local_strategy_equivalent(fx, reach_ctx, monkeypatch):
-    # one-task heap Dijkstra and the distributed frontier loop are the
-    # same operator: identical (node, category, dist, poi) tables
-    def dense_reach():
-        return (
-            reach.densify_reach(
-                reach.compute_reach(fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M),
-                fx["gnodes"],
-            )
-            .orderBy("node_idx", "category")
-            .toPandas()
-        )
-
-    local = dense_reach()  # the fixture is far below the dispatch threshold
-    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    frontier = dense_reach()
-    pd.testing.assert_frame_equal(local, frontier, check_exact=False, atol=1e-6)
-
-
-def test_frontier_raises_when_round_cap_runs_out(spark, monkeypatch):
-    # a 10-node chain at 1 m per edge needs 9 hops; 3 rounds of 2 hops
-    # cover 6, so the loop must raise instead of returning nodes 0..6
-    # as if they were the whole reach table
-    edges = spark.createDataFrame([(i, i + 1, 1.0) for i in range(9)], "src INT, dst INT, w DOUBLE")
-    seeds = spark.createDataFrame([(0, "c", 7)], "node_idx INT, category STRING, poi_id BIGINT")
-    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    monkeypatch.setattr(reach, "MAX_ROUNDS", 3)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        reach.shortest_paths_bounded(edges, seeds, limit_m=100.0)
-    monkeypatch.setattr(reach, "MAX_ROUNDS", 6)  # 5 improving rounds + the empty one
-    got = reach.shortest_paths_bounded(edges, seeds, limit_m=100.0).orderBy("node_idx").toPandas()
-    assert got["node_idx"].tolist() == list(range(10))
-    assert got["dist_m"].tolist() == [float(i) for i in range(10)]
-
-
 def test_sparse_reach_default_equals_dense_reached_set(fx, reach_ctx):
     # the engine-default SPARSE gold table is exactly the dense cube's
     # reached rows (row-count assert from the r10 verdict), and
     # densify_reach round-trips it to the reference's full cube
     sparse_sdf = reach.compute_reach(
-        fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], limit_m=LIMIT_M
+        fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], reach_ctx["tiles"], limit_m=LIMIT_M
     ).cache()
     sparse = sparse_sdf.orderBy("node_idx", "category").toPandas()
     dense = reach_ctx["reach"].orderBy("node_idx", "category").toPandas()
@@ -489,14 +395,10 @@ def _route(fx, a: int, b: int, limit_m: float = 5000.0):
     )
 
 
-@pytest.mark.parametrize("side", ["local", "frontier"])
-def test_point_to_point_path(fx, side, monkeypatch):
-    # G3 on both sides of reach's size dispatch: the whole node chain
-    # equals a heapq golden with the (dist, prev) tie-break, cum_m its
-    # distance, every step an edge weight; start == target is one row at
-    # 0 m, a target beyond limit_m an empty route
-    if side == "frontier":
-        monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
+def test_point_to_point_path(fx):
+    # G3: the whole node chain equals a heapq golden with the (dist, prev)
+    # tie-break, cum_m its distance, every step an edge weight; start ==
+    # target is one row at 0 m, a target beyond limit_m an empty route
     n = len(fx["gnodes_pdf"])
     adj = [[] for _ in range(n)]
     for r in fx["gedges_pdf"].itertuples():
@@ -526,44 +428,6 @@ def test_point_to_point_path_jobs(spark, fx):
     n_jobs, path = _jobs_started(spark, lambda: _route(fx, 30, 350).toPandas())
     assert len(path) > 1
     assert n_jobs <= 20, n_jobs
-
-
-def test_backtrack_collects_o_path_not_o_reached(spark, monkeypatch):
-    # the pointer-doubling backtrack's driver transfer is the CHAIN, not
-    # the settled state: a star of 5000 settled nodes hanging off a
-    # 6-node spine must reach the driver as exactly 6 collected rows
-    # (every .collect() in the helper is counted via a spy)
-    # Spark 4: instances are the classic subclass, which overrides
-    # collect — patching the abstract pyspark.sql.DataFrame misses it
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    # spine: tip=5 at dist 5.0, prev chain 5->4->3->2->1->0, root 0
-    spine = [(i, float(i), i - 1 if i > 0 else None) for i in range(6)]
-    star = [(100 + j, 4.5, j % 6) for j in range(5000)]  # settled bystanders
-    state = spark.createDataFrame(spine + star, "node_idx INT, dist_m DOUBLE, prev INT")
-
-    counted = []
-    orig = DataFrame.collect
-
-    def spy(self):
-        rows = orig(self)
-        counted.append(len(rows))
-        return rows
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
-    chain = reach._backtrack_chain(state, 5, 5.0)
-    assert chain == [5, 4, 3, 2, 1, 0]
-    assert sum(counted) == len(chain), counted  # O(path) driver transfer
-
-
-def test_backtrack_raises_on_prev_cycle(spark, monkeypatch):
-    # r11 ADVICE: corrupted prev pointers (a cycle) must raise, not
-    # return a plausible-looking truncated chain with wrong cum_m
-    monkeypatch.setattr(reach, "_MAX_DOUBLINGS", 3)
-    cyc = [(0, 1.0, 1), (1, 1.0, 2), (2, 1.0, 0)]  # 0 -> 1 -> 2 -> 0
-    state = spark.createDataFrame(cyc, "node_idx INT, dist_m DOUBLE, prev INT")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        reach._backtrack_chain(state, 0, 1.0)
 
 
 def test_path_to_nearest_poi(fx, reach_ctx):
@@ -607,29 +471,6 @@ def _nearest_poi_path(fx, reach_ctx, node: int, category: str, limit_m: float = 
     )
 
 
-def test_path_one_task_equals_frontier(fx, reach_ctx, monkeypatch):
-    # the one-task solve+walk (default at lattice size) and the frontier
-    # loop + pointer-doubling backtrack (forced by lowering the dispatch
-    # threshold) return the same path row for row, found or not
-    seed_nodes = set(reach_ctx["snapped"]["node_idx"].astype(int))
-    lonely = next(n for n in range(len(fx["gnodes_pdf"])) if n not in seed_nodes)
-    cases = [(n, c, LIMIT_M) for n in (30, 150, 350) for c in ("supermarket", "pharmacy")]
-    cases.append((lonely, "supermarket", 1.0))  # no POI within limit_m
-    calls = []
-    one_task = reach.nearest_seed_path_local
-    monkeypatch.setattr(
-        reach, "nearest_seed_path_local", lambda *a, **k: calls.append(a) or one_task(*a, **k)
-    )
-    local = [_nearest_poi_path(fx, reach_ctx, *c).toPandas() for c in cases]
-    assert len(calls) == len(cases)
-    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    frontier = [_nearest_poi_path(fx, reach_ctx, *c).toPandas() for c in cases]
-    assert len(calls) == len(cases)  # the frontier side never entered the one-task walk
-    for case, lo, fr in zip(cases, local, frontier):
-        assert (len(lo) > 0) == (case[2] == LIMIT_M), case
-        pd.testing.assert_frame_equal(lo, fr, obj=str(case))
-
-
 def test_path_one_task_collects_o_path_not_o_settled(fx, reach_ctx, monkeypatch):
     # the one-task walk ships the CHAIN to the driver, not the settled
     # state: every .collect() made while the request is planned is counted
@@ -655,10 +496,10 @@ def test_path_one_task_collects_o_path_not_o_settled(fx, reach_ctx, monkeypatch)
     assert collected == [1, len(path)], collected  # the snap's one row, then the chain
 
 
-def test_path_raises_on_zero_weight_prev_cycle(spark, monkeypatch):
+def test_path_raises_on_zero_weight_prev_cycle(spark):
     # zero-weight edges 5->3, 3->1, 1->3 from a seed on node 5 leave
     # prev[3]=1 and prev[1]=3 under the (dist, poi_id, prev) tie-break:
-    # both strategies must raise instead of walking the cycle forever
+    # the walk must raise instead of walking the cycle forever
     from pyspark.errors import PythonException
 
     nodes = spark.createDataFrame(
@@ -672,10 +513,104 @@ def test_path_raises_on_zero_weight_prev_cycle(spark, monkeypatch):
 
     with pytest.raises(PythonException, match="RuntimeError: path backtrack did not converge"):
         serve()
-    monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
-    monkeypatch.setattr(reach, "_MAX_DOUBLINGS", 3)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        serve()
+
+
+def _whole_graph_chain(fx, seeds, tip: int, limit_m: float):
+    """(poi_id, chain) of the one-task solver over the WHOLE edge table."""
+    rows = sorted(
+        reach.nearest_seed_path_local(fx["gedges"], seeds, tip, limit_m).collect(), key=lambda r: r["seq"]
+    )
+    return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
+
+
+def test_disc_paths_equal_whole_graph_solve(spark, fx, reach_ctx):
+    # G4 and G3 read only the graph inside the max_snap_m + limit_m disc
+    # of their start point; each path must equal the whole-graph solve
+    # of the same one-task solver row for row.  "off_west" lies ~195 m
+    # off the lattice's south-west corner, so a disc that left out
+    # max_snap_m would cut its chains; nodes 3 and 13 sit on the south
+    # and east edges.
+    g = fx["gnodes_pdf"]
+    corner = g.loc[(g["lon"] + g["lat"]).idxmin()]
+    seed_nodes = set(reach_ctx["snapped"]["node_idx"].astype(int))
+    lonely = next(i for i in range(len(g)) if i not in seed_nodes)
+    pts = {n: (float(g.iloc[n]["lon"]), float(g.iloc[n]["lat"])) for n in (3, 13, 102, lonely)}
+    pts["off_west"] = (float(corner["lon"]) - 0.003, float(corner["lat"]) + 0.0001)
+    # the off-west disc leaves part of the lattice out, and its snap is a
+    # real detour
+    d = gf.haversine_np(g["lon"].to_numpy(float), g["lat"].to_numpy(float), *pts["off_west"])
+    assert (d > query.MAX_SNAP_M_DEFAULT + 700.0 + 1.0).any()
+    assert d.min() > 150.0
+
+    def tip(lonlat):
+        return snap.snap_single_point(fx["gnodes"], *lonlat, max_snap_m=query.MAX_SNAP_M_DEFAULT)[0]
+
+    g4_cases = [("off_west", "park", 700.0), (3, "bus_stop", 300.0), (13, "supermarket", 500.0),
+                (lonely, "supermarket", 1.0)]
+    for start, cat, lim in g4_cases:
+        got = query.path_to_nearest_poi(
+            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], *pts[start], cat, limit_m=lim
+        ).toPandas()
+        seeds = reach_ctx["pois_sdf"].where(F.col("category") == cat).select("node_idx", "category", "poi_id")
+        want = _whole_graph_chain(fx, seeds, tip(pts[start]), lim)
+        if start == lonely:
+            assert want is None and got.empty  # no POI within 1 m
+            continue
+        assert len(want[1]) > 2, (start, cat)
+        exp = (
+            query._recost(fx["gnodes"], fx["gedges"], want[1])
+            .select("*", F.lit(want[0]).cast("bigint").alias("poi_id"), F.lit(cat).alias("category"))
+            .orderBy("seq")
+            .toPandas()
+        )
+        pd.testing.assert_frame_equal(got, exp, obj=f"{start}/{cat}")
+
+    # off_west -> 3: 393 m of network from the snapped corner node, and
+    # node 3 lies ~455 m from the query point, past limit_m alone
+    g3_cases = [("off_west", 3, 400.0), (13, 102, 1100.0), (3, 13, 1000.0)]
+    for a, b, lim in g3_cases:
+        got = query.point_to_point_path(fx["gnodes"], fx["gedges"], pts[a], pts[b], limit_m=lim).toPandas()
+        seed = spark.createDataFrame([(tip(pts[a]), "route", 0)], "node_idx INT, category STRING, poi_id BIGINT")
+        want = _whole_graph_chain(fx, seed, tip(pts[b]), lim)
+        if (a, b) == (3, 13):
+            assert want is None and got.empty  # 1,443 m of network: beyond limit_m
+            continue
+        assert len(want[1]) > 2, (a, b)
+        exp = query._recost(fx["gnodes"], fx["gedges"], want[1][::-1]).orderBy("seq").toPandas()
+        pd.testing.assert_frame_equal(got, exp, obj=f"{a}->{b}")
+
+
+def test_path_to_nearest_poi_warm_jobs(spark, fx, reach_ctx):
+    # a warm path request: two snaps' worth of scans, the disc solve and
+    # the re-cost, with no size probe in front of the solve
+    from .test_layout import _jobs_started
+
+    _nearest_poi_path(fx, reach_ctx, 150, "supermarket").toPandas()
+    n_jobs, path = _jobs_started(spark, lambda: _nearest_poi_path(fx, reach_ctx, 150, "supermarket").toPandas())
+    assert len(path) > 1
+    assert n_jobs <= 11, n_jobs
+
+
+def test_compute_reach_refuses_buffer_narrower_than_limit(spark, fx, reach_ctx):
+    # the guard measures the halo on the ground at the edge-weight radius:
+    # a nominal 1.0 km buffer is 998.9 m of latitude (111.32 km/deg
+    # against R = 6371008.8 m), so it cannot serve limit_m = 1000
+    args = (fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"])
+    one_km = grid.tiles_over(fx["gnodes"], buffer_km=1.0)
+    assert 998.0 < reach._buffer_width_m(one_km.collect()) < 999.0
+    with pytest.raises(ValueError, match="tile buffer"):
+        reach.compute_reach(*args, one_km, limit_m=1000.0)
+    reach.compute_reach(*args, one_km, limit_m=998.0)  # plans without raising
+    # the longitude halo is sized at maxlat, the latitude nearest the
+    # equator in the south: a nominal 1.1 km halo over -60..-50 is only
+    # ~855 m wide at -60, while the same halo over 50..60 keeps ~1.1 km
+    south = grid.generate_tiles(spark, (20.0, -60.0, 20.5, -50.0), tile_km=10.0, buffer_km=1.1)
+    north = grid.generate_tiles(spark, (20.0, 50.0, 20.5, 60.0), tile_km=10.0, buffer_km=1.1)
+    assert reach._buffer_width_m(south.collect()) < 860.0
+    assert reach._buffer_width_m(north.collect()) > 1090.0
+    with pytest.raises(ValueError, match="tile buffer"):
+        reach.compute_reach(*args, south, limit_m=1000.0)
+    reach.compute_reach(*args, north, limit_m=1000.0)
 
 
 def test_snap_batch_seam_matches_numpy_golden(spark):

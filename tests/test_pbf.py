@@ -136,7 +136,10 @@ def test_pbf_feeds_classify_pois(elements):
 
 def test_pbf_feeds_build_graph(spark, pbf_path):
     nodes_raw, edges_raw = pbf.pbf_graph_inputs(spark, pbf_path)
-    assert nodes_raw.count() == len(NODES)
+    # the nodes of highway ways 500 and 502 (the motorway's 103 too: the
+    # walkability filter drops edges, not nodes); POI nodes 200/201 and
+    # the park's shape points are on no highway
+    assert {r["osm_node_id"] for r in nodes_raw.collect()} == {100, 101, 102, 103}
     walkable = graph_build.clean_walkable_edges(edges_raw)
     segs = {(r["u"], r["v"]) for r in walkable.collect()}
     # footway 500 contributes its 2 segments; park 501 has no highway tag;
@@ -148,6 +151,32 @@ def test_pbf_feeds_build_graph(spark, pbf_path):
     pairs = {(r["src"], r["dst"]) for r in e}
     assert all((d, s) in pairs for s, d in pairs)
     assert all(r["w"] > 0 for r in e)
+
+
+def test_pbf_poi_off_a_footway_snaps_to_the_footway(spark, tmp_path):
+    # a shop node ~11 m off a 20-node footway is not a graph vertex, so
+    # it snaps onto the footway and every footway node reaches it
+    from fifteenmc_spark.plans import pipeline
+
+    way_nodes = [(1000 + i, 18.600 + 0.0002 * i, 54.370, {}) for i in range(20)]
+    shop = (2000, 18.602, 54.3701, {"shop": "supermarket", "name": "S"})
+    path = write_pbf(
+        str(tmp_path / "footway.osm.pbf"),
+        nodes=way_nodes + [shop],
+        ways=[(3000, [n[0] for n in way_nodes], {"highway": "footway"})],
+    )
+    nodes_raw, edges_raw = pbf.pbf_graph_inputs(spark, path)
+    assert {r["osm_node_id"] for r in nodes_raw.collect()} == {n[0] for n in way_nodes}
+    g = pipeline.build_all(spark, nodes_raw, edges_raw, elements=pbf.read_pbf_elements(spark, path))
+    snapped = g.pois.collect()
+    assert len(snapped) == 1
+    node = g.graph_nodes.where(F.col("node_idx") == snapped[0]["node_idx"]).first()
+    assert node["osm_node_id"] == 1010  # the footway node under the shop
+    assert g.graph_nodes.count() == 20
+    reach = g.reach.collect()
+    assert len(reach) == 20
+    assert {r["category"] for r in reach} == {"supermarket"}
+    assert max(r["dist_m"] for r in reach) < 260.0
 
 
 def test_pbf_ingest_parquet_roundtrip(spark, pbf_path, tmp_path, elements):

@@ -1,14 +1,13 @@
 """Bench-scale geo smoke: the G2 reach kernel at 9x the golden fixture's
-node count (60x60 lattice -> 3,600 nodes, ~14k canonical directed edges),
-BOTH strategies checked against the independent numpy heap oracle.
+node count (60x60 lattice -> 3,600 nodes, ~14k canonical directed edges)
+checked against the independent numpy heap oracle.
 
 The golden suite (test_geo_pipeline) pins correctness at k=20; this file
 is the "would it survive a scale-up" guard the 100 TB brief asks for on
 the geospatial side, mirroring the streaming surface's sf0.1 smoke: the
-one-task solver must stay correct when the graph is an order of magnitude
-past the fixture, and the frontier loop (the distributed path a
-150k+-edge graph dispatches to) must produce the identical bounded
-distances over multiple relaxation rounds at this size.
+per-tile solve must stay correct when the graph is an order of magnitude
+past the fixture and spread over a 4x4-ish grid of 1 km tiles, each solved
+in its own task.
 """
 
 from __future__ import annotations
@@ -18,12 +17,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from fifteenmc_spark.plans import graph_build, reach
+from fifteenmc_spark.plans import graph_build, grid, reach
 
 from . import geo_fixtures as gf
 
 K_BENCH = 60
-LIMIT_M = 300.0  # ~5-9 lattice hops: several frontier rounds, bounded wall
+LIMIT_M = 300.0  # ~5-9 lattice hops
+TILE_KM, BUFFER_KM = 1.0, 0.4  # 398 m of halo on the ground > LIMIT_M
 
 
 @pytest.fixture(scope="module")
@@ -148,13 +148,12 @@ def test_bench_scale_snap_matches_golden(spark, bfx):
     assert 0 < n_rej < len(pts)  # both regimes really exercised
 
 
-@pytest.mark.parametrize("strategy", ["local", "frontier"])
-def test_bench_scale_reach_matches_golden(bfx, strategy, monkeypatch):
-    if strategy == "frontier":  # the lattice is below the dispatch threshold
-        monkeypatch.setattr(reach, "LOCAL_EDGE_THRESHOLD", -1)
+def test_bench_scale_reach_matches_golden(bfx):
+    tiles = grid.tiles_over(bfx["gnodes"], TILE_KM, BUFFER_KM).cache()
+    assert tiles.count() >= 9
     got_all = (
         reach.densify_reach(  # golden checks every node's row
-            reach.compute_reach(bfx["gnodes"], bfx["gedges"], bfx["pois_sdf"], limit_m=LIMIT_M),
+            reach.compute_reach(bfx["gnodes"], bfx["gedges"], bfx["pois_sdf"], tiles, limit_m=LIMIT_M),
             bfx["gnodes"],
         )
         .cache()
@@ -175,9 +174,10 @@ def test_bench_scale_reach_matches_golden(bfx, strategy, monkeypatch):
                 assert pd.isna(r.dist_m), f"node {r.node_idx} should be unreachable"
             else:
                 n_reach += 1
-                assert abs(r.dist_m - want_d) < 1e-2, f"node {r.node_idx} ({strategy})"
+                assert abs(r.dist_m - want_d) < 1e-2, f"node {r.node_idx}"
                 assert r.poi_id in winners[r.node_idx], f"node {r.node_idx} winner"
         # the bounded region is a real neighborhood: non-trivial but far
         # from the whole lattice (the limit_m bound actually bit)
         assert 0 < n_reach < n_nodes
     got_all.unpersist()
+    tiles.unpersist()

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fifteenmc_spark.io import read_csv, read_grid_id_list, read_json_records
-from fifteenmc_spark.plans import graph_build, pipeline, poi
+from fifteenmc_spark.plans import graph_build, grid, pipeline, poi
 
 from . import geo_fixtures as gf
 
@@ -235,6 +235,36 @@ def test_pipeline_end_to_end(spark, tmp_path):
     s = spark.read.parquet(f"{base}/reach_summary").toPandas()
     assert set(s.columns) == {"category", "n_sources", "n_within", "median_dist_m", "median_time_s", "limit_m"}
     assert (s["n_within"] <= len(nodes_pdf)).all()
+
+
+def test_build_all_gives_every_graph_node_one_core(spark):
+    # tile cores exclude their max edges, so a bbox that ends exactly on
+    # the easternmost or northernmost node leaves that node in no core,
+    # and a per-tile reach gives it no rows; float32 coordinates (the
+    # graph's own precision) put the extent exactly on those nodes
+    nodes_pdf = gf.lattice_nodes()
+    nodes_pdf = nodes_pdf.assign(
+        lon=nodes_pdf["lon"].astype(np.float32).astype(float),
+        lat=nodes_pdf["lat"].astype(np.float32).astype(float),
+    )
+    east = nodes_pdf.loc[nodes_pdf["lon"].idxmax()]
+    pois_pdf = pd.DataFrame(
+        [(1, "supermarket", float(east["lon"]), float(east["lat"]), "east")],
+        columns=["poi_id", "category", "lon", "lat", "name"],
+    )
+    g = pipeline.build_all(
+        spark,
+        spark.createDataFrame(nodes_pdf),
+        spark.createDataFrame(gf.lattice_edges_raw(nodes_pdf)),
+        pois_raw=spark.createDataFrame(pois_pdf),
+    )
+    cores = grid.assign_points_to_tiles(g.graph_nodes, g.tiles, use_buffer=False)
+    per_node = {r["node_idx"]: r["count"] for r in cores.groupBy("node_idx").count().collect()}
+    assert len(per_node) == len(nodes_pdf)
+    assert set(per_node.values()) == {1}
+    east_idx = g.graph_nodes.where(F.col("osm_node_id") == int(east["osm_node_id"])).first()["node_idx"]
+    rows = g.reach.where(F.col("node_idx") == east_idx).collect()
+    assert [(r["category"], r["dist_m"]) for r in rows] == [("supermarket", 0.0)]
 
 
 def test_text_sink_roundtrip(spark, tmp_path):

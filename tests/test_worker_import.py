@@ -31,7 +31,9 @@ def session():
 {start}
 edges = spark.createDataFrame([(0, 1, 10.0), (1, 0, 10.0)], "src INT, dst INT, w DOUBLE")
 seeds = spark.createDataFrame([(0, "shop", 7)], "node_idx INT, category STRING, poi_id BIGINT")
-print("ROWS", sorted(tuple(r) for r in reach.shortest_paths_bounded_local(edges, seeds).collect()))
+nodes = spark.createDataFrame([(0,), (1,)], "node_idx INT")
+rows = reach.graph_rows(edges, seeds, nodes).selectExpr("'t' AS grid_id", "true AS core", "*")
+print("ROWS", sorted(tuple(r) for r in reach.shortest_paths_bounded_local(rows).collect()))
 spark.stop()
 """
 
