@@ -544,7 +544,9 @@ def pigeonhole_blocks(df: DataFrame, code: str, bits: int, k: int) -> DataFrame:
     within Hamming k agrees EXACTLY on at least one block, so
     (blk, bval) is a complete candidate key.  THE block builder of the
     SimHash family: x6, x6_64 and the streaming registry
-    (near_dup.flag_near_dups, whose bucket state key it is) all call it.
+    (near_dup.flag_near_dups, whose (blk, bval) bucket is the state key
+    of stateful.pair_registry, at x6_64's own SIMHASH_WIDE_BITS and
+    X6_64_HAMMING_K) all call it.
     One posexplode over the code row, not a union of per-block
     projections — the same narrow shape x3's bands use."""
     block_bits = bits // (k + 1)

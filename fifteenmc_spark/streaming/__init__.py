@@ -1,4 +1,4 @@
 from . import stateful, windows  # noqa: F401
 
-# dedup / near_dup / minhash_lsh are imported at use (they pull the
-# keyed-state machinery; consumers import the module they need)
+# the other modules (dedup, near_dup, minhash_lsh, span_dedup, ann,
+# pq_ann) are imported at use: consumers import the module they need

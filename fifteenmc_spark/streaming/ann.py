@@ -34,15 +34,16 @@ Design, stage by stage:
   the corpus, never scans it); a label predicate composes into this
   join before the cosine, and candidates get the exact cosine verify
   with the same Arrow kernel as every batch query.
-- ``serve_topk``: applyInPandasWithState keyed by qid, shared with
+- ``serve_topk``: stateful.keyed_state keyed by qid, shared with
   streaming/pq_ann.py.  State is the query's CURRENT top-k only —
   TOP_K (vec_id, sim) entries, not the candidate list — merged with
   each arriving candidate batch, so state stays O(k) per query no
   matter how many candidates a probed cell holds and the operator is
   robust to a query's candidate set being split across micro-batches
   (re-deliveries merge idempotently: a (vec_id, sim) pair already in
-  the top-k replaces itself).  Idle queries evict on a processing-time
-  timeout, the same bounded-state discipline as the dedup registries.
+  the top-k replaces itself).  Idle queries evict after
+  stateful.STATE_TTL_MS, the same bounded-state discipline as the dedup
+  registries.
   Each invocation emits the query's updated full top-k stamped with a
   monotonically increasing per-qid ``rev``; the emission with the
   highest rev is the current answer, so a downstream consumer does a
@@ -52,14 +53,11 @@ Design, stage by stage:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -70,8 +68,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.similarity import TOP_K, _label_nprobe, cosine, valid_vector
-
-STATE_TTL_MS = 3600 * 1000  # evict queries idle for an hour
+from .stateful import keyed_state
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -126,21 +123,15 @@ def probe_cells_col(centroids: list[tuple[int, list[float]]], nprobe: int):
     return _probes
 
 
-def _merge(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    vec_ids, sims, rev = state.get if state.exists else ([], [], 0)
+def _merge(key, batch: pd.DataFrame, old):
+    vec_ids, sims, rev = old or ([], [], 0)
     best = dict(zip((int(v) for v in vec_ids), (float(s) for s in sims)))
-    for pdf in pdfs:
-        for vec_id, sim in zip(pdf["vec_id"].tolist(), pdf["sim"].tolist()):
-            best[int(vec_id)] = float(sim)  # re-delivery replaces itself
+    # re-delivery replaces itself
+    best.update(zip(batch["vec_id"].tolist(), batch["sim"].tolist()))
     # keep the TOP_K best by (sim desc, vec_id asc) — the batch rank order
     top = sorted(best.items(), key=lambda t: (-t[1], t[0]))[:TOP_K]
     rev = int(rev) + 1
-    state.update(([v for v, _ in top], [s for _, s in top], rev))
-    state.setTimeoutDuration(STATE_TTL_MS)
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "qid": [key[0]] * len(top),
             "vec_id": [v for v, _ in top],
@@ -149,18 +140,13 @@ def _merge(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.
             "rev": [rev] * len(top),
         }
     )
+    return ([v for v, _ in top], [s for _, s in top], rev), out
 
 
 def serve_topk(cand: DataFrame) -> DataFrame:
     """(qid, vec_id, rnk, sim, rev): the O(k)-state revisioned per-query
     top-k over a streaming (qid, vec_id, sim) candidate frame."""
-    return cand.groupBy("qid").applyInPandasWithState(
-        _merge,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return keyed_state(cand, ("qid",), _merge, OUTPUT_SCHEMA, STATE_SCHEMA)
 
 
 def topk_stream(

@@ -1,5 +1,6 @@
-"""Streaming MinHash-LSH near-duplicate registry (banded buckets +
-applyInPandasWithState) — the online twin of batch x3.
+"""Streaming MinHash-LSH near-duplicate registry (banded buckets + the
+keyed-state pair registry of streaming/stateful.py) — the online twin of
+batch x3.
 
 The batch x3 surface (operators/dedup.py lsh_jaccard_pairs) answers
 "which pairs in this corpus have shingle-set Jaccard >= t", proposing
@@ -7,11 +8,14 @@ candidates through LSH band buckets and verifying exactly.  A streaming
 ingest needs the ONLINE form: as each document arrives, does it exceed
 the Jaccard threshold against any document already admitted?  This module
 provides exactly that with the SAME banding family (same md5→60-bit
-universal-hash minhash, same (a·h+b) mod p seeds, same bkey string) and
-the same exact-verify discipline, so the flagged pair set over a bounded
-stream EQUALS the batch x3 pair set — the stream≡batch contract pinned by
+universal-hash minhash, same (a·h+b) mod p seeds, same bkey string, same
+N_MINHASH seeds in 2 bands) and the same exact-verify discipline at the
+same JACCARD_THRESHOLD, so the flagged pair set over a bounded stream
+EQUALS the declared x3 pair set — the stream≡batch contract pinned by
 tests/test_streaming.py, completing the streaming story alongside exact
 dedup (streaming/dedup.py) and SimHash near-dup (streaming/near_dup.py).
+The batch answer is the declared query itself
+(``x3_minhash_lsh_pairs``); this module is streaming-only.
 
 Design, stage by stage:
 
@@ -26,23 +30,24 @@ Design, stage by stage:
   shingle_rows) — irrelevant at micro-batch sizes, and the per-seed
   minima are over the doc's own shingle set only.  Signature parity with
   minhash_signatures is pinned by test (bkey strings bit-identical).
-- ``flag_lsh_near_dups``: explode each doc into its n_bands (band, bkey)
-  rows; the band bucket is the state key.  Each bucket's state is the
-  (doc_id, shingle-hash set) list admitted so far; an arrival is verified
-  EXACTLY (set intersection over the 60-bit shingle hashes) against that
-  list — LSH proposes, Jaccard disposes, exactly as in batch.  Matches
-  emit (doc_id, matched_id, jaccard).
+- ``flag_lsh_near_dups``: explode each doc into its (band, bkey) rows;
+  the band bucket is the state key of stateful.pair_registry, whose
+  payload is the doc's shingle-hash set and whose verify is the EXACT
+  Jaccard (set intersection over the 60-bit shingle hashes) — LSH
+  proposes, Jaccard disposes, exactly as in batch.  Matches emit
+  (doc_id, matched_id, jaccard).
 
 Scale notes:
 - State per bucket stores each member's shingle-hash set — O(doc tokens)
   per member, the same memory class as the batch inverted index, times
-  n_bands buckets per doc.  Idle buckets are evicted by a
-  processing-time timeout (bounded state; a pair whose halves arrive
+  n_bands buckets per doc.  Idle buckets are evicted after
+  stateful.STATE_TTL_MS (bounded state; a pair whose halves arrive
   more than the TTL apart is missed — the documented trade every
   streaming dedup registry makes).
 - Bucket population follows the banding math (collision P = 1-(1-J^r)^b):
   at corpus scale pick longer bands (larger r) exactly as x3's docstring
-  prescribes — the calibration knobs are shared parameters, not forks.
+  prescribes — ``minhash_features`` takes the same banding arguments as
+  the batch builder, and the registry runs at x3's calibration.
 - A pair colliding in several bands is flagged once per band;
   ``distinct_lsh_pairs`` canonicalizes at the consumer (a global stream
   distinct would itself need unbounded state).
@@ -54,19 +59,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField
 
 from ..operators.dedup import (
     _MH_A,
@@ -78,24 +73,7 @@ from ..operators.dedup import (
     _shingle_hash60,
     lsh_band_rows,
 )
-
-STATE_TTL_MS = 3600 * 1000  # evict buckets idle for an hour
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("matched_id", LongType()),
-        StructField("jaccard", DoubleType()),
-    ]
-)
-
-# state = parallel arrays of admitted (doc_id, shingle-hash set) per bucket
-STATE_SCHEMA = StructType(
-    [
-        StructField("doc_ids", ArrayType(LongType())),
-        StructField("shingle_sets", ArrayType(ArrayType(LongType()))),
-    ]
-)
+from .stateful import pair_registry
 
 
 def _shingle_hashes(text_col) -> "F.Column":
@@ -153,99 +131,35 @@ def minhash_features(
     return lsh_band_rows(docs, _affine_min, n_hashes, n_bands, keep=("doc_id", "sh"))
 
 
-def _match_factory(threshold: float, ttl_ms: int):
-    def _match(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        doc_ids, sets = state.get if state.exists else ([], [])
-        doc_ids, sets = list(doc_ids), [set(s) for s in sets]
-        seen = set(doc_ids)
-        out_doc, out_match, out_jac = [], [], []
-        # Concatenate the Arrow chunks FIRST, then sort once over the whole
-        # micro-batch: a per-chunk sort only orders within each chunk, so a
-        # bucket whose batch spans chunks could emit doc_id < matched_id —
-        # breaking the "matched_id is the earlier document" orientation the
-        # docstring promises (and which only distinct_lsh_pairs'
-        # canonicalization happened to mask).
-        rows: list[tuple] = []
-        for pdf in pdfs:
-            rows.extend(zip(pdf["doc_id"].tolist(), pdf["sh"].tolist()))
-        if rows:
-            # doc_id order within the batch: deterministic, and an
-            # intra-batch pair is flagged exactly once (later vs earlier)
-            for doc_id, sh in sorted(rows, key=lambda t: t[0]):
-                if doc_id in seen:  # re-delivery: already admitted
-                    continue
-                # plain Python ints: the sh cells arrive as numpy arrays,
-                # and numpy scalars don't survive the state pickler
-                cur = {int(x) for x in sh}
-                for prev_id, prev_set in zip(doc_ids, sets):
-                    inter = len(cur & prev_set)
-                    union = len(cur) + len(prev_set) - inter
-                    if union and inter / union >= threshold:
-                        out_doc.append(doc_id)
-                        out_match.append(prev_id)
-                        out_jac.append(inter / union)
-                doc_ids.append(doc_id)
-                sets.append(cur)
-                seen.add(doc_id)
-        state.update((doc_ids, [sorted(s) for s in sets]))
-        state.setTimeoutDuration(ttl_ms)
-        if out_doc:
-            yield pd.DataFrame(
-                {"doc_id": out_doc, "matched_id": out_match, "jaccard": out_jac}
-            )
-
-    return _match
+def _jaccard(cur: list[int], prev: list[int]) -> float | None:
+    # exact verify over the 60-bit shingle hashes (each list is distinct)
+    inter = len(set(cur).intersection(prev))
+    union = len(cur) + len(prev) - inter
+    return inter / union if union and inter / union >= JACCARD_THRESHOLD else None
 
 
-def flag_lsh_near_dups(
-    docs: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    n_hashes: int = N_MINHASH,
-    n_bands: int = 2,
-    ttl_ms: int = STATE_TTL_MS,
-) -> DataFrame:
+def flag_lsh_near_dups(docs: DataFrame) -> DataFrame:
     """(doc_id, matched_id, jaccard): each arriving document is verified
     against every previously admitted document sharing an LSH band bucket
     with it; matched_id is the earlier document.  A pair colliding in
     multiple bands is emitted once per band — canonicalize with
     ``distinct_lsh_pairs`` at the consumer.
 
-    Streaming input: keyed state per (band, bkey) bucket, append mode,
-    idle buckets evicted after ttl_ms.  Batch input: the same banded
-    candidate join + exact verify over the same features; over the same
-    corpus the two paths produce the same pair set as declared x3
-    (tested)."""
-    feats = minhash_features(docs, n_hashes, n_bands)
-    if docs.isStreaming:
-        return feats.groupBy("band", "bkey").applyInPandasWithState(
-            _match_factory(threshold, ttl_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    a, b = feats.alias("a"), feats.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    jac = inter.cast("double") / union
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey")))
-        .where(F.col("a.doc_id") > F.col("b.doc_id"))
-        .where(jac >= threshold)
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("matched_id"),
-            jac.alias("jaccard"),
-        )
+    ``docs`` is a STREAMING frame: keyed state per (band, bkey) bucket,
+    append mode, idle buckets evicted after stateful.STATE_TTL_MS.  Over
+    a bounded stream the distinct pair set equals declared x3 (tested)."""
+    return pair_registry(
+        minhash_features(docs),
+        ("band", "bkey"),
+        StructField("sh", ArrayType(LongType())),
+        StructField("jaccard", DoubleType()),
+        _jaccard,
     )
 
 
 def distinct_lsh_pairs(flags: DataFrame) -> DataFrame:
     """Canonical unordered pair set from flag_lsh_near_dups output
-    (batch-side canonicalization of the per-band emissions), in the
+    (consumer-side canonicalization of the per-band emissions), in the
     declared x3 shape: (doc_a, doc_b, jaccard ROUND 4)."""
     return flags.select(
         F.least("doc_id", "matched_id").alias("doc_a"),

@@ -19,7 +19,7 @@ Design, stage by stage:
   batch x9, so span fingerprints are bit-identical): scan-side tokenize
   -> sliding-window transform -> md5.  Pure projection+explode, so it
   composes under the downstream stateful operator.
-- ``flag_dup_spans``: applyInPandasWithState keyed by span hash.  State
+- ``flag_dup_spans``: stateful.keyed_state keyed by span hash.  State
   per hash is a two-phase registry:
   - UNFLAGGED: every occurrence seen so far belongs to ONE doc — buffer
     the (doc_id, pos) occurrences (idempotently: re-deliveries replace
@@ -37,8 +37,8 @@ Scale notes:
   number of distinct single-doc span hashes resident, exactly the span
   table's cardinality the batch docstring sizes (~L rows per doc), with
   the same mitigations (wider windows, stride sampling) applying to the
-  stream key space one-for-one.  Idle hashes evict on a
-  processing-time timeout, the same bounded-state discipline as every
+  stream key space one-for-one.  Idle hashes evict after
+  stateful.STATE_TTL_MS, the same bounded-state discipline as every
   registry here — eviction-bounded equivalence on an unbounded stream.
 - The shuffle carries (h, doc_id, pos) — never text — matching the
   batch query's shuffle discipline.
@@ -50,11 +50,8 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -65,8 +62,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.dedup import span_rows  # shared batch/stream span builder
-
-STATE_TTL_MS = 3600 * 1000  # evict span hashes idle for an hour
+from .stateful import keyed_state
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -86,41 +82,30 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _flag(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
+def _flag(key, batch: pd.DataFrame, old):
     h = key[0]
-    flagged, first_doc, poss = state.get if state.exists else (0, None, [])
+    flagged, first_doc, poss = old or (0, None, [])
     buffered = {(int(first_doc), int(p)) for p in poss} if first_doc is not None else set()
     out: list[tuple[int, int]] = []
-    for pdf in pdfs:
-        for doc_id, pos in zip(pdf["doc_id"].tolist(), pdf["pos"].tolist()):
-            occ = (int(doc_id), int(pos))
-            if flagged:
-                out.append(occ)
-            elif not buffered or occ[0] == next(iter(buffered))[0]:
-                buffered.add(occ)  # still single-doc: idempotent buffer
-            else:
-                # second distinct doc: retroactively flag the buffer
-                flagged = 1
-                out.extend(sorted(buffered))
-                out.append(occ)
-                buffered = set()
+    for occ in zip(batch["doc_id"].tolist(), batch["pos"].tolist()):
+        if flagged:
+            out.append(occ)
+        elif not buffered or occ[0] == next(iter(buffered))[0]:
+            buffered.add(occ)  # still single-doc: idempotent buffer
+        else:
+            # second distinct doc: retroactively flag the buffer
+            flagged = 1
+            out.extend(sorted(buffered))
+            out.append(occ)
+            buffered = set()
     if flagged:
-        state.update((1, None, []))
+        new = (1, None, [])
     else:
         fd = next(iter(buffered))[0] if buffered else None
-        state.update((0, fd, sorted(p for _, p in buffered)))
-    state.setTimeoutDuration(STATE_TTL_MS)
-    if out:
-        yield pd.DataFrame(
-            {
-                "doc_id": [d for d, _ in out],
-                "pos": [p for _, p in out],
-                "h": [h] * len(out),
-            }
-        )
+        new = (0, fd, sorted(p for _, p in buffered))
+    return new, pd.DataFrame(
+        {"doc_id": [d for d, _ in out], "pos": [p for _, p in out], "h": [h] * len(out)}
+    )
 
 
 def flag_dup_spans(docs: DataFrame, sample_nibbles: tuple[str, ...] | None = None) -> DataFrame:
@@ -138,13 +123,7 @@ def flag_dup_spans(docs: DataFrame, sample_nibbles: tuple[str, ...] | None = Non
     spans = span_rows(docs)
     if sample_nibbles:
         spans = spans.where(F.substring("h", 1, 1).isin(*sample_nibbles))
-    return spans.groupBy("h").applyInPandasWithState(
-        _flag,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return keyed_state(spans, ("h",), _flag, OUTPUT_SCHEMA, STATE_SCHEMA)
 
 
 def distinct_flagged(flagged: DataFrame) -> DataFrame:

@@ -156,17 +156,18 @@ def await_drained(q, timeout_s: float = 120.0) -> None:
     input, then stop it if it is still alive.
 
     Stateless availableNow queries self-terminate after the drain, but a
-    plan containing applyInPandasWithState with a processing-time timeout
-    keeps the query alive afterwards, looping "no new data but cleaning
-    up state" batches until every pending state timeout has fired (the
-    state TTL here is minutes — the r15 verify overran its window because
-    every stateful stream≡batch test blocked the FULL 120 s on
+    plan containing keyed state with a processing-time timeout keeps the
+    query alive afterwards, looping "no new data but cleaning up state"
+    batches until every pending state timeout has fired (the state TTL
+    here is an hour — the r15 verify overran its window because every
+    stateful stream≡batch test blocked the FULL 120 s on
     awaitTermination, measured 13 x ~125 s of the suite's 2,894 s).
     Stopping after the drain is result-identical: a zero-input batch is
     only reported AFTER its sink commit, and every stateful operator in
-    fifteenmc_spark.streaming emits NOTHING on timeout expiry (each
-    hasTimedOut branch is `state.remove(); return` — state eviction only,
-    pinned by test_stateful_timeout_branches_emit_nothing)."""
+    fifteenmc_spark.streaming goes through stateful.keyed_state, whose
+    one timeout branch removes the key's state and emits NOTHING (state
+    eviction only, pinned by test_stateful_timeout_branches_emit_nothing,
+    which also fails if any other module handles a timeout itself)."""
     import time as _time
 
     deadline = _time.monotonic() + timeout_s

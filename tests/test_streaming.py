@@ -250,31 +250,11 @@ def test_streaming_lsh_bkeys_match_batch_signatures(spark, sf_small):
     assert got == want
 
 
-def test_streaming_lsh_equals_batch_x3(spark, sf_small, tmp_path_factory):
-    # stream≡batch contract for the MinHash-LSH registry: the distinct
-    # flagged pair set over a bounded stream equals the declared x3 pair
-    # set over the same corpus, and the batch path of the same builder
-    # agrees too
+def _three_chunk_stream(spark, docs, out):
+    """``docs`` as a stream of three doc_id-ranged chunks, one micro-batch
+    each (maxFilesPerTrigger); returns (stream, chunk_of)."""
     import time
 
-    from fifteenmc_spark.operators.relational import QUERIES
-    from fifteenmc_spark.streaming import minhash_lsh as ML
-
-    want = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in QUERIES["x3_minhash_lsh_pairs"].build(spark, sf_small).collect()
-    }
-    assert want  # fixture corpus has near-dup pairs
-
-    docs = read_table(spark, sf_small, "documents")
-    got_batch = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in ML.distinct_lsh_pairs(ML.flag_lsh_near_dups(docs)).collect()
-    }
-    assert got_batch == want
-
-    # three doc_id-ranged chunks, one micro-batch each (maxFilesPerTrigger)
-    out = tmp_path_factory.mktemp("lsh_stream")
     ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
     c1, c2 = ids[len(ids) // 3], ids[2 * len(ids) // 3]
 
@@ -289,16 +269,44 @@ def test_streaming_lsh_equals_batch_x3(spark, sf_small, tmp_path_factory):
     for i, p in enumerate(parts):
         p.coalesce(1).write.mode("overwrite").parquet(str(out / f"f{i}"))
         time.sleep(1.1)  # file-source orders micro-batches by mod time
-
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(out) + "/*/")
     )
+    return stream, chunk_of
+
+
+@pytest.fixture(scope="module")
+def lsh_stream_sink(spark, sf_small, tmp_path_factory):
+    """The MinHash-LSH registry's emissions over the sf_small corpus
+    streamed in three micro-batches: (sink table name, chunk_of).  One
+    run serves the x3 equality test and the re-delivery test."""
+    from fifteenmc_spark.streaming import minhash_lsh as ML
+
+    docs = read_table(spark, sf_small, "documents")
+    stream, chunk_of = _three_chunk_stream(spark, docs, tmp_path_factory.mktemp("lsh_stream"))
     W.run_to_memory(ML.flag_lsh_near_dups(stream), "sink_lsh_near_dup", output_mode="append")
+    return "sink_lsh_near_dup", chunk_of
+
+
+def test_streaming_lsh_equals_batch_x3(spark, sf_small, lsh_stream_sink):
+    # stream≡batch contract for the MinHash-LSH registry: the distinct
+    # flagged pair set over a bounded stream equals the declared x3 pair
+    # set over the same corpus
+    from fifteenmc_spark.operators.relational import QUERIES
+    from fifteenmc_spark.streaming import minhash_lsh as ML
+
+    want = {
+        (r["doc_a"], r["doc_b"], r["jaccard"])
+        for r in QUERIES["x3_minhash_lsh_pairs"].build(spark, sf_small).collect()
+    }
+    assert want  # fixture corpus has near-dup pairs
+
+    sink, chunk_of = lsh_stream_sink
     got_stream = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in ML.distinct_lsh_pairs(spark.table("sink_lsh_near_dup")).collect()
+        for r in ML.distinct_lsh_pairs(spark.table(sink)).collect()
     }
     assert got_stream == want
     # at least one flagged pair crosses micro-batches — the bucket state
@@ -306,7 +314,9 @@ def test_streaming_lsh_equals_batch_x3(spark, sf_small, tmp_path_factory):
     assert any(chunk_of(a) != chunk_of(b) for a, b, _ in got_stream)
 
 
-def test_streaming_lsh_redelivery_emits_no_duplicate_pairs(spark, sf_small, tmp_path_factory):
+def test_streaming_lsh_redelivery_emits_no_duplicate_pairs(
+    spark, sf_small, tmp_path_factory, lsh_stream_sink
+):
     # at-least-once delivery: the same documents arriving again in a later
     # micro-batch must be recognized as already admitted (bucket state
     # keeps doc_ids) — no duplicate pair emissions, no self-pairs
@@ -330,19 +340,19 @@ def test_streaming_lsh_redelivery_emits_no_duplicate_pairs(spark, sf_small, tmp_
     rows = spark.table("sink_lsh_redeliver").collect()
     assert all(r["doc_id"] != r["matched_id"] for r in rows)
     # the raw emission MULTISET (a pair legitimately emits once per
-    # shared band) equals the batch path's — i.e. the second delivery
-    # added zero emissions (without the seen-guard every pair would
-    # re-emit and the multisets would differ)
+    # shared band) equals the single-delivery stream's — each (pair,
+    # band) emits exactly once however the input splits into
+    # micro-batches, so the second delivery added zero emissions
+    # (without the seen-guard every pair would re-emit and the
+    # multisets would differ)
     from collections import Counter
 
-    raw = Counter(
-        (min(r["doc_id"], r["matched_id"]), max(r["doc_id"], r["matched_id"])) for r in rows
-    )
-    batch_raw = Counter(
-        (min(r["doc_id"], r["matched_id"]), max(r["doc_id"], r["matched_id"]))
-        for r in ML.flag_lsh_near_dups(docs).collect()
-    )
-    assert raw == batch_raw
+    def pairs(rows):
+        return Counter(
+            (min(r["doc_id"], r["matched_id"]), max(r["doc_id"], r["matched_id"])) for r in rows
+        )
+
+    assert pairs(rows) == pairs(spark.table(lsh_stream_sink[0]).collect())
     want = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
         for r in QUERIES["x3_minhash_lsh_pairs"].build(spark, sf_small).collect()
@@ -356,10 +366,7 @@ def test_streaming_lsh_redelivery_emits_no_duplicate_pairs(spark, sf_small, tmp_
 
 def test_streaming_near_dup_equals_batch_x6_64(spark, sf_small, tmp_path_factory):
     # stream≡batch contract: the distinct flagged pair set over a bounded
-    # stream equals the declared x6_64 pair set over the same corpus, and
-    # the batch path of the same builder agrees too
-    import time
-
+    # stream equals the declared x6_64 pair set over the same corpus
     from fifteenmc_spark.operators.relational import QUERIES
     from fifteenmc_spark.streaming import near_dup as ND
 
@@ -370,34 +377,7 @@ def test_streaming_near_dup_equals_batch_x6_64(spark, sf_small, tmp_path_factory
     assert want  # fixture corpus has near-dup pairs
 
     docs = read_table(spark, sf_small, "documents")
-    got_batch = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in ND.distinct_pairs(ND.flag_near_dups(docs)).collect()
-    }
-    assert got_batch == want
-
-    # three doc_id-ranged chunks, one micro-batch each (maxFilesPerTrigger)
-    out = tmp_path_factory.mktemp("near_dup_stream")
-    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
-    c1, c2 = ids[len(ids) // 3], ids[2 * len(ids) // 3]
-
-    def chunk_of(i):
-        return 0 if i < c1 else (1 if i < c2 else 2)
-
-    parts = [
-        docs.where(F.col("doc_id") < c1),
-        docs.where((F.col("doc_id") >= c1) & (F.col("doc_id") < c2)),
-        docs.where(F.col("doc_id") >= c2),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(str(out / f"f{i}"))
-        time.sleep(1.1)  # file-source orders micro-batches by mod time
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(out) + "/*/")
-    )
+    stream, chunk_of = _three_chunk_stream(spark, docs, tmp_path_factory.mktemp("near_dup_stream"))
     W.run_to_memory(ND.flag_near_dups(stream), "sink_near_dup", output_mode="append")
     got_stream = {
         (r["doc_a"], r["doc_b"], r["hamming"])
@@ -407,6 +387,37 @@ def test_streaming_near_dup_equals_batch_x6_64(spark, sf_small, tmp_path_factory
     # at least one flagged pair crosses micro-batches — the bucket state
     # really carried an earlier batch's documents forward
     assert any(chunk_of(a) != chunk_of(b) for a, b, _ in got_stream)
+
+
+def test_registries_orient_every_emission_earlier_to_later(spark, sf_small, tmp_path_factory):
+    """Both near-dup registries emit matched_id as the EARLIER document.
+    Within one micro-batch a bucket admits in doc_id order, so every
+    emission has matched_id < doc_id — even when the bucket's rows reach
+    the state function in many Arrow chunks (two records per chunk here)
+    and arrive in descending doc_id order (a per-chunk sort would admit a
+    later chunk's smaller ids after the larger ones)."""
+    from fifteenmc_spark.streaming import minhash_lsh as ML
+    from fifteenmc_spark.streaming import near_dup as ND
+
+    docs = read_table(spark, sf_small, "documents")
+    out = tmp_path_factory.mktemp("orientation")
+    docs.repartition(1).sortWithinPartitions(F.desc("doc_id")).write.parquet(str(out / "f0"))
+    sinks = {"sink_orient_simhash": ND.flag_near_dups, "sink_orient_lsh": ML.flag_lsh_near_dups}
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        for name, flag in sinks.items():
+            # one file = one micro-batch
+            stream = spark.readStream.schema(docs.schema).parquet(str(out / "f0"))
+            W.run_to_memory(flag(stream), name, output_mode="append")
+    finally:
+        spark.conf.set(conf, before)
+    for name in sinks:
+        rows = spark.table(name).collect()
+        assert rows, name
+        wrong = [(r["doc_id"], r["matched_id"]) for r in rows if r["matched_id"] >= r["doc_id"]]
+        assert not wrong, (name, len(wrong), len(rows), wrong[:5])
 
 
 def test_streaming_ann_topk_equals_batch_v5_and_v1(spark, sf_small, tmp_path_factory):
@@ -935,14 +946,16 @@ def test_streaming_sampled_span_registry_equals_batch_x9_sampled(spark, sf_small
 
 
 def test_stateful_timeout_branches_emit_nothing():
-    """Pins the safety argument of W.await_drained: every stateful
-    streaming operator's hasTimedOut branch evicts state and emits ZERO
-    rows, so stopping an availableNow query after its input drains (the
-    zero-input-batch signal) cannot change the emitted result set."""
-    from fifteenmc_spark.streaming import ann as ANN
-    from fifteenmc_spark.streaming import minhash_lsh as ML
-    from fifteenmc_spark.streaming import near_dup as ND
-    from fifteenmc_spark.streaming import span_dedup as SD
+    """Pins the safety argument of W.await_drained: the one keyed-state
+    wrapper (stateful._keyed) evicts state and emits ZERO rows on a
+    timeout, without running the operator's step, so stopping an
+    availableNow query after its input drains (the zero-input-batch
+    signal) cannot change the emitted result set.  Every stateful stream
+    goes through that wrapper: no other module of the streaming package
+    handles a timeout or calls the keyed-state operator itself."""
+    import pathlib
+
+    from fifteenmc_spark import streaming
     from fifteenmc_spark.streaming import stateful as ST
 
     class _TimedOutState:
@@ -960,18 +973,17 @@ def test_stateful_timeout_branches_emit_nothing():
         def update(self, *_):
             raise AssertionError("timeout branch wrote state")
 
-    fns = [
-        ML._match_factory(0.5, 1000),
-        ND._match_factory(8, 1000),
-        ANN._merge,
-        SD._flag,
-        ST._update,
-    ]
-    for fn in fns:
-        state = _TimedOutState()
-        emitted = list(fn(("k",), iter([]), state))
-        assert emitted == [], f"{fn} emitted rows on timeout"
-        assert state.removed, f"{fn} did not evict state on timeout"
+    def step(*_):
+        raise AssertionError("timeout branch ran the step")
+
+    state = _TimedOutState()
+    assert list(ST._keyed(step)(("k",), iter([]), state)) == []
+    assert state.removed
+
+    sources = {p.name: p.read_text() for p in pathlib.Path(streaming.__file__).parent.glob("*.py")}
+    for name in ("hasTimedOut", "applyInPandasWithState"):
+        where = {f: src.count(name) for f, src in sources.items() if name in src}
+        assert where == {"stateful.py": 1}, (name, where)
 
 
 def test_await_drained_stops_stateful_availablenow_promptly(spark, sf_small, tmp_path_factory):
