@@ -52,6 +52,17 @@ def haversine_m(lon1, lat1, lon2, lat2, radius_m: float = R_EDGE_WEIGHTS_M) -> C
     return F.lit(2.0 * radius_m) * F.asin(F.sqrt(a))
 
 
+def haversine_m_local(
+    lon1: float, lat1: float, lon2: float, lat2: float, radius_m: float = R_EDGE_WEIGHTS_M
+) -> float:
+    """haversine_m on driver-side floats, in its float64 operation order."""
+    rlat1, rlat2 = math.radians(lat1), math.radians(lat2)
+    a = math.sin(math.radians(lat2 - lat1) / 2) ** 2 + math.cos(rlat1) * math.cos(rlat2) * math.sin(
+        math.radians(lon2 - lon1) / 2
+    ) ** 2
+    return 2.0 * radius_m * math.asin(math.sqrt(min(max(a, 0.0), 1.0)))
+
+
 def edge_weight_m(lon1, lat1, lon2, lat2) -> Column:
     """F1 exactly as used for edge weights: R=6371008.8, zero-length edges
     clamped to 0.01 m, stored float32 (graph_construction.py:164-181)."""

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..io import read_table
+from ..io import local_frame, read_table
 from .relational import QUERIES, _register
 from .session_index import session_cached as _session_cached
 
@@ -1175,8 +1175,12 @@ def _clusters_union_find(rows, spark) -> DataFrame:
         ra, rb = find(r["doc_a"]), find(r["doc_b"])
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    labels = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(labels, "doc_id BIGINT, cluster_id BIGINT")
+    docs = list(parent)
+    labels = pd.DataFrame({
+        "doc_id": np.asarray(docs, dtype=np.int64),
+        "cluster_id": np.asarray([find(x) for x in docs], dtype=np.int64),
+    })
+    return local_frame(spark, labels, "doc_id BIGINT, cluster_id BIGINT")
 
 
 def _clusters_star(pairs: DataFrame) -> DataFrame:

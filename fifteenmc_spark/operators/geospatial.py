@@ -17,9 +17,12 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..io import local_frame
 from ..plans import grid as grid_mod
 from ..plans import layout as layout_mod
 from ..plans import reach as reach_mod
@@ -199,7 +202,11 @@ def g3(spark, sf_dir):
         i.cast("int").alias("dst"),
         (F.lit(1.0) + (i % 7).cast("double") * 0.5).alias("w"),
     )
-    seeds = spark.createDataFrame([(0, "c", 100), (5, "c", 105)], "node_idx INT, category STRING, poi_id BIGINT")
+    seeds = local_frame(
+        spark,
+        pd.DataFrame({"node_idx": np.int32([0, 5]), "category": ["c", "c"], "poi_id": np.int64([100, 105])}),
+        "node_idx INT, category STRING, poi_id BIGINT",
+    )
     rows = reach_mod.graph_rows(edges, seeds, spark.range(_N_TREE).select(F.col("id").alias("node_idx")))
     # one group, every node core
     sp = reach_mod.shortest_paths_bounded_local(

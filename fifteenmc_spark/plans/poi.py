@@ -20,8 +20,11 @@ Element table contract (what a pbf→parquet ingest step produces):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..io import local_frame
 
 # Category → OSM tag pairs; public OSM taxonomy, mirrors
 # snap_poi_to_nodes.py:88-114 (20 categories / 25 pairs).
@@ -58,7 +61,8 @@ def tag_table(spark: SparkSession) -> DataFrame:
     """F15 as data: the inverted (category, key, value) lookup — 25 rows,
     always broadcast."""
     rows = [(cat, k, v) for cat, pairs in TAG_MAP.items() for (k, v) in pairs]
-    return spark.createDataFrame(rows, "category STRING, tag_key STRING, tag_value STRING")
+    pdf = pd.DataFrame(rows, columns=["category", "tag_key", "tag_value"], dtype=object)
+    return local_frame(spark, pdf, "category STRING, tag_key STRING, tag_value STRING")
 
 
 def centroid_cols(geom) -> tuple:

@@ -7,16 +7,23 @@ materialized-view design the reference pins (`poi_query.py:97-99`): a
 point query never touches the graph, it reads one node's rows from a
 category-partitioned parquet table (partition-pruned scan at cluster
 scale).  Both path queries solve inside the limit disc of their start
-point (_solve_in_disc): one reach.nearest_seed_path_local task over the
-graph within ``max_snap_m + limit_m`` of it.
+point (_solve_in_disc): the graph within ``max_snap_m + limit_m`` of it
+comes to the driver in one Arrow collect, reach.nearest_seed_chain solves
+and walks it there, and the answer goes back as a local relation, which
+collects without a Spark job.  The disc is bounded by geometry, not by
+graph size; the trade is that concurrent path requests solve under the
+driver's one GIL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..io import local_frame
 from . import reach as reach_mod
 from . import snap as snap_mod
 
@@ -123,12 +130,11 @@ def point_to_point_path(
 
     SURVEY's "bounded G2" with one seed: the snapped start node is the
     only seed, _solve_in_disc solves the bounded shortest paths from it
-    inside the start point's limit disc (one heap-Dijkstra task, no A*
-    pruning) and walks prev from the snapped target back to the start.
-    The chain is reversed and re-costed (G5 + W1); every step of the
-    forward chain is an edge, so the haversine fallback never fires.
-    Ties between equal-length routes go to the lexicographic min
-    (dist, prev).
+    inside the start point's limit disc (no A* pruning) and walks prev
+    from the snapped target back to the start.  The chain is reversed and
+    re-costed (G5 + W1); every step of the forward chain is an edge, so
+    the haversine fallback never fires.  Ties between equal-length routes
+    go to the lexicographic min (dist, prev).
 
     Output rows: seq, node_idx, lon, lat, step_m, cum_m (B7 shape minus the
     POI columns); empty when either point cannot be snapped or the target
@@ -136,20 +142,25 @@ def point_to_point_path(
     spark = nodes.sparkSession
     s = snap_mod.snap_single_point(nodes, *start_lonlat, max_snap_m=max_snap_m)
     t = snap_mod.snap_single_point(nodes, *end_lonlat, max_snap_m=max_snap_m)
-    found = None
+    steps = _recost(None, [])
     if s is not None and t is not None:
-        seed = spark.createDataFrame([(s[0], "route", 0)], "node_idx INT, category STRING, poi_id BIGINT")
-        found = _solve_in_disc(nodes, edges, seed, start_lonlat, t[0], limit_m, max_snap_m)
-    if found is None:
-        return spark.createDataFrame([], _PATH_SCHEMA)
-    return _recost(nodes, edges, found[1][::-1]).orderBy("seq")
+        # a local relation, not literals: a literal node_idx would push
+        # into the disc's broadcast and cost it a second build
+        seed = local_frame(
+            spark, pd.DataFrame({"node_idx": np.int32([s[0]]), "category": ["route"], "poi_id": np.int64([0])}),
+            "node_idx INT, category STRING, poi_id BIGINT",
+        )
+        disc, found = _solve_in_disc(nodes, edges, seed, start_lonlat, t[0], limit_m, max_snap_m)
+        if found is not None:
+            steps = _recost(disc, found[1][::-1])
+    return local_frame(spark, steps, _PATH_SCHEMA)
 
 
 def _solve_in_disc(nodes, edges, seeds, center, tip_idx, limit_m, max_snap_m):
     """G2 + G4 for one tip node inside the disc of radius ``max_snap_m +
     limit_m`` (plus _DISC_PAD_M) around the query point ``center``:
-    ``(poi_id, chain)`` of the seed nearest to ``tip_idx``, chain in tip →
-    seed order, or None when no seed lies within ``limit_m``.
+    ``(disc, found)``: the disc's graph_rows, collected with lon, lat on
+    its node rows, and reach.nearest_seed_chain from ``tip_idx``.
 
     The disc loses nothing.  Edges are symmetric and weigh their haversine
     length, so a node on a seed-to-tip path no longer than ``limit_m``
@@ -158,56 +169,55 @@ def _solve_in_disc(nodes, edges, seeds, center, tip_idx, limit_m, max_snap_m):
     that node lies within ``max_snap_m`` of ``center``.  Every node on the
     winning chain, and every tie candidate for its prev, is on such a
     path.  Only nodes in the disc, edges with both ends in it and seeds on
-    its nodes enter the one reach.nearest_seed_path_local task, and only
-    the O(path) chain comes back to the driver."""
+    its nodes come to the driver, in one Arrow collect: the disc slice is
+    bounded by geometry, not graph size."""
     lon, lat = center
     radius_m = float(max_snap_m) + float(limit_m) + _DISC_PAD_M
     disc = nodes.where(
         geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(float(lon)), F.lit(float(lat)), geo.R_EDGE_WEIGHTS_M)
         <= F.lit(radius_m)
-    ).select("node_idx")
-    # the disc's node ids are a small table: broadcast, the edges never shuffle
-    keys = F.broadcast(disc)
-    disc_edges = edges.join(keys.withColumnRenamed("node_idx", "src"), "src", "left_semi").join(
-        keys.withColumnRenamed("node_idx", "dst"), "dst", "left_semi"
     )
-    chain = reach_mod.nearest_seed_path_local(
-        disc_edges, reach_mod._valid_sources(seeds, disc), tip_idx, limit_m
-    )
-    rows = sorted(chain.collect(), key=lambda r: r["seq"])
-    return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
+    # the disc's node ids are a small table: broadcast, the edges never
+    # shuffle.  Every semi-join takes the same unrenamed, unfiltered keys,
+    # so Spark builds the broadcast once; an unsnapped seed's node_idx -1
+    # names no disc node, so the seeds' join is P3 as well.
+    keys = F.broadcast(disc.select("node_idx"))
+
+    def in_disc(df, col):
+        df = df.withColumnRenamed(col, "node_idx").join(keys, "node_idx", "left_semi")
+        return df.withColumnRenamed("node_idx", col)
+
+    disc_edges = in_disc(in_disc(edges, "src"), "dst")
+    rows = reach_mod.graph_rows(disc_edges, in_disc(seeds, "node_idx"), disc, "lon", "lat").toPandas()
+    e_pdf = rows[rows["dst"] >= 0].rename(columns={"node_idx": "src"})
+    return rows, reach_mod.nearest_seed_chain(e_pdf, rows[rows["seed"]], tip_idx, limit_m)
 
 
-def _recost(nodes: DataFrame, edges: DataFrame, chain: list[int]) -> DataFrame:
-    """G5 + W1 over a node chain, shared by both path queries: pair
-    consecutive nodes (lag), join the edge table for the true step weight
-    with the haversine R=6371000 fallback (test_path.py:318-328) where a
-    step has no edge in that direction, and accumulate the running total.
-    Returns the _PATH_SCHEMA columns, unordered."""
-    path = nodes.sparkSession.createDataFrame(
-        [(i, int(n)) for i, n in enumerate(chain)], "seq INT, node_idx INT"
-    )
-    w_seq = Window.orderBy("seq")
-    paired = (
-        path.join(nodes.select("node_idx", "lon", "lat"), "node_idx")
-        .withColumn("prev_node", F.lag("node_idx").over(w_seq))
-        .withColumn("prev_lon", F.lag("lon").over(w_seq))
-        .withColumn("prev_lat", F.lag("lat").over(w_seq))
-    )
-    e = edges.select(F.col("src").alias("prev_node"), F.col("dst").alias("node_idx"), "w")
-    step = F.when(F.col("prev_node").isNull(), F.lit(0.0)).otherwise(
-        F.coalesce(
-            F.col("w").cast("double"),
-            geo.haversine_m(F.col("prev_lon"), F.col("prev_lat"), F.col("lon"), F.col("lat"), geo.R_QUERY_M),
-        )
-    )
-    w_cum = w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)  # W1
-    return (
-        paired.join(e, ["prev_node", "node_idx"], "left")
-        .withColumn("step_m", step.cast("float"))
-        .withColumn("cum_m", F.sum("step_m").over(w_cum).cast("float"))
-        .select("seq", "node_idx", "lon", "lat", "step_m", "cum_m")
-    )
+def _recost(disc, chain: list[int]) -> pd.DataFrame:
+    """G5 + W1 over a node chain of ``disc`` (_solve_in_disc), shared by
+    both path queries: each step weighs its edge (graph_build's min-dedup
+    leaves one per direction), or the haversine at R=6371000 where no edge
+    runs that way, and ``cum_m`` is the running total, summed in float64
+    as Spark's window sum does.  Returns the _PATH_SCHEMA columns in seq
+    order, empty for an empty chain."""
+    lonlat, w = {}, {}
+    if chain:
+        nd, ed = disc[(disc["dst"] < 0) & ~disc["seed"]], disc[disc["dst"] >= 0]
+        lonlat = dict(zip(nd["node_idx"].tolist(), zip(nd["lon"].tolist(), nd["lat"].tolist())))
+        w = dict(zip(zip(ed["node_idx"].tolist(), ed["dst"].tolist()), ed["w"].tolist()))
+    steps = [0.0] * len(chain)
+    for i in range(1, len(chain)):
+        u, v = chain[i - 1], chain[i]
+        steps[i] = w[(u, v)] if (u, v) in w else geo.haversine_m_local(*lonlat[u], *lonlat[v], geo.R_QUERY_M)
+    step_m = np.asarray(steps, dtype=np.float32)
+    return pd.DataFrame({
+        "seq": np.arange(len(chain), dtype=np.int32),
+        "node_idx": np.asarray(chain, dtype=np.int32),
+        "lon": np.asarray([lonlat[n][0] for n in chain], dtype=np.float32),
+        "lat": np.asarray([lonlat[n][1] for n in chain], dtype=np.float32),
+        "step_m": step_m,
+        "cum_m": np.cumsum(step_m, dtype=np.float64).astype(np.float32),  # W1
+    })
 
 
 def evaluate_accuracy(metrics: DataFrame, base_tol_m: float = 20.0) -> DataFrame:
@@ -239,32 +249,25 @@ def path_to_nearest_poi(
     nearest POI of ``category``.
 
     Solves the bounded multi-source shortest paths from the category's
-    POI seeds (G2) and backtracks start→source (G4) in one task over the
+    POI seeds (G2) and backtracks start→source (G4) on the driver over the
     graph inside the query point's limit disc (_solve_in_disc), then
     re-costs each step and accumulates the running total (G5 + W1,
     _recost).  Output rows (B7 schema): seq, node_idx, lon, lat, step_m,
-    cum_m, poi_id, category.  The driver receives only the O(path) chain,
-    never the settled state."""
-    spark = nodes.sparkSession
-    out_schema = _PATH_SCHEMA + ", poi_id BIGINT, category STRING"
+    cum_m, poi_id, category, as a local relation; empty when the point
+    cannot be snapped or no POI lies within ``limit_m``."""
+    steps, poi_id = _recost(None, []), 0
     snapped = snap_mod.snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
-    if snapped is None:
-        return spark.createDataFrame([], out_schema)
-    start_idx, _ = snapped
-
-    key = geo.sanitize_key(F.lit(category))
-    seeds = pois.where(geo.sanitize_key(F.col("category")) == key).select(
-        "node_idx", F.lit(category).alias("category"), "poi_id"
-    )
-    found = _solve_in_disc(nodes, edges, seeds, (lon, lat), start_idx, limit_m, max_snap_m)
-    if found is None:
-        return spark.createDataFrame([], out_schema)  # no POI within limit_m
-    poi_id, chain = found
-    return (
-        _recost(nodes, edges, chain)
-        .select("*", F.lit(poi_id).cast("bigint").alias("poi_id"), F.lit(category).alias("category"))
-        .orderBy("seq")
-    )
+    if snapped is not None:
+        key = geo.sanitize_key(F.lit(category))
+        seeds = pois.where(geo.sanitize_key(F.col("category")) == key).select(
+            "node_idx", F.lit(category).alias("category"), "poi_id"
+        )
+        disc, found = _solve_in_disc(nodes, edges, seeds, (lon, lat), snapped[0], limit_m, max_snap_m)
+        if found is not None:
+            poi_id, steps = found[0], _recost(disc, found[1])
+    steps["poi_id"] = np.full(len(steps), poi_id, dtype=np.int64)
+    steps["category"] = pd.Series([category] * len(steps), dtype=object)
+    return local_frame(nodes.sparkSession, steps, _PATH_SCHEMA + ", poi_id BIGINT, category STRING")
 
 
 def path_to_nearest_poi_zordered(

@@ -5,8 +5,7 @@ shortest path in the engine.
 The reference runs a binary-heap Dijkstra over CSR arrays per category
 (`precompute_poi_reach.py:86-125`), bounded at `limit_m`, once per tile,
 and the same heap for its point-to-point A* (`test_path.py:33-76`).  Here
-that heap (``_heap_dijkstra``) is the only solver, always inside one
-applyInPandas task per group:
+that heap (``_heap_dijkstra``) is the only solver:
 
 - G2 reach (compute_reach) groups by tile: a tile's group holds the edges
   out of its buffer nodes and the seeds in its buffer, and keeps the rows
@@ -15,9 +14,11 @@ applyInPandas task per group:
   ends in a core leaves its tile's buffer and tiles never exchange state;
   compute_reach refuses a buffer narrower than `limit_m` on the ground.
 - the start → nearest-seed chain of path-to-nearest-POI (G4) and the
-  point-to-point route (G3) solve in one group holding only the graph
-  inside their limit disc (nearest_seed_path_local, called from
-  plans/query.py).
+  point-to-point route (G3) solve on the driver (nearest_seed_chain,
+  called from plans/query.py) over the graph inside their limit disc,
+  which comes to the driver in one Arrow collect: bounded by geometry,
+  not graph size, and without a Python worker per request.  The trade:
+  concurrent path requests solve under the driver's one GIL.
 
 A tile that outgrows a task calls for a smaller grid.TILE_KM_DEFAULT, not
 a second solver.
@@ -61,9 +62,9 @@ def _valid_sources(pois: DataFrame, nodes: DataFrame) -> DataFrame:
 def _heap_dijkstra(e_pdf, s_pdf, limit_m: float) -> dict:
     """Binary-heap Dijkstra (the reference's own algorithm,
     precompute_poi_reach.py:86-125) over ``e_pdf(src, dst, w)`` from
-    ``s_pdf(node_idx, category, poi_id)``, bounded at ``limit_m``.  Runs
-    inside one Python task; the single solver body behind both
-    shortest_paths_bounded_local and nearest_seed_path_local.
+    ``s_pdf(node_idx, category, poi_id)``, bounded at ``limit_m``: the
+    single solver body behind shortest_paths_bounded_local (one executor
+    task per tile) and nearest_seed_chain (on the driver).
 
     Returns ``state[(node, category)] = (dist, poi_id, prev)``, the
     lexicographic-min winner per key, with prev -1 at seeds so a seed
@@ -98,7 +99,7 @@ def _heap_dijkstra(e_pdf, s_pdf, limit_m: float) -> dict:
     return state
 
 
-def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame) -> DataFrame:
+def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame, *carry: str) -> DataFrame:
     """One row per fact about a node, the input shape of
     shortest_paths_bounded_local once keyed by group: ``(node_idx, dst, w,
     seed, category, poi_id)``.  An edge ``edges(src, dst, w)`` is a row of
@@ -106,7 +107,9 @@ def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame) -> DataFram
     is a ``seed`` row; every ``nodes(node_idx)`` row gets a bare row, so a
     node with neither still names its group.  Unused fields hold -1, 0.0,
     false, NULL and 0, never NULL numbers, which pandas would widen to
-    float."""
+    float.  The ``carry`` columns of ``nodes`` (the path queries carry
+    lon, lat) follow on the bare rows and are NULL on the others."""
+    nulls = [F.lit(None).cast(nodes.schema[c].dataType).alias(c) for c in carry]
     return (
         edges.select(
             F.col("src").cast("int").alias("node_idx"),
@@ -115,6 +118,7 @@ def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame) -> DataFram
             F.lit(False).alias("seed"),
             F.lit(None).cast("string").alias("category"),
             F.lit(0).cast("bigint").alias("poi_id"),
+            *nulls,
         )
         .unionByName(
             seeds.select(
@@ -124,6 +128,7 @@ def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame) -> DataFram
                 F.lit(True).alias("seed"),
                 F.col("category").cast("string").alias("category"),
                 F.col("poi_id").cast("bigint").alias("poi_id"),
+                *nulls,
             )
         )
         .unionByName(
@@ -134,6 +139,7 @@ def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame) -> DataFram
                 F.lit(False).alias("seed"),
                 F.lit(None).cast("string").alias("category"),
                 F.lit(0).cast("bigint").alias("poi_id"),
+                *carry,
             )
         )
     )
@@ -175,50 +181,30 @@ def shortest_paths_bounded_local(rows: DataFrame, limit_m: float = LIMIT_M_DEFAU
     )
 
 
-def nearest_seed_path_local(
-    edges: DataFrame,
-    seeds: DataFrame,
-    tip_idx: int,
-    limit_m: float = LIMIT_M_DEFAULT,
-) -> DataFrame:
-    """G2 + G4 in ONE cogrouped task: solve the bounded Dijkstra over
-    ``edges(src, dst, w)`` from ``seeds(node_idx, category, poi_id)`` (one
-    category) and walk ``prev`` from ``tip_idx`` back to its winning seed
-    in the same task.  Emits only the O(path) chain ``(seq, node_idx,
-    poi_id)`` in tip → seed order (seq 0 is the tip node) and no rows when
-    no seed lies within ``limit_m`` — the settled state never leaves the
-    task.
+def nearest_seed_chain(e_pdf, s_pdf, tip_idx: int, limit_m: float = LIMIT_M_DEFAULT):
+    """G2 + G4 on the driver: solve the bounded Dijkstra over ``e_pdf(src,
+    dst, w)`` from ``s_pdf(node_idx, category, poi_id)`` (one category) and
+    walk ``prev`` from ``tip_idx`` back to its winning seed.  Returns
+    ``(poi_id, chain)`` with the chain in tip → seed order, or None when no
+    seed lies within ``limit_m``.
 
     Zero-weight edges can make the (dist, poi_id, prev) tie-break cyclic
     (hand-made inputs only: graph_build clamps weights at 0.01 m), so the
     walk raises once it takes more steps than there are settled nodes."""
-    tip, lim = int(tip_idx), float(limit_m)
-
-    def walk(e_pdf, s_pdf):
-        import pandas as pd
-
-        # seeds carry one category, so the settled state keys on node
-        settled = {node: v for (node, _cat), v in _heap_dijkstra(e_pdf, s_pdf, lim).items()}
-        chain = [tip] if tip in settled else []
-        while chain and settled[chain[-1]][2] >= 0:
-            if len(chain) > len(settled):
-                raise RuntimeError(
-                    f"path backtrack did not converge within {len(settled)} settled nodes "
-                    f"from tip {tip}; prev pointers likely contain a cycle"
-                )
-            chain.append(settled[chain[-1]][2])
-        poi = settled[tip][1] if chain else 0
-        return pd.DataFrame({
-            "seq": pd.Series(range(len(chain)), dtype="int32"),
-            "node_idx": pd.Series(chain, dtype="int32"),
-            "poi_id": pd.Series([poi] * len(chain), dtype="int64"),
-        })
-
-    e = edges.select(F.lit(0).alias("g"), "src", "dst", F.col("w").cast("double").alias("w"))
-    s = seeds.select(F.lit(0).alias("g"), "node_idx", "category", "poi_id")
-    return e.groupBy("g").cogroup(s.groupBy("g")).applyInPandas(
-        walk, schema="seq INT, node_idx INT, poi_id BIGINT"
-    )
+    tip = int(tip_idx)
+    # seeds carry one category, so the settled state keys on node
+    settled = {node: v for (node, _cat), v in _heap_dijkstra(e_pdf, s_pdf, float(limit_m)).items()}
+    if tip not in settled:
+        return None
+    chain = [tip]
+    while settled[chain[-1]][2] >= 0:
+        if len(chain) > len(settled):
+            raise RuntimeError(
+                f"path backtrack did not converge within {len(settled)} settled nodes "
+                f"from tip {tip}; prev pointers likely contain a cycle"
+            )
+        chain.append(settled[chain[-1]][2])
+    return settled[tip][1], chain
 
 
 def _buffer_width_m(rows) -> float:

@@ -421,13 +421,15 @@ def test_point_to_point_path(fx):
 
 
 def test_point_to_point_path_jobs(spark, fx):
-    # the one-task solve + walk, then one re-cost: a lattice route starts
-    # a bounded handful of jobs, not a few per relaxation round
+    # two snaps and the one disc read: the solve, walk and re-cost run on
+    # the driver, and the route collects as a local relation.  The disc
+    # read is its broadcast, its result stage and one 1-task job per
+    # cached fixture table it scans (none on parquet tables)
     from .test_layout import _jobs_started
 
-    n_jobs, path = _jobs_started(spark, lambda: _route(fx, 30, 350).toPandas())
+    n_jobs, path = _jobs_started(spark, lambda: _route(fx, 30, 350).collect())
     assert len(path) > 1
-    assert n_jobs <= 20, n_jobs
+    assert n_jobs <= 6, n_jobs
 
 
 def test_path_to_nearest_poi(fx, reach_ctx):
@@ -471,62 +473,137 @@ def _nearest_poi_path(fx, reach_ctx, node: int, category: str, limit_m: float = 
     )
 
 
-def test_path_one_task_collects_o_path_not_o_settled(fx, reach_ctx, monkeypatch):
-    # the one-task walk ships the CHAIN to the driver, not the settled
-    # state: every .collect() made while the request is planned is counted
+def test_path_reads_only_its_disc(fx, reach_ctx, monkeypatch):
+    # the driver receives the disc slice, never the whole graph: the
+    # request collects the snap's one row and then ONE Arrow frame that
+    # holds exactly the nodes within max_snap_m + limit_m (+1 m) of the
+    # query point, the edges with both ends among them and the
+    # category's seeds on them
     from pyspark.sql.classic.dataframe import DataFrame
 
-    counted = []
-    orig = DataFrame.collect
+    collected, arrow = [], []
+    orig_collect, orig_pandas = DataFrame.collect, DataFrame.toPandas
 
-    def spy(self):
-        rows = orig(self)
-        counted.append(len(rows))
+    def spy_collect(self):
+        rows = orig_collect(self)
+        collected.append(len(rows))
         return rows
 
-    monkeypatch.setattr(DataFrame, "collect", spy)
-    df = _nearest_poi_path(fx, reach_ctx, 150, "supermarket")
-    collected = list(counted)
+    def spy_pandas(self):
+        pdf = orig_pandas(self)
+        arrow.append(pdf)
+        return pdf
+
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    monkeypatch.setattr(DataFrame, "toPandas", spy_pandas)
+    _nearest_poi_path(fx, reach_ctx, 150, "supermarket", limit_m=300.0)
     monkeypatch.undo()
-    path = df.toPandas()
-    settled = reach_ctx["reach"].where(
-        (F.col("category") == "supermarket") & F.col("dist_m").isNotNull()
-    ).count()
-    assert 1 < len(path) < settled
-    assert collected == [1, len(path)], collected  # the snap's one row, then the chain
+    assert collected == [1] and len(arrow) == 1, (collected, len(arrow))
+    g, e = fx["gnodes_pdf"], fx["gedges_pdf"]
+    q = g.iloc[150]
+    d = gf.haversine_np(g["lon"].to_numpy(float), g["lat"].to_numpy(float), float(q["lon"]), float(q["lat"]))
+    radius = query.MAX_SNAP_M_DEFAULT + 300.0 + query._DISC_PAD_M
+    assert np.abs(d - radius).min() > 1e-3  # no node on the rim
+    inside = set(g["node_idx"][d <= radius].astype(int))
+    snapped = reach_ctx["snapped"]
+    n_seeds = int(((snapped["category"] == "supermarket") & snapped["node_idx"].isin(inside)).sum())
+    n_edges = int((e["src"].isin(inside) & e["dst"].isin(inside)).sum())
+    disc = arrow[0]
+    assert len(disc) == len(inside) + n_edges + n_seeds
+    assert set(disc["node_idx"]) == inside
+    assert len(inside) < len(g)  # the disc, not the graph
 
 
 def test_path_raises_on_zero_weight_prev_cycle(spark):
     # zero-weight edges 5->3, 3->1, 1->3 from a seed on node 5 leave
     # prev[3]=1 and prev[1]=3 under the (dist, poi_id, prev) tie-break:
     # the walk must raise instead of walking the cycle forever
-    from pyspark.errors import PythonException
-
     nodes = spark.createDataFrame(
         [(i, 18.5 + 0.001 * i, 54.4) for i in range(6)], "node_idx INT, lon DOUBLE, lat DOUBLE"
     )
     edges = spark.createDataFrame([(5, 3, 0.0), (3, 1, 0.0), (1, 3, 0.0)], "src INT, dst INT, w DOUBLE")
     pois = spark.createDataFrame([(7, "supermarket", 5)], "poi_id BIGINT, category STRING, node_idx INT")
 
-    def serve():
-        return query.path_to_nearest_poi(nodes, edges, pois, 18.501, 54.4, "supermarket").toPandas()
-
-    with pytest.raises(PythonException, match="RuntimeError: path backtrack did not converge"):
-        serve()
+    with pytest.raises(RuntimeError, match="path backtrack did not converge"):
+        query.path_to_nearest_poi(nodes, edges, pois, 18.501, 54.4, "supermarket")
 
 
-def _whole_graph_chain(fx, seeds, tip: int, limit_m: float):
-    """(poi_id, chain) of the one-task solver over the WHOLE edge table."""
-    rows = sorted(
-        reach.nearest_seed_path_local(fx["gedges"], seeds, tip, limit_m).collect(), key=lambda r: r["seq"]
+def _spark_recost(nodes, edges, chain: list[int]):
+    """The reference G5 + W1 re-cost as a Spark plan, an oracle
+    independent of the driver's: pair consecutive chain nodes (lag), join
+    the edge table for the step weight with the haversine R=6371000
+    fallback where a step has no edge in that direction, and sum the
+    running total over a window."""
+    from pyspark.sql import Window
+
+    path = nodes.sparkSession.createDataFrame(
+        [(i, int(n)) for i, n in enumerate(chain)], "seq INT, node_idx INT"
     )
-    return (rows[0]["poi_id"], [r["node_idx"] for r in rows]) if rows else None
+    w_seq = Window.orderBy("seq")
+    paired = (
+        path.join(nodes.select("node_idx", "lon", "lat"), "node_idx")
+        .withColumn("prev_node", F.lag("node_idx").over(w_seq))
+        .withColumn("prev_lon", F.lag("lon").over(w_seq))
+        .withColumn("prev_lat", F.lag("lat").over(w_seq))
+    )
+    e = edges.select(F.col("src").alias("prev_node"), F.col("dst").alias("node_idx"), "w")
+    step = F.when(F.col("prev_node").isNull(), F.lit(0.0)).otherwise(
+        F.coalesce(
+            F.col("w").cast("double"),
+            geo.haversine_m(F.col("prev_lon"), F.col("prev_lat"), F.col("lon"), F.col("lat"), geo.R_QUERY_M),
+        )
+    )
+    w_cum = w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return (
+        paired.join(e, ["prev_node", "node_idx"], "left")
+        .withColumn("step_m", step.cast("float"))
+        .withColumn("cum_m", F.sum("step_m").over(w_cum).cast("float"))
+        .select("seq", "node_idx", "lon", "lat", "step_m", "cum_m")
+        .orderBy("seq")
+    )
+
+
+def test_path_recost_falls_back_to_haversine_on_one_way_steps(spark):
+    # a line 0-1-2-3 whose edges run only toward the start, except 2<->3:
+    # the chain 0 -> 1 -> 2 -> 3 walks 0->1 and 1->2 against their edges,
+    # so those steps weigh the R=6371000 haversine, and 2->3 its edge
+    raw = spark.createDataFrame(
+        [(100 + i, 18.5 + 0.0008 * i, 54.4 + 0.0001 * i) for i in range(4)],
+        "osm_node_id BIGINT, lon DOUBLE, lat DOUBLE",
+    )
+    raw_edges = spark.createDataFrame([(100 + i, 101 + i) for i in range(3)], "u BIGINT, v BIGINT")
+    nodes, both = graph_build.build_graph(raw, raw_edges)
+    edges = both.where((F.col("src") > F.col("dst")) | (F.col("src") == 2)).cache()
+    assert edges.count() == 4
+    pois = spark.createDataFrame([(9, "park", 3)], "poi_id BIGINT, category STRING, node_idx INT")
+    start = nodes.where(F.col("node_idx") == 0).first()
+    got = query.path_to_nearest_poi(nodes, edges, pois, start["lon"], start["lat"], "park").toPandas()
+    assert got["node_idx"].tolist() == [0, 1, 2, 3]
+    exp = (
+        _spark_recost(nodes, edges, [0, 1, 2, 3])
+        .select("*", F.lit(9).cast("bigint").alias("poi_id"), F.lit("park").alias("category"))
+        .toPandas()
+    )
+    pd.testing.assert_frame_equal(got, exp, check_exact=True)
+    w = {(r["src"], r["dst"]): r["w"] for r in both.collect()}
+    ll = nodes.orderBy("node_idx").toPandas()
+    for i in (1, 2):  # the fallback fired: not the edge weight, the query radius
+        hv = gf.haversine_np(ll["lon"][i - 1], ll["lat"][i - 1], ll["lon"][i], ll["lat"][i], r=geo.R_QUERY_M)
+        assert got["step_m"][i] == np.float32(hv) != np.float32(w[(i - 1, i)])
+    assert got["step_m"][3] == np.float32(w[(2, 3)])
+
+
+def _whole_graph_chain(fx, s_pdf, tip: int, limit_m: float):
+    """(poi_id, chain) of the driver kernel over the WHOLE edge table."""
+    e_pdf = fx["gedges"].select("src", "dst", F.col("w").cast("double").alias("w")).toPandas()
+    return reach.nearest_seed_chain(e_pdf, s_pdf, tip, limit_m)
 
 
 def test_disc_paths_equal_whole_graph_solve(spark, fx, reach_ctx):
     # G4 and G3 read only the graph inside the max_snap_m + limit_m disc
-    # of their start point; each path must equal the whole-graph solve
-    # of the same one-task solver row for row.  "off_west" lies ~195 m
+    # of their start point; each path must equal the driver kernel's
+    # whole-graph solve, re-costed by the Spark oracle, row for row and
+    # bit for bit.  "off_west" lies ~195 m
     # off the lattice's south-west corner, so a disc that left out
     # max_snap_m would cut its chains; nodes 3 and 13 sit on the south
     # and east edges.
@@ -552,43 +629,67 @@ def test_disc_paths_equal_whole_graph_solve(spark, fx, reach_ctx):
             fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], *pts[start], cat, limit_m=lim
         ).toPandas()
         seeds = reach_ctx["pois_sdf"].where(F.col("category") == cat).select("node_idx", "category", "poi_id")
-        want = _whole_graph_chain(fx, seeds, tip(pts[start]), lim)
+        want = _whole_graph_chain(fx, seeds.toPandas(), tip(pts[start]), lim)
         if start == lonely:
             assert want is None and got.empty  # no POI within 1 m
             continue
         assert len(want[1]) > 2, (start, cat)
         exp = (
-            query._recost(fx["gnodes"], fx["gedges"], want[1])
+            _spark_recost(fx["gnodes"], fx["gedges"], want[1])
             .select("*", F.lit(want[0]).cast("bigint").alias("poi_id"), F.lit(cat).alias("category"))
-            .orderBy("seq")
             .toPandas()
         )
-        pd.testing.assert_frame_equal(got, exp, obj=f"{start}/{cat}")
+        pd.testing.assert_frame_equal(got, exp, check_exact=True, obj=f"{start}/{cat}")
 
     # off_west -> 3: 393 m of network from the snapped corner node, and
     # node 3 lies ~455 m from the query point, past limit_m alone
     g3_cases = [("off_west", 3, 400.0), (13, 102, 1100.0), (3, 13, 1000.0)]
     for a, b, lim in g3_cases:
         got = query.point_to_point_path(fx["gnodes"], fx["gedges"], pts[a], pts[b], limit_m=lim).toPandas()
-        seed = spark.createDataFrame([(tip(pts[a]), "route", 0)], "node_idx INT, category STRING, poi_id BIGINT")
+        seed = pd.DataFrame({"node_idx": [tip(pts[a])], "category": ["route"], "poi_id": [0]})
         want = _whole_graph_chain(fx, seed, tip(pts[b]), lim)
         if (a, b) == (3, 13):
             assert want is None and got.empty  # 1,443 m of network: beyond limit_m
             continue
         assert len(want[1]) > 2, (a, b)
-        exp = query._recost(fx["gnodes"], fx["gedges"], want[1][::-1]).orderBy("seq").toPandas()
-        pd.testing.assert_frame_equal(got, exp, obj=f"{a}->{b}")
+        exp = _spark_recost(fx["gnodes"], fx["gedges"], want[1][::-1]).toPandas()
+        pd.testing.assert_frame_equal(got, exp, check_exact=True, obj=f"{a}->{b}")
 
 
 def test_path_to_nearest_poi_warm_jobs(spark, fx, reach_ctx):
-    # a warm path request: two snaps' worth of scans, the disc solve and
-    # the re-cost, with no size probe in front of the solve
+    # a warm path request: the snap, then the disc read with its one
+    # broadcast (and, as in test_point_to_point_path_jobs, one job per
+    # cached fixture table); the solve, walk and re-cost run on the
+    # driver, and the answer collects as a local relation
     from .test_layout import _jobs_started
 
-    _nearest_poi_path(fx, reach_ctx, 150, "supermarket").toPandas()
-    n_jobs, path = _jobs_started(spark, lambda: _nearest_poi_path(fx, reach_ctx, 150, "supermarket").toPandas())
+    _nearest_poi_path(fx, reach_ctx, 150, "supermarket").collect()
+    n_jobs, path = _jobs_started(spark, lambda: _nearest_poi_path(fx, reach_ctx, 150, "supermarket").collect())
     assert len(path) > 1
-    assert n_jobs <= 11, n_jobs
+    assert n_jobs <= 5, n_jobs
+
+
+def test_path_answers_collect_without_a_job(spark, fx, reach_ctx):
+    # every path answer, empty or not, is a local relation: after the
+    # snap and the disc read, collecting it starts no Spark job.  A
+    # pickled or pandas-fallback frame would start one per action.
+    from .test_layout import _jobs_started
+
+    q = fx["gnodes_pdf"].iloc[150]
+    lonely = next(i for i in range(len(fx["gnodes_pdf"])) if i not in set(reach_ctx["snapped"]["node_idx"]))
+    answers = {
+        "path": _nearest_poi_path(fx, reach_ctx, 150, "supermarket"),
+        "no POI within limit_m": _nearest_poi_path(fx, reach_ctx, lonely, "supermarket", limit_m=1.0),
+        "no snap": query.path_to_nearest_poi(
+            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], float(q["lon"]) + 1.0, float(q["lat"]), "supermarket"
+        ),
+        "route": _route(fx, 30, 350),
+        "route beyond limit_m": _route(fx, 0, 399, limit_m=100.0),
+    }
+    for name, df in answers.items():
+        n_jobs, rows = _jobs_started(spark, df.collect)
+        assert n_jobs == 0, (name, n_jobs)
+        assert (len(rows) > 1) == (name in ("path", "route")), (name, len(rows))
 
 
 def test_compute_reach_refuses_buffer_narrower_than_limit(spark, fx, reach_ctx):
