@@ -81,18 +81,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def local_frame(spark: SparkSession, pdf, schema: str) -> DataFrame:
+def local_frame(spark: SparkSession, pdf, schema) -> DataFrame:
     """A driver-side pandas frame as a local relation, whose Arrow batches
     live in the plan: an action on it starts no Spark job.  It goes in as
     a pyarrow Table, which Spark converts through Arrow whatever the
     session's Arrow setting.  createDataFrame on a list, or on a pandas
     frame that is empty or meets Arrow switched off, takes the pickled
     path instead: one job per action.  ``pdf`` holds ``schema``'s columns
-    (a DDL string) in that order."""
+    (a DDL string or a StructType) in that order."""
     import pyarrow as pa
     from pyspark.sql.types import DataType
 
-    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), DataType.fromDDL(schema))
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
 
 
 def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:

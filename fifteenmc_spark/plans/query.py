@@ -2,17 +2,22 @@
 point reachability (G7), path-to-nearest-POI (G4/G5 + W1) and the
 point-to-point route (G3).
 
+Every request is one collect, or two, finished on the driver; the
+answer goes back as a local relation (io.local_frame), which collects
+without a Spark job.
+
 Point queries consume the precomputed `reach` table — the
 materialized-view design the reference pins (`poi_query.py:97-99`): a
-point query never touches the graph, it reads one node's rows from a
-category-partitioned parquet table (partition-pruned scan at cluster
-scale).  Both path queries solve inside the limit disc of their start
-point (_solve_in_disc): the graph within ``max_snap_m + limit_m`` of it
-comes to the driver in one Arrow collect, reach.nearest_seed_chain solves
-and walks it there, and the answer goes back as a local relation, which
-collects without a Spark job.  The disc is bounded by geometry, not by
-graph size; the trade is that concurrent path requests solve under the
-driver's one GIL.
+point query never touches the graph.  The full-scan form snaps (J4,
+snap.snap_single_point) and collects the snapped node's reach rows; the
+z-ordered form reads the node and reach rows within ``max_snap_m`` of the
+query point from their layouts in ONE collect and snaps on the driver
+(snap.nearest_node).  P5/P6 and the O2 sort run on the driver over those
+few rows.  Both path queries read the graph within ``max_snap_m +
+limit_m`` of their start point in one Arrow collect (_read_disc), snap
+the start from it, and reach.nearest_seed_chain solves and walks it
+there.  The disc is bounded by geometry, not by graph size; the trade is
+that concurrent requests finish under the driver's one GIL.
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ MAX_SNAP_M_DEFAULT = 300.0  # test_path.py:374
 # path a few millimetres shorter than its great-circle length
 _DISC_PAD_M = 1.0
 
+_REACH_COLS = ["category", "dist_m", "time_s", "poi_id"]
 _PATH_SCHEMA = "seq INT, node_idx INT, lon FLOAT, lat FLOAT, step_m FLOAT, cum_m FLOAT"
 
 
@@ -48,27 +54,38 @@ def point_reachability(
     (J4), return that node's per-category reach rows within ``radius_m``
     (P6), sorted by distance (O2).
 
-    Output: category, dist_m, time_s, poi_id.  Empty result if the point
-    cannot be snapped."""
+    Output: category, dist_m, time_s, poi_id, as a local relation.  Empty
+    result if the point cannot be snapped."""
     snapped = snap_mod.snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
     return _reach_at_snap(reach, snapped, radius_m, categories)
 
 
 def _reach_at_snap(reach, snapped, radius_m, categories):
-    """The post-snap half of G7, shared by the full-scan and z-ordered
-    entry points: per-category reach rows at the snapped node within
-    radius (P5/P6), sorted by distance (O2)."""
+    """The post-snap half of G7 over a reach table, shared by the
+    full-scan form and the z-ordered form without a reach layout: the
+    snapped node's reach rows come to the driver in one unsorted collect
+    (no orderBy, whose range-bound sampling costs a job of its own) and
+    _reach_answer finishes them."""
     if snapped is None:
-        return reach.select("category", "dist_m", "time_s", "poi_id").limit(0)
-    node_idx, _ = snapped
-    out = reach.where(F.col("node_idx") == F.lit(node_idx))
+        rows = pd.DataFrame(columns=_REACH_COLS)
+    else:
+        # P6's NULL test stays in Spark: a densified table's unreached rows
+        # carry a NULL poi_id, which would widen the collected column to float
+        mine = (F.col("node_idx") == F.lit(snapped[0])) & F.col("dist_m").isNotNull()
+        rows = reach.where(mine).select(*_REACH_COLS).toPandas()
+    return _reach_answer(reach.sparkSession, rows, reach.select(*_REACH_COLS).schema, radius_m, categories)
+
+
+def _reach_answer(spark, rows, schema, radius_m, categories):
+    """P5/P6 + O2 on the driver over one node's collected reach rows: the
+    rows within ``radius_m``, compared in float64 as Spark widens a FLOAT
+    dist_m against the DOUBLE radius, in ``categories`` if given, sorted
+    by (dist_m, category), as a local relation of ``schema``."""
+    keep = rows["dist_m"].to_numpy(np.float64) <= float(radius_m)  # P6
     if categories:  # P5
-        out = out.where(F.col("category").isin(*categories))
-    return (
-        out.where(F.col("dist_m").isNotNull() & (F.col("dist_m") <= F.lit(float(radius_m))))  # P6
-        .select("category", "dist_m", "time_s", "poi_id")
-        .orderBy("dist_m", "category")
-    )
+        keep &= rows["category"].isin(categories).to_numpy()
+    out = rows[keep].sort_values(["dist_m", "category"], na_position="first")  # O2
+    return local_frame(spark, out, schema)
 
 
 def point_reachability_zordered(
@@ -85,37 +102,55 @@ def point_reachability_zordered(
 ) -> DataFrame:
     """G7 served end-to-end from the z-ordered geo layout: the snap (J4)
     reads only the quadtree cells intersecting the max_snap_m disc around
-    the query point (partition-pruned read — see
-    snap.snap_single_point_zordered), and the reach lookup is the same
-    node-keyed filter as point_reachability.  Same rows as the full-scan
-    form by construction; this closes the loop plans/layout.py promises —
-    the reference re-runs ``osmium extract`` over the planet file per
-    bbox, the Spark answer writes the node table once (write_zorder_layout)
-    and serves every later point query from the pruned read.
+    the query point (partition-pruned read, snap.read_zordered_disc).
+    Same rows as the full-scan form by construction; this closes the loop
+    plans/layout.py promises — the reference re-runs ``osmium extract``
+    over the planet file per bbox, the Spark answer writes the node table
+    once (write_zorder_layout) and serves every later point query from
+    the pruned read.
 
     With ``reach_layout_path`` (a reach.write_reach_zordered table on the
     SAME layout_bbox) the reach side prunes too: the snapped node lies
     within max_snap_m of the query point, so its reach rows live inside
-    the same disc boxes the snap enumerated — both halves of the query
-    are partition-pruned reads and the full reach table is never
-    scanned.  ``reach`` may then be None (it is ignored).
+    the same disc.  The node rows and the reach rows within max_snap_m,
+    each with its ``snap_m`` (snap.snap_m, the distance
+    snap_single_point ranks by), come to the driver as ONE collect; the
+    snap (snap.nearest_node) and P5/P6/O2 run there, and the full reach
+    table is never scanned.  ``reach`` may then be None (it is ignored).
+    Without it the snap is snap.snap_single_point_zordered and the reach
+    half is point_reachability's.
 
     Each layout path is listed once per Spark session, on its first
     read (layout.read_zorder_bbox), and every later request prunes its
     cells from that cached listing: a warm request starts no listing or
-    schema-inference job, only the snap and the reach collect.  A layout
+    schema-inference job, only its collect.  A layout
     rewritten outside layout.write_zorder_layout must be evicted with
     ``session_index.invalidate(path)``."""
-    snapped = snap_mod.snap_single_point_zordered(
-        spark, nodes_layout_path, layout_bbox, lon, lat, max_snap_m=max_snap_m
-    )
-    if reach_layout_path is not None:
-        reach = snap_mod.read_zordered_disc(
-            spark, reach_layout_path, layout_bbox, lon, lat, max_snap_m
+    if reach_layout_path is None:
+        if reach is None:
+            raise ValueError("point_reachability_zordered needs reach or reach_layout_path")
+        snapped = snap_mod.snap_single_point_zordered(
+            spark, nodes_layout_path, layout_bbox, lon, lat, max_snap_m=max_snap_m
         )
-    elif reach is None:
-        raise ValueError("point_reachability_zordered needs reach or reach_layout_path")
-    return _reach_at_snap(reach, snapped, radius_m, categories)
+        return _reach_at_snap(reach, snapped, radius_m, categories)
+
+    def near(path):
+        disc = snap_mod.read_zordered_disc(spark, path, layout_bbox, lon, lat, max_snap_m)
+        disc = disc.withColumn("snap_m", snap_mod.snap_m(lon, lat))
+        return disc.where(F.col("snap_m") <= F.lit(float(max_snap_m)))
+
+    # node rows carry snap_m and a 0 poi_id (a NULL would widen the
+    # collected poi_id to float); reach rows carry snap_m NULL
+    reach_rows = near(reach_layout_path).where(F.col("dist_m").isNotNull()).select("node_idx", *_REACH_COLS)
+    rows = (
+        near(nodes_layout_path)
+        .select("node_idx", "snap_m", F.lit(0).alias("poi_id"))
+        .unionByName(reach_rows, allowMissingColumns=True)
+        .toPandas()
+    )
+    node_idx = snap_mod.nearest_node(rows, max_snap_m)
+    mine = rows["snap_m"].isna() & (rows["node_idx"] == node_idx)  # None matches no row
+    return _reach_answer(spark, rows.loc[mine, _REACH_COLS], reach_rows.drop("node_idx").schema, radius_m, categories)
 
 
 def point_to_point_path(
@@ -128,52 +163,53 @@ def point_to_point_path(
 ) -> DataFrame:
     """G3 (`astar_csr`, test_path.py:33-76): point-to-point walking route.
 
-    SURVEY's "bounded G2" with one seed: the snapped start node is the
-    only seed, _solve_in_disc solves the bounded shortest paths from it
-    inside the start point's limit disc (no A* pruning) and walks prev
-    from the snapped target back to the start.  The chain is reversed and
-    re-costed (G5 + W1); every step of the forward chain is an edge, so
-    the haversine fallback never fires.  Ties between equal-length routes
+    SURVEY's "bounded G2" with one seed: the start point's limit disc
+    comes to the driver in one collect (_read_disc), the start snaps from
+    it and is the only seed, built on the driver, and
+    reach.nearest_seed_chain solves the bounded shortest paths from it
+    over the disc (no A* pruning) and walks prev from the target back to
+    the start.  The target snaps with snap.snap_single_point, because its
+    snap disc need not lie inside the start's limit disc.  The chain is
+    reversed and re-costed (G5 + W1); every step of the forward chain is
+    an edge, so the haversine fallback never fires.  Ties between equal-length routes
     go to the lexicographic min (dist, prev).
 
     Output rows: seq, node_idx, lon, lat, step_m, cum_m (B7 shape minus the
     POI columns); empty when either point cannot be snapped or the target
     lies beyond ``limit_m``."""
     spark = nodes.sparkSession
-    s = snap_mod.snap_single_point(nodes, *start_lonlat, max_snap_m=max_snap_m)
     t = snap_mod.snap_single_point(nodes, *end_lonlat, max_snap_m=max_snap_m)
     steps = _recost(None, [])
-    if s is not None and t is not None:
-        # a local relation, not literals: a literal node_idx would push
-        # into the disc's broadcast and cost it a second build
-        seed = local_frame(
-            spark, pd.DataFrame({"node_idx": np.int32([s[0]]), "category": ["route"], "poi_id": np.int64([0])}),
-            "node_idx INT, category STRING, poi_id BIGINT",
-        )
-        disc, found = _solve_in_disc(nodes, edges, seed, start_lonlat, t[0], limit_m, max_snap_m)
-        if found is not None:
-            steps = _recost(disc, found[1][::-1])
+    if t is not None:
+        disc, s = _read_disc(nodes, edges, None, start_lonlat, limit_m, max_snap_m)
+        if s is not None:
+            seed = pd.DataFrame({"node_idx": [s], "category": ["route"], "poi_id": [0]})
+            found = _chain(disc, seed, t[0], limit_m)
+            if found is not None:
+                steps = _recost(disc, found[1][::-1])
     return local_frame(spark, steps, _PATH_SCHEMA)
 
 
-def _solve_in_disc(nodes, edges, seeds, center, tip_idx, limit_m, max_snap_m):
-    """G2 + G4 for one tip node inside the disc of radius ``max_snap_m +
-    limit_m`` (plus _DISC_PAD_M) around the query point ``center``:
-    ``(disc, found)``: the disc's graph_rows, collected with lon, lat on
-    its node rows, and reach.nearest_seed_chain from ``tip_idx``.
+def _read_disc(nodes, edges, seeds, center, limit_m, max_snap_m):
+    """The graph within ``max_snap_m + limit_m`` (plus _DISC_PAD_M) of the
+    query point ``center``, collected: ``(disc, start)``, the disc's
+    graph_rows with lon, lat, snap_m on its node rows, and the node
+    ``center`` snaps to (J4 on the driver, snap.nearest_node) or None.
 
-    The disc loses nothing.  Edges are symmetric and weigh their haversine
-    length, so a node on a seed-to-tip path no longer than ``limit_m``
-    lies within ``limit_m`` great-circle distance of the path's query-side
-    end (the tip for path-to-nearest-POI, the seed for the route), and
-    that node lies within ``max_snap_m`` of ``center``.  Every node on the
-    winning chain, and every tie candidate for its prev, is on such a
-    path.  Only nodes in the disc, edges with both ends in it and seeds on
-    its nodes come to the driver, in one Arrow collect: the disc slice is
-    bounded by geometry, not graph size."""
+    The disc loses nothing.  Every node within ``max_snap_m`` of
+    ``center`` lies in it, so the snap sees every candidate.  Edges are
+    symmetric and weigh their haversine length, so a node on a
+    seed-to-tip path no longer than ``limit_m`` lies within ``limit_m``
+    great-circle distance of the path's query-side end (the tip for
+    path-to-nearest-POI, the seed for the route), and that node lies
+    within ``max_snap_m`` of ``center``.  Every node on the winning chain,
+    and every tie candidate for its prev, is on such a path.  Only nodes
+    in the disc, edges with both ends in it and ``seeds`` on its nodes
+    (None for the route) come to the driver, in one Arrow collect: the
+    disc slice is bounded by geometry, not graph size."""
     lon, lat = center
     radius_m = float(max_snap_m) + float(limit_m) + _DISC_PAD_M
-    disc = nodes.where(
+    disc = nodes.select("node_idx", "lon", "lat", snap_mod.snap_m(lon, lat).alias("snap_m")).where(
         geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(float(lon)), F.lit(float(lat)), geo.R_EDGE_WEIGHTS_M)
         <= F.lit(radius_m)
     )
@@ -188,13 +224,19 @@ def _solve_in_disc(nodes, edges, seeds, center, tip_idx, limit_m, max_snap_m):
         return df.withColumnRenamed("node_idx", col)
 
     disc_edges = in_disc(in_disc(edges, "src"), "dst")
-    rows = reach_mod.graph_rows(disc_edges, in_disc(seeds, "node_idx"), disc, "lon", "lat").toPandas()
-    e_pdf = rows[rows["dst"] >= 0].rename(columns={"node_idx": "src"})
-    return rows, reach_mod.nearest_seed_chain(e_pdf, rows[rows["seed"]], tip_idx, limit_m)
+    disc_seeds = None if seeds is None else in_disc(seeds, "node_idx")
+    rows = reach_mod.graph_rows(disc_edges, disc_seeds, disc, "lon", "lat", "snap_m").toPandas()
+    return rows, snap_mod.nearest_node(rows, max_snap_m)
+
+
+def _chain(disc, s_pdf, tip_idx, limit_m):
+    """reach.nearest_seed_chain over the edges of ``disc`` (_read_disc)."""
+    e_pdf = disc[disc["dst"] >= 0].rename(columns={"node_idx": "src"})
+    return reach_mod.nearest_seed_chain(e_pdf, s_pdf, tip_idx, limit_m)
 
 
 def _recost(disc, chain: list[int]) -> pd.DataFrame:
-    """G5 + W1 over a node chain of ``disc`` (_solve_in_disc), shared by
+    """G5 + W1 over a node chain of ``disc`` (_read_disc), shared by
     both path queries: each step weighs its edge (graph_build's min-dedup
     leaves one per direction), or the haversine at R=6371000 where no edge
     runs that way, and ``cum_m`` is the running total, summed in float64
@@ -250,19 +292,20 @@ def path_to_nearest_poi(
 
     Solves the bounded multi-source shortest paths from the category's
     POI seeds (G2) and backtracks start→source (G4) on the driver over the
-    graph inside the query point's limit disc (_solve_in_disc), then
+    graph inside the query point's limit disc (_read_disc, whose collect
+    also snaps the query point), then
     re-costs each step and accumulates the running total (G5 + W1,
     _recost).  Output rows (B7 schema): seq, node_idx, lon, lat, step_m,
     cum_m, poi_id, category, as a local relation; empty when the point
     cannot be snapped or no POI lies within ``limit_m``."""
     steps, poi_id = _recost(None, []), 0
-    snapped = snap_mod.snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
-    if snapped is not None:
-        key = geo.sanitize_key(F.lit(category))
-        seeds = pois.where(geo.sanitize_key(F.col("category")) == key).select(
-            "node_idx", F.lit(category).alias("category"), "poi_id"
-        )
-        disc, found = _solve_in_disc(nodes, edges, seeds, (lon, lat), snapped[0], limit_m, max_snap_m)
+    key = geo.sanitize_key(F.lit(category))
+    seeds = pois.where(geo.sanitize_key(F.col("category")) == key).select(
+        "node_idx", F.lit(category).alias("category"), "poi_id"
+    )
+    disc, start = _read_disc(nodes, edges, seeds, (lon, lat), limit_m, max_snap_m)
+    if start is not None:
+        found = _chain(disc, disc[disc["seed"]], start, limit_m)
         if found is not None:
             poi_id, steps = found[0], _recost(disc, found[1])
     steps["poi_id"] = np.full(len(steps), poi_id, dtype=np.int64)

@@ -99,28 +99,30 @@ def _heap_dijkstra(e_pdf, s_pdf, limit_m: float) -> dict:
     return state
 
 
-def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame, *carry: str) -> DataFrame:
+def graph_rows(edges: DataFrame, seeds: DataFrame | None, nodes: DataFrame, *carry: str) -> DataFrame:
     """One row per fact about a node, the input shape of
     shortest_paths_bounded_local once keyed by group: ``(node_idx, dst, w,
     seed, category, poi_id)``.  An edge ``edges(src, dst, w)`` is a row of
     its source with ``dst``; a seed ``seeds(node_idx, category, poi_id)``
-    is a ``seed`` row; every ``nodes(node_idx)`` row gets a bare row, so a
-    node with neither still names its group.  Unused fields hold -1, 0.0,
-    false, NULL and 0, never NULL numbers, which pandas would widen to
-    float.  The ``carry`` columns of ``nodes`` (the path queries carry
-    lon, lat) follow on the bare rows and are NULL on the others."""
+    is a ``seed`` row (``seeds`` None adds none: the route builds its one
+    seed on the driver); every ``nodes(node_idx)`` row gets a bare row, so
+    a node with neither still names its group.  Unused fields hold -1,
+    0.0, false, NULL and 0, never NULL numbers, which pandas would widen
+    to float.  The ``carry`` columns of ``nodes`` (the path queries carry
+    lon, lat, snap_m) follow on the bare rows and are NULL on the
+    others."""
     nulls = [F.lit(None).cast(nodes.schema[c].dataType).alias(c) for c in carry]
-    return (
-        edges.select(
-            F.col("src").cast("int").alias("node_idx"),
-            F.col("dst").cast("int").alias("dst"),
-            F.col("w").cast("double").alias("w"),
-            F.lit(False).alias("seed"),
-            F.lit(None).cast("string").alias("category"),
-            F.lit(0).cast("bigint").alias("poi_id"),
-            *nulls,
-        )
-        .unionByName(
+    rows = edges.select(
+        F.col("src").cast("int").alias("node_idx"),
+        F.col("dst").cast("int").alias("dst"),
+        F.col("w").cast("double").alias("w"),
+        F.lit(False).alias("seed"),
+        F.lit(None).cast("string").alias("category"),
+        F.lit(0).cast("bigint").alias("poi_id"),
+        *nulls,
+    )
+    if seeds is not None:
+        rows = rows.unionByName(
             seeds.select(
                 F.col("node_idx").cast("int").alias("node_idx"),
                 F.lit(-1).alias("dst"),
@@ -131,16 +133,15 @@ def graph_rows(edges: DataFrame, seeds: DataFrame, nodes: DataFrame, *carry: str
                 *nulls,
             )
         )
-        .unionByName(
-            nodes.select(
-                F.col("node_idx").cast("int").alias("node_idx"),
-                F.lit(-1).alias("dst"),
-                F.lit(0.0).alias("w"),
-                F.lit(False).alias("seed"),
-                F.lit(None).cast("string").alias("category"),
-                F.lit(0).cast("bigint").alias("poi_id"),
-                *carry,
-            )
+    return rows.unionByName(
+        nodes.select(
+            F.col("node_idx").cast("int").alias("node_idx"),
+            F.lit(-1).alias("dst"),
+            F.lit(0.0).alias("w"),
+            F.lit(False).alias("seed"),
+            F.lit(None).cast("string").alias("category"),
+            F.lit(0).cast("bigint").alias("poi_id"),
+            *carry,
         )
     )
 

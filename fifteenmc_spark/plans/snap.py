@@ -166,16 +166,29 @@ def snap_single_point(
     evaluated on the 256 equirectangular-nearest candidates."""
     approx = geo.equirectangular_m2(F.col("lon"), F.col("lat"), F.lit(lon), F.lit(lat))
     cand = nodes.select("node_idx", "lon", "lat", approx.alias("a2")).orderBy("a2", "node_idx").limit(256)
-    exact = cand.select(
-        "node_idx",
-        geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(lon), F.lit(lat), geo.R_QUERY_M).alias("dist_m"),
-    ).orderBy("dist_m", "node_idx")
+    exact = cand.select("node_idx", snap_m(lon, lat).alias("dist_m")).orderBy("dist_m", "node_idx")
     row = exact.first()
     if row is None:
         return None
     if max_snap_m is not None and row["dist_m"] > max_snap_m:
         return None
     return int(row["node_idx"]), float(row["dist_m"])
+
+
+def snap_m(lon: float, lat: float) -> Column:
+    """J4's distance from a row's (lon, lat) to the query point: the exact
+    haversine at R=6371000 that snap_single_point ranks by."""
+    return geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(lon), F.lit(lat), geo.R_QUERY_M)
+
+
+def nearest_node(rows, max_snap_m: float) -> int | None:
+    """J4 on the driver over collected rows carrying ``snap_m`` (NaN on rows
+    that are not nodes): the node_idx of the minimum (snap_m, node_idx)
+    within ``max_snap_m``, the node snap_single_point picks, or None."""
+    near = rows[rows["snap_m"] <= max_snap_m]
+    if near.empty:
+        return None
+    return int(min(zip(near["snap_m"].tolist(), near["node_idx"].tolist()))[1])
 
 
 # WGS84 polar radius — the SMALLEST earth radius any engine path uses, so a

@@ -421,15 +421,16 @@ def test_point_to_point_path(fx):
 
 
 def test_point_to_point_path_jobs(spark, fx):
-    # two snaps and the one disc read: the solve, walk and re-cost run on
-    # the driver, and the route collects as a local relation.  The disc
-    # read is its broadcast, its result stage and one 1-task job per
-    # cached fixture table it scans (none on parquet tables)
+    # the target's snap and the one disc read, which also snaps the start:
+    # the solve, walk and re-cost run on the driver, and the route
+    # collects as a local relation.  The disc read is its broadcast, its
+    # result stage and one 1-task job per cached fixture table it scans
+    # (none on parquet tables)
     from .test_layout import _jobs_started
 
     n_jobs, path = _jobs_started(spark, lambda: _route(fx, 30, 350).collect())
     assert len(path) > 1
-    assert n_jobs <= 6, n_jobs
+    assert n_jobs <= 4, n_jobs
 
 
 def test_path_to_nearest_poi(fx, reach_ctx):
@@ -475,10 +476,10 @@ def _nearest_poi_path(fx, reach_ctx, node: int, category: str, limit_m: float = 
 
 def test_path_reads_only_its_disc(fx, reach_ctx, monkeypatch):
     # the driver receives the disc slice, never the whole graph: the
-    # request collects the snap's one row and then ONE Arrow frame that
-    # holds exactly the nodes within max_snap_m + limit_m (+1 m) of the
-    # query point, the edges with both ends among them and the
-    # category's seeds on them
+    # request collects no snap row, only ONE Arrow frame that holds
+    # exactly the nodes within max_snap_m + limit_m (+1 m) of the query
+    # point, the edges with both ends among them and the category's seeds
+    # on them; the snap comes from that frame
     from pyspark.sql.classic.dataframe import DataFrame
 
     collected, arrow = [], []
@@ -498,7 +499,7 @@ def test_path_reads_only_its_disc(fx, reach_ctx, monkeypatch):
     monkeypatch.setattr(DataFrame, "toPandas", spy_pandas)
     _nearest_poi_path(fx, reach_ctx, 150, "supermarket", limit_m=300.0)
     monkeypatch.undo()
-    assert collected == [1] and len(arrow) == 1, (collected, len(arrow))
+    assert collected == [] and len(arrow) == 1, (collected, len(arrow))
     g, e = fx["gnodes_pdf"], fx["gedges_pdf"]
     q = g.iloc[150]
     d = gf.haversine_np(g["lon"].to_numpy(float), g["lat"].to_numpy(float), float(q["lon"]), float(q["lat"]))
@@ -657,39 +658,182 @@ def test_disc_paths_equal_whole_graph_solve(spark, fx, reach_ctx):
 
 
 def test_path_to_nearest_poi_warm_jobs(spark, fx, reach_ctx):
-    # a warm path request: the snap, then the disc read with its one
-    # broadcast (and, as in test_point_to_point_path_jobs, one job per
-    # cached fixture table); the solve, walk and re-cost run on the
-    # driver, and the answer collects as a local relation
+    # a warm path request is its disc read with its one broadcast (and,
+    # as in test_point_to_point_path_jobs, one job per cached fixture
+    # table); the snap, solve, walk and re-cost run on the driver, and
+    # the answer collects as a local relation
     from .test_layout import _jobs_started
 
     _nearest_poi_path(fx, reach_ctx, 150, "supermarket").collect()
     n_jobs, path = _jobs_started(spark, lambda: _nearest_poi_path(fx, reach_ctx, 150, "supermarket").collect())
     assert len(path) > 1
-    assert n_jobs <= 5, n_jobs
+    assert n_jobs <= 4, n_jobs
 
 
-def test_path_answers_collect_without_a_job(spark, fx, reach_ctx):
-    # every path answer, empty or not, is a local relation: after the
-    # snap and the disc read, collecting it starts no Spark job.  A
+@pytest.fixture(scope="module")
+def g7_layouts(fx, reach_ctx, tmp_path_factory):
+    """The lattice's node and reach tables written through the z-order
+    layout over the lattice's extent."""
+    from fifteenmc_spark.plans import layout
+
+    g = fx["gnodes_pdf"]
+    bbox = (float(g["lon"].min()), float(g["lat"].min()), float(g["lon"].max()), float(g["lat"].max()))
+    d = tmp_path_factory.mktemp("g7_layouts")
+    layout.write_zorder_layout(fx["gnodes"], str(d / "nodes"), bbox)
+    reach.write_reach_zordered(reach_ctx["reach"], fx["gnodes"], str(d / "reach"), bbox)
+    return {"nodes": str(d / "nodes"), "reach": str(d / "reach"), "bbox": bbox}
+
+
+def test_path_answers_collect_without_a_job(spark, fx, reach_ctx, g7_layouts):
+    # every G7 and path answer, empty or not, is a local relation: after
+    # the request's own collects, collecting it starts no Spark job.  A
     # pickled or pandas-fallback frame would start one per action.
     from .test_layout import _jobs_started
 
     q = fx["gnodes_pdf"].iloc[150]
+    lon, lat = float(q["lon"]), float(q["lat"])
     lonely = next(i for i in range(len(fx["gnodes_pdf"])) if i not in set(reach_ctx["snapped"]["node_idx"]))
+
+    def g7_scan(lon, lat, **kw):
+        return query.point_reachability(
+            reach_ctx["reach"], fx["gnodes"], lon, lat, max_snap_m=query.MAX_SNAP_M_DEFAULT, **kw
+        )
+
+    def g7_zorder(lon, lat, **kw):
+        return query.point_reachability_zordered(
+            spark, None, g7_layouts["nodes"], g7_layouts["bbox"], lon, lat,
+            reach_layout_path=g7_layouts["reach"], **kw,
+        )
+
     answers = {
         "path": _nearest_poi_path(fx, reach_ctx, 150, "supermarket"),
         "no POI within limit_m": _nearest_poi_path(fx, reach_ctx, lonely, "supermarket", limit_m=1.0),
         "no snap": query.path_to_nearest_poi(
-            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], float(q["lon"]) + 1.0, float(q["lat"]), "supermarket"
+            fx["gnodes"], fx["gedges"], reach_ctx["pois_sdf"], lon + 1.0, lat, "supermarket"
         ),
         "route": _route(fx, 30, 350),
         "route beyond limit_m": _route(fx, 0, 399, limit_m=100.0),
     }
+    for form, g7 in (("g7_scan", g7_scan), ("g7_zorder", g7_zorder)):
+        answers[form] = g7(lon, lat)
+        answers[f"{form} no snap"] = g7(lon + 1.0, lat)
+        answers[f"{form} one category"] = g7(lon, lat, categories=["supermarket"])
+    n_rows = {}
     for name, df in answers.items():
         n_jobs, rows = _jobs_started(spark, df.collect)
         assert n_jobs == 0, (name, n_jobs)
-        assert (len(rows) > 1) == (name in ("path", "route")), (name, len(rows))
+        n_rows[name] = len(rows)
+    assert {k for k, n in n_rows.items() if n > 1} == {"path", "route", "g7_scan", "g7_zorder"}, n_rows
+    assert n_rows["g7_scan one category"] == n_rows["g7_zorder one category"] == 1, n_rows
+    assert n_rows["g7_scan no snap"] == n_rows["g7_zorder no snap"] == 0, n_rows
+
+
+# ---------------------------------------------------------------------------
+# J4 and P6 on the driver: a tie, the snap radius's edge, a float64 radius
+# ---------------------------------------------------------------------------
+# a query point on the meridian between two nodes 2**-10 degrees either
+# side of it: every coordinate and difference is exact in binary, so both
+# nodes lie at bit-identical haversine distances.  Node 1 (east) is
+# stored first, node 0 (west) second; node 2 holds the park.
+_TWIN_LON, _TWIN_LAT, _TWIN_D = 18.5, 54.375, 2.0**-10
+
+
+@pytest.fixture(scope="module")
+def twin(spark, tmp_path_factory):
+    from fifteenmc_spark.plans import layout
+
+    nodes = spark.createDataFrame(
+        [(1, _TWIN_LON + _TWIN_D, _TWIN_LAT), (0, _TWIN_LON - _TWIN_D, _TWIN_LAT),
+         (2, _TWIN_LON + 3 * _TWIN_D, _TWIN_LAT)],
+        "node_idx INT, lon DOUBLE, lat DOUBLE",
+    )
+    edges = spark.createDataFrame(
+        [(0, 1, 126.0), (1, 0, 126.0), (1, 2, 126.0), (2, 1, 126.0)], "src INT, dst INT, w FLOAT"
+    )
+    pois = spark.createDataFrame([(9, "park", 2)], "poi_id BIGINT, category STRING, node_idx INT")
+    # float32 distances, as the gold reach table stores them
+    reach_rows = spark.createDataFrame(
+        [(n, "park", float(np.float32(d)), float(np.float32(d / geo.WALK_SPEED_MPS)), 9)
+         for n, d in ((0, 252.3), (1, 126.1), (2, 0.0))]
+        + [(0, "cafe", float(np.float32(80.7)), 72.6, 5), (1, "cafe", float(np.float32(85.1)), 76.6, 5)],
+        "node_idx INT, category STRING, dist_m FLOAT, time_s FLOAT, poi_id BIGINT",
+    )
+    bbox = (_TWIN_LON - 0.01, _TWIN_LAT - 0.01, _TWIN_LON + 0.01, _TWIN_LAT + 0.01)
+    d = tmp_path_factory.mktemp("twin")
+    layout.write_zorder_layout(nodes, str(d / "nodes"), bbox)
+    reach.write_reach_zordered(reach_rows, nodes, str(d / "reach"), bbox)
+    return {"nodes": nodes, "edges": edges, "pois": pois, "reach": reach_rows, "bbox": bbox,
+            "nodes_path": str(d / "nodes"), "reach_path": str(d / "reach")}
+
+
+def _twin_answers(spark, twin, lon, lat, max_snap_m=query.MAX_SNAP_M_DEFAULT, radius_m=1000.0, path=True):
+    """G7 (full scan, z-ordered) and, with ``path``, path-to-nearest-POI at
+    one point."""
+    kw = {"radius_m": radius_m, "max_snap_m": max_snap_m}
+    out = {
+        "g7_scan": query.point_reachability(twin["reach"], twin["nodes"], lon, lat, **kw).toPandas(),
+        "g7_zorder": query.point_reachability_zordered(
+            spark, None, twin["nodes_path"], twin["bbox"], lon, lat, reach_layout_path=twin["reach_path"], **kw
+        ).toPandas(),
+    }
+    if path:
+        out["path"] = query.path_to_nearest_poi(
+            twin["nodes"], twin["edges"], twin["pois"], lon, lat, "park", max_snap_m=max_snap_m
+        ).toPandas()
+    return out
+
+
+def _g7_oracle(twin, node_idx, radius_m):
+    """The G7 answer at a known node by the Spark filter and sort."""
+    return (
+        twin["reach"]
+        .where((F.col("node_idx") == node_idx) & F.col("dist_m").isNotNull() & (F.col("dist_m") <= F.lit(radius_m)))
+        .select("category", "dist_m", "time_s", "poi_id")
+        .orderBy("dist_m", "category")
+        .toPandas()
+    )
+
+
+def test_equidistant_point_snaps_to_the_smaller_node_idx(spark, twin):
+    # J4's tie-break is the minimum (distance, node_idx), as
+    # snap_single_point orders it, in every G7 and path form
+    dists = [r[0] for r in twin["nodes"].where(F.col("node_idx") < 2)
+             .select(snap.snap_m(_TWIN_LON, _TWIN_LAT)).collect()]
+    assert dists[0] == dists[1] > 0.0  # a true tie
+    assert snap.snap_single_point(twin["nodes"], _TWIN_LON, _TWIN_LAT, max_snap_m=300.0)[0] == 0
+    got = _twin_answers(spark, twin, _TWIN_LON, _TWIN_LAT)
+    want = _g7_oracle(twin, 0, 1000.0)
+    assert want["poi_id"].tolist() == [5, 9]  # node 0's rows, not node 1's
+    for form in ("g7_scan", "g7_zorder"):
+        pd.testing.assert_frame_equal(got[form], want, check_exact=True, obj=form)
+    assert got["path"]["node_idx"].tolist() == [0, 1, 2]
+
+
+def test_node_at_exactly_max_snap_m_is_kept(spark, twin):
+    # the snap keeps a node whose distance equals max_snap_m (<=), and a
+    # radius one ulp shorter snaps nothing
+    lon, lat = _TWIN_LON - 5 * _TWIN_D, _TWIN_LAT  # nearest: node 0, ~250 m west
+    edge = twin["nodes"].where(F.col("node_idx") == 0).select(snap.snap_m(lon, lat)).first()[0]
+    got = _twin_answers(spark, twin, lon, lat, max_snap_m=edge)
+    pd.testing.assert_frame_equal(got["g7_scan"], _g7_oracle(twin, 0, 1000.0), check_exact=True)
+    pd.testing.assert_frame_equal(got["g7_zorder"], got["g7_scan"], check_exact=True)
+    assert got["path"]["node_idx"].tolist() == [0, 1, 2]
+    short = _twin_answers(spark, twin, lon, lat, max_snap_m=float(np.nextafter(edge, 0.0)))
+    assert all(df.empty for df in short.values()), {k: len(v) for k, v in short.items()}
+
+
+def test_g7_radius_compares_in_float64(spark, twin):
+    # radius_m just under a float32 dist_m is not a float32 value: Spark
+    # widens the FLOAT dist_m and drops the row, a float32 comparison
+    # would round the radius up onto it and keep it
+    d = float(np.float32(126.1))
+    for radius in (float(np.nextafter(d, 0.0)), d):
+        want = _g7_oracle(twin, 1, radius)
+        assert len(want) == (2 if radius == d else 1)
+        lon = _TWIN_LON + _TWIN_D  # on node 1
+        got = _twin_answers(spark, twin, lon, _TWIN_LAT, radius_m=radius, path=False)
+        for form in got:
+            pd.testing.assert_frame_equal(got[form], want, check_exact=True, obj=f"{form} at {radius!r}")
 
 
 def test_compute_reach_refuses_buffer_narrower_than_limit(spark, fx, reach_ctx):
