@@ -31,9 +31,12 @@ Cache discipline — what is allowed in here:
 from __future__ import annotations
 
 import os
+import threading
 from urllib.parse import urlsplit
 
 _SESSION_INDEX: dict = {}
+_BUILD_LOCKS: dict = {}  # one lock per key, held while that key builds
+_LOCK = threading.Lock()  # guards both dicts; never held during a build
 _MISSING = object()
 
 
@@ -61,14 +64,29 @@ def session_cached(spark, sf_dir, key: str, build):
     included, hence the sentinel).  Entries from previous sessions in the
     same process are dropped on insert (their checkpoint RDDs died with
     the session); entries for OTHER sf_dirs in the live session are kept
-    — the driver and tests legitimately interleave scale factors."""
+    — the driver and tests legitimately interleave scale factors.
+
+    Concurrent callers of one cold key build it once: the first builds
+    under the key's own lock, the others wait on that lock and then read
+    its entry.  Only the key's lock is held during a build, so a feed
+    built from another feed builds its inner key as usual.  A build that
+    raises caches nothing."""
     app = spark.sparkContext.applicationId
     k = (app, _norm_dir(sf_dir), key)
     val = _SESSION_INDEX.get(k, _MISSING)
-    if val is _MISSING:
-        for dead in [x for x in _SESSION_INDEX if x[0] != app]:
-            del _SESSION_INDEX[dead]
-        _SESSION_INDEX[k] = val = build()
+    if val is not _MISSING:
+        return val
+    with _LOCK:
+        key_lock = _BUILD_LOCKS.setdefault(k, threading.Lock())
+    with key_lock:
+        val = _SESSION_INDEX.get(k, _MISSING)
+        if val is _MISSING:
+            val = build()
+            with _LOCK:
+                for table in (_SESSION_INDEX, _BUILD_LOCKS):
+                    for dead in [x for x in table if x[0] != app]:
+                        del table[dead]
+                _SESSION_INDEX[k] = val
     return val
 
 
@@ -80,9 +98,10 @@ def invalidate(sf_dir: str | None = None) -> int:
     the stale checkpointed artifact — io.write_parquet does so
     automatically when its target sits inside a directory that has
     cached entries."""
-    doomed = [
-        k for k in _SESSION_INDEX if sf_dir is None or k[1] == _norm_dir(sf_dir)
-    ]
-    for k in doomed:
-        del _SESSION_INDEX[k]
+    with _LOCK:
+        doomed = [
+            k for k in _SESSION_INDEX if sf_dir is None or k[1] == _norm_dir(sf_dir)
+        ]
+        for k in doomed:
+            del _SESSION_INDEX[k]
     return len(doomed)

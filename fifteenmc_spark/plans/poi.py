@@ -123,18 +123,12 @@ def write_pois_zordered(
     out_dir: str,
     layout_bbox: tuple[float, float, float, float],
 ) -> None:
-    """Write the classified POI table through the Z-order layout (r14
-    verdict item 6): POIs carry their own (lon, lat), so unlike the reach
-    table no keying join is needed — one write_zorder_layout pass puts
-    them under the SAME quadtree geometry as the node and reach tables,
-    and the path query's seed read (path_to_nearest_poi_zordered) prunes
-    its POI side from the identical disc-box computation the snap and
-    reach halves already share.  The reference keeps pois.csv whole and
-    re-filters it per query (snap_poi_to_nodes.py writes one flat CSV);
-    the Spark answer is write-once spatial clustering, category kept as a
-    plain column (the residual category filter runs on the pruned read —
-    a category partition would multiply the file count by 20 and defeat
-    the spatial clustering)."""
+    """Write the classified POI table through the Z-order layout: POIs
+    carry their own (lon, lat), so one write_zorder_layout pass puts them
+    under the same quadtree geometry as the node and reach layouts.
+    Nothing in the package reads this layout: the path query limits its
+    seeds to the disc nodes by a semi-join on the gold POI table.  It is
+    kept because the benchmark's town build writes it."""
     from . import layout as layout_mod
 
     layout_mod.write_zorder_layout(pois, out_dir, layout_bbox)

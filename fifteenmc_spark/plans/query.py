@@ -10,14 +10,16 @@ Point queries consume the precomputed `reach` table — the
 materialized-view design the reference pins (`poi_query.py:97-99`): a
 point query never touches the graph.  The full-scan form snaps (J4,
 snap.snap_single_point) and collects the snapped node's reach rows; the
-z-ordered form reads the node and reach rows within ``max_snap_m`` of the
-query point from their layouts in ONE collect and snaps on the driver
-(snap.nearest_node).  P5/P6 and the O2 sort run on the driver over those
-few rows.  Both path queries read the graph within ``max_snap_m +
-limit_m`` of their start point in one Arrow collect (_read_disc), snap
-the start from it, and reach.nearest_seed_chain solves and walks it
-there.  The disc is bounded by geometry, not by graph size; the trade is
-that concurrent requests finish under the driver's one GIL.
+z-ordered form collects the node and reach rows of one snap.disc of
+radius ``max_snap_m`` from their layouts (snap.read_zordered_disc) and
+snaps on the driver (snap.nearest_node).  P5/P6 and the O2 sort run on
+the driver over those few rows.  Both path queries collect the graph in
+the snap.disc of radius ``max_snap_m + limit_m`` around their start point
+in one Arrow collect (_read_disc), snap the start from it, and
+reach.nearest_seed_chain solves and walks it there.  Each request kind
+has one code path, and every spatial read in it is snap.disc.  The disc
+is bounded by geometry, not by graph size; the trade is that concurrent
+requests finish under the driver's one GIL.
 """
 
 from __future__ import annotations
@@ -57,20 +59,13 @@ def point_reachability(
     Output: category, dist_m, time_s, poi_id, as a local relation.  Empty
     result if the point cannot be snapped."""
     snapped = snap_mod.snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
-    return _reach_at_snap(reach, snapped, radius_m, categories)
-
-
-def _reach_at_snap(reach, snapped, radius_m, categories):
-    """The post-snap half of G7 over a reach table, shared by the
-    full-scan form and the z-ordered form without a reach layout: the
-    snapped node's reach rows come to the driver in one unsorted collect
-    (no orderBy, whose range-bound sampling costs a job of its own) and
-    _reach_answer finishes them."""
     if snapped is None:
         rows = pd.DataFrame(columns=_REACH_COLS)
     else:
-        # P6's NULL test stays in Spark: a densified table's unreached rows
-        # carry a NULL poi_id, which would widen the collected column to float
+        # one unsorted collect (an orderBy's range-bound sampling would cost
+        # a job of its own).  P6's NULL test stays in Spark: a densified
+        # table's unreached rows carry a NULL poi_id, which would widen the
+        # collected column to float
         mine = (F.col("node_idx") == F.lit(snapped[0])) & F.col("dist_m").isNotNull()
         rows = reach.where(mine).select(*_REACH_COLS).toPandas()
     return _reach_answer(reach.sparkSession, rows, reach.select(*_REACH_COLS).schema, radius_m, categories)
@@ -100,25 +95,16 @@ def point_reachability_zordered(
     max_snap_m: float = MAX_SNAP_M_DEFAULT,
     reach_layout_path: str | None = None,
 ) -> DataFrame:
-    """G7 served end-to-end from the z-ordered geo layout: the snap (J4)
-    reads only the quadtree cells intersecting the max_snap_m disc around
-    the query point (partition-pruned read, snap.read_zordered_disc).
-    Same rows as the full-scan form by construction; this closes the loop
-    plans/layout.py promises — the reference re-runs ``osmium extract``
-    over the planet file per bbox, the Spark answer writes the node table
-    once (write_zorder_layout) and serves every later point query from
-    the pruned read.
-
-    With ``reach_layout_path`` (a reach.write_reach_zordered table on the
-    SAME layout_bbox) the reach side prunes too: the snapped node lies
-    within max_snap_m of the query point, so its reach rows live inside
-    the same disc.  The node rows and the reach rows within max_snap_m,
-    each with its ``snap_m`` (snap.snap_m, the distance
-    snap_single_point ranks by), come to the driver as ONE collect; the
-    snap (snap.nearest_node) and P5/P6/O2 run there, and the full reach
-    table is never scanned.  ``reach`` may then be None (it is ignored).
-    Without it the snap is snap.snap_single_point_zordered and the reach
-    half is point_reachability's.
+    """G7 served from z-order layouts: ``nodes_layout_path`` (a
+    layout.write_zorder_layout node table) and ``reach_layout_path`` (a
+    reach.write_reach_zordered table on the SAME layout_bbox).  The
+    snapped node lies within ``max_snap_m`` of the query point, so its
+    reach rows lie in the same disc: the node and reach rows of
+    snap.read_zordered_disc come to the driver as ONE collect, the snap
+    (snap.nearest_node) and P5/P6/O2 run there, and neither full table is
+    scanned.  Same rows as point_reachability by construction.
+    ``reach`` is accepted and ignored; without ``reach_layout_path`` this
+    raises ValueError.
 
     Each layout path is listed once per Spark session, on its first
     read (layout.read_zorder_bbox), and every later request prunes its
@@ -127,24 +113,15 @@ def point_reachability_zordered(
     rewritten outside layout.write_zorder_layout must be evicted with
     ``session_index.invalidate(path)``."""
     if reach_layout_path is None:
-        if reach is None:
-            raise ValueError("point_reachability_zordered needs reach or reach_layout_path")
-        snapped = snap_mod.snap_single_point_zordered(
-            spark, nodes_layout_path, layout_bbox, lon, lat, max_snap_m=max_snap_m
-        )
-        return _reach_at_snap(reach, snapped, radius_m, categories)
-
-    def near(path):
-        disc = snap_mod.read_zordered_disc(spark, path, layout_bbox, lon, lat, max_snap_m)
-        disc = disc.withColumn("snap_m", snap_mod.snap_m(lon, lat))
-        return disc.where(F.col("snap_m") <= F.lit(float(max_snap_m)))
+        raise ValueError("point_reachability_zordered needs reach_layout_path")
 
     # node rows carry snap_m and a 0 poi_id (a NULL would widen the
     # collected poi_id to float); reach rows carry snap_m NULL
-    reach_rows = near(reach_layout_path).where(F.col("dist_m").isNotNull()).select("node_idx", *_REACH_COLS)
+    node_disc = snap_mod.read_zordered_disc(spark, nodes_layout_path, layout_bbox, lon, lat, max_snap_m)
+    reach_disc = snap_mod.read_zordered_disc(spark, reach_layout_path, layout_bbox, lon, lat, max_snap_m)
+    reach_rows = reach_disc.where(F.col("dist_m").isNotNull()).select("node_idx", *_REACH_COLS)
     rows = (
-        near(nodes_layout_path)
-        .select("node_idx", "snap_m", F.lit(0).alias("poi_id"))
+        node_disc.select("node_idx", "snap_m", F.lit(0).alias("poi_id"))
         .unionByName(reach_rows, allowMissingColumns=True)
         .toPandas()
     )
@@ -198,7 +175,8 @@ def _read_disc(nodes, edges, seeds, center, limit_m, max_snap_m):
 
     The disc loses nothing.  Every node within ``max_snap_m`` of
     ``center`` lies in it, so the snap sees every candidate.  Edges are
-    symmetric and weigh their haversine length, so a node on a
+    symmetric and weigh their haversine length at R_EDGE_WEIGHTS_M, above
+    the disc's R=6371000, so a node on a
     seed-to-tip path no longer than ``limit_m`` lies within ``limit_m``
     great-circle distance of the path's query-side end (the tip for
     path-to-nearest-POI, the seed for the route), and that node lies
@@ -209,10 +187,7 @@ def _read_disc(nodes, edges, seeds, center, limit_m, max_snap_m):
     disc slice is bounded by geometry, not graph size."""
     lon, lat = center
     radius_m = float(max_snap_m) + float(limit_m) + _DISC_PAD_M
-    disc = nodes.select("node_idx", "lon", "lat", snap_mod.snap_m(lon, lat).alias("snap_m")).where(
-        geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(float(lon)), F.lit(float(lat)), geo.R_EDGE_WEIGHTS_M)
-        <= F.lit(radius_m)
-    )
+    disc = snap_mod.disc(nodes.select("node_idx", "lon", "lat"), lon, lat, radius_m)
     # the disc's node ids are a small table: broadcast, the edges never
     # shuffle.  Every semi-join takes the same unrenamed, unfiltered keys,
     # so Spark builds the broadcast once; an unsnapped seed's node_idx -1
@@ -311,52 +286,3 @@ def path_to_nearest_poi(
     steps["poi_id"] = np.full(len(steps), poi_id, dtype=np.int64)
     steps["category"] = pd.Series([category] * len(steps), dtype=object)
     return local_frame(nodes.sparkSession, steps, _PATH_SCHEMA + ", poi_id BIGINT, category STRING")
-
-
-def path_to_nearest_poi_zordered(
-    spark,
-    nodes: DataFrame,
-    edges: DataFrame,
-    poi_layout_path: str,
-    layout_bbox: tuple[float, float, float, float],
-    lon: float,
-    lat: float,
-    category: str,
-    limit_m: float = reach_mod.LIMIT_M_DEFAULT,
-    max_snap_m: float = MAX_SNAP_M_DEFAULT,
-    poi_snap_m: float = MAX_SNAP_M_DEFAULT,
-) -> DataFrame:
-    """§3.3 with the POI side served from the Z-order layout (r14 verdict
-    item 6 — the last full-scan in the point-query family): seeds are read
-    only from the quadtree cells under the disc of radius
-
-        max_snap_m + limit_m + poi_snap_m
-
-    around the query point.  Identical output to path_to_nearest_poi by
-    containment: the winning POI's seed node settles the start node within
-    limit_m of NETWORK distance, network distance >= great-circle
-    distance, the start node lies within max_snap_m of the query point,
-    and the POI's own coordinates lie within poi_snap_m of its seed node
-    (the snap radius the POI table was built with) — so any POI outside
-    the disc either cannot reach the start node inside the limit_m bound
-    or was never a valid seed, and pruning it cannot change the winner or
-    the path.  ``poi_snap_m`` must be >= the snap radius used when the
-    POI table's node_idx was assigned."""
-    pruned = snap_mod.read_zordered_disc(
-        spark,
-        poi_layout_path,
-        layout_bbox,
-        lon,
-        lat,
-        max_snap_m + limit_m + poi_snap_m,
-    )
-    return path_to_nearest_poi(
-        nodes,
-        edges,
-        pruned,
-        lon,
-        lat,
-        category,
-        limit_m=limit_m,
-        max_snap_m=max_snap_m,
-    )

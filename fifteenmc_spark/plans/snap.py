@@ -1,6 +1,13 @@
 """Spatial kNN snap join (SURVEY.md §2.3 J2-J4): each point → nearest
 graph node, with snap distance.
 
+Two reads near one query point (J4).  ``snap_single_point`` is the
+full-scan snap, the only form without a distance bound (the reference's
+``poi_query.py`` snap has none).  ``disc`` is every bounded request's
+read: the rows within a radius, with their ``snap_m``, from a gold table
+or, through ``read_zordered_disc``, from a z-order layout; the driver
+snaps over the collected rows with ``nearest_node``.
+
 The reference builds a cKDTree over all nodes in EPSG:3857 and queries k=1
 per POI (`snap_poi_to_nodes.py:81-86,176-188`) — a single-machine spatial
 index.  Spark has no native kNN join, so the engine uses the bucketed form:
@@ -181,6 +188,15 @@ def snap_m(lon: float, lat: float) -> Column:
     return geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(lon), F.lit(lat), geo.R_QUERY_M)
 
 
+def disc(rows: DataFrame, lon: float, lat: float, radius_m: float) -> DataFrame:
+    """The rows whose snap_m to (lon, lat) is at most ``radius_m``, with
+    ``snap_m`` as a column: the one spatial read of every bounded point
+    request, over a gold table here or a z-order layout through
+    read_zordered_disc."""
+    near = rows.withColumn("snap_m", snap_m(lon, lat))
+    return near.where(F.col("snap_m") <= F.lit(float(radius_m)))
+
+
 def nearest_node(rows, max_snap_m: float) -> int | None:
     """J4 on the driver over collected rows carrying ``snap_m`` (NaN on rows
     that are not nodes): the node_idx of the minimum (snap_m, node_idx)
@@ -218,8 +234,8 @@ def snap_disc_boxes(
       exactly lon = +180.0 — a legal WGS84 longitude the raw unclamped
       box used to include.
 
-    Shared by the z-ordered snap and the z-ordered reach read so the two
-    prune with identical geometry."""
+    read_zordered_disc prunes every layout with them, so the node and
+    reach halves of a request read identical geometry."""
     import math
 
     r = max_snap_m / _R_MIN_M  # cap angular radius, radians
@@ -259,50 +275,18 @@ def read_zordered_disc(
     layout_bbox: tuple[float, float, float, float],
     lon: float,
     lat: float,
-    max_snap_m: float,
+    radius_m: float,
 ):
-    """Partition-pruned read of every row whose (lon, lat) could lie
-    within ``max_snap_m`` of the query point — the union of the disc's
-    pruning boxes over a write_zorder_layout table."""
+    """disc over a write_zorder_layout table: the union of the disc's
+    pruning boxes (snap_disc_boxes, split at lon = ±180 and full-width
+    around a pole) read partition-pruned from the layout's cached listing
+    (layout.read_zorder_bbox), then the exact disc filter.  Every row
+    within ``radius_m`` lies in a box, so the answer equals ``disc`` over
+    the whole table."""
     from . import layout as layout_mod
 
     out = None
-    for box in snap_disc_boxes(lon, lat, max_snap_m):
+    for box in snap_disc_boxes(lon, lat, radius_m):
         part = layout_mod.read_zorder_bbox(spark, layout_path, box, layout_bbox)
         out = part if out is None else out.unionByName(part)
-    return out
-
-
-def snap_single_point_zordered(
-    spark,
-    layout_path: str,
-    layout_bbox: tuple[float, float, float, float],
-    lon: float,
-    lat: float,
-    max_snap_m: float = 300.0,
-) -> tuple[int, float] | None:
-    """J4 served from the z-ordered node layout (plans/layout.py): instead
-    of scanning the full node table per point query — the Spark shape of
-    the reference's per-bbox ``osmium extract`` re-run — read ONLY the
-    quadtree cells intersecting the max_snap_m disc around the query point
-    (pruned from the layout's once-per-session listing — see
-    layout.read_zorder_bbox), then run the exact snap on that
-    slice.  Identical contract to snap_single_point with max_snap_m set:
-    every node within max_snap_m of the point lies inside the pruned box
-    by construction (degree box derived with the smallest earth radius, so
-    it contains the haversine disc), and nodes beyond it can only lose the
-    TakeOrdered or fall to the max_snap_m gate — same winner, same None.
-
-    Antimeridian wrap (r13 ADVICE): a disc within max_snap_m of lon=±180
-    extends past the valid longitude range, and a single clamped box
-    would silently drop nodes on the other side of the dateline — the
-    pruned snap would miss a true nearest node the full scan finds.
-    snap_disc_boxes splits the pruning box into the two wrapped
-    longitude ranges (full-width at near-polar latitudes) and the pruned
-    reads are unioned, so the exact snap sees every candidate the disc
-    actually covers.
-
-    At 100 TB this is the difference between a point query touching a
-    handful of files and touching the planet table."""
-    nodes = read_zordered_disc(spark, layout_path, layout_bbox, lon, lat, max_snap_m)
-    return snap_single_point(nodes, lon, lat, max_snap_m=max_snap_m)
+    return disc(out, lon, lat, radius_m)

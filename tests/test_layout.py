@@ -270,24 +270,66 @@ def geo_layout(spark, tmp_path_factory):
     return {"gnodes": gnodes, "path": d, "bbox": gbox}
 
 
-def test_zordered_snap_equals_full_scan_snap(spark, geo_layout):
+# two node tables across lon = ±180 over the whole-longitude box: in
+# "seam" the nearest node to either seam probe lies across the dateline
+# (~33 m) from a same-side node (~89 m); in "shortlist" 300 same-side
+# nodes 100-900 m away outrank the wrapped winner in an equirectangular
+# shortlist that measured it ~360 degrees away
+WRAP_BOX = (-180.0, -1.0, 180.0, 1.0)
+_WRAP_TABLES = {
+    "seam": [(0, 179.9990, 0.0), (1, -179.9999, 0.0), (2, 0.0, 0.5), (3, -90.0, -0.5)],
+    "shortlist": [(0, -179.9999, 0.0)]
+    + [(1 + j, 179.990 - (j % 100) * 1e-5, -0.004 + (j // 100) * 0.004) for j in range(300)],
+}
+
+
+@pytest.fixture(scope="module")
+def wrap_layouts(spark, tmp_path_factory):
+    out = {}
+    for name, rows in _WRAP_TABLES.items():
+        nodes = spark.createDataFrame(rows, "node_idx int, lon double, lat double")
+        d = str(tmp_path_factory.mktemp("zorder_wrap") / name)
+        layout.write_zorder_layout(nodes, d, WRAP_BOX)
+        out[name] = {"gnodes": nodes, "path": d, "bbox": WRAP_BOX}
+    return out
+
+
+# case: (table, probes as (lon, lat, the node_idx the snap must find)).
+# The lattice probes sit ~13 m from a node ~100 m from its neighbours.
+_SNAP_CASES = {
+    "lattice": ("lattice", None),
+    "seam_east": ("seam", [(179.9998, 0.0, 1)]),
+    "seam_west": ("seam", [(-179.9998, 0.0, 1)]),
+    "shortlist": ("shortlist", [(179.9998, 0.0, 0)]),
+    "far": ("lattice", [(10.0, 50.0, None)]),  # no node within max_snap_m
+}
+
+
+@pytest.mark.parametrize("case", list(_SNAP_CASES))
+def test_disc_snap_equals_full_scan_snap(spark, request, case):
+    """J4 over the z-order layout's disc equals the full-scan snap: the
+    node snap.nearest_node picks from read_zordered_disc's rows, and its
+    snap_m, are snap_single_point's over the whole table, across the
+    dateline too (the disc's boxes split at lon = ±180), and None where
+    no node lies within max_snap_m."""
     from fifteenmc_spark.plans import snap
 
-    probes = [r for r in geo_layout["gnodes"].limit(200).collect()][::37]
-    assert probes
-    for r in probes:
-        lon, lat = float(r["lon"]) + 1e-4, float(r["lat"]) - 1e-4
-        full = snap.snap_single_point(geo_layout["gnodes"], lon, lat, max_snap_m=300.0)
-        pruned = snap.snap_single_point_zordered(
-            spark, geo_layout["path"], geo_layout["bbox"], lon, lat, max_snap_m=300.0
-        )
-        assert pruned == full, (lon, lat, pruned, full)
-    # the None contract survives pruning: a point farther than max_snap_m
-    # from every node returns None on both paths (10.0, 50.0 is far
-    # outside the lattice — the fixture test_snap_single_point's probe)
-    assert snap.snap_single_point_zordered(
-        spark, geo_layout["path"], geo_layout["bbox"], 10.0, 50.0, max_snap_m=300.0
-    ) is None
+    table, probes = _SNAP_CASES[case]
+    if table == "lattice":
+        src = request.getfixturevalue("geo_layout")
+    else:
+        src = request.getfixturevalue("wrap_layouts")[table]
+    if probes is None:
+        rows = src["gnodes"].limit(200).collect()[::37]
+        probes = [(float(r["lon"]) + 1e-4, float(r["lat"]) - 1e-4, int(r["node_idx"])) for r in rows]
+    for lon, lat, want in probes:
+        full = snap.snap_single_point(src["gnodes"], lon, lat, max_snap_m=300.0)
+        near = snap.read_zordered_disc(spark, src["path"], src["bbox"], lon, lat, 300.0).toPandas()
+        got = snap.nearest_node(near, 300.0)
+        if got is not None:
+            got = (got, float(near.loc[near["node_idx"] == got, "snap_m"].iloc[0]))
+        assert got == full, (lon, lat, got, full)
+        assert (full and full[0]) == want, (lon, lat, full, want)
 
 
 def test_zordered_snap_prunes_files(spark, geo_layout):
@@ -318,66 +360,6 @@ def test_zordered_snap_prunes_files(spark, geo_layout):
     assert len(pruned_files) <= len(full_files) // 2, (
         f"{len(pruned_files)}/{len(full_files)} files for a 60 m disc"
     )
-
-
-def test_zordered_point_reachability_equals_full_scan(spark, geo_layout):
-    """G7 end-to-end from the layout: same rows as the full-scan form.
-    The reach table is node-keyed (not spatial), so a fabricated reach
-    exercises the exact post-snap path without the Dijkstra build."""
-    from fifteenmc_spark.plans import query as query_mod
-
-    reach = spark.createDataFrame(
-        [
-            (int(r["node_idx"]), cat, float(50 + 10 * k), float(5 + k), 1000 + k)
-            for k, r in enumerate(geo_layout["gnodes"].limit(50).collect())
-            for cat in ("shop", "park")
-        ],
-        "node_idx int, category string, dist_m double, time_s double, poi_id long",
-    )
-    r = geo_layout["gnodes"].limit(1).collect()[0]
-    lon, lat = float(r["lon"]) + 1e-4, float(r["lat"]) + 1e-4
-    full = query_mod.point_reachability(
-        reach, geo_layout["gnodes"], lon, lat, radius_m=1000.0
-    )
-    pruned = query_mod.point_reachability_zordered(
-        spark, reach, geo_layout["path"], geo_layout["bbox"], lon, lat, radius_m=1000.0
-    )
-    got_full = [tuple(x) for x in full.collect()]
-    got_pruned = [tuple(x) for x in pruned.collect()]
-    assert got_pruned == got_full
-
-
-def test_zordered_snap_crosses_antimeridian(spark, tmp_path_factory):
-    """r13 ADVICE: a query point within max_snap_m of lon = ±180 must see
-    nodes on the OTHER side of the dateline — the pruning box splits into
-    the two wrapped longitude ranges instead of silently clamping.  The
-    true nearest node here sits across the seam (~33 m wrapped vs ~89 m on
-    the same side); before the split fix the pruned snap returned the
-    same-side node while the full scan returned the wrapped one."""
-    from fifteenmc_spark.plans import snap
-
-    wbox = (-180.0, -1.0, 180.0, 1.0)
-    nodes = spark.createDataFrame(
-        [
-            (0, 179.9990, 0.0),    # same side, ~89 m from the probe
-            (1, -179.9999, 0.0),   # across the dateline, ~33 m (the winner)
-            (2, 0.0, 0.5),         # filler far away
-            (3, -90.0, -0.5),      # filler far away
-        ],
-        "node_idx int, lon double, lat double",
-    )
-    d = str(tmp_path_factory.mktemp("zorder_wrap") / "graph_nodes")
-    layout.write_zorder_layout(nodes, d, wbox)
-
-    lon, lat = 179.9998, 0.0
-    full = snap.snap_single_point(nodes, lon, lat, max_snap_m=300.0)
-    pruned = snap.snap_single_point_zordered(spark, d, wbox, lon, lat, max_snap_m=300.0)
-    assert full is not None and full[0] == 1, full
-    assert pruned == full, (pruned, full)
-    # and the mirror probe on the west side of the seam
-    full_w = snap.snap_single_point(nodes, -179.9998, 0.0, max_snap_m=300.0)
-    pruned_w = snap.snap_single_point_zordered(spark, d, wbox, -179.9998, 0.0, max_snap_m=300.0)
-    assert pruned_w == full_w and full_w[0] == 1
 
 
 def test_zordered_reach_table_serves_g7_pruned(spark, geo_layout, tmp_path_factory):
@@ -453,32 +435,6 @@ def test_zordered_reach_table_serves_g7_pruned(spark, geo_layout, tmp_path_facto
     )
 
 
-def test_snap_prefilter_wrap_aware_beyond_shortlist(spark, tmp_path_factory):
-    """r14 review finding: the equirectangular prefilter ranked a
-    cross-dateline candidate ~360 deg away, so with MORE than 256 nodes
-    on the same side the true (wrapped) nearest node fell out of the
-    exact-snap shortlist on BOTH the full-scan and pruned paths.  301
-    nodes: 300 same-side (100-900 m away) + the wrapped winner (~33 m);
-    both paths must return the wrapped node."""
-    from fifteenmc_spark.plans import snap
-
-    wbox = (-180.0, -1.0, 180.0, 1.0)
-    rows = [(0, -179.9999, 0.0)]  # the wrapped true nearest (~33 m)
-    rows += [
-        (1 + j, 179.990 - (j % 100) * 1e-5, -0.004 + (j // 100) * 0.004)
-        for j in range(300)
-    ]
-    nodes = spark.createDataFrame(rows, "node_idx int, lon double, lat double")
-    d = str(tmp_path_factory.mktemp("zorder_wrap_many") / "graph_nodes")
-    layout.write_zorder_layout(nodes, d, wbox)
-
-    lon, lat = 179.9998, 0.0
-    full = snap.snap_single_point(nodes, lon, lat, max_snap_m=300.0)
-    assert full is not None and full[0] == 0, full
-    pruned = snap.snap_single_point_zordered(spark, d, wbox, lon, lat, max_snap_m=300.0)
-    assert pruned == full, (pruned, full)
-
-
 def test_snap_disc_boxes_geometry():
     """Pure geometry contract of the shared pruning helper (r14 review):
     polar caps span all longitudes up to the pole, the exact cap
@@ -520,73 +476,6 @@ def test_snap_disc_boxes_geometry():
     assert len(boxes) == 1 and contains(boxes, 18.6027, 54.3) and contains(boxes, 18.5973, 54.3)
 
 
-def test_zordered_poi_table_serves_path_query_pruned(spark, geo_layout, tmp_path_factory):
-    """r14 verdict item 6: the classified POI table written through the
-    Z-order layout serves the path query's seed side from a
-    partition-pruned read — identical path rows to the full-scan form
-    (containment: winning seeds lie within max_snap+limit+poi_snap of
-    the query point), and the observed POI file set shrinks."""
-    from fifteenmc_spark.plans import poi as poi_mod
-    from fifteenmc_spark.plans import query as query_mod
-    from fifteenmc_spark.plans import snap as snap_mod
-    from fifteenmc_spark.plans import graph_build
-
-    from . import geo_fixtures as gf
-
-    gnodes = geo_layout["gnodes"]
-    nodes_pdf = gf.lattice_nodes()
-    edges_pdf = gf.lattice_edges_raw(nodes_pdf)
-    _, gedges = graph_build.build_graph(
-        spark.createDataFrame(nodes_pdf),
-        graph_build.clean_walkable_edges(spark.createDataFrame(edges_pdf)),
-    )
-    # POIs sitting on a spread of lattice nodes, snapped to them
-    picked = gnodes.orderBy("node_idx").collect()[::29]
-    pois = spark.createDataFrame(
-        [
-            (3000 + i, "shop" if i % 2 == 0 else "park", float(r["lon"]),
-             float(r["lat"]), int(r["node_idx"]))
-            for i, r in enumerate(picked)
-        ],
-        "poi_id long, category string, lon double, lat double, node_idx int",
-    )
-    d = str(tmp_path_factory.mktemp("zorder_poi") / "pois")
-    poi_mod.write_pois_zordered(pois, d, geo_layout["bbox"])
-
-    limit_m, snap_m, poi_snap_m = 150.0, 60.0, 60.0
-    probes = [r for r in gnodes.limit(120).collect()][::37]
-    assert probes
-    matched = 0
-    for r in probes:
-        lon, lat = float(r["lon"]) + 1e-4, float(r["lat"]) - 1e-4
-        full = query_mod.path_to_nearest_poi(
-            gnodes, gedges, pois, lon, lat, "shop",
-            limit_m=limit_m, max_snap_m=snap_m,
-        ).collect()
-        pruned = query_mod.path_to_nearest_poi_zordered(
-            spark, gnodes, gedges, d, geo_layout["bbox"], lon, lat, "shop",
-            limit_m=limit_m, max_snap_m=snap_m, poi_snap_m=poi_snap_m,
-        ).collect()
-        assert [tuple(x) for x in pruned] == [tuple(x) for x in full]
-        matched += bool(full)
-    assert matched, "no probe produced a path — fixture radii too tight"
-
-    # observed file-set shrink on the POI side for the pruned disc
-    minlon, minlat, maxlon, maxlat = geo_layout["bbox"]
-    clon, clat = (minlon + maxlon) / 2, (minlat + maxlat) / 2
-
-    def files_read(df):
-        return {x["f"] for x in df.select(F.input_file_name().alias("f")).distinct().collect()}
-
-    full_files = files_read(spark.read.parquet(d))
-    pruned_files = files_read(
-        snap_mod.read_zordered_disc(
-            spark, d, geo_layout["bbox"], clon, clat, snap_m + limit_m + poi_snap_m
-        )
-    )
-    assert pruned_files < full_files, (len(pruned_files), len(full_files))
-
-
 def _reach_rows(spark, gnodes, poi_base, n=80):
     return spark.createDataFrame(
         [
@@ -623,8 +512,10 @@ def test_zordered_reach_rewrite_serves_new_rows(spark, geo_layout, tmp_path):
 def test_zordered_g7_warm_jobs_at_most_full_scan(spark, geo_layout, tmp_path):
     """A warm z-ordered G7 (both halves from layouts) is ONE Spark job,
     the collect of its node and reach rows, and no more than the
-    full-scan G7 on already-opened gold tables: the layout listing and
-    schema are paid once per session, not per request."""
+    full-scan G7 on already-opened gold parquet tables, which is at most
+    two (the snap and the reach collect): the layout listing and schema
+    are paid once per session, not per request.  The z-ordered form has
+    no reach-table half: without a reach layout it raises."""
     from fifteenmc_spark.plans import query as query_mod
     from fifteenmc_spark.plans import reach as reach_mod
 
@@ -651,4 +542,6 @@ def test_zordered_g7_warm_jobs_at_most_full_scan(spark, geo_layout, tmp_path):
         spark, lambda: query_mod.point_reachability(gold_reach, gold_nodes, lon, lat).collect()
     )
     assert got and got == want
-    assert warm == 1 and warm <= scan, (warm, scan)
+    assert warm == 1 and warm <= scan <= 2, (warm, scan)
+    with pytest.raises(ValueError, match="reach_layout_path"):
+        query_mod.point_reachability_zordered(spark, gold_reach, geo_layout["path"], bbox, lon, lat)

@@ -7,6 +7,7 @@ query that happens not to exercise it)."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -50,6 +51,98 @@ def test_session_cached_identity_eviction_and_none(spark, sf_small):
     SI.session_cached(spark, sf_small, "t_evict", build)
     assert ("dead-app", sf_small, "stale") not in SI._SESSION_INDEX
     assert (app, sf_small, "t_identity") in SI._SESSION_INDEX
+
+
+def _race(spark, sf_dir, key, build, n):
+    """session_cached(key) from ``n`` threads released together; their
+    results in thread order."""
+    start, out = threading.Barrier(n), [None] * n
+
+    def call(i):
+        start.wait(timeout=60)
+        out[i] = SI.session_cached(spark, sf_dir, key, build)
+
+    _run_threads(call, n)
+    return out
+
+
+def _run_threads(target, n):
+    threads = [threading.Thread(target=target, args=(i,), daemon=True) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads), "a thread is still waiting"
+
+
+def test_session_cached_builds_a_cold_key_once_under_concurrency(spark, tmp_path):
+    # each build holds itself open until all four callers are inside a
+    # build (or, bounded, until 1 s has passed): without a per-key build
+    # lock all four enter and the key builds four times; with it the
+    # other three wait for the first build and read its entry.  The bound
+    # only decides how long the first build stays open, never what is
+    # asserted.
+    n, sf_dir = 4, str(tmp_path)
+    gate = threading.Condition()
+    builds = {"flat": 0, "outer": 0, "inner": 0}
+
+    def held(name, make):
+        def build():
+            with gate:
+                builds[name] += 1
+                gate.notify_all()
+                gate.wait_for(lambda: builds[name] == n, timeout=1.0)
+            return make()
+
+        return build
+
+    got = _race(spark, sf_dir, "t_race", held("flat", object), n)
+    assert builds["flat"] == 1 and all(x is got[0] for x in got), builds
+    # a feed built from another feed: the outer key's build reads an
+    # inner key through session_cached, which must not wait on the outer
+    inner = held("inner", object)
+    outer = held("outer", lambda: (SI.session_cached(spark, sf_dir, "t_race_inner", inner),))
+    got = _race(spark, sf_dir, "t_race_outer", outer, n)
+    assert builds["outer"] == builds["inner"] == 1, builds
+    assert all(x is got[0] for x in got)
+    assert got[0][0] is SI.session_cached(spark, sf_dir, "t_race_inner", inner)
+
+
+def test_session_cached_caches_nothing_when_a_build_raises(spark, tmp_path):
+    def fail():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        SI.session_cached(spark, str(tmp_path), "t_raises", fail)
+    assert SI.session_cached(spark, str(tmp_path), "t_raises", lambda: 7) == 7
+
+
+def test_session_cached_sweep_survives_concurrent_inserts(tmp_path, monkeypatch):
+    # eight sessions insert at once, so each insert sweeps the others'
+    # entries while they insert: the sweep must never see the index
+    # change under it.  Stand-in sessions (only applicationId is read)
+    # over an empty index, so the live session's entries are not swept.
+    import sys
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(SI, "_SESSION_INDEX", {})
+    monkeypatch.setattr(SI, "_BUILD_LOCKS", {})
+    errors, interval = [], sys.getswitchinterval()
+
+    def insert(i):
+        fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=f"t-sweep-{i}"))
+        try:
+            for j in range(300):
+                SI.session_cached(fake, str(tmp_path), f"k{j}", object)
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    sys.setswitchinterval(1e-6)
+    try:
+        _run_threads(insert, 8)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors[:3]
 
 
 def test_minhash_sig_index_slice_matches_direct(spark, sf_small):
