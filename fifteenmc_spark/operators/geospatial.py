@@ -52,22 +52,56 @@ def _grid_consts() -> dict[str, float]:
 
 _G = _grid_consts()
 
-_G1_SQL = f"""
-    WITH cells AS (
+# the tile lattice of BBOX in both the grid_id and buffer-box forms the
+# g-queries read: CTEs ``cells`` and ``tiles`` (the cells overlapping BBOX)
+_TILES_SQL = f"""cells AS (
       SELECT r.range AS row, c.range AS col,
              CAST({_G["c0_lon"]!r} AS DOUBLE) - c.range * CAST({_G["dlon_t"]!r} AS DOUBLE) AS clon,
              CAST({_G["c0_lat"]!r} AS DOUBLE) - r.range * CAST({_G["dlat_t"]!r} AS DOUBLE) AS clat
-      FROM range(0, {_G["n_cols"]}) c CROSS JOIN range(0, {_G["n_rows"]}) r)
-    SELECT 'r' || row || '_c' || col AS grid_id,
-           CAST(row AS INT) AS row, CAST(col AS INT) AS col,
+      FROM range(0, {_G["n_cols"]}) c CROSS JOIN range(0, {_G["n_rows"]}) r),
+    tiles AS (
+      SELECT 'r' || row || '_c' || col AS grid_id, row, col, clon, clat,
+             clon - {0.5 * _G["dlon_t"]!r} - {_G["dlon_b"]!r} AS bminlon,
+             clat - {0.5 * _G["dlat_t"]!r} - {_G["dlat_b"]!r} AS bminlat,
+             clon + {0.5 * _G["dlon_t"]!r} + {_G["dlon_b"]!r} AS bmaxlon,
+             clat + {0.5 * _G["dlat_t"]!r} + {_G["dlat_b"]!r} AS bmaxlat
+      FROM cells
+      WHERE NOT (clon + {0.5 * _G["dlon_t"]!r} <= {_G["minlon"]!r}
+                 OR clon - {0.5 * _G["dlon_t"]!r} >= {_G["maxlon"]!r})
+        AND NOT (clat + {0.5 * _G["dlat_t"]!r} <= {_G["minlat"]!r}
+                 OR clat - {0.5 * _G["dlat_t"]!r} >= {_G["maxlat"]!r}))"""
+
+
+def _points(spark, n: int, lon0: float, lat0: float, wlon: float, wlat: float):
+    """(point_id, lon, lat): n pseudo-random points in the box [lon0,
+    lon0 + wlon) x [lat0, lat0 + wlat) — the one point generator of g2,
+    g4, g5 and g6.  _points_sql spells the same expression from the same
+    float constants, so both engines compute identical doubles."""
+    i = F.col("id")
+    return spark.range(n).select(
+        i.cast("int").alias("point_id"),
+        (F.lit(lon0) + (((i * 37 + 11) % 193).cast("double") / 193.0) * wlon).alias("lon"),
+        (F.lit(lat0) + (((i * 53 + 29) % 181).cast("double") / 181.0) * wlat).alias("lat"),
+    )
+
+
+def _points_sql(n: int, lon0: float, lat0: float, wlon: float, wlat: float) -> str:
+    """CTE ``pts`` (point_id, lon, lat): oracle twin of _points."""
+    return f"""pts AS (
+      SELECT CAST(range AS INT) AS point_id,
+             {lon0!r} + (CAST((range * 37 + 11) % 193 AS DOUBLE) / 193.0) * {wlon!r} AS lon,
+             {lat0!r} + (CAST((range * 53 + 29) % 181 AS DOUBLE) / 181.0) * {wlat!r} AS lat
+      FROM range(0, {n}))"""
+
+
+_BBOX_PTS = (BBOX[0], BBOX[1], BBOX[2] - BBOX[0], BBOX[3] - BBOX[1])  # points over all of BBOX
+
+_G1_SQL = f"""
+    WITH {_TILES_SQL}
+    SELECT grid_id, CAST(row AS INT) AS row, CAST(col AS INT) AS col,
            ROUND(clon, 6) AS clon, ROUND(clat, 6) AS clat,
-           ROUND(clon - {0.5 * _G["dlon_t"]!r} - {_G["dlon_b"]!r}, 6) AS buf_minlon,
-           ROUND(clat - {0.5 * _G["dlat_t"]!r} - {_G["dlat_b"]!r}, 6) AS buf_minlat
-    FROM cells
-    WHERE NOT (clon + {0.5 * _G["dlon_t"]!r} <= {_G["minlon"]!r}
-               OR clon - {0.5 * _G["dlon_t"]!r} >= {_G["maxlon"]!r})
-      AND NOT (clat + {0.5 * _G["dlat_t"]!r} <= {_G["minlat"]!r}
-               OR clat - {0.5 * _G["dlat_t"]!r} >= {_G["maxlat"]!r})
+           ROUND(bminlon, 6) AS buf_minlon, ROUND(bminlat, 6) AS buf_minlat
+    FROM tiles
     ORDER BY grid_id
     """
 
@@ -102,8 +136,7 @@ _NPTS = 60
 # node i: lattice position; point j: pseudo-random offset inside the lattice
 _NODE_LON = "18.60 + CAST({i} % 20 AS DOUBLE) * 0.001"
 _NODE_LAT = "54.35 + CAST({i} // 20 AS DOUBLE) * 0.0006"
-_PT_LON = "18.60 + (CAST(({j} * 37 + 11) % 193 AS DOUBLE) / 193.0) * 0.019"
-_PT_LAT = "54.35 + (CAST(({j} * 53 + 29) % 181 AS DOUBLE) / 181.0) * 0.0114"
+_G2_BOX = (18.60, 54.35, 0.019, 0.0114)  # (lon0, lat0, wlon, wlat) over the lattice
 
 _MERC_X = "(6378137.0 * RADIANS({lon}))"
 _MERC_Y = "(6378137.0 * LN(TAN(PI() / 4.0 + RADIANS({lat}) / 2.0)))"
@@ -113,10 +146,7 @@ _G2_SQL = f"""
       SELECT CAST(range AS INT) AS node_idx,
              {_NODE_LON.format(i="range")} AS lon, {_NODE_LAT.format(i="range")} AS lat
       FROM range(0, {_K * _K})),
-    pts AS (
-      SELECT CAST(range AS INT) AS point_id,
-             {_PT_LON.format(j="range")} AS lon, {_PT_LAT.format(j="range")} AS lat
-      FROM range(0, {_NPTS})),
+    {_points_sql(_NPTS, *_G2_BOX)},
     scored AS (
       SELECT p.point_id, n.node_idx,
              SQRT(POW({_MERC_X.format(lon="p.lon")} - {_MERC_X.format(lon="n.lon")}, 2)
@@ -146,11 +176,7 @@ def g2(spark, sf_dir):
         (F.lit(18.60) + (i % 20).cast("double") * 0.001).alias("lon"),
         (F.lit(54.35) + F.floor(i / 20).cast("double") * 0.0006).alias("lat"),
     )
-    pts = spark.range(_NPTS).select(
-        i.cast("int").alias("point_id"),
-        (F.lit(18.60) + (((i * 37 + 11) % 193).cast("double") / 193.0) * 0.019).alias("lon"),
-        (F.lit(54.35) + (((i * 53 + 29) % 181).cast("double") / 181.0) * 0.0114).alias("lat"),
-    )
+    pts = _points(spark, _NPTS, *_G2_BOX)
     snapped = snap_mod.snap_points_to_nodes(pts, nodes, point_id_col="point_id")
     return snapped.select(
         "point_id", "node_idx", F.round(F.col("dist_to_node_m").cast("double"), 4).alias("dist_to_node_m")
@@ -225,29 +251,8 @@ def g3(spark, sf_dir):
 # g4: buffer-halo tile assignment (Q1)
 # ---------------------------------------------------------------------------
 _G4_SQL = f"""
-    WITH cells AS (
-      SELECT r.range AS row, c.range AS col,
-             CAST({_G["c0_lon"]!r} AS DOUBLE) - c.range * CAST({_G["dlon_t"]!r} AS DOUBLE) AS clon,
-             CAST({_G["c0_lat"]!r} AS DOUBLE) - r.range * CAST({_G["dlat_t"]!r} AS DOUBLE) AS clat
-      FROM range(0, {_G["n_cols"]}) c CROSS JOIN range(0, {_G["n_rows"]}) r),
-    tiles AS (
-      SELECT 'r' || row || '_c' || col AS grid_id,
-             clon - {0.5 * _G["dlon_t"]!r} - {_G["dlon_b"]!r} AS bminlon,
-             clat - {0.5 * _G["dlat_t"]!r} - {_G["dlat_b"]!r} AS bminlat,
-             clon + {0.5 * _G["dlon_t"]!r} + {_G["dlon_b"]!r} AS bmaxlon,
-             clat + {0.5 * _G["dlat_t"]!r} + {_G["dlat_b"]!r} AS bmaxlat
-      FROM cells
-      WHERE NOT (clon + {0.5 * _G["dlon_t"]!r} <= {_G["minlon"]!r}
-                 OR clon - {0.5 * _G["dlon_t"]!r} >= {_G["maxlon"]!r})
-        AND NOT (clat + {0.5 * _G["dlat_t"]!r} <= {_G["minlat"]!r}
-                 OR clat - {0.5 * _G["dlat_t"]!r} >= {_G["maxlat"]!r})),
-    pts AS (
-      SELECT CAST(range AS INT) AS point_id,
-             {_G["minlon"]!r} + (CAST((range * 37 + 11) % 193 AS DOUBLE) / 193.0)
-                 * {_G["maxlon"] - _G["minlon"]!r} AS lon,
-             {_G["minlat"]!r} + (CAST((range * 53 + 29) % 181 AS DOUBLE) / 181.0)
-                 * {_G["maxlat"] - _G["minlat"]!r} AS lat
-      FROM range(0, 80))
+    WITH {_TILES_SQL},
+    {_points_sql(80, *_BBOX_PTS)}
     SELECT p.point_id, t.grid_id
     FROM pts p JOIN tiles t
       ON p.lon >= t.bminlon AND p.lon < t.bmaxlon
@@ -265,13 +270,7 @@ _G4_SQL = f"""
     ("geo", "grid", "join"),
 )
 def g4(spark, sf_dir):
-    minlon, minlat, maxlon, maxlat = BBOX
-    i = F.col("id")
-    pts = spark.range(80).select(
-        i.cast("int").alias("point_id"),
-        (F.lit(minlon) + (((i * 37 + 11) % 193).cast("double") / 193.0) * (maxlon - minlon)).alias("lon"),
-        (F.lit(minlat) + (((i * 53 + 29) % 181).cast("double") / 181.0) * (maxlat - minlat)).alias("lat"),
-    )
+    pts = _points(spark, 80, *_BBOX_PTS)
     tiles = grid_mod.generate_tiles(spark, BBOX, TILE_KM, BUFFER_KM)
     return (
         grid_mod.assign_points_to_tiles(pts, tiles, use_buffer=True)
@@ -286,31 +285,11 @@ def g4(spark, sf_dir):
 # points confined to the WEST 40% of the bbox so the east tile columns
 # are genuinely EMPTY — the case the report exists for
 _G5_FRAC = 0.4
+_G5_BOX = (BBOX[0], BBOX[1], (BBOX[2] - BBOX[0]) * _G5_FRAC, BBOX[3] - BBOX[1])
 
 _G5_SQL = f"""
-    WITH cells AS (
-      SELECT r.range AS row, c.range AS col,
-             CAST({_G["c0_lon"]!r} AS DOUBLE) - c.range * CAST({_G["dlon_t"]!r} AS DOUBLE) AS clon,
-             CAST({_G["c0_lat"]!r} AS DOUBLE) - r.range * CAST({_G["dlat_t"]!r} AS DOUBLE) AS clat
-      FROM range(0, {_G["n_cols"]}) c CROSS JOIN range(0, {_G["n_rows"]}) r),
-    tiles AS (
-      SELECT 'r' || row || '_c' || col AS grid_id,
-             clon - {0.5 * _G["dlon_t"]!r} - {_G["dlon_b"]!r} AS bminlon,
-             clat - {0.5 * _G["dlat_t"]!r} - {_G["dlat_b"]!r} AS bminlat,
-             clon + {0.5 * _G["dlon_t"]!r} + {_G["dlon_b"]!r} AS bmaxlon,
-             clat + {0.5 * _G["dlat_t"]!r} + {_G["dlat_b"]!r} AS bmaxlat
-      FROM cells
-      WHERE NOT (clon + {0.5 * _G["dlon_t"]!r} <= {_G["minlon"]!r}
-                 OR clon - {0.5 * _G["dlon_t"]!r} >= {_G["maxlon"]!r})
-        AND NOT (clat + {0.5 * _G["dlat_t"]!r} <= {_G["minlat"]!r}
-                 OR clat - {0.5 * _G["dlat_t"]!r} >= {_G["maxlat"]!r})),
-    pts AS (
-      SELECT CAST(range AS INT) AS point_id,
-             {_G["minlon"]!r} + (CAST((range * 37 + 11) % 193 AS DOUBLE) / 193.0)
-                 * {(_G["maxlon"] - _G["minlon"]) * _G5_FRAC!r} AS lon,
-             {_G["minlat"]!r} + (CAST((range * 53 + 29) % 181 AS DOUBLE) / 181.0)
-                 * {_G["maxlat"] - _G["minlat"]!r} AS lat
-      FROM range(0, 80)),
+    WITH {_TILES_SQL},
+    {_points_sql(80, *_G5_BOX)},
     asg AS (
       SELECT p.point_id, t.grid_id
       FROM pts p JOIN tiles t
@@ -340,15 +319,7 @@ _G5_SQL = f"""
     ("geo", "grid", "cleanup"),
 )
 def g5(spark, sf_dir):
-    minlon, minlat, maxlon, maxlat = BBOX
-    i = F.col("id")
-    pts = spark.range(80).select(
-        i.cast("int").alias("point_id"),
-        (F.lit(minlon) + (((i * 37 + 11) % 193).cast("double") / 193.0)
-         * ((maxlon - minlon) * _G5_FRAC)).alias("lon"),
-        (F.lit(minlat) + (((i * 53 + 29) % 181).cast("double") / 181.0)
-         * (maxlat - minlat)).alias("lat"),
-    )
+    pts = _points(spark, 80, *_G5_BOX)
     tiles = grid_mod.generate_tiles(spark, BBOX, TILE_KM, BUFFER_KM)
     asg = grid_mod.assign_points_to_tiles(pts, tiles, use_buffer=True).select(
         "point_id", "grid_id"
@@ -361,15 +332,8 @@ def g5(spark, sf_dir):
 # ---------------------------------------------------------------------------
 _G6_NPTS = 200
 
-_G6_PT_LON = f"{BBOX[0]!r} + (CAST(({{j}} * 37 + 11) % 193 AS DOUBLE) / 193.0) * {BBOX[2] - BBOX[0]!r}"
-_G6_PT_LAT = f"{BBOX[1]!r} + (CAST(({{j}} * 53 + 29) % 181 AS DOUBLE) / 181.0) * {BBOX[3] - BBOX[1]!r}"
-
 _G6_SQL = f"""
-    WITH pts AS (
-      SELECT CAST(range AS INT) AS point_id,
-             {_G6_PT_LON.format(j="range")} AS lon,
-             {_G6_PT_LAT.format(j="range")} AS lat
-      FROM range(0, {_G6_NPTS})),
+    WITH {_points_sql(_G6_NPTS, *_BBOX_PTS)},
     keyed AS (
       SELECT point_id,
              {layout_mod.zorder_key_sql("lon", "lat", BBOX)} AS zkey
@@ -400,13 +364,7 @@ _G6_SQL = f"""
     ("geo", "layout", "zorder"),
 )
 def g6(spark, sf_dir):
-    minlon, minlat, maxlon, maxlat = BBOX
-    i = F.col("id")
-    pts = spark.range(_G6_NPTS).select(
-        i.cast("int").alias("point_id"),
-        (F.lit(minlon) + (((i * 37 + 11) % 193).cast("double") / 193.0) * (maxlon - minlon)).alias("lon"),
-        (F.lit(minlat) + (((i * 53 + 29) % 181).cast("double") / 181.0) * (maxlat - minlat)).alias("lat"),
-    )
+    pts = _points(spark, _G6_NPTS, *_BBOX_PTS)
     zkey = layout_mod.zorder_key("lon", "lat", BBOX)
     return pts.select(
         "point_id",

@@ -12,6 +12,19 @@ Two paths, mirroring what a 100 TB vector pipeline needs:
   exact cosine re-rank.  The bucket key is the shuffle key, turning O(n²)
   into per-bucket work — the IVF/LSH "scale path".
 
+Every recall eval builds only its result rows and shares one back half:
+one exact ground truth per engine (_exact_topk_plan / _exact_sql — v1's
+plan, the 3-query truth of v6 and v9, the V12_NQ eval set's, and v28's
+label-filtered one) and one recall aggregate (_recall_agg /
+_stacked_recall_sql).  Result-set evals feed it top-k rows: v12 and v14
+unstacked (_recall_agg_sql on the oracle side), v17 and v23 stacked by
+encoding, v18 and v22 (the fused sweep's hits) by nprobe, and v28 (v27
+against the filtered truth, n_topk named n_truth).  Cell-membership
+evals feed it the exact neighbours whose cell is probed (_probed /
+_probed_sql): v9 by nprobe, and through _membership_recall_plan /
+_membership_recall_sql v20 by quantizer and v24 by ncells.  v6 keeps
+its fused prefix-bucket plan, one exchange cheaper than the shared tail.
+
 All dot products accumulate in DOUBLE on both engines (Spark: one numpy
 einsum per Arrow batch — see cosine(); DuckDB: list_dot_product on
 DOUBLE[]).  Accumulation order differs only within float ulps, well inside
@@ -273,16 +286,27 @@ def v1(spark, sf_dir):
     return _exact_topk_plan(spark, sf_dir)
 
 
-def _exact_topk_plan(spark, sf_dir, nq: int = N_QUERY_VECS):
+def _exact_topk_plan(spark, sf_dir, nq: int = N_QUERY_VECS, by_label: bool = False):
+    """Exact cosine top-k of the query vectors vec_id < ``nq``: v1's plan
+    and the one ground truth of every recall eval — _exact_topk (v6, v9),
+    _exact_topk_v12 (the V12_NQ eval set) and, with ``by_label`` (only
+    candidates sharing the query's label), v28's uncached filtered
+    truth."""
     e = _emb(spark, sf_dir)
-    q = e.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    return _topk_tail(
-        F.broadcast(q)
-        .crossJoin(e.select("vec_id", "embedding"))
+    qcols = [F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")]
+    cols = ["vec_id", "embedding"]
+    if by_label:
+        qcols.append(F.col("label").alias("qlabel"))
+        cols.append("label")
+    cand = (
+        F.broadcast(e.where(F.col("vec_id") < nq).select(*qcols))
+        .crossJoin(e.select(*cols))
         .where(F.col("qid") != F.col("vec_id"))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
+    )
+    if by_label:
+        cand = cand.where(F.col("label") == F.col("qlabel"))
+    return _topk_tail(
+        cand.select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
     )
 
 
@@ -297,6 +321,141 @@ def _exact_topk(spark, sf_dir):
         "exact_topk",
         lambda: _exact_topk_plan(spark, sf_dir).localCheckpoint(eager=False),
     )
+
+
+V12_NQ = 50  # eval query set — wide enough that recall deltas are signal,
+# not 3-query noise (250 neighbor slots at k=5)
+
+
+def _exact_topk_v12(spark, sf_dir):
+    """Exact ground truth over the V12_NQ eval set, session-cached (k
+    rows per eval query — the same artifact class as _exact_topk)."""
+    return _session_cached(
+        spark,
+        sf_dir,
+        "exact_topk_v12",
+        lambda: _exact_topk_plan(spark, sf_dir, V12_NQ).localCheckpoint(eager=False),
+    )
+
+
+def _exact_sql(nq: int = V12_NQ, by_label: bool = False) -> str:
+    """WITH fragment ending in ``exact`` (qid, vec_id): oracle twin of
+    _exact_topk_plan over the query vectors vec_id < ``nq``."""
+    lab, corpus_lab, on = ("", "", "")
+    if by_label:
+        lab, corpus_lab, on = ", label AS qlabel", ", label", " AND qv.qlabel = c.label"
+    return f"""qv AS (SELECT vec_id AS qid, embedding AS qe{lab} FROM embeddings
+                WHERE vec_id < {nq}),
+    corpus AS (SELECT vec_id, embedding{corpus_lab} FROM embeddings),
+    scored AS (
+      SELECT qv.qid, c.vec_id,
+             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
+      FROM qv, corpus c WHERE qv.qid <> c.vec_id{on}),
+    exact AS (
+      SELECT qid, vec_id FROM scored
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
+          ORDER BY sim DESC, vec_id) <= {TOP_K})"""
+
+
+# ---------------------------------------------------------------------------
+# the recall back half: every result-set and cell-membership recall eval
+# (v9, v12, v14, v17, v18, v20, v22, v23, v24, v28) builds only its `got`
+# rows and counts them against a ground truth here
+# ---------------------------------------------------------------------------
+def _recall_agg(exact, got, key: str | None = None, values=()):
+    """(qid[, key], n_topk, n_recovered, recall): per-query recall of a
+    (qid, vec_id) result set against the exact ground truth.  With
+    ``key``, ``got`` carries that stack column and the exact side is
+    exploded over its ``values``, so one join and one aggregate serve
+    every stacked arm (encodings, quantizers, nprobe, ncells).
+
+    The result side is BROADCAST explicitly (r15): ``got`` is a top-k
+    result set, bounded at |eval queries| x k rows by construction, but
+    Catalyst's size estimate propagated through the serving plan's
+    windows/joins lands far above the auto-broadcast threshold, so the
+    recall join planned as SortMergeJoin — two hashpartitioning(qid,
+    vec_id) exchanges plus two sorts of subtrees whose real output is a
+    few hundred rows.  Broadcast is legal for a LeftOuter build-right
+    and removes both (plan: SortMergeJoin LeftOuter -> BroadcastHashJoin
+    in every recall eval)."""
+    stack = [key] if key else []
+    if key:
+        exact = exact.withColumn(key, F.explode(F.array(*[F.lit(v) for v in values])))
+    g = got.select(*stack, "qid", "vec_id", F.lit(1).alias("hit"))
+    return (
+        exact.join(F.broadcast(g), [*stack, "qid", "vec_id"], "left")
+        .groupBy("qid", *stack)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_topk"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
+        )
+        .select(
+            "qid",
+            *stack,
+            "n_topk",
+            "n_recovered",
+            F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
+        )
+    )
+
+
+def _probed(exact, cells, probes):
+    """(qid, vec_id, rn): the exact neighbours whose cell the query
+    probes, at that cell's probe rank — the membership `got` of v9, v20
+    and v24.  The k x |queries| ground truth is broadcast against the
+    corpus-sized cells table (r15): bounded by construction, but the
+    estimate through the checkpoint planned a SortMergeJoin — a shuffle
+    of the WHOLE cells table."""
+    return (
+        F.broadcast(exact)
+        .join(cells, "vec_id")
+        .join(F.broadcast(probes), ["qid", "cell"])
+        .select("qid", "vec_id", "rn")
+    )
+
+
+_RECALL_COLS_SQL = """CAST(COUNT(*) AS BIGINT) AS n_topk,
+           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_recovered,
+           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
+                 / COUNT(*), 4) AS recall"""
+
+
+def _stacked_recall_sql(key: str | None, arms, ctes) -> str:
+    """Oracle twin of _recall_agg: per-query recall of the arms (value,
+    query) — each a (qid, vec_id, ...) result — stacked under the column
+    ``key``, or of one unstacked arm when ``key`` is None.  ``ctes`` are
+    the WITH fragments the recall reads: the ground truth ``exact``
+    (_exact_sql) and whatever the arm queries read."""
+    tag = (lambda v: f"{v!r} AS {key}, ") if key else (lambda v: "")
+    got = " UNION ALL ".join(f"SELECT {tag(v)}qid, vec_id FROM ({sql})" for v, sql in arms)
+    cols, cross, on = "e.qid", "", ""
+    if key:
+        keys = " UNION ALL ".join(f"SELECT {v!r} AS {key}" for v, _ in arms)
+        cols, on = f"e.qid, k.{key}", f"g.{key} = k.{key} AND "
+        cross = f"\n    CROSS JOIN ({keys}) k\n   "
+    with_ = ",\n    ".join(ctes)
+    return f"""
+    WITH {with_},
+    got AS ({got})
+    SELECT {cols}, {_RECALL_COLS_SQL}
+    FROM exact e{cross} LEFT JOIN got g ON {on}g.qid = e.qid AND g.vec_id = e.vec_id
+    GROUP BY {cols} ORDER BY {cols}
+    """
+
+
+def _recall_agg_sql(got: str) -> str:
+    """_stacked_recall_sql of one unstacked result ``got`` over the
+    V12_NQ eval set."""
+    return _stacked_recall_sql(None, [(None, got)], [_exact_sql()])
+
+
+def _probed_sql(tag: str = "", cond: str = "") -> str:
+    """Oracle twin of _probed: the ``exact`` neighbours whose
+    ``{tag}cells`` cell is among the query's ``{tag}probes``."""
+    return f"""SELECT x.qid, x.vec_id FROM exact x
+      JOIN {tag}cells cl ON cl.vec_id = x.vec_id
+      JOIN {tag}probes p ON p.qid = x.qid AND p.cell = cl.cell{cond}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1071,6 +1230,7 @@ def v8(spark, sf_dir):
 # v9: IVF recall evaluation (nprobe sweep — the v6 twin for cell-probe ANN)
 # ---------------------------------------------------------------------------
 V9_MAX_PROBE = 2
+V9_NPROBES = (1, V9_MAX_PROBE)
 
 
 @_register(
@@ -1078,72 +1238,27 @@ V9_MAX_PROBE = 2
     "IVF calibration eval: recall@k of cell-probing vs the exact v1 top-k "
     f"at nprobe 1 and {V9_MAX_PROBE} side by side — how much of the true "
     "neighborhood each additional probed cell buys, against a scan "
-    "fraction of nprobe/ncells.  Fused plan: one centroid-scoring pass "
-    "yields cell assignments AND the probe ranking; per-(query, neighbor) "
-    "the minimum probe rank that reaches the neighbor's cell aggregates "
-    "to every nprobe's recall in a single groupBy.",
-    f"""
-    WITH {_coarse_sql(SEED_Q, N_QUERY_VECS, V9_MAX_PROBE)},
-    hit AS (
-      SELECT x.qid, x.vec_id, MIN(p.rn) AS min_rn
-      FROM ({QUERIES["v1_cosine_topk"].oracle}) x
-      JOIN cells cl ON cl.vec_id = x.vec_id
-      LEFT JOIN probes p ON p.qid = x.qid AND p.cell = cl.cell
-      GROUP BY x.qid, x.vec_id),
-    agg AS (
-      SELECT qid, COUNT(*) AS n_topk,
-             SUM(CASE WHEN min_rn <= 1 THEN 1 ELSE 0 END) AS r1,
-             SUM(CASE WHEN min_rn <= {V9_MAX_PROBE} THEN 1 ELSE 0 END) AS r2
-      FROM hit GROUP BY qid)
-    SELECT qid, nprobe, n_topk, n_recovered,
-           ROUND(n_recovered * 1.0 / n_topk, 4) AS recall
-    FROM (
-      SELECT qid, 1 AS nprobe, CAST(n_topk AS BIGINT) AS n_topk,
-             CAST(r1 AS BIGINT) AS n_recovered FROM agg
-      UNION ALL
-      SELECT qid, {V9_MAX_PROBE}, CAST(n_topk AS BIGINT), CAST(r2 AS BIGINT) FROM agg)
-    ORDER BY qid, nprobe
-    """,
+    "fraction of nprobe/ncells.  One centroid-scoring pass yields cell "
+    "assignments AND the probe ranking; an exact neighbour is recovered "
+    "at every nprobe at or above the probe rank of its cell, so the "
+    "probed neighbours exploded over the nprobe values feed the one "
+    "shared recall aggregate.",
+    _stacked_recall_sql(
+        "nprobe",
+        [(p, _probed_sql(cond=f" AND p.rn <= {p}")) for p in V9_NPROBES],
+        [_exact_sql(N_QUERY_VECS), _coarse_sql(SEED_Q, N_QUERY_VECS, V9_MAX_PROBE)],
+    ),
     ("similarity", "ann", "ivf", "eval", "calibration", "pipeline"),
 )
 def v9(spark, sf_dir):
-    # sf0.1 floor note (r8 0.27 s median at 2.25x the 0.12 s in-process
-    # oracle): the plan is ~3 scheduled stages (hit join, recall groupBy,
-    # stack+ORDER BY) over session-cached index tables on the measured
-    # 0.09 s/action local-mode floor — i.e. the whole gap is scheduler,
-    # not plan; the joined data is k x |queries| rows.
     _, cells, probes = _cells_probes(spark, sf_dir, SEED_Q, V9_MAX_PROBE)
     exact = _exact_topk(spark, sf_dir).select("qid", "vec_id")
-    # broadcast the |eval queries| x k ground truth against the corpus-
-    # sized cells table (r15): bounded by construction, but the estimate
-    # through the checkpoint planned a SortMergeJoin — i.e. a shuffle of
-    # the WHOLE cells table to meet a k x |queries|-row side
-    hit = (
-        F.broadcast(exact).join(cells, "vec_id")
-        .join(F.broadcast(probes), ["qid", "cell"], "left")
-        .groupBy("qid", "vec_id")
-        .agg(F.min("rn").alias("min_rn"))
+    got = (
+        _probed(exact, cells, probes)
+        .select("qid", "vec_id", "rn", F.explode(F.array(*map(F.lit, V9_NPROBES))).alias("nprobe"))
+        .where(F.col("rn") <= F.col("nprobe"))
     )
-    agg = hit.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_topk"),
-        F.sum((F.col("min_rn") <= 1).cast("int")).alias("r1"),
-        F.sum((F.col("min_rn") <= V9_MAX_PROBE).cast("int")).alias("r2"),
-    )
-    return (
-        agg.select(
-            "qid",
-            "n_topk",
-            F.expr(f"stack(2, 1, r1, {V9_MAX_PROBE}, r2) AS (nprobe, n_recovered)"),
-        )
-        .select(
-            "qid",
-            F.col("nprobe").cast("int").alias("nprobe"),
-            F.col("n_topk").cast("bigint").alias("n_topk"),
-            F.coalesce(F.col("n_recovered"), F.lit(0)).cast("bigint").alias("n_recovered"),
-            F.round(F.coalesce(F.col("n_recovered"), F.lit(0)) / F.col("n_topk"), 4).alias("recall"),
-        )
-        .orderBy("qid", "nprobe")
-    )
+    return _recall_agg(exact, got, "nprobe", V9_NPROBES).orderBy("qid", "nprobe")
 
 
 # ---------------------------------------------------------------------------
@@ -1834,111 +1949,6 @@ def _pq_topk_plan(
 # ---------------------------------------------------------------------------
 # v12: PQ recall eval (the v9 twin for the PQ memory path)
 # ---------------------------------------------------------------------------
-V12_NQ = 50  # eval query set — wide enough that recall deltas are signal,
-# not 3-query noise (250 neighbor slots at k=5)
-
-# exact-ground-truth CTE fragment shared by the wide-eval oracles
-_EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K})"""
-
-
-def _exact_topk_v12(spark, sf_dir):
-    """Exact ground truth over the v12 eval query set, session-cached
-    (k rows per eval query — the same artifact class as _exact_topk)."""
-    return _session_cached(
-        spark,
-        sf_dir,
-        "exact_topk_v12",
-        lambda: _exact_topk_plan(spark, sf_dir, V12_NQ).localCheckpoint(eager=False),
-    )
-
-
-def _recall_agg(exact, got, key: str | None = None, values=()):
-    """(qid[, key], n_topk, n_recovered, recall): per-query recall of a
-    (qid, vec_id) result set against the exact ground truth — the shared
-    back half of the ANN calibration evals (v12, v14).  With ``key``,
-    ``got`` carries that stack column and the exact side is exploded
-    over its ``values``, so one join and one aggregate serve every
-    stacked arm (v17/v23 stack the two encodings).
-
-    The result side is BROADCAST explicitly (r15): ``got`` is a top-k
-    result set, bounded at |eval queries| x k rows by construction, but
-    Catalyst's size estimate propagated through the serving plan's
-    windows/joins lands far above the auto-broadcast threshold, so the
-    recall join planned as SortMergeJoin — two hashpartitioning(qid,
-    vec_id) exchanges plus two sorts of subtrees whose real output is a
-    few hundred rows.  Broadcast is legal for a LeftOuter build-right
-    and removes both (plan: SortMergeJoin LeftOuter -> BroadcastHashJoin
-    in every recall eval; the same reasoning as the broadcast ground
-    truth in the v9 probe stack)."""
-    stack = [key] if key else []
-    if key:
-        exact = exact.withColumn(key, F.explode(F.array(*[F.lit(v) for v in values])))
-    g = got.select(*stack, "qid", "vec_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(F.broadcast(g), [*stack, "qid", "vec_id"], "left")
-        .groupBy("qid", *stack)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-        )
-        .select(
-            "qid",
-            *stack,
-            "n_topk",
-            "n_recovered",
-            F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-        )
-    )
-
-
-_RECALL_COLS_SQL = """CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall"""
-
-
-def _recall_agg_sql(got: str) -> str:
-    """Oracle twin of _recall_agg: per-query recall over the V12_NQ eval
-    set of the (qid, vec_id, ...) result of the query ``got``."""
-    return f"""
-    WITH {_EXACT_V12_CTES},
-    got AS (SELECT qid, vec_id FROM ({got}))
-    SELECT e.qid, {_RECALL_COLS_SQL}
-    FROM exact e LEFT JOIN got g ON g.qid = e.qid AND g.vec_id = e.vec_id
-    GROUP BY e.qid ORDER BY e.qid
-    """
-
-
-def _stacked_recall_sql(key: str, arms, ctes=()) -> str:
-    """_recall_agg_sql stacked over arms (value, query) under the column
-    ``key`` — the oracle shape of every side-by-side eval (encodings in
-    v17/v23, quantizers in v20, cell counts in v24).  ``ctes`` are
-    further WITH fragments the arm queries read besides ``exact``."""
-    got = " UNION ALL ".join(f"SELECT {v!r} AS {key}, qid, vec_id FROM ({sql})" for v, sql in arms)
-    keys = " UNION ALL ".join(f"SELECT {v!r} AS {key}" for v, _ in arms)
-    extra = "".join(f"\n    {c}," for c in ctes)
-    return f"""
-    WITH {_EXACT_V12_CTES},{extra}
-    got AS ({got})
-    SELECT e.qid, k.{key}, {_RECALL_COLS_SQL}
-    FROM exact e
-    CROSS JOIN ({keys}) k
-    LEFT JOIN got g ON g.{key} = k.{key} AND g.qid = e.qid AND g.vec_id = e.vec_id
-    GROUP BY e.qid, k.{key} ORDER BY e.qid, k.{key}
-    """
-
-
 @_register(
     "v12_pq_recall",
     f"PQ calibration eval: recall@{TOP_K} of the trained-codebook ADC + "
@@ -2167,6 +2177,7 @@ def _encoding_recall_sql(quant: Quantizer) -> str:
     return _stacked_recall_sql(
         "encoding",
         [(enc, _pq_topk_sql(V12_NQ, quant, residual=res)) for enc, res in _ENCODINGS],
+        [_exact_sql()],
     )
 
 
@@ -2246,10 +2257,7 @@ def _nprobe_sweep_sql(quant: Quantizer) -> str:
     over the seed cells, v22 over the trained ones — everything from the
     probe ranking down (window passes, shortlist reconstruction, recall
     stack) is identical, only the centroid source differs."""
-    return f"""
-    WITH {_pq_adc_sql(V12_NQ)},
-    {_coarse_sql(quant, V12_NQ, N_CELLS)},
-    mp AS (SELECT p.qid, x.vec_id, p.rn AS mp
+    hits = f"""mp AS (SELECT p.qid, x.vec_id, p.rn AS mp
            FROM probes p JOIN cells x ON x.cell = p.cell),
     apx AS (
       SELECT a.qid, a.vec_id, m.mp, a.approx
@@ -2283,31 +2291,19 @@ def _nprobe_sweep_sql(quant: Quantizer) -> str:
                  for p in PROBE_SWEEP)}
       FROM sl
       WINDOW ws AS (PARTITION BY qid ORDER BY sim DESC, vec_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    {_EXACT_V12_CTES},
-    agg AS (
-      SELECT e.qid, COUNT(*) AS n_topk,
-             {", ".join(
-                 f"SUM(CASE WHEN h.hit{p} THEN 1 ELSE 0 END) AS r{p}"
-                 for p in PROBE_SWEEP)}
-      FROM exact e LEFT JOIN hits h ON h.qid = e.qid AND h.vec_id = e.vec_id
-      GROUP BY e.qid)
-    SELECT qid, CAST(nprobe AS INT) AS nprobe, CAST(n_topk AS BIGINT) AS n_topk,
-           CAST(n_rec AS BIGINT) AS n_recovered,
-           ROUND(n_rec * 1.0 / n_topk, 4) AS recall
-    FROM (
-      {" UNION ALL ".join(
-          f"SELECT qid, {p} AS nprobe, n_topk, r{p} AS n_rec FROM agg"
-          for p in PROBE_SWEEP)})
-    ORDER BY qid, nprobe
-    """
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))"""
+    return _stacked_recall_sql(
+        "nprobe",
+        [(p, f"SELECT qid, vec_id FROM hits WHERE hit{p}") for p in PROBE_SWEEP],
+        [_pq_adc_sql(V12_NQ), _coarse_sql(quant, V12_NQ, N_CELLS), hits, _exact_sql()],
+    )
 
 
 @_register(
     "v18_ivfpq_nprobe_sweep",
     f"IVF-PQ nprobe sweep: recall@{TOP_K} of the composed index (v13's "
     f"raw encoding) at nprobe {PROBE_SWEEP}, fused into ONE plan — the "
-    "v9 min-probe-rank idiom extended through the ADC shortlist.  The "
+    "v9 probe-rank idiom extended through the ADC shortlist.  The "
     "ADC score is nprobe-independent, so the corpus is scored once; "
     "per (query, candidate) the probe rank mp of the candidate's cell "
     "plus ONE running-count window pass over the approx ranking "
@@ -2333,7 +2329,7 @@ def v18(spark, sf_dir):
 
 def _nprobe_sweep_plan(spark, sf_dir, quant: Quantizer):
     """The fused sweep plan, quantizer-parametrized (v18 seed / v22
-    trained) — the PQ codes, windows, and recall stack are shared; only
+    trained) — the PQ codes, windows, and recall back half are shared; only
     the cells/probes source differs."""
     from functools import reduce
     from operator import or_
@@ -2392,41 +2388,14 @@ def _nprobe_sweep_plan(spark, sf_dir, quant: Quantizer):
             for p in PROBE_SWEEP
         ],
     )
+    # one (nprobe, qid, vec_id) row per level whose top-k holds the
+    # neighbour; the NULL slots are the levels it misses
+    hit_at = F.array(*[F.when(F.col(f"hit{p}"), p) for p in PROBE_SWEEP])
+    got = hits.select("qid", "vec_id", F.explode(hit_at).alias("nprobe")).where(
+        F.col("nprobe").isNotNull()
+    )
     exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    # hits is bounded at |eval queries| x shortlist-union rows; broadcast
-    # for the same reason as _recall_agg (Catalyst's estimate through the
-    # sweep's window stack otherwise plans a SortMergeJoin of a
-    # few-hundred-row side)
-    agg = (
-        exact.join(F.broadcast(hits), ["qid", "vec_id"], "left")
-        .groupBy("qid")
-        .agg(
-            F.count(F.lit(1)).alias("n_topk"),
-            *[
-                F.sum(F.coalesce(F.col(f"hit{p}"), F.lit(False)).cast("int")).alias(f"r{p}")
-                for p in PROBE_SWEEP
-            ],
-        )
-    )
-    stacked = agg.select(
-        "qid",
-        "n_topk",
-        F.expr(
-            f"stack({len(PROBE_SWEEP)}, "
-            + ", ".join(f"{p}, r{p}" for p in PROBE_SWEEP)
-            + ") AS (nprobe, n_rec)"
-        ),
-    )
-    return (
-        stacked.select(
-            "qid",
-            F.col("nprobe").cast("int").alias("nprobe"),
-            F.col("n_topk").cast("bigint").alias("n_topk"),
-            F.col("n_rec").cast("bigint").alias("n_recovered"),
-            F.round(F.col("n_rec") / F.col("n_topk"), 4).alias("recall"),
-        )
-        .orderBy("qid", "nprobe")
-    )
+    return _recall_agg(exact, got, "nprobe", PROBE_SWEEP).orderBy("qid", "nprobe")
 
 
 # ---------------------------------------------------------------------------
@@ -2514,32 +2483,12 @@ def _membership_recall_plan(spark, sf_dir, key: str, arms):
     under ``key`` — v20 (seed vs trained) and v24 (ncells).  Membership
     isolates the coarse filter from everything downstream."""
     exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    out = None
+    got = None
     for value, quant, nprobe in arms:
         _, cells, probes = _cells_probes(spark, sf_dir, quant, nprobe, V12_NQ)
-        # broadcast ground truth vs corpus-sized cells — the v9 rationale
-        hit = (
-            F.broadcast(exact).join(cells, "vec_id")
-            .join(
-                F.broadcast(probes.select("qid", "cell", F.lit(1).alias("hit"))),
-                ["qid", "cell"],
-                "left",
-            )
-            .groupBy("qid")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-            )
-            .select(
-                "qid",
-                F.lit(value).alias(key),
-                "n_topk",
-                "n_recovered",
-                F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-            )
-        )
-        out = hit if out is None else out.unionByName(hit)
-    return out.orderBy("qid", key)
+        arm = _probed(exact, cells, probes).select(F.lit(value).alias(key), "qid", "vec_id")
+        got = arm if got is None else got.unionByName(arm)
+    return _recall_agg(exact, got, key, [value for value, _, _ in arms]).orderBy("qid", key)
 
 
 def _membership_recall_sql(key: str, arms) -> str:
@@ -2547,16 +2496,8 @@ def _membership_recall_sql(key: str, arms) -> str:
     per arm, each arm's hits = exact neighbors whose cell is probed."""
     return _stacked_recall_sql(
         key,
-        [
-            (
-                value,
-                f"""SELECT x.qid, x.vec_id FROM exact x
-      JOIN {q.tag}cells cl ON cl.vec_id = x.vec_id
-      JOIN {q.tag}probes p ON p.qid = x.qid AND p.cell = cl.cell""",
-            )
-            for value, q, _ in arms
-        ],
-        [_coarse_sql(q, V12_NQ, nprobe, q.tag) for _, q, nprobe in arms],
+        [(value, _probed_sql(q.tag)) for value, q, _ in arms],
+        [_exact_sql(), *[_coarse_sql(q, V12_NQ, nprobe, q.tag) for _, q, nprobe in arms]],
     )
 
 
@@ -2795,22 +2736,6 @@ def v27(spark, sf_dir):
     return _probe_topk_plan(spark, sf_dir, V25_Q, V25_NPROBE, label_filter=True)
 
 
-def _filtered_exact_sql() -> str:
-    """Exact filtered ground truth: brute-force cosine top-k restricted to
-    the query's label class — what v27's index path is measured against."""
-    return f"""
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim FROM (
-      SELECT q.qid, c.vec_id,
-             {_COS_SQL.format(a="q.qe", b="c.embedding")} AS sim,
-             ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                 {_COS_SQL.format(a="q.qe", b="c.embedding")} DESC, c.vec_id) AS rnk
-      FROM (SELECT vec_id AS qid, embedding AS qe, label AS qlabel FROM embeddings
-            WHERE vec_id < {N_QUERY_VECS}) q
-      JOIN embeddings c ON c.label = q.qlabel AND c.vec_id <> q.qid) z
-    WHERE rnk <= {TOP_K}
-    """
-
-
 @_register(
     "v28_filtered_recall",
     f"Filtered-search eval: recall@{TOP_K} of v27 (label-predicate search "
@@ -2825,51 +2750,20 @@ def _filtered_exact_sql() -> str:
     "count, recall; one shared index pass (the v27 plan) joined against "
     "one brute-force pass over the label slice.",
     f"""
-    WITH gt AS ({_filtered_exact_sql()}),
-    ap AS ({_probe_topk_sql(V25_Q, V25_NPROBE, label_filter=True)}),
-    hit AS (
-      SELECT gt.qid, gt.vec_id,
-             CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS got
-      FROM gt LEFT JOIN ap ON ap.qid = gt.qid AND ap.vec_id = gt.vec_id)
-    SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_truth,
-           CAST(SUM(got) AS BIGINT) AS n_recovered,
-           ROUND(SUM(got) * 1.0 / COUNT(*), 4) AS recall
-    FROM hit GROUP BY qid ORDER BY qid
+    SELECT qid, n_topk AS n_truth, n_recovered, recall FROM ({_stacked_recall_sql(
+        None,
+        [(None, _probe_topk_sql(V25_Q, V25_NPROBE, label_filter=True))],
+        [_exact_sql(N_QUERY_VECS, by_label=True)],
+    )}) ORDER BY qid
     """,
     ("similarity", "ann", "eval", "filtered", "calibration", "pipeline"),
 )
 def v28(spark, sf_dir):
-    full = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
-    qv = full.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("qlabel"),
-    )
-    scored = (
-        F.broadcast(qv)
-        .join(full, (full.label == qv.qlabel) & (full.vec_id != qv.qid))
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    gt = (
-        scored.select("qid", "vec_id", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-    # v27's result is a bounded per-query top-k — broadcast it for the
-    # same reason as _recall_agg (the estimate through its serving plan
-    # otherwise forces a SortMergeJoin of a few-hundred-row side)
-    ap = F.broadcast(v27(spark, sf_dir).select("qid", F.col("vec_id").alias("ap_vec")))
-    hit = gt.join(
-        ap, (ap.qid == gt.qid) & (ap.ap_vec == gt.vec_id), "left"
-    ).select(gt.qid.alias("qid"), F.when(ap.ap_vec.isNotNull(), 1).otherwise(0).alias("got"))
+    # the label-filtered truth is v28's alone: built per call, not cached
+    exact = _exact_topk_plan(spark, sf_dir, N_QUERY_VECS, by_label=True).select("qid", "vec_id")
     return (
-        hit.groupBy("qid")
-        .agg(
-            F.count(F.lit(1)).alias("n_truth"),
-            F.sum("got").alias("n_recovered"),
-            F.round(F.sum("got") / F.count(F.lit(1)), 4).alias("recall"),
-        )
+        _recall_agg(exact, v27(spark, sf_dir))
+        .select("qid", F.col("n_topk").alias("n_truth"), "n_recovered", "recall")
         .orderBy("qid")
     )
 

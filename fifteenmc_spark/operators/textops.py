@@ -1450,8 +1450,11 @@ WINNOW_W = 4  # winnowing window (shingles per window)
     "fingerprint count, and the md5 of the ordered fingerprint set (the "
     "composite sketch downstream near-dup joins key on).  Scale shape: "
     "tokens explode but the lead() shingle assembly and the window min "
-    "are both computed inside ONE (doc, pos)-sorted window pass; the "
-    "final shuffle carries (doc, fp) pairs, never text.  Cross-engine: "
+    "are both computed inside ONE (doc, pos)-sorted window pass, and "
+    "ONE groupBy over that same partitioning yields the shingle count "
+    "and the fingerprint set: the window's shuffle is the only one, "
+    "next to the broadcast per-doc result and the final sort.  "
+    "Cross-engine: "
     "the hash is the canonical first-8-hex-of-md5 bigint, tie-breaks "
     "are value-min, and the sketch concatenates sorted hash strings — "
     "no float anywhere.",
@@ -1538,21 +1541,27 @@ def t12(spark, sf_dir):
         F.min("hash").over(fw).alias("fp"),
         F.count(F.lit(1)).over(fw).alias("n_in_frame"),
     )
-    fps = wnd.where(F.col("n_in_frame") == WINNOW_W).select("doc_id", "fp").distinct()
-    agg = fps.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_fps"),
-        # sort NUMERICALLY (the oracle's ORDER BY fp), then stringify —
-        # a string sort would order "10" before "9" and drift the sketch
-        F.md5(
-            F.array_join(
-                F.sort_array(F.collect_list("fp")).cast("array<string>"), ","
-            ).cast("binary")
-        ).alias("fp_sketch"),
+    # one row per shingle, so ONE groupBy over the window output yields
+    # both the shingle count and the distinct full-window fingerprints
+    # (collect_set skips the NULLs of short tail frames)
+    fps = F.sort_array(F.collect_set(F.when(F.col("n_in_frame") == WINNOW_W, F.col("fp"))))
+    agg = (
+        wnd.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("int").alias("n_shingles"), fps.alias("fps"))
+        .select(
+            "doc_id",
+            "n_shingles",
+            F.size("fps").cast("int").alias("n_fps"),
+            # sorted NUMERICALLY (the oracle's ORDER BY fp), then
+            # stringified — a string sort would order "10" before "9"
+            F.when(
+                F.size("fps") > 0,
+                F.md5(F.array_join(F.col("fps").cast("array<string>"), ",").cast("binary")),
+            ).alias("fp_sketch"),
+        )
     )
-    ns = h.groupBy("doc_id").agg(F.count(F.lit(1)).cast("int").alias("n_shingles"))
     return (
         d.select("doc_id")
-        .join(ns, "doc_id", "left")
         .join(agg, "doc_id", "left")
         .select(
             "doc_id",

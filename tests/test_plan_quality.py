@@ -603,7 +603,7 @@ _V_EXCHANGES = {
     "v15_dedup_apply": 3, "v16_rivfpq_topk": 15, "v17_encoding_recall": 23,
     "v18_ivfpq_nprobe_sweep": 13, "v19_tivf_topk": 5, "v20_tivf_recall": 7,
     "v21_tivfpq_topk": 11, "v22_tivf_nprobe_sweep": 13, "v23_tencoding_recall": 22,
-    "v24_ncells_sweep": 13, "v25_serving_tivf_topk": 5, "v26_serving_ivfpq_topk": 11,
+    "v24_ncells_sweep": 11, "v25_serving_tivf_topk": 5, "v26_serving_ivfpq_topk": 11,
     "v27_filtered_tivf_topk": 5, "v28_filtered_recall": 8,
     "v29_adaptive_filtered_topk": 8,
 }
@@ -624,6 +624,39 @@ def _assert_no_exchange_gained(spark, sf, name, pins):
 @pytest.mark.parametrize("name", sorted(_V_EXCHANGES))
 def test_v_query_gains_no_exchange(spark, sf_small, name):
     _assert_no_exchange_gained(spark, sf_small, name, _V_EXCHANGES)
+
+
+# Every result-set and cell-membership recall eval counts its hits through
+# the one shared back half; a second hand-written aggregate is a fork of it.
+_RECALL_EVALS = (
+    "v9_ivf_recall", "v12_pq_recall", "v14_ivfpq_recall", "v17_encoding_recall",
+    "v18_ivfpq_nprobe_sweep", "v20_tivf_recall", "v22_tivf_nprobe_sweep",
+    "v23_tencoding_recall", "v24_ncells_sweep", "v28_filtered_recall",
+)
+
+
+@pytest.mark.parametrize("name", _RECALL_EVALS)
+def test_recall_eval_counts_through_the_shared_back_half(spark, sf_small, name, monkeypatch):
+    from fifteenmc_spark.operators import similarity as S
+
+    calls = []
+    real = S._recall_agg
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_recall_agg", counted)
+    QUERIES[name].build(spark, sf_small)
+    assert len(calls) == 1
+
+
+def test_t12_winnowing_is_one_window_pass(spark, sf_small):
+    # the shingle count and the fingerprint set come from one groupBy on
+    # the window's own partitioning: the window shuffle, the broadcast
+    # per-doc result and the final sort are the plan's only exchanges
+    name = "t12_winnowing_fingerprint"
+    _assert_no_exchange_gained(spark, sf_small, name, {name: 3})
 
 
 # Exchange count of every dedup-family query whose builder is shared
